@@ -1,11 +1,8 @@
 package graft
-import java.lang.management.ManagementFactory
-import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
+import org.apache.spark.graftbench.ListenerFlush
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.JvmProbes._
 
 /** Benchmark harness (driver contract): times the headline `bench=true`
   * queries from SparkEntry at SPARK_GRAFT_SF_DIR, printing ONE JSON
@@ -57,99 +54,62 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Accumulates executor task metrics, plus a per-stage breakdown so a
-    * spiking run can be attributed to the stage that burned the CPU;
-    * reset per timed run. */
-  private final class TaskAgg extends SparkListener {
-    val runMs, cpuMs, gcMs, spill = new AtomicLong()
-    private val byStage =
-      new java.util.concurrent.ConcurrentHashMap[Int, Array[AtomicLong]]()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-        gcMs.addAndGet(m.jvmGCTime)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        val s = byStage.computeIfAbsent(
-          te.stageId, _ => Array.fill(3)(new AtomicLong()))
-        s(0).addAndGet(m.executorRunTime)
-        s(1).addAndGet(m.executorCpuTime / 1000000L)
-        s(2).incrementAndGet()
-      }
+  /** Adaptive warm-up: untimed `pass`es until the wall stabilizes (the
+    * current pass inside the 0.85x-1.3x band around the best so far,
+    * max 8 passes — see the convergence comment below). Returns the
+    * pass count and the best wall in seconds. Two reasons: (a) the run
+    * after a GC breather re-touches evicted cache lines and reads
+    * high; (b) — the r8 "unexplained 3x CPU spike", named in r9 via
+    * -XX:+PrintCompilation — the per-ROW generated methods (e.g. the
+    * minhash shingle x 8-signature loop, generate_doConsume_0) cross
+    * the JIT Tier-4 invocation thresholds slowly at bench row counts,
+    * so early runs execute at tier 3 (C1 + profiling counters in
+    * every loop backedge) at 3-10x the C2 steady-state CPU. Repeating
+    * untimed passes drives the counters past the threshold so no
+    * TIMED run pays the tier-3 tax.
+    * Cap raised 5 -> 8 in r11: at the 10x bench tier the minhash
+    * generated loops were STILL improving >30%/pass when the old cap
+    * hit (taskCpuMs 104s -> 60s -> 42s across the timed runs, zero
+    * new classes — pure tier-4 ramp), so the first timed runs ate the
+    * remainder of the ramp and tripped the suspect flag.
+    */
+  private[graft] def warmUp(pass: () => Unit): (Int, Double) = {
+    var bestWarm = Double.MaxValue
+    var warmed = 0
+    var stable = false
+    while (warmed < 8 && !stable) {
+      val w0 = System.nanoTime()
+      pass()
+      val w = (System.nanoTime() - w0) / 1e9
+      // Converged = this pass lands in a BAND around the best so far:
+      //   - not a spike (w <= 1.3x best), and
+      //   - not still improving (w >= 0.85x best).
+      // The r12 lesson: the old check was only the upper bound, which
+      // an IMPROVING pass satisfies trivially (w < best => w < 1.3x
+      // best) — warm-up declared victory after 2 passes mid-JIT-ramp,
+      // and multi-stage plans (pagerank's per-round joins, bm25's
+      // two-level aggs) then ran every TIMED pass on the tier-3
+      // plateau: r12 showed them flat at 2.7x/2.9x their frozen mins.
+      // Requiring the lower bound keeps warming while each pass still
+      // beats the best by >15%.
+      // (warmed > 0: the first pass can never prove stability — the
+      // MaxValue sentinel would make both bounds vacuous.)
+      stable = warmed > 0 && w <= bestWarm * 1.3 && w >= bestWarm * 0.85
+      bestWarm = math.min(bestWarm, w)
+      warmed += 1
     }
-    def reset(): Unit = {
-      Seq(runMs, cpuMs, gcMs, spill).foreach(_.set(0L))
-      byStage.clear()
-    }
-    /** (stageId, runMs, cpuMs, tasks) sorted by stage id. */
-    def stageRows: Seq[(Int, Long, Long, Long)] =
-      byStage.asScala.toSeq
-        .map { case (id, a) => (id, a(0).get, a(1).get, a(2).get) }
-        .sortBy(_._1)
+    (warmed, bestWarm)
   }
-
-  private def gcMillis: Long =
-    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-  private def jitMillis: Long = {
-    val c = ManagementFactory.getCompilationMXBean
-    if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else 0L
-  }
-  private def codeCachePools =
-    ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))
-  private def codeUsedMB: Long = codeCachePools.map(_.getUsage.getUsed).sum >> 20
-  private def codeMaxMB: Long = codeCachePools.map(_.getUsage.getMax).sum >> 20
-  private def classesLoaded: Long =
-    ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
-  private def procCpuMs: Long = {
-    val d = ProcessHandle.current.info.totalCpuDuration
-    if (d.isPresent) d.get.toMillis else 0L
-  }
-  /** Whole-machine busy time from /proc/stat, in 10ms jiffies summed
-    * over all CPUs — catches contention from OTHER processes that task
-    * metrics cannot see. 0 if unreadable (non-Linux). */
-  private def osBusyMs: Long =
-    try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines().next()
-      // "cpu user nice system idle iowait irq softirq steal ..."
-      val f = cpu.trim.split("\\s+").drop(1).map(_.toLong)
-      (f.sum - f(3) - (if (f.length > 4) f(4) else 0L)) * 10L
-    } catch { case _: Throwable => 0L }
-  /** Hypervisor steal time (field 8 of /proc/stat), x10ms. This sandbox
-    * is a VM guest whose vCPUs are preempted by the host: measured r21,
-    * cumulative steal ~= cumulative user after two bench invocations,
-    * and a run window can be majority-stolen. Guest thread CPU time
-    * (taskCpuMs/procCpuMs) KEEPS TICKING while a vCPU is preempted, so
-    * a stolen window reads as "the same stage burned 20x CPU with zero
-    * GC/JIT/classload" — exactly the r9-spike / r20 driver-gap
-    * signature. A nonzero stealMs delta on an anomalous run attributes
-    * the spike to the host, not the plan. */
-  private def osStealMs: Long =
-    try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines().next()
-      val f = cpu.trim.split("\\s+").drop(1).map(_.toLong)
-      if (f.length > 7) f(7) * 10L else 0L
-    } catch { case _: Throwable => 0L }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Stats-bearing catalog tables + CBO for the bench session: the
     // star-join queries then plan with real rowCount/NDV (join reorder,
     // build-side choice) instead of file-size heuristics — the same
     // configuration a production deployment gets from PersistentCatalog.
-    Tables.registerWithStats(spark, sfDir)
-    val agg = new TaskAgg
-    spark.sparkContext.addSparkListener(agg)
+    val spark = SessionTuning.local(defaultCpus = 32, statsDir = Some(sfDir))
+    val sc = spark.sparkContext
+    val agg = StageMetrics.install(sc)
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 (substring match) restricts the
     // run — lets a single query be re-measured in isolation when chasing
     // a variance flag, same convention as ScaleProbe.
@@ -190,50 +150,11 @@ object Bench {
     val results = bench.map { case (name, fn, isHeadline) =>
       System.gc()
       Thread.sleep(200)
-      // Adaptive warm-up until the wall stabilizes (current pass inside
-      // the 0.85x-1.3x band around the best so far, max 8 passes — see
-      // the convergence comment below). Two reasons: (a) the run
-      // after a GC breather re-touches evicted cache lines and reads
-      // high; (b) — the r8 "unexplained 3x CPU spike", named in r9 via
-      // -XX:+PrintCompilation — the per-ROW generated methods (e.g. the
-      // minhash shingle x 8-signature loop, generate_doConsume_0) cross
-      // the JIT Tier-4 invocation thresholds slowly at bench row counts,
-      // so early runs execute at tier 3 (C1 + profiling counters in
-      // every loop backedge) at 3-10x the C2 steady-state CPU. Repeating
-      // untimed passes drives the counters past the threshold so no
-      // TIMED run pays the tier-3 tax.
-      // Cap raised 5 -> 8 in r11: at the 10x bench tier the minhash
-      // generated loops were STILL improving >30%/pass when the old cap
-      // hit (taskCpuMs 104s -> 60s -> 42s across the timed runs, zero
-      // new classes — pure tier-4 ramp), so the first timed runs ate the
-      // remainder of the ramp and tripped the suspect flag.
-      var bestWarm = Double.MaxValue
-      var warmed = 0
-      var stable = false
-      while (warmed < 8 && !stable) {
-        val w0 = System.nanoTime()
+      warmUp(() =>
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-        val w = (System.nanoTime() - w0) / 1e9
-        // Converged = this pass lands in a BAND around the best so far:
-        //   - not a spike (w <= 1.3x best), and
-        //   - not still improving (w >= 0.85x best).
-        // The r12 lesson: the old check was only the upper bound, which
-        // an IMPROVING pass satisfies trivially (w < best => w < 1.3x
-        // best) — warm-up declared victory after 2 passes mid-JIT-ramp,
-        // and multi-stage plans (pagerank's per-round joins, bm25's
-        // two-level aggs) then ran every TIMED pass on the tier-3
-        // plateau: r12 showed them flat at 2.7x/2.9x their frozen mins.
-        // Requiring the lower bound keeps warming while each pass still
-        // beats the best by >15%.
-        // (warmed > 0: the first pass can never prove stability — the
-        // MaxValue sentinel would make both bounds vacuous.)
-        stable = warmed > 0 && w <= bestWarm * 1.3 && w >= bestWarm * 0.85
-        bestWarm = math.min(bestWarm, w)
-        warmed += 1
-      }
+        catch { case _: Throwable => () })
       def timedRun(): (Double, Long, Seq[(String, String)]) = {
-        org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
+        ListenerFlush.drain(sc)
         agg.reset()
         val (gc0, jit0, pc0, os0, cl0, st0) =
           (gcMillis, jitMillis, procCpuMs, osBusyMs, classesLoaded, osStealMs)
@@ -243,20 +164,22 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
-        val stages = agg.stageRows.map { case (id, r, c, n) =>
-          s"""{"id":$id,"runMs":$r,"cpuMs":$c,"tasks":$n}"""
+        ListenerFlush.drain(sc)
+        val ran = agg.byStage
+        val stages = ran.map { case (id, st) =>
+          s"""{"id":$id,"runMs":${st.runMs},"cpuMs":${st.cpuMs},"tasks":${st.tasks}}"""
         }.mkString("[", ",", "]")
+        def sum(f: StageMetrics.Stage => Long): Long = ran.map(r => f(r._2)).sum
         val steal = osStealMs - st0
         val d = Seq(
           // Double.toString, not %f: locale-independent '.' separator
           "wall" -> ((wall * 1000).round / 1000.0).toString,
-          "taskRunMs" -> agg.runMs.get.toString,
-          "taskCpuMs" -> agg.cpuMs.get.toString,
-          "taskGcMs" -> agg.gcMs.get.toString,
+          "taskRunMs" -> sum(_.runMs).toString,
+          "taskCpuMs" -> sum(_.cpuMs).toString,
+          "taskGcMs" -> sum(_.gcMs).toString,
           "drvGcMs" -> (gcMillis - gc0).toString,
           "jitMs" -> (jitMillis - jit0).toString,
-          "spillMB" -> (agg.spill.get >> 20).toString,
+          "spillMB" -> (sum(_.spillBytes) >> 20).toString,
           "codeUsedMB" -> codeUsedMB.toString,
           "procCpuMs" -> (procCpuMs - pc0).toString,
           "osBusyMs" -> (osBusyMs - os0).toString,
@@ -281,7 +204,7 @@ object Bench {
       // discarded (every wall lands in the published `runs` array and
       // the suspect flag still sees them); a query with one clean run
       // among its first three triggers nothing.
-      val nCores = cpus.toDouble
+      val nCores = sc.defaultParallelism.toDouble
       var extraRuns = 0
       while (extraRuns < 2 && {
         val best = timed.minBy(_._1)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Materializes a scale-tier fixture for the bench: every fixture table
@@ -26,14 +25,7 @@ object ScaleFixture {
     val srcDir = args(0)
     val outDir = args(1)
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local(defaultCpus = 32)
     val reps = spark.range(mult).select(col("id").as("rep"))
     Tables.schemas.keys.toSeq.sorted.foreach { name =>
       // Tables.load is footer-aware for events.ts — the tier therefore

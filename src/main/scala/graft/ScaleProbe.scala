@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe: multiplies the lineitem fixture in-plan (crossJoin with
@@ -17,34 +16,20 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def enabled(name: String): Boolean = only.forall(_.exists(name.contains))
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local(defaultCpus = 32)
     // spill accounting per probe — the constrained-heap evidence that
     // agg/join/sort fall back to disk instead of OOMing under memory
     // pressure (run with SPARK_DRIVER_MEM=4g to force it at 18M rows)
-    val spill = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      })
+    val stages = StageMetrics.install(spark.sparkContext)
     def spillTag(): String = {
       // drain the async listener bus first, or onTaskEnd events from this
       // probe can land after the read and bleed into the next probe's tag
       org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
-      val mb = spill.getAndSet(0L) >> 20
+      val mb = stages.byStage.map(_._2.spillBytes).sum >> 20
+      stages.reset()
       if (mb > 0) s" [spilled ${mb} MB]" else ""
     }
 

@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session-level I/O tuning for every graft main (r22, guide
-  * §1.2 step 3 — config AFTER the algorithm, from measurement).
+/** The one place a graft session's shape is decided. [[local]] builds
+  * the session every main runs on; [[shared]] is the part a
+  * persistent-catalog session ([[graft.sources.PersistentCatalog]])
+  * takes from here too; [[apply]] is the r22 shuffle I/O tuning
+  * (guide §1.2 step 3 — config AFTER the algorithm, from measurement).
   *
   * Root cause (thread-dump-attributed): with `shuffle.partitions` at
   * the local core count (32 ≤ the 200 default
@@ -23,26 +26,69 @@ import org.apache.spark.sql.SparkSession
   *     only makes small-R behavior match the large-R path — strictly
   *     fewer file creates at every scale, not a local[32] special.
   *   - `spark.local.dir` moves shuffle/spill/broadcast scratch to
-  *     tmpfs when the host has one (/dev/shm), sidestepping the slow
-  *     virtio file creates entirely; production deployments point this
-  *     at fast local disks for exactly this reason (guide §2.1: local
-  *     disk bandwidth can be the tighter shuffle limit).
+  *     tmpfs when the host has one (/dev/shm) with at least
+  *     [[ShmFloorBytes]] free, sidestepping the slow virtio file
+  *     creates entirely; production deployments point this at fast
+  *     local disks for exactly this reason (guide §2.1: local disk
+  *     bandwidth can be the tighter shuffle limit). A smaller tmpfs
+  *     (Docker's default /dev/shm is 64 MB) would turn every shuffle
+  *     into ENOSPC, so it keeps the JVM default.
   *
   * Both are env-overridable so a driver/operator can pin different
   * values without a rebuild: SPARK_GRAFT_BYPASS_THRESHOLD,
   * SPARK_GRAFT_LOCAL_DIR (set to "default" to keep the JVM default).
   */
 object SessionTuning {
-  def apply(b: SparkSession.Builder): SparkSession.Builder = {
-    val bypass = sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1")
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR") match {
-      case Some(d) => if (d == "default") None else Some(d)
+
+  /** Free space /dev/shm must have before shuffle scratch moves there. */
+  val ShmFloorBytes: Long = 1L << 30
+
+  /** Decided (and logged) once per JVM. */
+  private lazy val localDir: Option[String] = {
+    val (dir, why) = sys.env.get("SPARK_GRAFT_LOCAL_DIR") match {
+      case Some("default") => (None, "SPARK_GRAFT_LOCAL_DIR=default")
+      case Some(d) => (Some(d), "SPARK_GRAFT_LOCAL_DIR")
       case None =>
         val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-scratch")
-        else None
+        val free = if (shm.isDirectory && shm.canWrite) shm.getUsableSpace else 0L
+        val mb = s"/dev/shm has ${free >> 20} MB free, floor ${ShmFloorBytes >> 20} MB"
+        if (free >= ShmFloorBytes) (Some("/dev/shm/graft-scratch"), mb)
+        else (None, mb)
     }
+    System.err.println(
+      s"[session] spark.local.dir = ${dir.getOrElse("JVM default")} ($why)")
+    dir
+  }
+
+  def apply(b: SparkSession.Builder): SparkSession.Builder = {
+    val bypass = sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1")
     val withBypass = b.config("spark.shuffle.sort.bypassMergeThreshold", bypass)
     localDir.fold(withBypass)(d => withBypass.config("spark.local.dir", d))
+  }
+
+  /** What every graft session shares, local or persistent: UTC and the
+    * native functions of [[graft.plans.GraftExtensions]]. */
+  def shared(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
+
+  /** The session of every main: `local[SPARK_GRAFT_CPUS]` (else
+    * `defaultCpus`) with as many shuffle partitions, the [[shared]]
+    * settings, the [[apply]] tuning, UI off and WARN logging. With
+    * `statsDir`, the fixtures there are registered as stats-bearing
+    * tables with CBO on ([[Tables.registerWithStats]]) — the shape the
+    * bench and the correctness gate run, and a production deployment
+    * gets from the persistent catalog.
+    */
+  def local(defaultCpus: Int, statsDir: Option[String] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = shared(apply(SparkSession.builder()))
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    statsDir.foreach(Tables.registerWithStats(spark, _))
+    spark
   }
 }

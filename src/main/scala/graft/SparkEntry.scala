@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.engine.Engine
+import graft.plans.GraftExtensions
 import graft.queries.{Q, RelationalQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -27,11 +28,15 @@ object SparkEntry {
     graft.queries.CurationQueries.all
 
   /** One Engine per SparkSession, with every catalog query registered as
-    * a handler taking the fixture dir as its single argument.
+    * a handler taking the fixture dir as its single argument. The native
+    * functions are added here too, so a session built without
+    * [[graft.plans.GraftExtensions]] (e.g. one the calling application
+    * built) still runs every query.
     */
   private val engines = scala.collection.concurrent.TrieMap.empty[SparkSession, Engine]
   def engineFor(spark: SparkSession): Engine =
     engines.getOrElseUpdate(spark, {
+      GraftExtensions.registerIn(spark)
       val e = new Engine(spark)
       catalog.foreach { case (name, q) =>
         e.register(name)((s, _, args) => q.fn(s, args.head.toString))

@@ -264,20 +264,6 @@ final class Engine(
   def cancel(sn: String): Unit =
     spark.sparkContext.cancelJobGroup(sn)
 
-  /** Serialized JSON result with transparent compression — the full rpc
-    * response path (`src/processor.ts:111-124`): rows as JSON lines,
-    * deflated when at or above `config.compressMinBytes` (the producer
-    * side of the zlib sniff; [[ResultCodec.decode]] is the consumer).
-    */
-  def queryJson(cmd: String, args: Seq[Any] = Nil): Try[Array[Byte]] =
-    withScope {
-      submit(cmd, args).map { df =>
-        val payload = df.toJSON.collect().mkString("\n").getBytes("UTF-8")
-        if (payload.length >= config.compressMinBytes) ResultCodec.deflate(payload)
-        else payload
-      }
-    }
-
   /** Continuous intake: drain a queue of (cmd, args) job packets until
     * the `poison` marker — the dispatch loop of `Processor.run()`
     * (`src/processor.ts:61-89`). Failures are per-job results, never

@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -128,20 +126,4 @@ object GramHash {
   /** Seed matching `xxhash64(7L, slice(...))` — the 7L prefix folded. */
   val AltSeed: Long =
     org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(7L, 42L)
-
-  val info = new ExpressionInfo(
-    classOf[GramHash].getCanonicalName, null, "gram_hash",
-    "gram_hash(arr, pos, len, seed) - xxhash64 of arr[pos, pos+len) without slicing.",
-    "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, p, l, s) => GramHash(a, p, l, s)
-    case other => throw new IllegalArgumentException(
-      s"gram_hash expects 4 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration. */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("gram_hash"), info, builder)
 }

@@ -2,10 +2,8 @@ package graft.expressions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -80,26 +78,4 @@ case class KMinValues(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KMinValues =
     copy(child = newChildren.head)
-}
-
-object KMinValues {
-  val info = new ExpressionInfo(
-    classOf[KMinValues].getCanonicalName, null, "kmv_sketch",
-    "kmv_sketch(expr, k) - array of the k smallest distinct bigint values.", "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child, kExpr) =>
-      val k = kExpr.eval(InternalRow.empty) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"kmv_sketch k must be a literal int, got $other")
-      }
-      KMinValues(child, k)
-    case other => throw new IllegalArgumentException(
-      s"kmv_sketch expects (expr, k), got ${other.size} arguments")
-  }
-
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("kmv_sketch"), info, builder)
 }

@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -127,21 +125,4 @@ object LshBucket {
     }
     bkt
   }
-
-  val info = new ExpressionInfo(
-    classOf[LshBucket].getCanonicalName, null, "lsh_bucket",
-    "lsh_bucket(embedding) - fused 8-bit sign-LSH bucket (0..255).", "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a) => LshBucket(a)
-    case other => throw new IllegalArgumentException(
-      s"lsh_bucket expects 1 argument, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration (same convention as
-    * [[ScaledDotProduct.registerIn]]).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lsh_bucket"), info, builder)
 }

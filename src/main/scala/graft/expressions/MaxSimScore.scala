@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
@@ -127,21 +125,4 @@ object MaxSimScore {
     }
     out
   }
-
-  val info = new ExpressionInfo(
-    classOf[MaxSimScore].getCanonicalName, null, "maxsim_score",
-    "maxsim_score(q, c) - late-interaction score: sum over 8 query " +
-      "sub-vectors of the max exact fixed-point sub-dot vs the candidate.", "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => MaxSimScore(a, b)
-    case other => throw new IllegalArgumentException(
-      s"maxsim_score expects 2 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[ScaledDotProduct.registerIn]]). */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("maxsim_score"), info, builder)
 }

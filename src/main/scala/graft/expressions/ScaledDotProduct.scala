@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
@@ -84,22 +82,4 @@ case class ScaledDotProduct(left: Expression, right: Expression)
 object ScaledDotProduct {
   /** 2^40 — matches the `S` constant in the oracle SQL. */
   val Scale: Double = 1099511627776d
-
-  val info = new ExpressionInfo(
-    classOf[ScaledDotProduct].getCanonicalName, null, "scaled_dot",
-    "scaled_dot(a, b) - exact bigint sum of floor(a[i]*b[i]*2^40).", "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => ScaledDotProduct(a, b)
-    case other => throw new IllegalArgumentException(
-      s"scaled_dot expects 2 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration — makes `scaled_dot` available
-    * to `expr`/SQL regardless of whether the session was built with
-    * [[graft.plans.GraftExtensions]] (e.g. a driver-provided session).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("scaled_dot"), info, builder)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
@@ -96,23 +94,4 @@ case class SortedOverlap(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedOverlap =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedOverlap {
-  val info = new ExpressionInfo(
-    classOf[SortedOverlap].getCanonicalName, null, "sorted_overlap",
-    "sorted_overlap(a, b) - intersection cardinality of two sorted int arrays.", "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => SortedOverlap(a, b)
-    case other => throw new IllegalArgumentException(
-      s"sorted_overlap expects 2 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration (the
-    * [[ScaledDotProduct.registerIn]] convention).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sorted_overlap"), info, builder)
 }

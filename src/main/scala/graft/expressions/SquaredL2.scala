@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -116,22 +114,4 @@ object SquaredL2 {
   /** Two-argument form (offset 0) — the pre-offset signature. */
   def apply(left: Expression, right: Expression): SquaredL2 =
     SquaredL2(left, right, Literal(0))
-
-  val info = new ExpressionInfo(
-    classOf[SquaredL2].getCanonicalName, null, "sq_l2",
-    "sq_l2(a, b[, off]) - exact bigint sum of (a[off+i]-b[i])^2.", "")
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => SquaredL2(a, b)
-    case Seq(a, b, off) => SquaredL2(a, b, off)
-    case other => throw new IllegalArgumentException(
-      s"sq_l2 expects 2 or 3 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration (same contract as
-    * [[ScaledDotProduct.registerIn]]).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sq_l2"), info, builder)
 }

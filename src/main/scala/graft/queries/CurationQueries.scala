@@ -912,7 +912,6 @@ object CurationQueries {
     */
   private val simSq8Recall = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val e = NorthStarQueries.kmeansQuantized(s, dir)
         .join(TS(s, dir, "embeddings").select(col("vec_id"), col("embedding")), Seq("vec_id"))
       val cal = TS(s, dir, "embeddings")
@@ -1011,7 +1010,6 @@ object CurationQueries {
     */
   private val simSqLadder = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val e = NorthStarQueries.kmeansQuantized(s, dir)
         .join(TS(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
           Seq("vec_id"))
@@ -1136,7 +1134,6 @@ object CurationQueries {
     */
   private val simBinaryQuant = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantized(s, dir)
         .join(TS(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
           Seq("vec_id"))
@@ -1252,7 +1249,6 @@ object CurationQueries {
     */
   private val simIvfPq = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cents: Seq[(Int, Seq[Long])] = v
         .where(col("vec_id").between(100, 115)).collect()
@@ -1368,7 +1364,7 @@ object CurationQueries {
   /** The coarse-quantizer assignment expression (sorted (distance, cell)
     * structs over the 16 centroid literals) — shared by the persisted
     * index build, the incremental append, and the serve-side probe
-    * selection. Requires `SquaredL2.registerIn` on the session.
+    * selection, scored with the native `sq_l2`.
     */
   private[graft] def ivfCellSortedExpr(v: DataFrame): String = {
     val cents: Seq[(Int, Seq[Long])] = v
@@ -1441,7 +1437,6 @@ object CurationQueries {
 
   private val simIvfPqPersisted = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
@@ -1476,7 +1471,6 @@ object CurationQueries {
     */
   private val simIvfAppend = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
@@ -1518,7 +1512,6 @@ object CurationQueries {
   private val simIvfAppendStream = Q(
     (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val cb = NorthStarQueries.pqCodebook(v)
@@ -1652,7 +1645,6 @@ object CurationQueries {
     */
   private val simRangeSearch = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("scaled_dot(embedding, embedding)").as("nrm"))
@@ -2288,8 +2280,6 @@ object CurationQueries {
     */
   private val simKnn2Hop = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("lsh_bucket(embedding)").as("bucket"),
@@ -2774,8 +2764,6 @@ object CurationQueries {
     */
   private val embedLabelProp = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"),
           expr("lsh_bucket(embedding)").as("bucket"),
@@ -2889,7 +2877,6 @@ object CurationQueries {
     */
   private val simMatryoshka = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("slice(embedding, 1, 16)").as("emb16"))
@@ -4064,7 +4051,6 @@ object CurationQueries {
     */
   private val simIvfBalance = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val wAssign = Window.partitionBy(col("vec_id"))
@@ -4314,7 +4300,6 @@ object CurationQueries {
     */
   private val simJlRecall = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("scaled_dot(embedding, embedding)").as("nrm"),
@@ -4465,7 +4450,6 @@ object CurationQueries {
     */
   private val simIvfFiltered = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val wAssign = Window.partitionBy(col("vec_id"))
@@ -5701,8 +5685,6 @@ object CurationQueries {
     */
   private val embedKnnTriangles = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("lsh_bucket(embedding)").as("bucket"),
@@ -6403,7 +6385,6 @@ object CurationQueries {
     */
   private[graft] def agreementSemanticStats(s: SparkSession, dir: String,
       asg: DataFrame): DataFrame = {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       // embedding facts: k-means cell + norm (the SemDeDup frame)
       val emb = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
@@ -7237,7 +7218,6 @@ object CurationQueries {
     */
   private val decontaminateSemantic = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
       val corpus = e.where(col("vec_id") >= 32)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
@@ -7333,7 +7313,6 @@ object CurationQueries {
     */
   private val sampleClusterBalance = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val CAP = 24
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
@@ -8024,7 +8003,6 @@ object CurationQueries {
     */
   private val simIvfDelete = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
@@ -8067,7 +8045,6 @@ object CurationQueries {
     */
   private val simIvfCompact = Q(
     (s, dir) => {
-      graft.expressions.SquaredL2.registerIn(s)
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
@@ -8909,7 +8886,6 @@ object CurationQueries {
     */
   private val simBitextMining = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val d = T(s, dir, "documents").select(col("doc_id"), col("lang"))
       val e = TS(s, dir, "embeddings")
         .join(d, col("vec_id") === col("doc_id"))
@@ -9243,8 +9219,6 @@ object CurationQueries {
     */
   private val embedHits = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("lsh_bucket(embedding)").as("bucket"),
@@ -10868,7 +10842,6 @@ object CurationQueries {
     */
   private val textTrigramMatch = Q(
     (s, dir) => {
-      graft.expressions.SortedOverlap.registerIn(s)
       // r22 (guide §2.3 — narrower types): trigrams carry through every
       // exchange, group-by, sorted array and intersection as an INT code
       // ((ascii(c1)*128 + ascii(c2))*128 + ascii(c3) — injective on any
@@ -11047,7 +11020,6 @@ object CurationQueries {
     */
   private val textTrigramJoin = Q(
     (s, dir) => {
-      graft.expressions.SortedOverlap.registerIn(s)
       val docs = TS(s, dir, "documents")
       val sig = docs
         .select(lower(substring(col("text"), 1, 40)).as("s"), col("doc_id"))
@@ -11264,12 +11236,11 @@ object CurationQueries {
     */
   private val simMaxsim = Q(
     (s, dir) => {
-      // codegen'd kernel — bit-identical to the nested-HOF chain it
-      // replaced (ScaledDotSpec proves parity; candidate floors are
-      // computed once per pair instead of 8x): 1.54 -> 0.51 s at sf0.1,
-      // 12.2 -> 0.54 s at the 10x tier (the audit goes from linear-wall
-      // to overhead-bound)
-      graft.expressions.MaxSimScore.registerIn(s)
+      // maxsim_score is a codegen'd kernel — bit-identical to the
+      // nested-HOF chain it replaced (ScaledDotSpec proves parity;
+      // candidate floors are computed once per pair instead of 8x):
+      // 1.54 -> 0.51 s at sf0.1, 12.2 -> 0.54 s at the 10x tier (the
+      // audit goes from linear-wall to overhead-bound)
       val e = TS(s, dir, "embeddings")
       val q = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -11461,8 +11432,6 @@ object CurationQueries {
     */
   private val simRecallCurve = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
         .withColumn("bkt", expr("lsh_bucket(embedding)"))
@@ -13681,8 +13650,6 @@ object CurationQueries {
     */
   private val simMaxsimIvf = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.MaxSimScore.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val cen = broadcast(e.where(col("vec_id").between(100, 115))
@@ -14086,7 +14053,6 @@ object CurationQueries {
     * and the source-flow rollup.
     */
   private def exactSubstrSpans(s: SparkSession, dir: String): DataFrame = {
-    GramHash.registerIn(s)
     val L = XS_L
     val g = TS(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -14356,7 +14322,6 @@ object CurationQueries {
 
   private val dedupSubstrIncr = Q(
     (s, dir) => {
-      GramHash.registerIn(s)
       val L = XS_L
       val docs = TS(s, dir, "documents")
       val base = scratchDir("substrstore")
@@ -14418,7 +14383,6 @@ object CurationQueries {
     */
   private def bpeSpanQ(L: Int) = Q(
     (s, dir) => {
-      GramHash.registerIn(s)
       val m = bpeRulePivot(s, dir)
       val words = TS(s, dir, "documents")
         .select(col("doc_id"), posexplode(split(col("text"), " "))
@@ -15514,8 +15478,6 @@ object CurationQueries {
     */
   private val simMaxsimPlaid = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.MaxSimScore.registerIn(s)
       val e = TS(s, dir, "embeddings")
       val subc = e.where(col("vec_id").between(100, 115))
         .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("cs"),
@@ -15662,8 +15624,6 @@ object CurationQueries {
     */
   private val simPlaidCurve = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.MaxSimScore.registerIn(s)
       val e = TS(s, dir, "embeddings")
       val subc = e.where(col("vec_id").between(100, 115))
         .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("cs"),
@@ -16300,7 +16260,6 @@ object CurationQueries {
     */
   private val embedKcenterInit = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
         .select(col("vec_id"), col("embedding"), col("nrm"))

@@ -859,7 +859,6 @@ object NorthStarQueries {
     */
   private val simCosineTopk = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
       val withNorm = e.withColumn("nrm", expr(scaledDot("embedding", "embedding")))
       val q = withNorm.where(col("vec_id") < 16)
@@ -949,7 +948,6 @@ object NorthStarQueries {
     */
   private val simLshBuckets = Q(
     (s, dir) => {
-      graft.expressions.LshBucket.registerIn(s)
       TS(s, dir, "embeddings")
         .select(col("vec_id"), expr("lsh_bucket(embedding)").as("bucket"))
         .groupBy(col("bucket"))
@@ -968,8 +966,6 @@ object NorthStarQueries {
     */
   private val dedupEmbeddingCosine = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
                 expr("lsh_bucket(embedding)").as("bucket"),
@@ -1012,7 +1008,6 @@ object NorthStarQueries {
     */
   private def ivfTopk(nprobe: Int): Q = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val wAssign = Window.partitionBy(col("vec_id"))
@@ -1344,7 +1339,6 @@ object NorthStarQueries {
     */
   private val sketchKmv = Q(
     (s, dir) => {
-      graft.expressions.KMinValues.registerIn(s)
       val k = 16
       TS(s, dir, "documents")
         .select(col("source"), explode(expr(hashedShinglesExpr)).as("hv"))
@@ -1657,8 +1651,6 @@ object NorthStarQueries {
     */
   private val embedKnnGraph = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
                 expr("lsh_bucket(embedding)").as("bucket"),
@@ -2573,7 +2565,6 @@ object NorthStarQueries {
     */
   private[graft] def kmeansAssignTo(v: DataFrame,
       cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    graft.expressions.SquaredL2.registerIn(v.sparkSession)
     if (cents.size <= KMEANS_LITERAL_BUDGET) {
       val structs = cents.map { case (j, c) =>
         // codegen'd exact integer distance (graft.expressions.SquaredL2) —
@@ -2621,7 +2612,6 @@ object NorthStarQueries {
   private[graft] def kmeansAssignRouted(v: DataFrame,
       cents: Seq[(Int, Seq[Long])]): DataFrame = {
     val sp = v.sparkSession
-    graft.expressions.SquaredL2.registerIn(sp)
     val k = cents.size
     val s = math.ceil(math.sqrt(k.toDouble)).toInt
     val cdf = centroidFrame(sp, cents)
@@ -2954,7 +2944,6 @@ object NorthStarQueries {
     */
   private[graft] def semanticPairStats(s: SparkSession, dir: String,
                                        asg: DataFrame): DataFrame = {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
         .join(asg, Seq("vec_id"))
@@ -3255,7 +3244,6 @@ object NorthStarQueries {
     (s, dir) => {
       val v = kmeansQuantizedIndex(s, dir)
       val cb = pqCodebook(v)
-      graft.expressions.SquaredL2.registerIn(s)
       val rowExprs = (0 until PQ_M).map { m =>
         val structs = cb(m).map { case (j, c) =>
           // offset form: reads xq[m*8 + i] in place — the slice()
@@ -3361,7 +3349,6 @@ object NorthStarQueries {
     */
   private def adcScoredDf(s: SparkSession, v: DataFrame): DataFrame = {
     val cb = pqCodebook(v)
-    graft.expressions.SquaredL2.registerIn(s)
     // corpus codes: argmin codebook entry per subspace (same encode
     // expression as ns_sim_pq)
     val encExprs = pqEncodeExprs(cb)
@@ -3664,7 +3651,6 @@ object NorthStarQueries {
     */
   private val simHybridRrf = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
       val withNorm = e.withColumn("nrm", expr(scaledDot("embedding", "embedding")))
       val qv = withNorm.where(col("vec_id") < 3)
@@ -3756,7 +3742,6 @@ object NorthStarQueries {
     */
   private val simIvfRecall = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       // exact brute-force top-10 per query (ground truth)
@@ -4018,8 +4003,6 @@ object NorthStarQueries {
     */
   private val embedPagerank = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
-      graft.expressions.LshBucket.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
                 expr("lsh_bucket(embedding)").as("bucket"),
@@ -4122,7 +4105,6 @@ object NorthStarQueries {
     */
   private val simHardNegatives = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val q = e.where(col("vec_id") < 16)
@@ -4175,7 +4157,6 @@ object NorthStarQueries {
     */
   private val embedClusterPurity = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val wAssign = Window.partitionBy(col("vec_id"))
@@ -4256,7 +4237,6 @@ object NorthStarQueries {
     */
   private val simMmrRerank = Q(
     (s, dir) => {
-      graft.expressions.ScaledDotProduct.registerIn(s)
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val q = e.where(col("vec_id") < 8)

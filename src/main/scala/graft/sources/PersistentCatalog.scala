@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-import graft.Tables
+import graft.{SessionTuning, Tables}
 
 /** Persistent, metastore-backed catalog — the deployment-facing analog of
   * the reference's always-on relational store (`/root/reference/src/
@@ -26,8 +26,9 @@ import graft.Tables
   */
 object PersistentCatalog {
 
-  /** Session builder preconfigured for the persistent catalog: Hive
-    * support (external catalog in a Derby metastore under
+  /** Session builder preconfigured for the persistent catalog: the
+    * settings every graft session shares ([[graft.SessionTuning.shared]]),
+    * Hive support (external catalog in a Derby metastore under
     * `metastoreDir`), managed-table storage under `warehouseDir`, and
     * cost-based optimization ON so the ANALYZE stats actually steer
     * join ordering and build-side choice.
@@ -42,15 +43,13 @@ object PersistentCatalog {
       metastoreDir: String,
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession.builder()
+    SessionTuning.shared(SparkSession.builder())
       .master(master)
       .enableHiveSupport()
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastoreDir/metastore_db;create=true")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.sql.statistics.histogram.enabled", "true")

@@ -2,9 +2,9 @@ package org.apache.spark.graftbench
 
 import org.apache.spark.SparkContext
 
-/** Bench-only accessor: `LiveListenerBus.waitUntilEmpty()` is
-  * `private[spark]`, but per-run task-metric attribution in
-  * [[graft.Bench]] needs every `onTaskEnd` event drained before the
+/** Accessor: `LiveListenerBus.waitUntilEmpty()` is
+  * `private[spark]`, but per-run task-metric attribution from
+  * [[graft.StageMetrics]] needs every `onTaskEnd` event drained before the
   * post-run snapshot is taken — otherwise metrics from run N bleed
   * into run N+1's delta. Lives under `org.apache.spark` solely to
   * cross that package-private boundary; no Spark internals are

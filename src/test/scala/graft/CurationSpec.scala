@@ -195,7 +195,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("range search: bounds hold and count matches an independent recount") {
-    graft.expressions.ScaledDotProduct.registerIn(spark)
     val rows = run("ns_sim_range_search").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -736,7 +735,6 @@ class CurationSpec extends SparkSpec {
 
   test("ivf append: base index files survive byte-identical, arrivals only add") {
     import org.apache.spark.sql.functions._
-    graft.expressions.SquaredL2.registerIn(spark)
     val v = graft.queries.NorthStarQueries.kmeansQuantizedIndex(spark, sfDir)
     val cellSorted = graft.queries.CurationQueries.ivfCellSortedExpr(v)
     val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
@@ -773,7 +771,6 @@ class CurationSpec extends SparkSpec {
 
   test("ivf compaction: untouched cells keep their files, tombstones leave disk") {
     import org.apache.spark.sql.functions._
-    graft.expressions.SquaredL2.registerIn(spark)
     val v = graft.queries.NorthStarQueries.kmeansQuantizedIndex(spark, sfDir)
     val cellSorted = graft.queries.CurationQueries.ivfCellSortedExpr(v)
     val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
@@ -819,7 +816,6 @@ class CurationSpec extends SparkSpec {
     // have its directory deleted explicitly, or the ids resurrect in
     // the unfiltered serve path
     import org.apache.spark.sql.functions._
-    graft.expressions.SquaredL2.registerIn(spark)
     val v = graft.queries.NorthStarQueries.kmeansQuantizedIndex(spark, sfDir)
     val cellSorted = graft.queries.CurationQueries.ivfCellSortedExpr(v)
     val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))

@@ -112,24 +112,6 @@ class EngineSpec extends SparkSpec {
     assert(log.toSeq == Seq(1, 2), "fail-fast must not run later steps")
   }
 
-  test("queryJson compresses large results with the zlib magic, sniff-decodes back") {
-    import graft.engine.ResultCodec
-    val e = freshEngine
-    e.register("big")((s, _, _) => {
-      import s.implicits._
-      (1 to 500).map(i => (i, "x" * 50)).toDF("i", "pad").orderBy(col("i"))
-    })
-    val blob = e.queryJson("big").get
-    assert(ResultCodec.isCompressed(blob), "large payload should carry 0x78 0x9c")
-    val text = new String(ResultCodec.decode(blob), "UTF-8")
-    assert(text.linesIterator.size == 500 && text.contains("\"i\":1"))
-    // small results stay uncompressed and pass through decode untouched
-    e.register("small")((s, _, _) => { import s.implicits._; Seq(1).toDF("i") })
-    val small = e.queryJson("small").get
-    assert(!ResultCodec.isCompressed(small))
-    assert(new String(ResultCodec.decode(small), "UTF-8").contains("\"i\":1"))
-  }
-
   test("serve drains the job queue, reports per-job failures, stops on poison") {
     val e = freshEngine
     e.register("ok")((s, _, args) => {

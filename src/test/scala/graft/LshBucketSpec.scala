@@ -16,7 +16,6 @@ import graft.queries.NorthStarQueries
 class LshBucketSpec extends SparkSpec {
 
   test("lsh_bucket equals the HOF chain on fixture embeddings") {
-    LshBucket.registerIn(spark)
     val diff = Tables.load(spark, sfDir, "embeddings")
       .select(expr(NorthStarQueries.lshBucketExpr).as("hof"),
         expr("lsh_bucket(embedding)").as("native"))
@@ -26,7 +25,6 @@ class LshBucketSpec extends SparkSpec {
   }
 
   test("lsh_bucket degenerate inputs: short / long / null-element / NULL arrays") {
-    LshBucket.registerIn(spark)
     val schema = StructType(Seq(
       StructField("embedding", ArrayType(FloatType, containsNull = true))))
     val full = Array.tabulate(64)(i => java.lang.Float.valueOf(
@@ -53,7 +51,6 @@ class LshBucketSpec extends SparkSpec {
   }
 
   test("lsh_bucket interpreted eval matches codegen") {
-    LshBucket.registerIn(spark)
     // Interpreted path via direct expression eval on fixture vectors
     val vecs = Tables.load(spark, sfDir, "embeddings")
       .select(col("embedding"), expr("lsh_bucket(embedding)").as("native"))

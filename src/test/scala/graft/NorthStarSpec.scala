@@ -283,7 +283,6 @@ class NorthStarSpec extends SparkSpec {
   test("IVF recall vs brute force is monotone in nprobe and positive") {
     // ground truth: brute-force cosine top-3 per query over the full
     // corpus, same tie-breaks as the IVF queries (cos desc, c_id)
-    graft.expressions.ScaledDotProduct.registerIn(spark)
     val e = Tables.load(spark, sfDir, "embeddings")
       .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
     val q = e.where(col("vec_id") < 16)
@@ -318,7 +317,6 @@ class NorthStarSpec extends SparkSpec {
   test("PQ ADC recall vs exact integer L2 top-5 is positive") {
     // ground truth: exact squared-L2 top-5 per query on the same 2^14
     // quantized grid ADC approximates (same tie-breaks: d asc, c_id)
-    graft.expressions.SquaredL2.registerIn(spark)
     val v = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(floor(cast(x as double) * 16384) as bigint))").as("xq"))

@@ -16,7 +16,6 @@ class ScaledDotSpec extends SparkSpec {
       "cast(0 as bigint), (acc, v) -> acc + v)"
 
   test("scaled_dot equals the HOF formulation on fixture embeddings") {
-    ScaledDotProduct.registerIn(spark)
     val diff = Tables.load(spark, sfDir, "embeddings")
       .select(expr(hofDot).as("hof"), expr("scaled_dot(embedding, embedding)").as("native"))
       .where(col("hof") =!= col("native"))
@@ -25,7 +24,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("maxsim_score equals the nested-HOF formulation on fixture pairs") {
-    graft.expressions.MaxSimScore.registerIn(spark)
     val hofMaxsim =
       "aggregate(transform(sequence(0, 7), qs -> " +
         "array_max(transform(sequence(0, 7), ds -> " +
@@ -55,7 +53,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("scaled_dot works via SQL after registration and in interpreted mode") {
-    ScaledDotProduct.registerIn(spark)
     val v = spark.sql(
       "SELECT scaled_dot(array(cast(0.5 as float), cast(-0.25 as float)), " +
       "array(cast(2.0 as float), cast(4.0 as float))) AS d").head().getLong(0)
@@ -73,7 +70,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("kmv_sketch keeps the k smallest distinct values across partition merges") {
-    graft.expressions.KMinValues.registerIn(spark)
     import spark.implicits._
     // values deliberately spread over many partitions to force merges
     val vals = (1L to 1000L).map(x => (x * 7919L) % 1001L)
@@ -89,7 +85,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("sq_l2 equals the HOF formulation on quantized fixture embeddings") {
-    graft.expressions.SquaredL2.registerIn(spark)
     val q = "transform(embedding, x -> cast(floor(cast(x as double) * 16384) as bigint))"
     val hof = s"aggregate(zip_with($q, $q, (a, b) -> (a - b) * (a - b)), " +
       "cast(0 as bigint), (acc, t) -> acc + t)"
@@ -106,7 +101,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("sq_l2 interpreted eval matches SQL codegen") {
-    graft.expressions.SquaredL2.registerIn(spark)
     val v = spark.sql(
       "SELECT sq_l2(array(cast(3 as bigint), cast(-2 as bigint)), " +
       "array(cast(1 as bigint), cast(2 as bigint))) AS d").head().getLong(0)
@@ -122,7 +116,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("sq_l2 offset form equals the slice formulation on fixture embeddings") {
-    graft.expressions.SquaredL2.registerIn(spark)
     val q = "transform(embedding, x -> cast(floor(cast(x as double) * 16384) as bigint))"
     // pair subvector [m*8, m*8+8) of the vector against the first 8
     // elements of its reverse, both ways: in-place offset read vs an
@@ -146,7 +139,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("sq_l2 rejects negative offsets instead of reading out of bounds") {
-    graft.expressions.SquaredL2.registerIn(spark)
     // foldable literal: fails at analysis (checkInputDataTypes)
     val analysisErr = intercept[Exception] {
       spark.sql("SELECT sq_l2(array(cast(1 as bigint)), array(cast(1 as bigint)), -1)")
@@ -166,7 +158,6 @@ class ScaledDotSpec extends SparkSpec {
   }
 
   test("scaled_dot pairs up to the shorter array and skips null slots") {
-    ScaledDotProduct.registerIn(spark)
     val v = spark.sql(
       "SELECT scaled_dot(array(cast(1.0 as float)), " +
       "array(cast(1.0 as float), cast(9.0 as float))) AS d").head().getLong(0)

@@ -1,0 +1,68 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.plans.GraftExtensions
+
+/** The session has one shape and the native functions one registration:
+  * every name in [[GraftExtensions.functions]] resolves in a session
+  * built with the extension, and in one built without it once
+  * [[SparkEntry.engineFor]] has run on it; a source guard keeps session
+  * building, function registration and task-metric listening each in
+  * one place.
+  */
+class SessionShapeSpec extends SparkSpec {
+
+  test("every native function resolves in an extension-built session") {
+    assert(GraftExtensions.functions.map(_._1.funcName).toSet == Set("scaled_dot", "maxsim_score", "kmv_sketch", "sq_l2",
+      "lsh_bucket", "sorted_overlap", "gram_hash"))
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      assert(registry.functionExists(id), s"$id is not registered")
+    }
+  }
+
+  test("engineFor registers the native functions in a session built without them") {
+    val bare = spark.newSession()
+    val registry = bare.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, _, _) => registry.dropFunction(id) }
+    assert(GraftExtensions.functions.forall { case (id, _, _) => !registry.functionExists(id) })
+    SparkEntry.engineFor(bare)
+    assert(GraftExtensions.functions.forall { case (id, _, _) => registry.functionExists(id) })
+    // the same query through the frame, on the stripped session, uses
+    // maxsim_score and scaled_dot
+    val rows = SparkEntry.queries("ns_sim_maxsim_plaid")(bare, sfDir).collect()
+    assert(rows.nonEmpty)
+    // idempotent: a second registration pass changes nothing
+    GraftExtensions.registerIn(bare)
+    assert(bare.sql("SELECT scaled_dot(array(1.0f, 2.0f), array(3.0f, 4.0f))")
+      .head.getLong(0) == 11L * (1L << 40))
+  }
+
+  test("source guard: one session factory, one function registry, one listener") {
+    val root = Paths.get("src/main/scala")
+    val sources: Map[String, String] = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> code(p)).toMap
+    def filesWith(pattern: String): Set[String] =
+      sources.collect { case (f, src) if src.contains(pattern) => f }.toSet
+    assert(filesWith("SparkSession.builder()") ==
+      Set("graft/SessionTuning.scala", "graft/sources/PersistentCatalog.scala"))
+    Seq("registerFunction", "injectFunction", "FunctionIdentifier(", "new ExpressionInfo(")
+      .foreach(p => assert(filesWith(p) == Set("graft/plans/GraftExtensions.scala"), p))
+    assert(filesWith("registerIn(") ==
+      Set("graft/plans/GraftExtensions.scala", "graft/SparkEntry.scala"))
+    assert("registerIn\\(".r.findAllIn(sources("graft/SparkEntry.scala")).size == 1,
+      "SparkEntry.engineFor is the one caller of GraftExtensions.registerIn")
+    assert(filesWith("SparkListener {") ++ filesWith("SparkListener{") ==
+      Set("graft/Metrics.scala"))
+  }
+
+  /** Source text without comments, so only code occurrences count. */
+  private def code(p: Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+}

@@ -15,7 +15,6 @@ import graft.expressions.SortedOverlap
 class SortedOverlapSpec extends SparkSpec {
 
   test("sorted_overlap equals size(array_intersect) on sorted arrays") {
-    SortedOverlap.registerIn(spark)
     val rnd = new scala.util.Random(42)
     def arr(maxLen: Int, dups: Boolean): Seq[Int] = {
       val base = Seq.fill(rnd.nextInt(maxLen))(rnd.nextInt(60))
