@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.graftbench.ListenerFlush
+import org.apache.spark.sql.DataFrame
 
 import graft.JvmProbes._
 
@@ -18,6 +19,9 @@ import graft.JvmProbes._
   * was lost ("parsed": null) because the diag-enriched line overflowed
   * the driver's tail-capture window; all diagnostics now go to a side
   * file (target/bench_diag.json) instead of the score line.
+  *
+  * A query that fails, in a warm-up or a timed run, ends the run with
+  * exit code 1 and its name on stderr; no score line is printed.
   *
   * Every timed run records a diagnostic row in that side file so an
   * anomalous run self-identifies from the artifact alone.
@@ -110,6 +114,15 @@ object Bench {
     val spark = SessionTuning.local(defaultCpus = 32, statsDir = Some(sfDir))
     val sc = spark.sparkContext
     val agg = StageMetrics.install(sc)
+    // One query pass through the noop sink. A failure ends the run with
+    // a nonzero exit and the query named: a wall time up to the failure
+    // is not a timing.
+    def run(name: String, dir: String)(df: => DataFrame): Unit =
+      try df.write.mode("overwrite").format("noop").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed on $dir: $e")
+        sys.exit(1)
+      }
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 (substring match) restricts the
     // run — lets a single query be re-measured in isolation when chasing
     // a variance flag, same convention as ScaleProbe.
@@ -136,10 +149,7 @@ object Bench {
     val warmDirs = Seq("/root/testdata/sf0.001", sfDir).distinct
     warmDirs.foreach { wd =>
       if (new java.io.File(wd).isDirectory)
-        bench.foreach { case (_, fn, _) =>
-          try fn(spark, wd).write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
-        }
+        bench.foreach { case (name, fn, _) => run(name, wd)(fn(spark, wd)) }
     }
     // Min of three timed runs per query: one-off GC/straggler pauses in
     // a shared local JVM otherwise dominate individual measurements
@@ -150,19 +160,14 @@ object Bench {
     val results = bench.map { case (name, fn, isHeadline) =>
       System.gc()
       Thread.sleep(200)
-      warmUp(() =>
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () })
+      warmUp(() => run(name, sfDir)(fn(spark, sfDir)))
       def timedRun(): (Double, Long, Seq[(String, String)]) = {
         ListenerFlush.drain(sc)
         agg.reset()
         val (gc0, jit0, pc0, os0, cl0, st0) =
           (gcMillis, jitMillis, procCpuMs, osBusyMs, classesLoaded, osStealMs)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
+        run(name, sfDir)(fn(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
         ListenerFlush.drain(sc)
         val ran = agg.byStage

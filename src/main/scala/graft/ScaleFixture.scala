@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materializes a scale-tier fixture for the bench: every fixture table
   * from `srcDir` written to `outDir`, with the corpus tables
-  * (`documents`, `embeddings`, `events`) replicated `mult` times under
-  * the SAME id-remap ScaleProbe uses (`id * mult + rep` — clones get
-  * distinct, collision-free ids; events remap BOTH user_id and
+  * (`documents`, `embeddings`, `events`) replicated `mult` times by
+  * [[replicate]], which ScaleProbe also uses (`id * mult + rep` — clones
+  * get distinct, collision-free ids; events remap BOTH user_id and
   * event_id and keep timestamps, so every replica user carries the
   * original's full session/cohort trajectory — the time axis densifies
   * rather than stretches, which is how real traffic grows). The other
@@ -21,32 +22,37 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleFixture <srcDir> <outDir> [mult=10]
   */
 object ScaleFixture {
+
+  /** Fixture table `name` replicated `mult` times under the shared id
+    * remap `id * mult + rep`: documents remap doc_id, embeddings vec_id,
+    * events user_id and event_id; every other table passes through.
+    */
+  def replicate(name: String, src: DataFrame, mult: Int): DataFrame = {
+    def remap(ids: String*): DataFrame = {
+      val reps = src.sparkSession.range(mult).select(col("id").as("rep"))
+      ids.foldLeft(src.crossJoin(broadcast(reps))) { (df, id) =>
+        df.withColumn(id, col(id) * mult + col("rep"))
+      }.drop("rep")
+    }
+    name match {
+      case "documents" => remap("doc_id")
+      case "embeddings" => remap("vec_id")
+      case "events" => remap("user_id", "event_id")
+      case _ => src
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val srcDir = args(0)
     val outDir = args(1)
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = SessionTuning.local(defaultCpus = 32)
-    val reps = spark.range(mult).select(col("id").as("rep"))
     Tables.schemas.keys.toSeq.sorted.foreach { name =>
       // Tables.load is footer-aware for events.ts — the tier therefore
       // re-writes events with a normalized TimestampType ts, which the
       // downstream footer detection reads back natively.
-      val src = Tables.load(spark, srcDir, name)
-      val out = name match {
-        case "documents" =>
-          src.crossJoin(broadcast(reps))
-            .withColumn("doc_id", col("doc_id") * mult + col("rep")).drop("rep")
-        case "embeddings" =>
-          src.crossJoin(broadcast(reps))
-            .withColumn("vec_id", col("vec_id") * mult + col("rep")).drop("rep")
-        case "events" =>
-          src.crossJoin(broadcast(reps))
-            .withColumn("user_id", col("user_id") * mult + col("rep"))
-            .withColumn("event_id", col("event_id") * mult + col("rep"))
-            .drop("rep")
-        case _ => src
-      }
-      out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      replicate(name, Tables.load(spark, srcDir, name), mult)
+        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
       println(s"[fixture] $name -> $outDir/$name.parquet")
     }
     spark.stop()

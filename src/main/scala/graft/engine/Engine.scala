@@ -12,8 +12,6 @@ import scala.util.{Failure, Success, Try}
   * address, this names the Spark-native equivalents.
   *
   * @param dataDir        root of the table fixtures (the "database")
-  * @param defaultTtlMs   default cache-entry TTL; <=0 = session lifetime
-  *                       (Redis keys without EXPIRE)
   * @param compressMinBytes result blobs at or above this size are
   *                       deflate-compressed (A6; sniffed on read)
   * @param maxConcurrentJobs advisory job-concurrency ceiling (the PG
@@ -27,7 +25,6 @@ import scala.util.{Failure, Success, Try}
   */
 final case class EngineConfig(
     dataDir: String = "/root/testdata/sf0.001",
-    defaultTtlMs: Long = 0L,
     compressMinBytes: Int = 1024,
     maxConcurrentJobs: Int = 2,
     reapIntervalMs: Long = 30000L)
@@ -43,7 +40,6 @@ object EngineConfig {
     */
   def resolve(
       dataDir: Option[String] = None,
-      defaultTtlMs: Option[Long] = None,
       compressMinBytes: Option[Int] = None,
       maxConcurrentJobs: Option[Int] = None,
       env: Map[String, String] = sys.env): EngineConfig = {
@@ -52,7 +48,6 @@ object EngineConfig {
       explicit.orElse(env.get(key).flatMap(v => Try(parse(v)).toOption)).getOrElse(dflt)
     EngineConfig(
       dataDir = dataDir.orElse(env.get("GRAFT_DATA_DIR")).getOrElse(d.dataDir),
-      defaultTtlMs = num(defaultTtlMs, "GRAFT_TTL_MS", _.toLong, d.defaultTtlMs),
       compressMinBytes =
         num(compressMinBytes, "GRAFT_COMPRESS_MIN_BYTES", _.toInt, d.compressMinBytes),
       maxConcurrentJobs =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expressions.GramHash
 
-import Q.{T, TS, scratchDir, scratchDelete}
+import Q.{T, TS}
 
 /** SURVEY.md §2C, round-10 additions — corpus-curation operators a
   * training-data pipeline runs between crawl and tokenizer: per-document
@@ -448,10 +448,9 @@ object CurationQueries {
     * strings, evicted at watermark; both inputs are map-only hashed
     * before the one (window, doc_id)-keyed aggregate.
     */
-  private val pipelineDeltaStream = Q(
-    (s, dir) => {
+  private val pipelineDeltaStream = Q.scratch("deltastream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = scratchDir("deltastream")
       val inDir = s"$base/in"
       val docs = T(s, dir, "documents")
       val neu = docs
@@ -505,13 +504,11 @@ object CurationQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val out = s.read.parquet(s"$base/out")
+      s.read.parquet(s"$base/out")
         .groupBy(col("status"), col("source"))
         .agg(count(lit(1)).as("n_docs"),
           min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out.orderBy(col("status"), col("source"))
+        .orderBy(col("status"), col("source"))
     },
     Some("""WITH old AS (
            |  SELECT doc_id, source, sha256(text) AS h FROM documents
@@ -1435,19 +1432,16 @@ object CurationQueries {
       .orderBy(col("q_id"), col("rnk"))
   }
 
-  private val simIvfPqPersisted = Q(
-    (s, dir) => {
+  private val simIvfPqPersisted = Q.scratch("ivfidx")(
+    (s, dir, base) => {
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
       val cb = NorthStarQueries.pqCodebook(v)
       // BUILD: the stored index — (c_id, m, code) rows partitioned by cell
-      val base = scratchDir("ivfidx")
       ivfPqIndexRows(vc, cb)
         .write.mode("overwrite").partitionBy("cell").parquet(base)
-      val out = ivfPqServeStore(s, v, base, cellSorted, cb).localCheckpoint(true)
-      scratchDelete(base)
-      out
+      ivfPqServeStore(s, v, base, cellSorted, cb)
     },
     simIvfPq.oracle)
 
@@ -1469,20 +1463,17 @@ object CurationQueries {
     * stay frozen across the append, exactly like production (drift is
     * [[simIvfBalance]]'s job to detect).
     */
-  private val simIvfAppend = Q(
-    (s, dir) => {
+  private val simIvfAppend = Q.scratch("ivfappend")(
+    (s, dir, base) => {
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
       val cb = NorthStarQueries.pqCodebook(v)
-      val base = scratchDir("ivfappend")
       ivfPqIndexRows(vc.where(col("vec_id") % 10 =!= 0), cb)
         .write.mode("overwrite").partitionBy("cell").parquet(base)
       ivfPqIndexRows(vc.where(col("vec_id") % 10 === 0), cb)
         .write.mode("append").partitionBy("cell").parquet(base)
-      val out = ivfPqServeStore(s, v, base, cellSorted, cb).localCheckpoint(true)
-      scratchDelete(base)
-      out
+      ivfPqServeStore(s, v, base, cellSorted, cb)
     },
     simIvfPq.oracle)
 
@@ -1509,13 +1500,12 @@ object CurationQueries {
     * base plus a streaming append would split visibility — Spark's
     * metadata-aware read ignores foreign files in a sink directory).
     */
-  private val simIvfAppendStream = Q(
-    (s, dir) => {
+  private val simIvfAppendStream = Q.scratch("ivfappendstream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val cb = NorthStarQueries.pqCodebook(v)
-      val base = scratchDir("ivfappendstream")
       val store = s"$base/store"
       val land = s"$base/land"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(land))
@@ -1551,9 +1541,7 @@ object CurationQueries {
       val n2 = s.read.parquet(store).count()
       require(n1 == n2,
         s"streaming IVF append replayed rows: $n1 -> $n2 (exactly-once broken)")
-      val out = ivfPqServeStore(s, v, store, cellSorted, cb).localCheckpoint(true)
-      scratchDelete(base)
-      out
+      ivfPqServeStore(s, v, store, cellSorted, cb)
     },
     simIvfPq.oracle)
 
@@ -1781,10 +1769,9 @@ object CurationQueries {
     * the driver. `contiguous` must be true for every shard — the audit
     * that the rank decomposition and the shard math agree.
     */
-  private val corpusShardManifest = Q(
-    (s, dir) => {
+  private val corpusShardManifest = Q.scratch("shards")(
+    (s, dir, base) => {
       val S = 8
-      val base = scratchDir("shards")
       val keyed = T(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("long").as("n_toks"),
@@ -1808,7 +1795,7 @@ object CurationQueries {
         .select(col("doc_id"), col("source"), col("n_toks"), col("sha"),
           col("pos"), col("shard_id"))
       assigned.write.mode("overwrite").partitionBy("shard_id").parquet(base)
-      val out = s.read.parquet(base)
+      s.read.parquet(base)
         .groupBy(col("shard_id").cast("long").as("shard_id"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_toks")).as("n_tokens"),
@@ -1819,9 +1806,6 @@ object CurationQueries {
             .as("content_fp"))
         .withColumn("contiguous", col("max_pos") - col("min_pos") + 1 === col("n_docs"))
         .orderBy(col("shard_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH keyed AS (
            |  SELECT doc_id, source,
@@ -1994,10 +1978,9 @@ object CurationQueries {
     * and the fingerprint lets an auditor verify any shard without
     * re-reading the rest.
     */
-  private val corpusCompact = Q(
-    (s, dir) => {
+  private val corpusCompact = Q.scratch("compact")(
+    (s, dir, base) => {
       val S = 8
-      val base = scratchDir("compact")
       T(s, dir, "documents")
         .withColumn("shard_id",
           pmod(expr("cast(conv(substring(md5(concat('shard:', " +
@@ -2007,15 +1990,12 @@ object CurationQueries {
       s.read.parquet(s"$base/frag")
         .repartition(S, col("shard_id")) // cluster: one task -> one file per shard
         .write.mode("overwrite").partitionBy("shard_id").parquet(s"$base/compact")
-      val out = s.read.parquet(s"$base/compact")
+      s.read.parquet(s"$base/compact")
         .groupBy(col("shard_id").cast("long").as("shard_id"))
         .agg(count(lit(1)).as("n_docs"),
           sum(expr("cast(conv(substring(sha2(text, 256), 1, 8), 16, 10) as bigint)"))
             .as("content_fp"))
         .orderBy(col("shard_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""SELECT
            |  cast('0x' || substr(md5('shard:' || cast(doc_id as varchar)), 1, 8)
@@ -2132,9 +2112,8 @@ object CurationQueries {
     * before the gate sort; mdat is touched only at the selected
     * keyframe offsets.
     */
-  private val multimodalFrames = Q(
-    (s, dir) => {
-      val base = scratchDir("mp4frames")
+  private val multimodalFrames = Q.scratch("mp4frames")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -2146,14 +2125,11 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "v_(\\d+)\\.", 1).cast("long")
           .as("doc_id"), col("content").as("payload"))
-      val out = graft.operators.Multimodal.sampleFrames(scanned).toDF()
+      graft.operators.Multimodal.sampleFrames(scanned).toDF()
         .select(col("docId").as("file_id"), col("frameIdx").as("frame_idx"),
           length(col("frame")).as("n_bytes"),
           lower(hex(col("frame"))).as("frame_hex"))
         .orderBy(col("file_id"), col("frame_idx"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -2194,9 +2170,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — table walk per file, a few
     * longs per track leave the map side; mdat is never read.
     */
-  private val multimodalMp4Samples = Q(
-    (s, dir) => {
-      val base = scratchDir("mp4samples")
+  private val multimodalMp4Samples = Q.scratch("mp4samples")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -2209,7 +2184,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "v_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.as[(Long, Array[Byte])]
+      scanned.as[(Long, Array[Byte])]
         .flatMap { case (id, bytes) =>
           graft.operators.Multimodal.mp4SampleStats(bytes) match {
             case Some(tracks) => tracks.map { case (ti, h, tsc, n, dt, dm,
@@ -2222,9 +2197,6 @@ object CurationQueries {
           "duration_ticks", "dur_ms", "total_bytes", "n_keyframes",
           "has_stss", "valid")
         .orderBy(col("file_id"), col("track_idx"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -3741,10 +3713,9 @@ object CurationQueries {
     touched
   }
 
-  private val corpusUpsert = Q(
-    (s, dir) => {
+  private val corpusUpsert = Q.scratch("upsert")(
+    (s, dir, base) => {
       val S = 16
-      val base = scratchDir("upsert")
       val docs = T(s, dir, "documents")
       val old = docs.select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("long").as("n_toks"),
@@ -3787,7 +3758,7 @@ object CurationQueries {
         .agg(count(lit(1)).as("n_docs_rb"),
           sum(expr("cast(conv(substring(sha, 1, 8), 16, 10) as bigint)"))
             .as("fp_rb"))
-      val out = rb.join(rebuild, Seq("shard"), "full_outer")
+      rb.join(rebuild, Seq("shard"), "full_outer")
         .withColumn("consistent",
           col("n_docs") === col("n_docs_rb") &&
             col("content_fp") === col("fp_rb"))
@@ -3796,9 +3767,6 @@ object CurationQueries {
         .select(col("shard"), col("n_docs"), col("n_tokens"),
           col("content_fp"), col("consistent"), col("rewritten"))
         .orderBy(col("shard"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH neu AS (
            |  SELECT doc_id, source,
@@ -5507,10 +5475,9 @@ object CurationQueries {
     * micro-batch shuffles once on the line key (the FMGWS exchange);
     * the post-hoc rollup here is gate plumbing, not the serving path.
     */
-  private val dedupLinesStream = Q(
-    (s, dir) => {
+  private val dedupLinesStream = Q.scratch("linestream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = scratchDir("linestream")
       val inDir = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val docs = T(s, dir, "documents")
@@ -5532,9 +5499,8 @@ object CurationQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val out = s.read.parquet(s"$base/out").localCheckpoint(true)
-      scratchDelete(base)
-      out.groupBy(col("source"))
+      s.read.parquet(s"$base/out")
+        .groupBy(col("source"))
         .agg(count(lit(1)).as("n_lines"),
           sum(when(col("dropped"), 1L).otherwise(0L)).as("n_dropped"),
           sum(when(col("dropped") && col("line").startsWith("boiler "), 1L)
@@ -7018,11 +6984,10 @@ object CurationQueries {
     * <= k rows per shard per batch; the exact recount is the batch
     * op's candidate-semi-join pass.
     */
-  private val sketchHhStream = Q(
-    (s, dir) => {
+  private val sketchHhStream = Q.scratch("hhstream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
       val K = 32
-      val base = scratchDir("hhstream")
       val inDir = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val docs = TS(s, dir, "documents")
@@ -7045,8 +7010,7 @@ object CurationQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val emitted = s.read.parquet(s"$base/out").localCheckpoint(true)
-      scratchDelete(base)
+      val emitted = s.read.parquet(s"$base/out")
       val lastSeq = emitted.groupBy(col("shard")).agg(max(col("seq")).as("mseq"))
       val cand = emitted.join(lastSeq, Seq("shard"))
         .where(col("seq") === col("mseq"))
@@ -7533,10 +7497,9 @@ object CurationQueries {
     * once on user_id into the FMGWS exchange. The median-cut scalar is
     * a 1-value driver pull for fixture plumbing, not the serving path.
     */
-  private val corpusTrajectoriesStream = Q(
-    (s, dir) => {
+  private val corpusTrajectoriesStream = Q.scratch("trajstream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = scratchDir("trajstream")
       val inDir = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val ev = T(s, dir, "events")
@@ -7561,9 +7524,8 @@ object CurationQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val out = s.read.parquet(s"$base/out").localCheckpoint(true)
-      scratchDelete(base)
-      out.orderBy(col("user_id"), col("session_idx"))
+      s.read.parquet(s"$base/out")
+        .orderBy(col("user_id"), col("session_idx"))
     },
     Some("""WITH f AS (
            |  SELECT user_id, ts, event_id, event_type,
@@ -8001,21 +7963,17 @@ object CurationQueries {
     * the extra cost is one hash probe per candidate row of the probed
     * cells — the store's nprobe/C I/O bound is unchanged.
     */
-  private val simIvfDelete = Q(
-    (s, dir) => {
+  private val simIvfDelete = Q.scratch("ivfdelete")(
+    (s, dir, base) => {
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
       val cb = NorthStarQueries.pqCodebook(v)
-      val base = scratchDir("ivfdelete")
       ivfPqIndexRows(vc, cb)
         .write.mode("overwrite").partitionBy("cell").parquet(base)
       val tomb = v.where(col("vec_id") % 7 === 3)
         .select(col("vec_id").as("c_id"))
-      val out = ivfPqServeStore(s, v, base, cellSorted, cb, Some(tomb))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
+      ivfPqServeStore(s, v, base, cellSorted, cb, Some(tomb))
     },
     simIvfPq.oracle.map(_.replace(
       "WHERE p.q_id <> e.c_id",
@@ -8043,22 +8001,19 @@ object CurationQueries {
     * by the takedown batch, never a full-index rewrite); the touched
     * list is the one driver collect, bounded by C.
     */
-  private val simIvfCompact = Q(
-    (s, dir) => {
+  private val simIvfCompact = Q.scratch("ivfcompact")(
+    (s, dir, base) => {
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
       val cb = NorthStarQueries.pqCodebook(v)
-      val base = scratchDir("ivfcompact")
       ivfPqIndexRows(vc, cb)
         .write.mode("overwrite").partitionBy("cell").parquet(base)
       val tomb = v.where(col("vec_id") % 7 === 3)
         .select(col("vec_id").as("c_id")).localCheckpoint(true)
       compactIvfStore(s, base, tomb)
       // serve with NO tombstone filter: the store itself is now clean
-      val out = ivfPqServeStore(s, v, base, cellSorted, cb).localCheckpoint(true)
-      scratchDelete(base)
-      out
+      ivfPqServeStore(s, v, base, cellSorted, cb)
     },
     simIvfPq.oracle.map(_.replace(
       "WHERE p.q_id <> e.c_id",
@@ -9377,9 +9332,8 @@ object CurationQueries {
     * parseAll narrow shape). RMS derives from the exact bigint
     * sum-of-squares with ONE float sqrt per file.
     */
-  private val multimodalAudioStats = Q(
-    (s, dir) => {
-      val base = scratchDir("audiostats")
+  private val multimodalAudioStats = Q.scratch("audiostats")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -9391,7 +9345,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pcmStatsAll(scanned).toDF()
+      graft.operators.Multimodal.pcmStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("nSamples").as("n_samples"),
           col("sumAmp").as("sum_amp"), col("sumSq").as("sum_sq"),
           col("peakAbs").as("peak_abs"), col("crossings"), col("valid"))
@@ -9401,9 +9355,6 @@ object CurationQueries {
           "CASE WHEN n_samples > 0 THEN cast(floor(sqrt(cast(sum_sq as double) " +
             "/ cast(n_samples as double)) * 1000) as bigint) ELSE 0 END"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -9457,9 +9408,8 @@ object CurationQueries {
     * frame-count-sized rows. No corpus-wide window — the run window
     * partitions per file over its frames.
     */
-  private val multimodalAudioVad = Q(
-    (s, dir) => {
-      val base = scratchDir("audiovad")
+  private val multimodalAudioVad = Q.scratch("audiovad")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -9486,7 +9436,7 @@ object CurationQueries {
         .withColumn("grp", col("win") - row_number().over(wRn))
         .groupBy(col("file_id"), col("grp")).agg(count(lit(1)).as("run"))
         .groupBy(col("file_id")).agg(max(col("run")).as("ls"))
-      val out = frames.groupBy(col("file_id"))
+      frames.groupBy(col("file_id"))
         .agg(count(lit(1)).as("n_windows"),
           sum(when(col("active"), 1L).otherwise(0L)).as("n_active"),
           max(col("rms_e3")).as("rms_active_e3"))
@@ -9496,9 +9446,6 @@ object CurationQueries {
         .select(col("file_id"), col("n_windows"), col("n_active"),
           col("active_ppm"), col("longest_silence"), col("rms_active_e3"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -9651,9 +9598,8 @@ object CurationQueries {
     * census is one keyed agg. The corrupt file is built in-plan
     * (filter + format string), never via a driver collect.
     */
-  private val srcCsvMalformed = Q(
-    (s, dir) => {
-      val base = scratchDir("csvmal")
+  private val srcCsvMalformed = Q.scratch("csvmal")(
+    (s, dir, base) => {
       val docs = T(s, dir, "documents")
       docs.select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
@@ -9668,7 +9614,7 @@ object CurationQueries {
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
         .csv(s"$base/good", s"$base/bad")
-      val out = read
+      read
         .withColumn("bucket",
           when(col("_corrupt").isNotNull, lit("__corrupt__")).otherwise(col("lang")))
         .groupBy(col("bucket"))
@@ -9676,9 +9622,6 @@ object CurationQueries {
           sum(when(col("_corrupt").isNull, col("n_chars")).otherwise(0L))
             .as("sum_chars"))
         .orderBy(col("bucket"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""SELECT lang AS bucket, cast(count(*) as bigint) AS n_rows,
            |  cast(sum(n_chars) as bigint) AS sum_chars
@@ -10272,10 +10215,9 @@ object CurationQueries {
     * arrivals + a transactional append; no shuffle anywhere in the
     * stream.
     */
-  private val textFtsStream = Q(
-    (s, dir) => {
+  private val textFtsStream = Q.scratch("ftsstream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = scratchDir("ftsstream")
       val inDir = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val docs = T(s, dir, "documents")
@@ -10308,11 +10250,8 @@ object CurationQueries {
       // exactly-once is part of the QUERY contract, not just a spec
       require(n1 == n2,
         s"standing-query replay re-emitted matches: $n1 -> $n2")
-      val out = s.read.parquet(s"$base/out")
+      s.read.parquet(s"$base/out")
         .orderBy(col("query_id"), col("doc_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     textFtsQuery.oracle)
 
@@ -11535,9 +11474,8 @@ object CurationQueries {
     * partition-mapped decode pass, no shuffle; stats rows are tiny
     * regardless of image size.
     */
-  private val multimodalImageStats = Q(
-    (s, dir) => {
-      val base = scratchDir("imagestats")
+  private val multimodalImageStats = Q.scratch("imagestats")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -11548,7 +11486,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "i_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pngStatsAll(scanned).toDF()
+      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           (col("width") * col("height")).as("n_px"),
           col("sumR").as("sum_r"), col("sumG").as("sum_g"),
@@ -11557,9 +11495,6 @@ object CurationQueries {
         .withColumn("mean_g_e3", expr("(sum_g * 1000) div n_px"))
         .withColumn("mean_b_e3", expr("(sum_b * 1000) div n_px"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -11604,9 +11539,8 @@ object CurationQueries {
     * partition-mapped decode pass, no shuffle; stats rows are
     * constant-size regardless of pixel count.
     */
-  private val multimodalPngTypes = Q(
-    (s, dir) => {
-      val base = scratchDir("pngtypes")
+  private val multimodalPngTypes = Q.scratch("pngtypes")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -11622,7 +11556,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "t_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pngStatsAll(scanned).toDF()
+      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           (col("width") * col("height")).as("n_px"),
           col("sumR").as("sum_r"), col("sumG").as("sum_g"),
@@ -11636,9 +11570,6 @@ object CurationQueries {
           col("height"), col("n_px"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -11694,9 +11625,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode
     * pass, no shuffle.
     */
-  private val multimodalPngFilters = Q(
-    (s, dir) => {
-      val base = scratchDir("pngfilters")
+  private val multimodalPngFilters = Q.scratch("pngfilters")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -11708,15 +11638,12 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "f_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pngStatsAll(scanned).toDF()
+      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           (col("width") * col("height")).as("n_px"),
           col("sumR").as("sum_r"), col("sumG").as("sum_g"),
           col("sumB").as("sum_b"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -11760,9 +11687,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalPngAlpha = Q(
-    (s, dir) => {
-      val base = scratchDir("pngalpha")
+  private val multimodalPngAlpha = Q.scratch("pngalpha")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -11781,7 +11707,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -11795,9 +11721,6 @@ object CurationQueries {
         .toDF("file_id", "width", "height", "sum_r", "sum_g", "sum_b",
           "sum_a", "n_translucent", "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -11853,9 +11776,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalPngAdam7 = Q(
-    (s, dir) => {
-      val base = scratchDir("pngadam7")
+  private val multimodalPngAdam7 = Q.scratch("pngadam7")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -11867,15 +11789,12 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "i_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pngStatsAll(scanned).toDF()
+      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           (col("width") * col("height")).as("n_px"),
           col("sumR").as("sum_r"), col("sumG").as("sum_g"),
           col("sumB").as("sum_b"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -11913,9 +11832,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalBmpStats = Q(
-    (s, dir) => {
-      val base = scratchDir("bmpstats")
+  private val multimodalBmpStats = Q.scratch("bmpstats")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -11927,7 +11845,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "b_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -11942,9 +11860,6 @@ object CurationQueries {
         .select(col("file_id"), col("width"), col("height"), col("n_px"),
           col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -11986,9 +11901,8 @@ object CurationQueries {
     * archive, no shuffle; this is the unpack-accounting stage an
     * archive-delivered 100 TB corpus runs before extraction.
     */
-  private val multimodalArchiveCensus = Q(
-    (s, dir) => {
-      val base = scratchDir("archives")
+  private val multimodalArchiveCensus = Q.scratch("archives")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12009,7 +11923,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "ar_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -12038,9 +11952,6 @@ object CurationQueries {
         .toDF("file_id", "kind", "n_entries", "total_bytes", "payload_sum",
           "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12089,9 +12000,8 @@ object CurationQueries {
     * cluster-scale WARC reader fans out on, which is exactly why the
     * census walks members rather than one opaque stream.
     */
-  private val multimodalWarcCensus = Q(
-    (s, dir) => {
-      val base = scratchDir("warcs")
+  private val multimodalWarcCensus = Q.scratch("warcs")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12103,7 +12013,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "wa_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -12116,9 +12026,6 @@ object CurationQueries {
         .toDF("file_id", "n_members", "n_records", "n_response",
           "payload_bytes", "payload_sum", "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12162,9 +12069,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalTiffStats = Q(
-    (s, dir) => {
-      val base = scratchDir("tiffstats")
+  private val multimodalTiffStats = Q.scratch("tiffstats")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12178,7 +12084,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "t_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -12193,9 +12099,6 @@ object CurationQueries {
         .select(col("file_id"), col("width"), col("height"), col("n_px"),
           col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12248,9 +12151,8 @@ object CurationQueries {
     * framing + HTTP parse, rows out are response-sized; payload bytes
     * never shuffle.
     */
-  private val multimodalWarcHttp = Q(
-    (s, dir) => {
-      val base = scratchDir("warchttp")
+  private val multimodalWarcHttp = Q.scratch("warchttp")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12262,7 +12164,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "wh_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (id, bytes) =>
@@ -12277,9 +12179,6 @@ object CurationQueries {
         .toDF("file_id", "resp_idx", "status", "n_headers", "body_bytes",
           "body_sum", "valid")
         .orderBy(col("file_id"), col("resp_idx"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12320,9 +12219,8 @@ object CurationQueries {
     * row — the multimodal codec shape over TEXT); 9 longs per doc
     * leave the map side, document bodies never shuffle.
     */
-  private val multimodalDataUri = Q(
-    (s, dir) => {
-      val base = scratchDir("datauri")
+  private val multimodalDataUri = Q.scratch("datauri")(
+    (s, dir, base) => {
       import s.implicits._
       val enc = java.util.Base64.getEncoder
       val docs = T(s, dir, "nation").select(col("n_nationkey")).collect()
@@ -12346,7 +12244,7 @@ object CurationQueries {
         }.toSeq
       docs.toDF("file_id", "text")
         .write.mode("overwrite").parquet(base)
-      val out = s.read.parquet(base)
+      s.read.parquet(base)
         .select(col("file_id"), col("text"))
         .as[(Long, String)]
         .mapPartitions { it =>
@@ -12359,9 +12257,6 @@ object CurationQueries {
         .toDF("file_id", "n_uris", "n_decoded", "n_png", "n_gif",
           "n_invalid", "n_px", "sum_r", "sum_g", "sum_b")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12413,9 +12308,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalTiffLzw = Q(
-    (s, dir) => {
-      val base = scratchDir("tifflzw")
+  private val multimodalTiffLzw = Q.scratch("tifflzw")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12430,7 +12324,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "z_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -12447,9 +12341,6 @@ object CurationQueries {
           col("height"), col("sum_r"), col("sum_g"), col("sum_b"),
           col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12500,9 +12391,8 @@ object CurationQueries {
     * sniff+decode pass, no shuffle; this is the map-side dispatch
     * stage every 100 TB multimodal ingest runs first.
     */
-  private val multimodalSniffRoute = Q(
-    (s, dir) => {
-      val base = scratchDir("sniffroute")
+  private val multimodalSniffRoute = Q.scratch("sniffroute")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12535,12 +12425,9 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "m_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.sniffAll(scanned).toDF()
+      graft.operators.Multimodal.sniffAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("detected"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""SELECT cast(n_nationkey as bigint) AS file_id,
            |  CASE n_nationkey % 15
@@ -12576,9 +12463,8 @@ object CurationQueries {
     * parse+inflate per file; page/op counts and the text leave the
     * map side, raw PDF bytes never shuffle.
     */
-  private val multimodalPdfText = Q(
-    (s, dir) => {
-      val base = scratchDir("pdftext")
+  private val multimodalPdfText = Q.scratch("pdftext")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12598,7 +12484,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "d_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -12613,9 +12499,6 @@ object CurationQueries {
         .select(col("file_id"), col("n_pages"), col("n_text_ops"),
           col("n_chars"), col("text"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12658,9 +12541,8 @@ object CurationQueries {
     * per member; at 100 TB this is the WARC/shard ingest edge, and
     * compressed payload bytes never shuffle.
     */
-  private val multimodalZstdCensus = Q(
-    (s, dir) => {
-      val base = scratchDir("zstdcensus")
+  private val multimodalZstdCensus = Q.scratch("zstdcensus")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12693,7 +12575,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "z_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.as[(Long, Array[Byte])]
+      scanned.as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
             graft.operators.Zstd.decompress(bytes) match {
@@ -12708,9 +12590,6 @@ object CurationQueries {
         .select(col("file_id"), col("n_frames"), col("n_skippable"),
           col("n_bytes"), col("text"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12756,9 +12635,8 @@ object CurationQueries {
     * (host)-keyed partial aggregates move — the exact shape a 100 TB
     * `.jsonl.zst` release ingests with.
     */
-  private val pipelineZstdJsonl = Q(
-    (s, dir) => {
-      val base = scratchDir("zstdjsonl")
+  private val pipelineZstdJsonl = Q.scratch("zstdjsonl")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12827,9 +12705,8 @@ object CurationQueries {
     * partition-mapped decode, no shuffle; stats rows are constant-size
     * per image regardless of pixel count.
     */
-  private val multimodalJpegDc = Q(
-    (s, dir) => {
-      val base = scratchDir("jpegdc")
+  private val multimodalJpegDc = Q.scratch("jpegdc")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12840,7 +12717,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
           col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
@@ -12848,9 +12725,6 @@ object CurationQueries {
         .withColumn("mean_level_e3",
           expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12895,9 +12769,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — binaryFile scan, one
     * partition-mapped decode, no shuffle.
     */
-  private val multimodalJpegColor = Q(
-    (s, dir) => {
-      val base = scratchDir("jpegcolor")
+  private val multimodalJpegColor = Q.scratch("jpegcolor")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12909,7 +12782,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
           col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
@@ -12917,9 +12790,6 @@ object CurationQueries {
         .withColumn("mean_level_e3",
           expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -12962,9 +12832,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalJpeg420 = Q(
-    (s, dir) => {
-      val base = scratchDir("jpeg420")
+  private val multimodalJpeg420 = Q.scratch("jpeg420")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -12976,7 +12845,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
           col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
@@ -12984,9 +12853,6 @@ object CurationQueries {
         .withColumn("mean_level_e3",
           expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13027,9 +12893,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle; two constant-size rows per file.
     */
-  private val multimodalAudioStereo = Q(
-    (s, dir) => {
-      val base = scratchDir("audiostereo")
+  private val multimodalAudioStereo = Q.scratch("audiostereo")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13043,7 +12908,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pcmStereoAll(scanned).toDF()
+      graft.operators.Multimodal.pcmStereoAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("channel"),
           col("nSamples").as("n_samples"),
           col("sumAmp").as("sum_amp"), col("sumSq").as("sum_sq"),
@@ -13052,9 +12917,6 @@ object CurationQueries {
           "CASE WHEN n_samples > 0 THEN cast(floor(sqrt(cast(sum_sq as double) " +
             "/ cast(n_samples as double)) * 1000) as bigint) ELSE 0 END"))
         .orderBy(col("file_id"), col("channel"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13106,9 +12968,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalAudioG711 = Q(
-    (s, dir) => {
-      val base = scratchDir("audiog711")
+  private val multimodalAudioG711 = Q.scratch("audiog711")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13120,15 +12981,12 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "g_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.g711StatsAll(scanned).toDF()
+      graft.operators.Multimodal.g711StatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("law"),
           col("nSamples").as("n_samples"), col("sumLin").as("sum_lin"),
           col("minLin").as("min_lin"), col("maxLin").as("max_lin"),
           col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13181,9 +13039,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalAudioFloat = Q(
-    (s, dir) => {
-      val base = scratchDir("audiofloat")
+  private val multimodalAudioFloat = Q.scratch("audiofloat")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13194,15 +13051,12 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "fl_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.floatPcmStatsAll(scanned).toDF()
+      graft.operators.Multimodal.floatPcmStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"),
           col("nSamples").as("n_samples"), col("sumQ8").as("sum_q8"),
           col("minQ8").as("min_q8"), col("maxQ8").as("max_q8"),
           col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13232,9 +13086,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalAudioDepths = Q(
-    (s, dir) => {
-      val base = scratchDir("audiodepths")
+  private val multimodalAudioDepths = Q.scratch("audiodepths")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13257,7 +13110,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pcmDepthAll(scanned).toDF()
+      graft.operators.Multimodal.pcmDepthAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("bits"),
           col("nSamples").as("n_samples"),
           col("sumAmp").as("sum_amp"), col("sumSq").as("sum_sq"),
@@ -13266,9 +13119,6 @@ object CurationQueries {
           "CASE WHEN n_samples > 0 THEN cast(floor(sqrt(cast(sum_sq as double) " +
             "/ cast(n_samples as double)) * 1000) as bigint) ELSE 0 END"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13312,9 +13162,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode, no
     * shuffle.
     */
-  private val multimodalJpeg422 = Q(
-    (s, dir) => {
-      val base = scratchDir("jpeg422")
+  private val multimodalJpeg422 = Q.scratch("jpeg422")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13327,7 +13176,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
           col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
@@ -13335,9 +13184,6 @@ object CurationQueries {
         .withColumn("mean_level_e3",
           expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13383,9 +13229,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode, no
     * shuffle.
     */
-  private val multimodalJpeg411 = Q(
-    (s, dir) => {
-      val base = scratchDir("jpeg411")
+  private val multimodalJpeg411 = Q.scratch("jpeg411")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13397,7 +13242,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
           col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
@@ -13405,9 +13250,6 @@ object CurationQueries {
         .withColumn("mean_level_e3",
           expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13456,9 +13298,8 @@ object CurationQueries {
     * shuffle; the per-block DC store the refinement pass needs is
     * dimension-capped (16M blocks) against crafted headers.
     */
-  private val multimodalJpegProg = Q(
-    (s, dir) => {
-      val base = scratchDir("jpegprog")
+  private val multimodalJpegProg = Q.scratch("jpegprog")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13470,7 +13311,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
           col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
@@ -13478,9 +13319,6 @@ object CurationQueries {
         .withColumn("mean_level_e3",
           expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13523,9 +13361,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalGifStats = Q(
-    (s, dir) => {
-      val base = scratchDir("gifstats")
+  private val multimodalGifStats = Q.scratch("gifstats")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13537,16 +13374,13 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "g_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.gifStatsAll(scanned).toDF()
+      graft.operators.Multimodal.gifStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nPixels").as("n_pixels"), col("sumIdx").as("sum_idx"),
           col("minIdx").as("min_idx"), col("maxIdx").as("max_idx"),
           col("valid"))
         .withColumn("mean_idx_e3", expr("(sum_idx * 1000) div n_pixels"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -13588,9 +13422,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle; per-file cost is linear in total entropy bytes.
     */
-  private val multimodalGifAnim = Q(
-    (s, dir) => {
-      val base = scratchDir("gifanim")
+  private val multimodalGifAnim = Q.scratch("gifanim")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -13602,15 +13435,12 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.gifAnimAll(scanned).toDF()
+      graft.operators.Multimodal.gifAnimAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("nFrames").as("n_frames"),
           col("width"), col("height"), col("totalPx").as("total_px"),
           col("sumIdx").as("sum_idx"),
           col("sumDelayCs").as("sum_delay_cs"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -14320,23 +14150,19 @@ object CurationQueries {
           .as("is_first"))
   }
 
-  private val dedupSubstrIncr = Q(
-    (s, dir) => {
+  private val dedupSubstrIncr = Q.scratch("substrstore")(
+    (s, dir, base) => {
       val L = XS_L
       val docs = TS(s, dir, "documents")
-      val base = scratchDir("substrstore")
       // BUILD: the persisted gram-stats store over the ingested corpus
       substrGramStats(docs.where(col("doc_id") % 4 =!= 0), L)
         .write.mode("overwrite").parquet(base)
       // PROBE: arrivals touch their own grams + the store, never the
       // base corpus
-      val out = substrIncrProbe(docs.where(col("doc_id") % 4 === 0),
+      substrIncrProbe(docs.where(col("doc_id") % 4 === 0),
           s.read.parquet(base), L)
         .drop("owner_fk")
         .orderBy(col("doc_id"), col("span_start"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some(s"""WITH $exactSubstrSpansSql
             |SELECT doc_id, cast(span_start as bigint) AS span_start,
@@ -15035,9 +14861,8 @@ object CurationQueries {
     * shuffle) into a digest-keyed count — byte volume never shuffles,
     * only 64-char digests.
     */
-  private val multimodalPixelDedup = Q(
-    (s, dir) => {
-      val base = scratchDir("pixeldedup")
+  private val multimodalPixelDedup = Q.scratch("pixeldedup")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -15055,7 +14880,7 @@ object CurationQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "d_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
-      val out = graft.operators.Multimodal.pngPixelIdAll(scanned).toDF()
+      graft.operators.Multimodal.pngPixelIdAll(scanned).toDF()
         .groupBy(col("pixelSha"))
         .agg(min(col("fileId")).as("canonical_file"),
           count(lit(1)).as("n_copies"),
@@ -15063,9 +14888,6 @@ object CurationQueries {
         .select(col("canonical_file"), col("n_copies"), col("width"),
           col("height"))
         .orderBy(col("canonical_file"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""SELECT cast(min(n_nationkey) as bigint) AS canonical_file,
            |  cast(count(*) as bigint) AS n_copies,
@@ -15372,10 +15194,9 @@ object CurationQueries {
     * stream replay == batch computation row-for-row; StreamingSpec
     * additionally proves a MID-hour split replays equal.
     */
-  private val tsCusumStream = Q(
-    (s, dir) => {
+  private val tsCusumStream = Q.scratch("cusumstream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = scratchDir("cusumstream")
       val inDir = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val ev = T(s, dir, "events")
@@ -15417,8 +15238,7 @@ object CurationQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val res = s.read.parquet(s"$base/out").localCheckpoint(true)
-      scratchDelete(base)
+      val res = s.read.parquet(s"$base/out")
       val muDf = {
         import s.implicits._
         bl.toSeq.map { case (t, (m, _)) => (t, m) }.toDF("event_type", "mu_e6")
@@ -16644,9 +16464,8 @@ object CurationQueries {
     * multimodal codec shape applied to markup; a title + five longs per
     * document leave the map side, bodies never shuffle.
     */
-  private val textHtmlExtract = Q(
-    (s, dir) => {
-      val base = scratchDir("htmlx")
+  private val textHtmlExtract = Q.scratch("htmlx")(
+    (s, dir, base) => {
       import s.implicits._
       val docs = T(s, dir, "nation").select(col("n_nationkey")).collect()
         .map { r =>
@@ -16654,7 +16473,7 @@ object CurationQueries {
           (k.toLong, graft.operators.HtmlText.htmlPage(k, 2 + k % 3, 1 + k % 4))
         }.toSeq
       docs.toDF("file_id", "html").write.mode("overwrite").parquet(base)
-      val out = s.read.parquet(base)
+      s.read.parquet(base)
         .select(col("file_id"), col("html")).as[(Long, String)]
         .mapPartitions { it =>
           it.map { case (id, h) =>
@@ -16669,9 +16488,6 @@ object CurationQueries {
         .toDF("file_id", "title", "n_links", "n_para", "text_chars",
           "text_sum", "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -17017,9 +16833,8 @@ object CurationQueries {
     * file, rows out are response-sized; payload bytes never shuffle.
     * On a cluster the gzip members are the split points.
     */
-  private val multimodalWarcText = Q(
-    (s, dir) => {
-      val base = scratchDir("warctext")
+  private val multimodalWarcText = Q.scratch("warctext")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17031,7 +16846,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "wt_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (id, bytes) =>
@@ -17046,9 +16861,6 @@ object CurationQueries {
         .toDF("file_id", "resp_idx", "status", "title", "n_links", "n_para",
           "text_chars", "text_sum", "html_ok")
         .orderBy(col("file_id"), col("resp_idx"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -17167,9 +16979,8 @@ object CurationQueries {
     * string + 8 longs per file leave the map side; payload bytes never
     * shuffle (the census never touches mdat content).
     */
-  private val multimodalMp4Boxes = Q(
-    (s, dir) => {
-      val base = scratchDir("mp4box")
+  private val multimodalMp4Boxes = Q.scratch("mp4box")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17184,7 +16995,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "m_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -17202,9 +17013,6 @@ object CurationQueries {
           col("n_video"), col("n_audio"), col("timescale"), col("duration"),
           col("dur_ms"), col("mdat_bytes"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -17236,9 +17044,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — marker walk + two IFDs per
     * file, no pixel decode, no shuffle of payload bytes.
     */
-  private val multimodalExif = Q(
-    (s, dir) => {
-      val base = scratchDir("exif")
+  private val multimodalExif = Q.scratch("exif")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17255,7 +17062,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "x_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -17269,9 +17076,6 @@ object CurationQueries {
         .toDF("file_id", "byte_order", "orientation", "pixel_x", "pixel_y",
           "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k FROM nation
@@ -17307,9 +17111,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one header walk per file, six
     * small values out; audio bytes never shuffle.
     */
-  private val multimodalMp3Frames = Q(
-    (s, dir) => {
-      val base = scratchDir("mp3f")
+  private val multimodalMp3Frames = Q.scratch("mp3f")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17322,7 +17125,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -17336,9 +17139,6 @@ object CurationQueries {
         .toDF("file_id", "n_frames", "sample_rate", "dur_ms", "kbps_sum",
           "has_id3v2", "has_id3v1", "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -17380,9 +17180,8 @@ object CurationQueries {
     * host-graph build that feeds PageRank-class ranking; the heavy side
     * (pages) never shuffles.
     */
-  private val textLinkGraph = Q(
-    (s, dir) => {
-      val base = scratchDir("linkgraph")
+  private val textLinkGraph = Q.scratch("linkgraph")(
+    (s, dir, base) => {
       import s.implicits._
       val docs = T(s, dir, "nation").select(col("n_nationkey")).collect()
         .map { r =>
@@ -17404,7 +17203,7 @@ object CurationQueries {
           }
         }
         .toDF("page_id", "href")
-      val out = links
+      links
         .where(col("href").startsWith("http"))
         .withColumn("host",
           expr("lower(regexp_extract(href, '^https?://([^/]+)', 1))"))
@@ -17412,9 +17211,6 @@ object CurationQueries {
         .agg(count(lit(1)).as("in_degree"),
           countDistinct(col("page_id")).as("n_pages"))
         .orderBy(col("host"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -17510,9 +17306,8 @@ object CurationQueries {
     * cluster-friendly by construction); rows out are url-sized; the
     * census is one host-keyed map-side-combined aggregate.
     */
-  private val pipelineSitemap = Q(
-    (s, dir) => {
-      val base = scratchDir("sitemap")
+  private val pipelineSitemap = Q.scratch("sitemap")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17539,7 +17334,7 @@ object CurationQueries {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("priority",
           org.apache.spark.sql.types.StringType)))
-      val out = s.read.schema(schema)
+      s.read.schema(schema)
         .format("xml").option("rowTag", "url").load(base)
         .withColumn("host", expr("regexp_extract(loc, '^https://([^/]+)', 1)"))
         .withColumn("file_id",
@@ -17552,9 +17347,6 @@ object CurationQueries {
           sum(expr("cast(lastmod >= '2024-03-15' as bigint)")).as("n_recent"),
           sum(col("prio_e1")).as("prio_sum_e1"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
@@ -17712,9 +17504,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — fixed-offset header reads per
     * file, payload bytes never touched or shuffled.
     */
-  private val multimodalWebpInfo = Q(
-    (s, dir) => {
-      val base = scratchDir("webp")
+  private val multimodalWebpInfo = Q.scratch("webp")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17728,7 +17519,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "w_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -17741,9 +17532,6 @@ object CurationQueries {
         .toDF("file_id", "variant", "width", "height", "has_alpha",
           "animated", "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k FROM nation
@@ -17774,9 +17562,8 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one metadata walk per file,
     * six longs out; audio bytes never shuffle.
     */
-  private val multimodalFlacInfo = Q(
-    (s, dir) => {
-      val base = scratchDir("flac")
+  private val multimodalFlacInfo = Q.scratch("flac")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
         .foreach { r =>
@@ -17791,7 +17578,7 @@ object CurationQueries {
         .select(regexp_extract(col("path"), "f_(\\d+)\\.", 1).cast("long")
           .as("file_id"), col("content"))
       import s.implicits._
-      val out = scanned.select(col("file_id"), col("content"))
+      scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
@@ -17805,9 +17592,6 @@ object CurationQueries {
         .toDF("file_id", "sample_rate", "channels", "bits_per_sample",
           "total_samples", "n_meta_blocks", "dur_ms", "valid")
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import Q.{T, TS, scratchDir, scratchDelete}
+import Q.{T, TS}
 
 /** SURVEY.md §2C — LLM-data-pipeline operators over `documents` and
   * `embeddings`: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard /
@@ -274,10 +274,9 @@ object NorthStarQueries {
     * Fresh checkpoint/sink dirs per run — a reused checkpoint would
     * replay old state and skip the new input files.
     */
-  private val dedupIncrementalStream = Q(
-    (s, dir) => {
+  private val dedupIncrementalStream = Q.scratch("incstream")(
+    (s, dir, base) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = scratchDir("incstream")
       val inDir = s"$base/in"
       val d = T(s, dir, "documents")
         .withColumn("existing",
@@ -307,10 +306,8 @@ object NorthStarQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // materialize before deleting the scratch tree (the plan is lazy)
-      val out = s.read.parquet(s"$base/out").localCheckpoint(true)
-      scratchDelete(base)
-      out.orderBy(col("content_hash"))
+      s.read.parquet(s"$base/out")
+        .orderBy(col("content_hash"))
     },
     Some("""WITH d AS (
            |  SELECT sha256(text) AS h, n_chars,
@@ -1901,9 +1898,8 @@ object NorthStarQueries {
     * corpus-wide metadata pass has at 100 TB (no shuffle; metadata rows
     * are tiny regardless of payload size).
     */
-  private val multimodalMeta = Q(
-    (s, dir) => {
-      val base = scratchDir("mediameta")
+  private val multimodalMeta = Q.scratch("mediameta")(
+    (s, dir, base) => {
       val p = java.nio.file.Paths.get(base)
       T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
         .collect() // 25 rows: bounded fixture dim, not a corpus pull
@@ -1922,14 +1918,11 @@ object NorthStarQueries {
       val scanned = s.read.format("binaryFile").load(base)
         .select(regexp_extract(col("path"), "m_(\\d+)\\.", 1).cast("long").as("file_id"),
                 col("content"))
-      val out = graft.operators.Multimodal.parseAll(scanned).toDF()
+      graft.operators.Multimodal.parseAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("format"),
                 col("width"), col("height"),
                 col("durationMs").as("duration_ms"), col("valid"))
         .orderBy(col("file_id"))
-        .localCheckpoint(true)
-      scratchDelete(base)
-      out
     },
     Some("""WITH m AS (
            |  SELECT cast(n_nationkey as bigint) AS k,

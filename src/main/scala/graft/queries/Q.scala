@@ -25,19 +25,31 @@ object Q {
   def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Fresh scratch directory for queries that must round-trip through
-    * files (streaming fixtures): under `java.io.tmpdir`, never a
-    * hardcoded repo path, so the query runs from any checkout and the
-    * caller can [[scratchDelete]] the whole tree after materializing
-    * its result (gate/bench/probe invocations must not accumulate
-    * corpus-sized copies).
+  /** A query that round-trips through files. `fn` gets the session, the
+    * fixture dir and `base`, a fresh [[scratchDir]] of its own; the
+    * frame it returns is materialized (`localCheckpoint`) and the tree
+    * is deleted in a `finally`. So concurrent calls never share a path,
+    * and a failed or cancelled request leaves nothing behind.
+    */
+  def scratch(prefix: String)(
+      fn: (SparkSession, String, String) => DataFrame,
+      oracle: Option[String]): Q =
+    Q((s, dir) => {
+      val base = scratchDir(prefix)
+      try fn(s, dir, base).localCheckpoint(true)
+      finally scratchDelete(base)
+    }, oracle)
+
+  /** A fresh `graft-<prefix>-*` directory under `java.io.tmpdir`. Queries
+    * get theirs through [[scratch]], which also deletes it; a caller
+    * outside that lifecycle deletes it with [[scratchDelete]].
     */
   def scratchDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-$prefix-").toString
 
-  /** Best-effort recursive delete of a [[scratchDir]] tree. Call only
-    * AFTER the result DataFrame is materialized (e.g. localCheckpoint) —
-    * a lazy plan still reading the tree would break.
+  /** Recursive delete of a [[scratchDir]] tree. Call only after every
+    * frame reading the tree is materialized: a lazy plan still reading
+    * it would break.
     */
   def scratchDelete(base: String): Unit = {
     import java.nio.file.{Files, Path, Paths}

@@ -7,22 +7,21 @@ import Q.T
 
 /** SURVEY.md §2B scans/sources/sinks beyond plain Parquet reads: CSV and
   * JSON round-trips, partitioned Parquet writes (with codec), and
-  * partition-local sort. Each query materializes a derived copy under
-  * `target/graft-tmp` (inside the repo — fixtures stay read-only), reads
-  * it back, and aggregates; the oracle computes the same aggregate from
-  * the original table, so any round-trip corruption fails the diff.
+  * partition-local sort. Each writer materializes a derived copy in its
+  * own per-call scratch tree ([[Q.scratch]] — fixtures stay read-only;
+  * the tree is gone when the call returns), reads it back, and
+  * aggregates; the oracle computes the same aggregate from the original
+  * table, so any round-trip corruption fails the diff.
   *
   * Values routed through text formats are cast to decimal/long/string
   * first — exact text round-trips, no float-rendering ambiguity.
   */
 object SourcesQueries {
 
-  private val tmpRoot = "/root/repo/target/graft-tmp"
-
   /** CSV sink + scan (header, explicit read schema — no inference cost). */
-  private val csvRoundtrip = Q(
-    (s, dir) => {
-      val path = s"$tmpRoot/csv_orders"
+  private val csvRoundtrip = Q.scratch("csv")(
+    (s, dir, base) => {
+      val path = s"$base/csv_orders"
       T(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
                 col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -48,9 +47,9 @@ object SourcesQueries {
     * round-trip preserving it is exactly what is under test. Exact
     * types only (long/decimal/string) cross the format boundary.
     */
-  private val orcRoundtrip = Q(
-    (s, dir) => {
-      val path = s"$tmpRoot/orc_customer"
+  private val orcRoundtrip = Q.scratch("orc")(
+    (s, dir, base) => {
+      val path = s"$base/orc_customer"
       T(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"),
                 col("c_acctbal").cast("decimal(18,2)").as("bal"))
@@ -110,9 +109,9 @@ object SourcesQueries {
     })
 
   /** JSON-lines sink + scan with explicit schema. */
-  private val jsonRoundtrip = Q(
-    (s, dir) => {
-      val path = s"$tmpRoot/json_lineitem"
+  private val jsonRoundtrip = Q.scratch("json")(
+    (s, dir, base) => {
+      val path = s"$base/json_lineitem"
       T(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
                 col("l_quantity").cast("decimal(18,4)").as("qty"),
@@ -136,9 +135,9 @@ object SourcesQueries {
     * compression analog) + partition-pruned read-back. At scale this is
     * the layout that enables dynamic partition pruning on date.
     */
-  private val partitionedWrite = Q(
-    (s, dir) => {
-      val path = s"$tmpRoot/events_by_day"
+  private val partitionedWrite = Q.scratch("partitioned")(
+    (s, dir, base) => {
+      val path = s"$base/events_by_day"
       T(s, dir, "events")
         .withColumn("d", to_date(col("ts")))
         .write.mode("overwrite")
@@ -195,26 +194,34 @@ object SourcesQueries {
     * property asserted in BucketedJoinSpec; here the oracle checks
     * semantics against the unbucketed join).
     */
-  private val bucketedJoin = Q(
-    (s, dir) => {
-      T(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$tmpRoot/bucketed/g_orders_b")
-        .saveAsTable("g_orders_b")
-      T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$tmpRoot/bucketed/g_lineitem_b")
-        .saveAsTable("g_lineitem_b")
-      s.table("g_orders_b")
-        .join(s.table("g_lineitem_b"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-             sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("sum_qty"))
-        .orderBy(col("o_orderstatus"))
+  private val bucketedJoin = Q.scratch("bucketed")(
+    (s, dir, base) => {
+      // catalog names of this call only, dropped once the join is
+      // materialized: concurrent calls never share a table, and none
+      // outlives the request
+      val tag = new java.io.File(base).getName.replaceAll("\\W", "_")
+      val (orders, lineitem) = (s"${tag}_orders", s"${tag}_lineitem")
+      try {
+        T(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_orderstatus"))
+          .write.format("parquet")
+          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .option("path", s"$base/$orders")
+          .saveAsTable(orders)
+        T(s, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_quantity"))
+          .write.format("parquet")
+          .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .option("path", s"$base/$lineitem")
+          .saveAsTable(lineitem)
+        s.table(orders)
+          .join(s.table(lineitem), col("o_orderkey") === col("l_orderkey"))
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n"),
+               sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("sum_qty"))
+          .orderBy(col("o_orderstatus"))
+          .localCheckpoint(true)
+      } finally Seq(orders, lineitem).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     },
     Some("""SELECT o_orderstatus, count(*) AS n,
            |  cast(sum(cast(l_quantity as decimal(18,4))) as double) AS sum_qty
@@ -229,9 +236,9 @@ object SourcesQueries {
     * recomputes the aggregate from the parquet original, so a lost or
     * mangled line fails the diff.
     */
-  private val textRoundtrip = Q(
-    (s, dir) => {
-      val path = s"$tmpRoot/text_documents"
+  private val textRoundtrip = Q.scratch("text")(
+    (s, dir, base) => {
+      val path = s"$base/text_documents"
       // concat_ws SKIPS null fields (shifting later fields left), so each
       // field is coalesced to an explicit \N sentinel before joining —
       // field positions stay stable for nullable columns, and the parse
@@ -268,9 +275,9 @@ object SourcesQueries {
     * original STRING column, proving bytes survive the file boundary
     * untouched.
     */
-  private val binaryfileScan = Q(
-    (s, dir) => {
-      val path = new java.io.File(s"$tmpRoot/bin_nation")
+  private val binaryfileScan = Q.scratch("binaryfile")(
+    (s, dir, base) => {
+      val path = new java.io.File(s"$base/bin_nation")
       path.mkdirs()
       T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
         .collect() // 25 rows: bounded fixture dim, not a corpus pull
@@ -339,9 +346,9 @@ object SourcesQueries {
     * round-trip preserving it is exactly what is under test. Exact
     * types only (int/long/string) cross the format boundary.
     */
-  private val xmlRoundtrip = Q(
-    (s, dir) => {
-      val path = s"$tmpRoot/xml_nation"
+  private val xmlRoundtrip = Q.scratch("xml")(
+    (s, dir, base) => {
+      val path = s"$base/xml_nation"
       T(s, dir, "nation")
         .write.mode("overwrite")
         .format("xml").option("rootTag", "nations").option("rowTag", "nation")

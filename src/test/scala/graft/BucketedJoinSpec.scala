@@ -11,18 +11,19 @@ class BucketedJoinSpec extends SparkSpec {
   test("join of co-bucketed tables has no exchange feeding the join") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val base = graft.queries.Q.scratchDir("bucketspec")
     try {
       Tables.load(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(4, "o_orderkey").sortBy("o_orderkey")
-        .option("path", "/root/repo/target/graft-tmp/spec_orders_b")
+        .option("path", s"$base/spec_orders_b")
         .saveAsTable("spec_orders_b")
       Tables.load(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(4, "l_orderkey").sortBy("l_orderkey")
-        .option("path", "/root/repo/target/graft-tmp/spec_lineitem_b")
+        .option("path", s"$base/spec_lineitem_b")
         .saveAsTable("spec_lineitem_b")
 
       val joined = spark.table("spec_orders_b")
@@ -36,6 +37,10 @@ class BucketedJoinSpec extends SparkSpec {
         .join(Tables.load(spark, sfDir, "lineitem"),
               col("o_orderkey") === col("l_orderkey")).count()
       assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      Seq("spec_orders_b", "spec_lineitem_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.queries.Q.scratchDelete(base)
+    }
   }
 }

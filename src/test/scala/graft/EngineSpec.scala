@@ -255,13 +255,13 @@ class EngineSpec extends SparkSpec {
     import graft.engine.EngineConfig
     val env = Map(
       "GRAFT_DATA_DIR" -> "/env/dir",
-      "GRAFT_TTL_MS" -> "5000",
+      "GRAFT_COMPRESS_MIN_BYTES" -> "5000",
       "GRAFT_MAX_JOBS" -> "not-a-number")
     // explicit wins over env
     assert(EngineConfig.resolve(dataDir = Some("/x"), env = env).dataDir == "/x")
     // env wins over default
     val r = EngineConfig.resolve(env = env)
-    assert(r.dataDir == "/env/dir" && r.defaultTtlMs == 5000L)
+    assert(r.dataDir == "/env/dir" && r.compressMinBytes == 5000)
     // unparseable env falls through to the default
     assert(r.maxConcurrentJobs == EngineConfig().maxConcurrentJobs)
     // no env, no explicit -> defaults

@@ -14,28 +14,31 @@ object PlanFeaturesSpec {
 class PlanFeaturesSpec extends SparkSpec {
 
   test("dynamic partition pruning fires on a partitioned-by-date layout") {
-    val path = "/root/repo/target/graft-tmp/dpp_events"
-    Tables.load(spark, sfDir, "events")
-      .withColumn("d", to_date(col("ts")))
-      .write.mode("overwrite").partitionBy("d").parquet(path)
-    val facts = spark.read.parquet(path)
-    // independent filtered dim side (DPP requires a selective filter on
-    // the build side, not a derivation of the same scan)
-    import spark.implicits._
-    val twoDates = facts.select(col("d")).distinct().orderBy(col("d")).limit(2)
-      .collect().map(_.getDate(0))
-    val dimPath = "/root/repo/target/graft-tmp/dpp_dim"
-    (twoDates.toSeq.map(d => (d, "keep")) :+ (java.sql.Date.valueOf("1970-01-01"), "drop"))
-      .toDF("d", "tag").write.mode("overwrite").parquet(dimPath)
-    // a filtered file scan on the build side is what makes the dim
-    // "selective" for the PartitionPruning rule
-    val dims = spark.read.parquet(dimPath).where(col("tag") === "keep")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    val joined = facts.join(dims, Seq("d"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-           s"expected dynamic partition pruning in plan:\n$plan")
-    assert(joined.count() > 0)
+    val base = graft.queries.Q.scratchDir("dpp")
+    try {
+      val path = s"$base/dpp_events"
+      Tables.load(spark, sfDir, "events")
+        .withColumn("d", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("d").parquet(path)
+      val facts = spark.read.parquet(path)
+      // independent filtered dim side (DPP requires a selective filter on
+      // the build side, not a derivation of the same scan)
+      import spark.implicits._
+      val twoDates = facts.select(col("d")).distinct().orderBy(col("d")).limit(2)
+        .collect().map(_.getDate(0))
+      val dimPath = s"$base/dpp_dim"
+      (twoDates.toSeq.map(d => (d, "keep")) :+ (java.sql.Date.valueOf("1970-01-01"), "drop"))
+        .toDF("d", "tag").write.mode("overwrite").parquet(dimPath)
+      // a filtered file scan on the build side is what makes the dim
+      // "selective" for the PartitionPruning rule
+      val dims = spark.read.parquet(dimPath).where(col("tag") === "keep")
+      spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+      val joined = facts.join(dims, Seq("d"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.toLowerCase.contains("dynamicpruning"),
+             s"expected dynamic partition pruning in plan:\n$plan")
+      assert(joined.count() > 0)
+    } finally graft.queries.Q.scratchDelete(base)
   }
 
   test("event-time predicates push into the parquet scan on a native-ts fixture") {

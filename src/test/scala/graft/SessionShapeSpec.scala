@@ -11,7 +11,7 @@ import graft.plans.GraftExtensions
   * built with the extension, and in one built without it once
   * [[SparkEntry.engineFor]] has run on it; a source guard keeps session
   * building, function registration and task-metric listening each in
-  * one place.
+  * one place, and a second keeps scratch trees in [[graft.queries.Q]].
   */
 class SessionShapeSpec extends SparkSpec {
 
@@ -58,6 +58,21 @@ class SessionShapeSpec extends SparkSpec {
       "SparkEntry.engineFor is the one caller of GraftExtensions.registerIn")
     assert(filesWith("SparkListener {") ++ filesWith("SparkListener{") ==
       Set("graft/Metrics.scala"))
+  }
+
+  test("source guard: scratch trees only through Q, no absolute path into the checkout") {
+    val root = Paths.get("src/main/scala")
+    val sources: Map[String, String] = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> code(p)).toMap
+    Seq("scratchDir(", "scratchDelete(").foreach { p =>
+      assert(sources.collect { case (f, src) if src.contains(p) => f }.toSet ==
+        Set("graft/queries/Q.scala", "graft/ScaleProbe.scala"), p)
+    }
+    // the only absolute paths are the read-only fixture defaults
+    val absolute = sources.values.flatMap("\"/root/[^\"]*".r.findAllIn(_)).toSeq
+    assert(absolute.nonEmpty && absolute.forall(_.startsWith("\"/root/testdata/")),
+      absolute.mkString(", "))
   }
 
   /** Source text without comments, so only code occurrences count. */

@@ -13,7 +13,10 @@ import graft.streaming.EventStreams
   */
 class StreamingSpec extends SparkSpec {
 
-  private val workDir = "/root/repo/target/graft-tmp/stream"
+  private val workDir = graft.queries.Q.scratchDir("stream")
+
+  override def afterAll(): Unit =
+    try graft.queries.Q.scratchDelete(workDir) finally super.afterAll()
 
   private def freshDirs(): (String, String) = {
     val in = s"$workDir/in-${System.nanoTime()}"

@@ -25,7 +25,10 @@ import graft.streaming.EventStreams
   */
 class TsEncodingSpec extends SparkSpec {
 
-  private val workDir = "/root/repo/target/graft-tmp/tsenc"
+  private val workDir = graft.queries.Q.scratchDir("tsenc")
+
+  override def afterAll(): Unit =
+    try graft.queries.Q.scratchDelete(workDir) finally super.afterAll()
 
   /** Literal event times the fixtures encode; µs precision. */
   private val literals = Seq(
