@@ -110,7 +110,7 @@ object Bench {
     // Stats-bearing catalog tables + CBO for the bench session: the
     // star-join queries then plan with real rowCount/NDV (join reorder,
     // build-side choice) instead of file-size heuristics — the same
-    // configuration a production deployment gets from PersistentCatalog.
+    // configuration `Engine.persistent` registers in its Hive metastore.
     val spark = SessionTuning.local(defaultCpus = 32, statsDir = Some(sfDir))
     val sc = spark.sparkContext
     val agg = StageMetrics.install(sc)

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft session's shape is decided. [[local]] builds
-  * the session every main runs on; [[shared]] is the part a
-  * persistent-catalog session ([[graft.sources.PersistentCatalog]])
-  * takes from here too; [[apply]] is the r22 shuffle I/O tuning
-  * (guide §1.2 step 3 — config AFTER the algorithm, from measurement).
+  * the session every main runs on and [[persistent]] the Hive-backed
+  * one of a deployment; both take [[shared]] and [[apply]], the r22
+  * shuffle I/O tuning (guide §1.2 step 3 — config AFTER the algorithm,
+  * from measurement).
   *
   * Root cause (thread-dump-attributed): with `shuffle.partitions` at
   * the local core count (32 ≤ the 200 default
@@ -78,7 +78,7 @@ object SessionTuning {
     * `statsDir`, the fixtures there are registered as stats-bearing
     * tables with CBO on ([[Tables.registerWithStats]]) — the shape the
     * bench and the correctness gate run, and a production deployment
-    * gets from the persistent catalog.
+    * gets from [[persistent]].
     */
   def local(defaultCpus: Int, statsDir: Option[String] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -91,4 +91,34 @@ object SessionTuning {
     statsDir.foreach(Tables.registerWithStats(spark, _))
     spark
   }
+
+  /** The deployment session ([[graft.engine.Engine.persistent]]): a
+    * Hive-backed catalog in an embedded Derby metastore under
+    * `metastoreDir` (a warehouse-scale deployment swaps the JDBC URL
+    * for its shared metastore service; nothing else changes), managed
+    * tables under `warehouseDir`, and cost-based optimization on, with
+    * column histograms, so the ANALYZE stats of
+    * [[Tables.registerWithStats]] steer join order and build side. The
+    * tables and their stats outlive the process, like the reference's
+    * always-on database (`src/processor.ts:41-51`).
+    *
+    * `spark.sql.catalogImplementation` is a STATIC conf — the FIRST
+    * session built in a JVM fixes it for every later session sharing
+    * the context.
+    */
+  def persistent(
+      warehouseDir: String,
+      metastoreDir: String,
+      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
+      shufflePartitions: Int = 32): SparkSession.Builder =
+    shared(apply(SparkSession.builder()))
+      .master(master)
+      .enableHiveSupport()
+      .config("spark.sql.warehouse.dir", warehouseDir)
+      .config("javax.jdo.option.ConnectionURL",
+        s"jdbc:derby:;databaseName=$metastoreDir/metastore_db;create=true")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.cbo.enabled", "true")
+      .config("spark.sql.cbo.joinReorder.enabled", "true")
+      .config("spark.sql.statistics.histogram.enabled", "true")
 }

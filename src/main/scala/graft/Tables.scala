@@ -66,9 +66,9 @@ object Tables {
       StructField("l_shipdate", TimestampType))),
     // events.ts is PHYSICAL-ENCODING-DEPENDENT: fixture generations have
     // shipped it as parquet TIMESTAMP(NANOS) and as TIMESTAMP(MICROS).
-    // The ts type declared here is a placeholder — every real read goes
-    // through schemaFor/load, which inspect the parquet footer and pick
-    // the unit-correct schema + normalization (see TsEncoding below).
+    // The ts type declared here is a placeholder — every real read takes
+    // its schema from the file version's footer record, which picks the
+    // unit-correct type + normalization (see TsEncoding below).
     "events" -> StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", LongType),
@@ -137,109 +137,126 @@ object Tables {
 
   /** The footer-detected timestamp columns of fixture `name` (empty for
     * tables without one). */
-  def tsColumnsOf(name: String): Seq[String] = tsColumns.getOrElse(name, Nil)
+  private def tsColumnsOf(name: String): Seq[String] = tsColumns.getOrElse(name, Nil)
 
-  /** Footer-detected encoding of timestamp column `column` in the
-    * parquet data at `path` (a single file or a directory of part
-    * files). Cached per canonical (path, column, resolved-file
-    * mtime+size) — one footer read per path per JVM, but a same-path
-    * fixture REGENERATION (new mtime/length) re-detects instead of
-    * serving the stale encoding. Together with [[load]]'s
-    * catalog-vs-footer reconciliation (a registered table whose frozen
-    * ts DDL disagrees with the fresh detection is bypassed for the
-    * direct footer-aware read), a long-lived session cannot reproduce
-    * the r12 failure class against a swapped file on either read path.
+  /** What one version of a fixture's parquet data says about itself,
+    * read from its footer once: the footer encoding of each timestamp
+    * column ([[tsColumns]]), the read schema those encodings give, and
+    * the reconcile verdict (`drift`, a message when the file's columns
+    * contradict [[schemas]] — see [[footer]]). `hasData` is false for a
+    * still-EMPTY landing directory (the file-stream define-before-data
+    * case): there is no footer yet, so the encodings are ASSUMED to be
+    * the current fixture generation's (µs NTZ).
+    */
+  final case class Footer(
+      hasData: Boolean,
+      encodings: Map[String, TsEncoding],
+      schema: StructType,
+      drift: Option[String])
+
+  /** The [[Footer]] of the parquet data at `path` (a single file or a
+    * directory of part files) read as fixture `name`. One record per
+    * canonical path and file version (the resolved file's mtime:size,
+    * see [[fileStamp]]): a same-path REGENERATION (new mtime/length)
+    * gets a fresh record instead of the stale one, so a long-lived
+    * session cannot reproduce the r12 failure class against a swapped
+    * file. Each call resolves and stamps the file once; the footer
+    * itself is read once per version per JVM.
     *
     * Directories are assumed encoding-homogeneous (the fixture layout:
-    * one generation per directory) — detection reads ONE footer; a
-    * directory mixing generations cannot be scanned with a single
-    * schema by Spark anyway.
+    * one generation per directory) — ONE footer is read; a directory
+    * mixing generations cannot be scanned with a single schema by Spark
+    * anyway. Reading mutates no session state: every graft read of a
+    * NANOS column goes through an EXPLICIT LongType read schema, which
+    * the parquet reader decodes directly (asserted in TsEncodingSpec).
     */
-  def tsEncodingFor(spark: SparkSession, path: String, column: String): TsEncoding = {
-    val file = resolveParquetFile(spark, path)
-    val stamp = file.map { f =>
-      val st = f.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(f)
-      s"${st.getModificationTime}:${st.getLen}"
-    }.getOrElse("absent")
-    tsEncodingCache.computeIfAbsent(canon(path) + "#" + column + "#" + stamp,
-      _ => detectTsEncoding(spark, file, column))
+  private[graft] def footer(spark: SparkSession, path: String, name: String): Footer = {
+    val (stamp, file) = locate(spark, path)
+    footers.computeIfAbsent(stamp + "#" + name, _ => readFooter(spark, path, name, file))
   }
 
-  /** Footer-detected encoding of `events.ts` — see [[tsEncodingFor]]. */
-  def eventsTsEncoding(spark: SparkSession, path: String): TsEncoding =
-    tsEncodingFor(spark, path, "ts")
-
-  private val tsEncodingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TsEncoding]()
+  private val footers = new java.util.concurrent.ConcurrentHashMap[String, Footer]()
 
   /** First data file under `path` (descending into part-file
     * directories — fixtures ship both as a single file named
-    * `events.parquet` and as a directory of part files). None when the
-    * path is an existing but still-EMPTY directory — the file-stream
-    * define-before-data case.
+    * `events.parquet` and as a directory of part files), with the
+    * version stamp of `path` it gives: canonical path + the file's
+    * mtime:size, or "absent" when the path is an existing but
+    * still-EMPTY directory.
     */
-  private def resolveParquetFile(
-      spark: SparkSession, path: String): Option[org.apache.hadoop.fs.Path] = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
+  private def locate(
+      spark: SparkSession, path: String): (String, Option[org.apache.hadoop.fs.FileStatus]) = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    @annotation.tailrec
-    def resolve(p: Path): Option[Path] =
-      if (!fs.getFileStatus(p).isDirectory) Some(p)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def first(st: FileStatus): Option[FileStatus] =
+      if (!st.isDirectory) Some(st)
       else {
-        val kids = fs.listStatus(p)
-          .filter { st =>
-            val n = st.getPath.getName
+        val kids = fs.listStatus(st.getPath)
+          .filter { k =>
+            val n = k.getPath.getName
             // Only parquet files and directories can lead to a footer; a
             // stray non-parquet sibling (marker file, csv, log) must not
-            // be picked as the "footer" file — ParquetFileReader.open on
-            // it would fail the whole load with an opaque error.
+            // be picked as the "footer" file — opening it would fail the
+            // whole load with an opaque error.
             !n.startsWith("_") && !n.startsWith(".") &&
-              (st.isDirectory || n.endsWith(".parquet"))
+              (k.isDirectory || n.endsWith(".parquet"))
           }
           .sortBy(_.getPath.getName)
-        kids.find(st => !st.isDirectory).orElse(kids.headOption).map(_.getPath) match {
-          case Some(next) => resolve(next)
-          case None       => None
-        }
+        kids.find(!_.isDirectory).orElse(kids.headOption).flatMap(first)
       }
-    resolve(root)
+    val file = first(fs.getFileStatus(root))
+    val version = file.fold("absent")(st => s"${st.getModificationTime}:${st.getLen}")
+    (canon(path) + "#" + version, file)
   }
 
-  private def detectTsEncoding(
+  private def readFooter(
       spark: SparkSession,
-      file: Option[org.apache.hadoop.fs.Path],
-      column: String): TsEncoding = {
+      path: String,
+      name: String,
+      file: Option[org.apache.hadoop.fs.FileStatus]): Footer = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType
-    val conf = spark.sessionState.newHadoopConf()
-    val f = file.getOrElse {
-      // No data yet — a stream defined over an empty landing directory.
-      // Assume the CURRENT fixture generation's encoding (µs NTZ); the
-      // mtime-stamped cache key re-detects once the first file lands
-      // and the stream is (re)defined.
-      return TsEncoding.Native(false)
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val cols = tsColumnsOf(name)
+    file match {
+      case None =>
+        val assumed = cols.map(_ -> (TsEncoding.Native(false): TsEncoding)).toMap
+        Footer(hasData = false, assumed, withTsTypes(schemas(name), assumed), drift = None)
+      case Some(st) =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
+        val meta = try reader.getFooter finally reader.close()
+        val encs = cols.map(c => c -> tsEncodingOf(meta.getFileMetaData.getSchema, c)).toMap
+        // the schema `spark.read.parquet` would infer for this one file;
+        // a NANOS-era footer only converts with nanosAsLong, set on a
+        // copy of the session conf so the session's own stays untouched
+        val conf = spark.sessionState.conf.clone()
+        conf.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val stored = ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(st.getPath, meta),
+          new ParquetToSparkSchemaConverter(conf))
+        Footer(hasData = true, encs, withTsTypes(schemas(name), encs),
+          driftOf(name, path, stored))
     }
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-    try {
-      val msg = reader.getFileMetaData.getSchema
-      val prim = msg.getType(msg.getFieldIndex(column)).asPrimitiveType()
-      prim.getLogicalTypeAnnotation match {
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          if (t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS) TsEncoding.NanosLong
-          else TsEncoding.Native(t.isAdjustedToUTC)
-        case _ =>
-          // INT96: Spark's legacy timestamp physical type, read natively
-          // as a UTC-adjusted timestamp. Unannotated INT64: raw
-          // epoch-nanos, the historical fixture contract.
-          if (prim.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT96)
-            TsEncoding.Native(true)
-          else TsEncoding.NanosLong
-      }
-    } finally reader.close()
+  }
+
+  private def tsEncodingOf(
+      msg: org.apache.parquet.schema.MessageType, column: String): TsEncoding = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+    val prim = msg.getType(msg.getFieldIndex(column)).asPrimitiveType()
+    prim.getLogicalTypeAnnotation match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+        if (t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS) TsEncoding.NanosLong
+        else TsEncoding.Native(t.isAdjustedToUTC)
+      case _ =>
+        // INT96: Spark's legacy timestamp physical type, read natively
+        // as a UTC-adjusted timestamp. Unannotated INT64: raw
+        // epoch-nanos, the historical fixture contract.
+        if (prim.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT96)
+          TsEncoding.Native(true)
+        else TsEncoding.NanosLong
+    }
   }
 
   /** Re-type the given timestamp columns of `base` per their detected
@@ -261,75 +278,13 @@ object Tables {
   def eventsSchema(enc: TsEncoding): StructType =
     withTsTypes(schemas("events"), Map("ts" -> enc))
 
-  /** Read-schema for fixture `name` under `dir` — footer-aware for
-    * every timestamp-bearing table ([[tsColumns]]), the static
-    * declaration otherwise.
-    */
-  def schemaFor(spark: SparkSession, dir: String, name: String): StructType = {
-    val cols = tsColumns.getOrElse(name, Nil)
-    if (cols.isEmpty) schemas(name)
-    else withTsTypes(schemas(name),
-      cols.map(c => c -> tsEncodingFor(spark, s"$dir/$name.parquet", c)).toMap)
-  }
-
-  /** Detect the encodings of the given timestamp columns at `path`.
-    * Detection mutates NO session state: every graft read of a NANOS
-    * column goes through an EXPLICIT LongType read schema (batch
-    * `spark.read.schema`, `readStream.schema`, catalog DDL), and the
-    * parquet reader decodes the physical INT64 directly under a
-    * requested LongType — the session-wide
-    * `spark.sql.legacy.parquet.nanosAsLong` conf is only needed for
-    * schema INFERENCE, which graft never relies on for fixture data
-    * (the one inference read, [[reconcileOrFail]]'s footer check, sets
-    * and restores the conf around its own eager schema resolution).
-    * So ad-hoc `spark.read.parquet` behavior elsewhere in the session
-    * is identical before and after any fixture read — asserted in
-    * TsEncodingSpec ("ns fixture reads leave ad-hoc reads untouched").
-    */
-  private[graft] def prepareTsRead(
-      spark: SparkSession, path: String, cols: Seq[String]): Map[String, TsEncoding] =
-    cols.map(c => c -> tsEncodingFor(spark, path, c)).toMap
-
-  /** Run `body` with the ns-inference legacy conf set, restoring the
-    * previous value after. ONLY safe around EAGER schema resolution
-    * (`spark.read.parquet(...).schema` resolves footers at call time);
-    * a lazily-executed scan would consult the restored value.
-    */
-  private def withNanosInference[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  /** [[prepareTsRead]] for the events stream/batch read path. */
-  private[graft] def prepareEventsRead(spark: SparkSession, path: String): TsEncoding =
-    prepareTsRead(spark, path, Seq("ts"))("ts")
-
-  /** Whether `path` currently holds at least one parquet data file —
-    * false for the define-before-data empty landing dir, where
-    * [[detectTsEncoding]] falls back to assuming the current fixture
-    * generation (µs NTZ). Stream definers use this to know the detected
-    * encoding is an ASSUMPTION, not an observation.
-    */
-  private[graft] def hasParquetData(spark: SparkSession, path: String): Boolean =
-    resolveParquetFile(spark, path).isDefined
-
-  /** Canonical path + mtime:size generation stamp of the parquet data at
-    * `path` — the cache-key convention every footer-derived artifact
-    * uses (encoding detection, schema reconciliation, query-side index
-    * caches), so a fixture regeneration invalidates them all the same
-    * way.
+  /** Canonical path + mtime:size version stamp of the parquet data at
+    * `path` — the key of its [[footer]] record, and of the query-side
+    * index caches, so a fixture regeneration invalidates them all the
+    * same way.
     */
   private[graft] def fileStamp(spark: SparkSession, path: String): String =
-    canon(path) + "#" + resolveParquetFile(spark, path).map { f =>
-      val st = f.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(f)
-      s"${st.getModificationTime}:${st.getLen}"
-    }.getOrElse("absent")
+    locate(spark, path)._1
 
   /** Normalize the named timestamp columns to plain TimestampType — the
     * single column type every downstream operator sees, regardless of
@@ -373,13 +328,6 @@ object Tables {
     case other                => other
   }
 
-  private val reconcileCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Cached catalog-vs-footer ts-type freshness verdicts (see [[load]]). */
-  private val catalogFreshCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Footer-vs-declared reconciliation (the generalization of the r12
     * ts lesson: a fixture regeneration must never silently decode wrong
     * or fail with an opaque scan error). Policy per declared column:
@@ -389,106 +337,68 @@ object Tables {
     * [[TsEncoding]] detection); absent and non-key → allowed, the scan
     * null-fills it (asserted in SchemaEvolutionSpec); absent KEY column
     * ([[keyColumns]]) → loud error. Extra file columns are ignored by
-    * the explicit ReadSchema. Cached per (path, file mtime+size) like
-    * the encoding detection, so it costs one footer read per
-    * generation per JVM.
+    * the explicit ReadSchema. `stored` is the file's own schema; the
+    * verdict is kept in the file version's [[Footer]] and raised by
+    * every [[load]] of that version.
     */
-  private[graft] def reconcileOrFail(
-      spark: SparkSession, dir: String, name: String): Unit = {
-    val path = s"$dir/$name.parquet"
-    val file = resolveParquetFile(spark, path)
-    if (file.isEmpty) return // empty landing dir — nothing to check yet
-    val st = file.get.getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(file.get)
-    val key = canon(path) + "#" + st.getModificationTime + ":" + st.getLen
-    reconcileCache.computeIfAbsent(key, { _ =>
-      // inference read: a NANOS-era fixture needs the legacy conf to
-      // infer at all; scoped here because the .schema resolution is
-      // eager (footers are read at the spark.read call, not at scan)
-      val footer = withNanosInference(spark)(
-        spark.read.parquet(file.get.toString).schema)
-      val have = footer.fields.map(f => f.name -> typeShape(f.dataType)).toMap
-      val tsCols = tsColumnsOf(name).toSet
-      schemas(name).fields.foreach { f =>
-        have.get(f.name) match {
-          case Some(dt) if !tsCols.contains(f.name) && dt != typeShape(f.dataType) =>
-            throw new IllegalStateException(
-              s"fixture '$name' at $path: column '${f.name}' is declared " +
-                s"${f.dataType.simpleString} but the file stores ${dt.simpleString} " +
-                "— type drift; regenerate the fixture or update Tables.schemas")
-          case None if keyColumns.get(name).contains(f.name) =>
-            throw new IllegalStateException(
-              s"fixture '$name' at $path: key column '${f.name}' is missing " +
-                "from the file — this is a different dataset, not an evolved " +
-                "schema; refusing to null-fill it")
-          case _ => () // same type, or absent non-key (null-filled), or ts
-        }
+  private def driftOf(name: String, path: String, stored: StructType): Option[String] = {
+    val have = stored.fields.map(f => f.name -> typeShape(f.dataType)).toMap
+    val tsCols = tsColumnsOf(name).toSet
+    schemas(name).fields.iterator.flatMap { f =>
+      have.get(f.name) match {
+        case Some(dt) if !tsCols.contains(f.name) && dt != typeShape(f.dataType) =>
+          Some(s"fixture '$name' at $path: column '${f.name}' is declared " +
+            s"${f.dataType.simpleString} but the file stores ${dt.simpleString} " +
+            "— type drift; regenerate the fixture or update Tables.schemas")
+        case None if keyColumns.get(name).contains(f.name) =>
+          Some(s"fixture '$name' at $path: key column '${f.name}' is missing " +
+            "from the file — this is a different dataset, not an evolved " +
+            "schema; refusing to null-fill it")
+        case _ => None // same type, or absent non-key (null-filled), or ts
       }
-      java.lang.Boolean.TRUE
-    })
+    }.nextOption()
   }
 
-  /** Read one fixture table. The explicit schema means the scan carries a
-    * fixed ReadSchema regardless of footer contents. For `events`, the
-    * schema and the `ts` normalization follow the footer's logical type
-    * (see [[TsEncoding]]) so downstream operators always see a plain
-    * TimestampType column with the literal event times. Every load
-    * first passes [[reconcileOrFail]] — footer drift surfaces as a
-    * targeted error (or sanctioned null-fill), never an opaque scan
-    * failure or silent mis-decode.
-    */
   /** The direct (non-catalog) fixture scan: explicit schema + a
     * `pathGlobFilter` restricting the listing to `*.parquet`, so a
     * stray non-parquet sibling (marker file, csv, log) dropped into a
     * part-file directory is SKIPPED by the scan — matching
-    * [[resolveParquetFile]]'s footer-resolution semantics — instead of
-    * failing the whole read with an opaque FAILED_READ_FILE. A
-    * single-FILE fixture (`events.parquet`) matches the glob by its own
-    * leaf name, so both fixture layouts read identically.
+    * [[locate]]'s footer-resolution semantics — instead of failing the
+    * whole read with an opaque FAILED_READ_FILE. A single-FILE fixture
+    * (`events.parquet`) matches the glob by its own leaf name, so both
+    * fixture layouts read identically.
     */
   private def fixtureRead(
       spark: SparkSession, schema: StructType, path: String): DataFrame =
     spark.read.schema(schema).option("pathGlobFilter", "*.parquet").parquet(path)
 
+  /** Read one fixture table. The explicit schema means the scan carries a
+    * fixed ReadSchema regardless of footer contents. For the timestamp-
+    * bearing tables, the schema and the ts normalization follow the
+    * footer's logical type (see [[TsEncoding]]) so downstream operators
+    * always see a plain TimestampType column with the literal times.
+    * Every load raises its file version's reconcile verdict first —
+    * footer drift surfaces as a targeted error (or sanctioned
+    * null-fill), never an opaque scan failure or silent mis-decode.
+    *
+    * When [[registerWithStats]] registered THIS dir's table from the
+    * same read schema, the load is the stats-bearing catalog table —
+    * identical data and schema, but the scan carries rowCount/NDV so
+    * CBO join-reorder and build-side choice see real cardinalities
+    * instead of file-size heuristics. A table registered from another
+    * file version's schema (a mid-JVM ns↔µs regeneration) would decode
+    * wrong-unit values through its frozen ts DDL, so it is bypassed for
+    * the direct footer-aware read until registration is re-run.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Prefer the stats-bearing catalog table when registerWithStats ran
-    // for THIS dir in this session — identical data/schema, but the scan
-    // carries rowCount/NDV so CBO join-reorder and build-side choice see
-    // real cardinalities instead of file-size heuristics. The table name
-    // encodes the dir, so probes reading other dirs (ScaleProbe temp
-    // fixtures) can never pick up another dir's registration.
+    val path = s"$dir/$name.parquet"
+    val f = footer(spark, path, name)
+    f.drift.foreach(msg => throw new IllegalStateException(msg))
     val tbl = statsTableName(dir, name)
-    val useCatalog =
-      statsRegisteredDirs.contains(canon(dir)) && spark.catalog.tableExists(tbl)
-    val cols = tsColumns.getOrElse(name, Nil)
-    if (cols.isEmpty) {
-      reconcileOrFail(spark, dir, name)
-      if (useCatalog) spark.table(tbl)
-      else fixtureRead(spark, schemas(name), s"$dir/$name.parquet")
-    } else {
-      // ts detection first: reconcile's footer read needs the NANOS
-      // legacy conf in place for ns-generation files
-      prepareTsRead(spark, s"$dir/$name.parquet", cols)
-      reconcileOrFail(spark, dir, name)
-      val want = schemaFor(spark, dir, name)
-      // The catalog table's ts DDL was frozen at registerWithStats time;
-      // a mid-JVM fixture regeneration (ns↔µs) makes the fresh footer
-      // detection disagree with it. Serving the stale declared type would
-      // decode wrong-unit values, so fall back to the direct footer-aware
-      // read until registration is re-run. The verdict is cached per
-      // (table, file generation stamp) — the schema analysis runs once
-      // per generation, not once per load() on the hot path.
-      val catalogFresh = useCatalog && catalogFreshCache.computeIfAbsent(
-        tbl + "#" + fileStamp(spark, s"$dir/$name.parquet"), { _ =>
-          val have = spark.table(tbl).schema
-          java.lang.Boolean.valueOf(
-            cols.forall(c => have(c).dataType == want(c).dataType))
-        })
-      val df =
-        if (catalogFresh) spark.table(tbl)
-        else fixtureRead(spark, want, s"$dir/$name.parquet")
-      normalizeTs(df, cols)
-    }
+    val df =
+      if (registered.get(tbl) == f.schema && spark.catalog.tableExists(tbl)) spark.table(tbl)
+      else fixtureRead(spark, f.schema, path)
+    normalizeTs(df, tsColumnsOf(name))
   }
 
   /** Canonical absolute form of a fixture dir. Registration and lookup
@@ -502,11 +412,12 @@ object Tables {
   private def canon(dir: String): String =
     java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
 
-  /** Catalog name for a fixture registered from `dir` — dir-hash suffix
-    * keeps registrations for different dirs (scale factors, temp
-    * fixtures) distinct within one session.
+  /** Catalog name of fixture `name` registered from `dir` — the one
+    * naming scheme; the dir-hash suffix keeps registrations for
+    * different dirs (scale factors, temp fixtures) distinct within one
+    * catalog.
     */
-  private def statsTableName(dir: String, name: String): String =
+  private[graft] def statsTableName(dir: String, name: String): String =
     s"g_${name}_s" + java.lang.Integer.toHexString(canon(dir).hashCode)
 
   /** Drop a catalog table whose column shape no longer matches the
@@ -518,7 +429,7 @@ object Tables {
     * StructType equality — ignores nullability/metadata drift that
     * catalog round-trips introduce.
     */
-  private[graft] def dropIfSchemaDrifted(
+  private def dropIfSchemaDrifted(
       spark: SparkSession, table: String, want: StructType): Unit =
     if (spark.catalog.tableExists(table)) {
       val have = spark.table(table).schema
@@ -526,21 +437,23 @@ object Tables {
       if (shape(have) != shape(want)) spark.sql(s"DROP TABLE $table")
     }
 
-  /** Dirs registered via [[registerWithStats]] this JVM — checked before
-    * the (cheap but not free) catalog lookup in the [[load]] hot path.
+  /** Catalog tables [[registerWithStats]] created or confirmed in this
+    * JVM, mapped to the read schema they were registered from — what
+    * [[load]] checks before it serves one.
     */
-  private val statsRegisteredDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val registered =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** Register the fixtures under `dir` as external parquet tables in the
-    * session's (in-memory) catalog and collect row-count + column stats,
-    * then enable CBO so the stats steer join ordering and build-side
-    * choice. After this, [[load]] for the same dir reads the catalog
-    * table — same bytes, same schema, but a stats-bearing relation.
-    * This is the single-session analog of
-    * [[graft.sources.PersistentCatalog]] (which persists the same stats
-    * in a Hive metastore across restarts); the bench/gate sessions use
-    * this form because they are ephemeral by design.
+    * session's catalog and collect row-count + column stats, then enable
+    * CBO so the stats steer join ordering and build-side choice. After
+    * this, [[load]] for the same dir reads the catalog table — same
+    * bytes, same schema, but a stats-bearing relation. This is the one
+    * way a fixture becomes a named table: the bench and gate sessions
+    * run it on their in-memory catalog, and [[graft.engine.Engine]]'s
+    * persistent deployment on its Hive metastore, where the tables and
+    * their stats outlive the process. Idempotent: an existing table
+    * whose DDL still matches is kept and re-analyzed.
     */
   def registerWithStats(spark: SparkSession, dir: String): Unit = {
     val abs = canon(dir)
@@ -549,13 +462,10 @@ object Tables {
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     schemas.keys.foreach { name =>
-      // footer-aware DDL for timestamp-bearing tables (and the NANOS
-      // legacy conf if a fixture needs it — ANALYZE scans the file
-      // through this table)
-      tsColumns.get(name).foreach(cols =>
-        prepareTsRead(spark, s"$abs/$name.parquet", cols))
-      val schema = schemaFor(spark, abs, name)
-      val t = statsTableName(dir, name)
+      // footer-aware DDL for timestamp-bearing tables (ANALYZE scans
+      // the file through this table)
+      val schema = footer(spark, s"$abs/$name.parquet", name).schema
+      val t = statsTableName(abs, name)
       dropIfSchemaDrifted(spark, t, schema)
       // pathGlobFilter mirrors [[fixtureRead]]: stray non-parquet
       // siblings in a part-file directory are skipped, not fatal
@@ -571,11 +481,8 @@ object Tables {
       if (atomic.nonEmpty)
         spark.sql(
           s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${atomic.mkString(", ")}")
+      registered.put(t, schema)
     }
-    statsRegisteredDirs.add(abs)
-    // re-registration may have refreshed a previously-drifted DDL: stale
-    // freshness verdicts must not keep load() on the fallback path
-    catalogFreshCache.clear()
   }
 
   /** Like [[load]], but spreads the rows across the session's default
@@ -591,13 +498,4 @@ object Tables {
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
-
-  /** Register every fixture as a temp view so handlers (and `spark.sql`)
-    * can reference tables by name — the analog of the reference handing
-    * each handler a connection to a fully-populated database.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    schemas.keys.foreach { name =>
-      load(spark, dir, name).createOrReplaceTempView(name)
-    }
 }

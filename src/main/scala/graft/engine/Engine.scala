@@ -87,22 +87,22 @@ object RequestCtx {
 
 object Engine {
 
-  /** Deployment entry point: a persistent-catalog (Hive metastore)
-    * session with the configured fixtures registered as external tables
-    * and analyzed for CBO — the posture where, like the reference's
-    * always-on PG database (`/root/reference/src/processor.ts:41-51`),
-    * the tables exist before the process starts and survive after it
-    * stops. Gate/bench mains keep their lightweight in-memory-catalog
-    * sessions; a real deployment starts here.
+  /** Deployment entry point: a Hive-metastore session
+    * ([[graft.SessionTuning.persistent]]) with the configured fixtures
+    * registered as stats-bearing tables by
+    * [[graft.Tables.registerWithStats]] — the same registration the
+    * bench and gate sessions run. Every handler's `Tables.load` of
+    * `config.dataDir` then plans over those tables, so the ANALYZE
+    * stats steer its joins. Like the reference's always-on PG database
+    * (`src/processor.ts:41-51`), the tables exist before the process
+    * starts and survive after it stops.
     */
   def persistent(
       config: EngineConfig = EngineConfig.resolve(),
       warehouseDir: String = "spark-warehouse",
       metastoreDir: String = "."): Engine = {
-    val spark = graft.sources.PersistentCatalog
-      .sessionBuilder(warehouseDir, metastoreDir)
-      .getOrCreate()
-    graft.sources.PersistentCatalog.bootstrap(spark, config.dataDir)
+    val spark = graft.SessionTuning.persistent(warehouseDir, metastoreDir).getOrCreate()
+    graft.Tables.registerWithStats(spark, config.dataDir)
     new Engine(spark, config)
   }
 }

@@ -10783,8 +10783,11 @@ object CurationQueries {
     (s, dir) => {
       // r22 (guide §2.3 — narrower types): trigrams carry through every
       // exchange, group-by, sorted array and intersection as an INT code
-      // ((ascii(c1)*128 + ascii(c2))*128 + ascii(c3) — injective on any
-      // byte alphabet) instead of a 3-char string. The (df, tg) prefix
+      // ((ascii(c1)*128 + ascii(c2))*128 + ascii(c3)) instead of a 3-char
+      // string. The packing is injective only while every character's
+      // codepoint is below 128 (`ascii` returns the codepoint, so a wider
+      // one spills into the next position's range); it holds here
+      // because shred first keeps only `[a-z0-9 ]`. The (df, tg) prefix
       // order's tie-break becomes int order; the AllPairs prefix filter
       // is lossless under ANY shared total order (the suffix past the
       // prefix has only ceil(t*n)-1 elements, so an overlap >= ceil(t*n)
@@ -10969,7 +10972,8 @@ object CurationQueries {
           "array_join(filter(split(lower(substring(text, 1, 40)), ''), " +
             "(x, i) -> i != 9), '')").as("s"))
       // r22 (guide §2.3): int trigram codes through the whole filter
-      // stack — see textTrigramMatch's shred comment; the global
+      // stack — see textTrigramMatch's shred comment (the `[^a-z0-9 ]`
+      // replace below is what keeps the packing injective); the global
       // (df, tg) prefix order's tie-break becomes int order, which the
       // PPJoin filters are lossless under (any shared total order), and
       // the in-array verify is exact — oracle-proven at all three SFs.
@@ -13894,10 +13898,12 @@ object CurationQueries {
       // 128-bit pair of xxhash64 longs over the token slice itself —
       // no string building, and the slices are hashed in whole-stage
       // codegen AFTER the explode (the HOF lambda only slices).
-      // Distinct seeds (the 7L prefix re-seeds the chain) make the two
-      // 64-bit hashes independent; the oracle twin keeps md5 — outputs
-      // agree unless BOTH hashes collide on real data, same negligible
-      // class as md5 itself (proven bit-identical at all 3 SFs).
+      // Distinct seeds (the 7L prefix re-seeds the chain) give two
+      // different 64-bit hashes; being one hash function over the same
+      // input, they are not provably independent, so the pair's 128-bit
+      // collision odds are assumed rather than derived. The oracle twin
+      // keeps md5 — outputs agree unless BOTH hashes collide on real
+      // data (checked bit-identical at all 3 SFs).
       // explode bare POSITIONS (ints), then hash the L-element window
       // in place via the native gram_hash (== xxhash64(slice(...)) bit
       // for bit) in whole-stage codegen — the HOF lambda form evaluated

@@ -2506,7 +2506,7 @@ object NorthStarQueries {
     * checkpoint burned 0.15-0.48 s of serial driver wall per execution
     * on identical results. The generation stamp (embeddings file
     * mtime+size) invalidates on fixture regeneration, exactly like
-    * `Tables.detectTsEncoding`; the session-identity key keeps cached
+    * the footer record of `Tables.footer`; the session-identity key keeps cached
     * plans from leaking across sessions (checkpointed RDDs die with
     * their context).
     */

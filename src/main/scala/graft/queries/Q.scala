@@ -25,6 +25,23 @@ object Q {
   def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** SQL text over the fixtures of `dir`, referenced by table name. The
+    * names are bound as temp views, which are session-global, so binding,
+    * analysis and dropping happen under one lock: `s.sql` resolves every
+    * name eagerly, the returned frame keeps the plans it resolved, and
+    * no fixture view outlives the call or is seen by a concurrent call
+    * on another dir. Only the fixtures the text mentions are bound.
+    */
+  def sql(s: SparkSession, dir: String)(text: String): DataFrame = fixtureViews.synchronized {
+    val names = Tables.schemas.keys.filter(n => s"\\b$n\\b".r.findFirstIn(text).isDefined)
+    try {
+      names.foreach(n => T(s, dir, n).createOrReplaceTempView(n))
+      s.sql(text)
+    } finally names.foreach(s.catalog.dropTempView)
+  }
+
+  private object fixtureViews
+
   /** A query that round-trips through files. `fn` gets the session, the
     * fixture dir and `base`, a fresh [[scratchDir]] of its own; the
     * frame it returns is materialized (`localCheckpoint`) and the tree

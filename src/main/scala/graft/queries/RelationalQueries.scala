@@ -518,8 +518,7 @@ object RelationalQueries {
     */
   private val aggStringAgg = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""SELECT o_orderpriority,
+      Q.sql(s, dir)("""SELECT o_orderpriority,
               |  listagg(DISTINCT o_orderstatus, ',') WITHIN GROUP (ORDER BY o_orderstatus) AS statuses,
               |  count(*) AS n
               |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
@@ -571,9 +570,8 @@ object RelationalQueries {
 
   private val aggGroupingSets = Q(
     (s, dir) => {
-      T(s, dir, "orders").createOrReplaceTempView("graft_gs_orders")
-      s.sql("""SELECT o_orderstatus, o_orderpriority, count(*) AS n
-              |FROM graft_gs_orders
+      Q.sql(s, dir)("""SELECT o_orderstatus, o_orderpriority, count(*) AS n
+              |FROM orders
               |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
               |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST, n""".stripMargin)
     },
@@ -1040,8 +1038,7 @@ object RelationalQueries {
     */
   private val sqlCorrelatedScalar = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""WITH big AS (SELECT * FROM customer WHERE c_acctbal > 0)
+      Q.sql(s, dir)("""WITH big AS (SELECT * FROM customer WHERE c_acctbal > 0)
               |SELECT c_custkey,
               |  (SELECT cast(cast(max(o_totalprice) as decimal(18,4)) as double) FROM orders
               |   WHERE o_custkey = c_custkey) AS max_price,
@@ -1062,8 +1059,7 @@ object RelationalQueries {
     */
   private val sqlInSubquery = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""SELECT c_custkey, c_mktsegment FROM customer
+      Q.sql(s, dir)("""SELECT c_custkey, c_mktsegment FROM customer
               |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 150000)
               |  AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'P')
               |ORDER BY c_custkey""".stripMargin)
@@ -1081,8 +1077,7 @@ object RelationalQueries {
     */
   private val sqlExistsSubquery = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""SELECT c_custkey, c_mktsegment, c_acctbal FROM customer c
+      Q.sql(s, dir)("""SELECT c_custkey, c_mktsegment, c_acctbal FROM customer c
               |WHERE EXISTS (SELECT 1 FROM orders o
               |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
               |  AND NOT EXISTS (SELECT 1 FROM orders o
@@ -1103,8 +1098,7 @@ object RelationalQueries {
     */
   private val sqlLateralJoin = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""SELECT r.r_name, l.n_name, l.n_customers
+      Q.sql(s, dir)("""SELECT r.r_name, l.n_name, l.n_customers
               |FROM region r,
               |LATERAL (
               |  SELECT n.n_name, count(*) AS n_customers
@@ -1139,11 +1133,10 @@ object RelationalQueries {
     */
   private val sqlRecursiveCte = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
       // depth tracks the data's month span (80 on the fixture); raise the
       // level limit so a wider span can't trip the default 100 ceiling
       s.conf.set("spark.sql.cteRecursionLevelLimit", "100000")
-      s.sql("""WITH RECURSIVE bounds AS (
+      Q.sql(s, dir)("""WITH RECURSIVE bounds AS (
               |  SELECT date_trunc('month', min(o_orderdate)) AS min_m,
               |         date_trunc('month', max(o_orderdate)) AS max_m
               |  FROM orders
@@ -1332,8 +1325,7 @@ object RelationalQueries {
     */
   private val windowIntervalRange = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""SELECT user_id, ts, event_id,
+      Q.sql(s, dir)("""SELECT user_id, ts, event_id,
               |  count(*) OVER w AS n_1h,
               |  cast(sum(cast(value as decimal(18,4))) OVER w as double) AS sum_1h
               |FROM events

@@ -169,14 +169,14 @@ object SourcesQueries {
            |  cast(cast(l_quantity as decimal(18,4)) as double) AS qty
            |FROM lineitem ORDER BY l_orderkey, l_linenumber, qty""".stripMargin))
 
-  /** Table registry / catalog surface: every fixture registered as a
-    * temp view, queried by name through spark.sql — the analog of the
-    * reference handing handlers a connection to a named-table database.
+  /** Table registry / catalog surface: the fixtures queried by name
+    * through spark.sql ([[Q.sql]] binds them for the one call) — the
+    * analog of the reference handing handlers a connection to a
+    * named-table database.
     */
   private val tableRegistry = Q(
     (s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql("""SELECT o.o_orderstatus, count(*) AS n,
+      Q.sql(s, dir)("""SELECT o.o_orderstatus, count(*) AS n,
               |  cast(sum(cast(l.l_quantity as decimal(18,4))) as double) AS sum_qty
               |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
               |GROUP BY o.o_orderstatus ORDER BY o.o_orderstatus""".stripMargin)

@@ -41,9 +41,9 @@ object EventStreams {
     * (redefine the stream) instead of the opaque decode failure.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val hadData = Tables.hasParquetData(spark, dir)
-    val enc = Tables.prepareEventsRead(spark, dir)
-    if (hadData) {
+    val footer = Tables.footer(spark, dir, "events")
+    val enc = footer.encodings("ts")
+    if (footer.hasData) {
       // a redefinition over now-present data resolves any earlier
       // assumption for this dir — drop it so later unrelated failures
       // are not misattributed to encoding drift here
@@ -55,8 +55,7 @@ object EventStreams {
           s"current fixture generation's ts encoding ($enc). If a " +
           "ns-generation file lands here, redefine the stream.")
     }
-    Tables.normalizeTs(
-      spark.readStream.schema(Tables.eventsSchema(enc)).parquet(dir))
+    Tables.normalizeTs(spark.readStream.schema(footer.schema).parquet(dir))
   }
 
   /** Dirs whose ts encoding was ASSUMED (empty at stream definition),
@@ -78,8 +77,9 @@ object EventStreams {
   private def rethrowIfEncodingDrift(
       spark: SparkSession, cause: Throwable): Nothing = {
     assumedEncodings.forEach { (dir, assumed) =>
-      if (Tables.hasParquetData(spark, dir)) {
-        val now = Tables.eventsTsEncoding(spark, dir)
+      val footer = Tables.footer(spark, dir, "events")
+      if (footer.hasData) {
+        val now = footer.encodings("ts")
         if (now != assumed)
           throw new IllegalStateException(
             s"events stream over $dir was defined while the dir was empty " +

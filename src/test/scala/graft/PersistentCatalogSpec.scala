@@ -1,21 +1,30 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
-import graft.sources.PersistentCatalog
+import graft.engine.{Engine, EngineConfig}
 
-/** The persistent-catalog contract: external tables live in the
+/** The persistent-catalog contract: fixture tables registered by
+  * [[Tables.registerWithStats]] on the Hive-backed session live in the
   * metastore (not session temp views), survive a new session, carry
   * ANALYZE statistics, and those statistics steer the cost-based
-  * optimizer.
+  * optimizer — including for a handler's [[Tables.load]] on an engine
+  * built by [[Engine.persistent]].
   */
 class PersistentCatalogSpec extends SparkSpec {
 
-  private lazy val registered: Unit = {
-    PersistentCatalog.registerExternal(spark, sfDir)
-    PersistentCatalog.analyzeAll(spark)
-  }
+  private lazy val registered: Unit = Tables.registerWithStats(spark, sfDir)
+
+  private def table(name: String): String = Tables.statsTableName(sfDir, name)
+
+  private def persistentEngine(dir: String): Engine =
+    Engine.persistent(
+      EngineConfig(dataDir = dir, reapIntervalMs = 0L),
+      warehouseDir = new java.io.File("target/test-warehouse").getAbsolutePath,
+      metastoreDir = new java.io.File("target/test-metastore").getAbsolutePath)
 
   test("catalog is Hive-backed with an on-disk metastore") {
     registered
@@ -28,18 +37,19 @@ class PersistentCatalogSpec extends SparkSpec {
   test("external tables survive a new session (not temp views)") {
     registered
     val fresh = spark.newSession() // fresh temp-view namespace, shared catalog
-    val n = fresh.table(PersistentCatalog.tableName("lineitem")).count()
+    val n = fresh.table(table("lineitem")).count()
     assert(n > 0)
     // a temp view registered in the ORIGINAL session must NOT leak into
     // the fresh one — proving the external table is a different animal
     spark.range(1).createOrReplaceTempView("g_only_in_session_one")
     assert(!fresh.catalog.tableExists("g_only_in_session_one"))
-    assert(fresh.catalog.tableExists(PersistentCatalog.tableName("lineitem")))
+    assert(fresh.catalog.tableExists(table("lineitem")))
+    assert(!fresh.catalog.getTable(table("lineitem")).isTemporary)
   }
 
   test("ANALYZE stats are visible to the optimizer (rowCount + column stats)") {
     registered
-    val t = spark.table(PersistentCatalog.tableName("lineitem"))
+    val t = spark.table(table("lineitem"))
     val stats = t.queryExecution.optimizedPlan.stats
     val actual = t.count()
     assert(stats.rowCount.contains(BigInt(actual)),
@@ -58,32 +68,49 @@ class PersistentCatalogSpec extends SparkSpec {
     // no broadcast() hint anywhere in this query. (The exchange node
     // itself is only inserted at executedPlan time, so the assertion is
     // on the join strategy choice.)
-    val fact = spark.table(PersistentCatalog.tableName("supplier"))
-    val dim = spark.table(PersistentCatalog.tableName("nation"))
+    val fact = spark.table(table("supplier"))
+    val dim = spark.table(table("nation"))
     val joined = fact.join(dim, fact("s_nationkey") === dim("n_nationkey"))
     val bx = broadcastJoins(joined.queryExecution.sparkPlan)
     assert(bx.nonEmpty, "stats-informed broadcast join not chosen")
   }
 
   test("Engine.persistent: one-call bootstrap yields a queryable engine over the catalog") {
-    import graft.engine.{Engine, EngineConfig}
-    // getOrCreate reuses the suite's Hive-backed context; bootstrap must
-    // be idempotent over the already-registered external tables
-    val e = Engine.persistent(
-      EngineConfig(dataDir = sfDir, reapIntervalMs = 0L),
-      warehouseDir = new java.io.File("target/test-warehouse").getAbsolutePath,
-      metastoreDir = new java.io.File("target/test-metastore").getAbsolutePath)
+    // getOrCreate reuses the suite's Hive-backed context; registration
+    // must be idempotent over the already-registered tables
+    val e = persistentEngine(sfDir)
     try {
       e.register("dim_count") { (s, _, _) =>
-        s.table(PersistentCatalog.tableName("nation")).groupBy().count()
+        Tables.load(s, sfDir, "nation").groupBy().count()
       }
       val rows = e.query("dim_count").get
       assert(rows.length == 1 && rows(0).getLong(0) == 25L)
-      // stats survived the re-bootstrap (ANALYZE is idempotent)
-      val stats = e.spark.table(PersistentCatalog.tableName("nation"))
-        .queryExecution.optimizedPlan.stats
+      // stats survived the re-registration (ANALYZE is idempotent)
+      val stats = e.spark.table(table("nation")).queryExecution.optimizedPlan.stats
       assert(stats.rowCount.contains(BigInt(25)))
     } finally e.shutdown()
+  }
+
+  test("Engine.persistent: a handler's load plans over the stats-bearing table") {
+    // a dir no other suite registers, so only Engine.persistent can have
+    // made its tables: the load must carry their ANALYZE rowCount, which
+    // a plain parquet scan never has
+    val base = graft.queries.Q.scratchDir("persistent")
+    val d = s"$base/sf"
+    Files.createDirectories(Paths.get(d))
+    Tables.schemas.keys.foreach(t =>
+      Files.copy(Paths.get(s"$sfDir/$t.parquet"), Paths.get(s"$d/$t.parquet")))
+    val e = persistentEngine(d)
+    try {
+      val nation = Tables.load(e.spark, d, "nation")
+      assert(nation.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(25)))
+      assert(nation.count() == 25L)
+    } finally {
+      e.shutdown()
+      Tables.schemas.keys.foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS ${Tables.statsTableName(d, t)}"))
+      graft.queries.Q.scratchDelete(base)
+    }
   }
 
   test("CBO join reorder: selective dimension pair joins before the fact") {
@@ -94,10 +121,10 @@ class PersistentCatalogSpec extends SparkSpec {
     // keep the authored order. The assertion is that the two plans
     // DIFFER — i.e. the statistics actually changed the plan.
     def plan(s: org.apache.spark.sql.SparkSession): String = {
-      val o = s.table(PersistentCatalog.tableName("orders"))
-      val l = s.table(PersistentCatalog.tableName("lineitem"))
-      val c = s.table(PersistentCatalog.tableName("customer"))
-      val n = s.table(PersistentCatalog.tableName("nation"))
+      val o = s.table(table("orders"))
+      val l = s.table(table("lineitem"))
+      val c = s.table(table("customer"))
+      val n = s.table(table("nation"))
       l.join(o, l("l_orderkey") === o("o_orderkey"))
         .join(c, o("o_custkey") === c("c_custkey"))
         .join(n, c("c_nationkey") === n("n_nationkey"))

@@ -49,7 +49,7 @@ class PlanFeaturesSpec extends SparkSpec {
     // the scan. With the footer-detected native read, ts is a plain
     // scan column and the range predicate lands in PushedFilters, where
     // row-group statistics prune I/O before any row is decoded.
-    val enc = Tables.eventsTsEncoding(spark, s"$sfDir/events.parquet")
+    val enc = Tables.footer(spark, s"$sfDir/events.parquet", "events").encodings("ts")
     assume(enc.isInstanceOf[Tables.TsEncoding.Native],
       s"fixture is $enc — pushdown only applies to the native path")
     val q = Tables.load(spark, sfDir, "events")
@@ -138,15 +138,13 @@ class PlanFeaturesSpec extends SparkSpec {
     // the identical query in a CBO-off session. The assertion is on the
     // LEAF ORDER of the join tree — the order in which relations are
     // joined — not just "plans differ".
-    import graft.sources.PersistentCatalog
-    PersistentCatalog.registerExternal(spark, sfDir)
-    PersistentCatalog.analyzeAll(spark)
+    Tables.registerWithStats(spark, sfDir)
     def leafOrder(s: org.apache.spark.sql.SparkSession): Seq[String] = {
-      val c = s.table(PersistentCatalog.tableName("customer"))
-      val o = s.table(PersistentCatalog.tableName("orders"))
-      val l = s.table(PersistentCatalog.tableName("lineitem"))
+      val c = s.table(Tables.statsTableName(sfDir, "customer"))
+      val o = s.table(Tables.statsTableName(sfDir, "orders"))
+      val l = s.table(Tables.statsTableName(sfDir, "lineitem"))
         .where(col("l_returnflag") === "R")
-      val n = s.table(PersistentCatalog.tableName("nation"))
+      val n = s.table(Tables.statsTableName(sfDir, "nation"))
       val q = c.join(o, c("c_custkey") === o("o_custkey"))
         .join(n, c("c_nationkey") === n("n_nationkey")) // dim mid-tree: naive author
         .join(l, o("o_orderkey") === l("l_orderkey"))   // selective fact LAST

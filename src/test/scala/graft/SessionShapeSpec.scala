@@ -1,17 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import graft.plans.GraftExtensions
 
 /** The session has one shape and the native functions one registration:
   * every name in [[GraftExtensions.functions]] resolves in a session
   * built with the extension, and in one built without it once
-  * [[SparkEntry.engineFor]] has run on it; a source guard keeps session
+  * [[SparkEntry.engineFor]] has run on it; source guards keep session
   * building, function registration and task-metric listening each in
-  * one place, and a second keeps scratch trees in [[graft.queries.Q]].
+  * one place, scratch trees in [[graft.queries.Q]], fixture tables in
+  * [[Tables]] and fixture views in [[graft.queries.Q.sql]].
   */
 class SessionShapeSpec extends SparkSpec {
 
@@ -42,14 +39,8 @@ class SessionShapeSpec extends SparkSpec {
   }
 
   test("source guard: one session factory, one function registry, one listener") {
-    val root = Paths.get("src/main/scala")
-    val sources: Map[String, String] = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString -> code(p)).toMap
-    def filesWith(pattern: String): Set[String] =
-      sources.collect { case (f, src) if src.contains(pattern) => f }.toSet
-    assert(filesWith("SparkSession.builder()") ==
-      Set("graft/SessionTuning.scala", "graft/sources/PersistentCatalog.scala"))
+    import SourceText.{main => sources, mainFilesWith => filesWith}
+    assert(filesWith("SparkSession.builder()") == Set("graft/SessionTuning.scala"))
     Seq("registerFunction", "injectFunction", "FunctionIdentifier(", "new ExpressionInfo(")
       .foreach(p => assert(filesWith(p) == Set("graft/plans/GraftExtensions.scala"), p))
     assert(filesWith("registerIn(") ==
@@ -61,12 +52,9 @@ class SessionShapeSpec extends SparkSpec {
   }
 
   test("source guard: scratch trees only through Q, no absolute path into the checkout") {
-    val root = Paths.get("src/main/scala")
-    val sources: Map[String, String] = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString -> code(p)).toMap
+    val sources = SourceText.main
     Seq("scratchDir(", "scratchDelete(").foreach { p =>
-      assert(sources.collect { case (f, src) if src.contains(p) => f }.toSet ==
+      assert(SourceText.mainFilesWith(p) ==
         Set("graft/queries/Q.scala", "graft/ScaleProbe.scala"), p)
     }
     // the only absolute paths are the read-only fixture defaults
@@ -75,9 +63,13 @@ class SessionShapeSpec extends SparkSpec {
       absolute.mkString(", "))
   }
 
-  /** Source text without comments, so only code occurrences count. */
-  private def code(p: Path): String =
-    new String(Files.readAllBytes(p), "UTF-8")
-      .replaceAll("(?s)/\\*.*?\\*/", "")
-      .replaceAll("//[^\n]*", "")
+  test("source guard: fixtures become named tables in Tables and views only in Q.sql") {
+    Seq("CREATE TABLE", "ANALYZE TABLE").foreach(p =>
+      assert(SourceText.mainFilesWith(p) == Set("graft/Tables.scala"), p))
+    assert(SourceText.mainFilesWith("createOrReplaceTempView") ==
+      Set("graft/queries/Q.scala", "graft/ScaleProbe.scala"))
+    assert("createOrReplaceTempView".r
+      .findAllIn(SourceText.main("graft/queries/Q.scala")).size == 1,
+      "Q.sql is the one place a query binds fixture views")
+  }
 }

@@ -21,16 +21,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    // Hive-enabled (persistent Derby metastore under target/) because
-    // spark.sql.catalogImplementation is a STATIC conf: the first
-    // session fixes it JVM-wide, and PersistentCatalogSpec needs the
-    // production posture. Other suites are unaffected — they use temp
-    // views, which behave identically under either catalog.
-    val metastore = new java.io.File("target/test-metastore").getAbsolutePath
-    val s = graft.sources.PersistentCatalog
-      .sessionBuilder(
+    // The deployment's Hive-backed shape (SessionTuning.persistent, a
+    // Derby metastore under target/), scaled down: spark.sql.
+    // catalogImplementation is a STATIC conf, so the first session fixes
+    // it JVM-wide, and PersistentCatalogSpec needs the production
+    // posture. Other suites are unaffected — temp views and the
+    // registered fixture tables behave identically under either catalog.
+    val s = SessionTuning
+      .persistent(
         warehouseDir = new java.io.File("target/test-warehouse").getAbsolutePath,
-        metastoreDir = metastore,
+        metastoreDir = new java.io.File("target/test-metastore").getAbsolutePath,
         master = "local[4]",
         shufflePartitions = 4)
       .appName("graft-test")

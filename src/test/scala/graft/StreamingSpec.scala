@@ -374,7 +374,7 @@ class StreamingSpec extends SparkSpec {
     land("b3", 2, Seq(
       (4L, ts("2024-01-01 11:00:00"), 2L, "click", 1.0, "{}")))
     val events = Tables.normalizeTs(
-      spark.readStream.schema(Tables.eventsSchema(Tables.prepareEventsRead(spark, in)))
+      spark.readStream.schema(Tables.footer(spark, in, "events").schema)
         .option("maxFilesPerTrigger", "1").parquet(in))
     val dropped = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {

@@ -97,6 +97,9 @@ class TsEncodingSpec extends SparkSpec {
     }
   }
 
+  private def tsEncoding(path: String): Tables.TsEncoding =
+    Tables.footer(spark, path, "events").encodings("ts")
+
   private def loadedLiterals(dir: String): Seq[(Long, String)] = {
     val df = Tables.load(spark, dir, "events")
     assert(df.schema("ts").dataType == TimestampType,
@@ -121,7 +124,7 @@ class TsEncodingSpec extends SparkSpec {
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     val dir = s"$workDir/us-ntz-${System.nanoTime()}"
     writeMicrosFixture(dir, ntz = true)
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.Native(false))
     assert(loadedLiterals(dir) == expectedLiterals)
     // a µs fixture must NOT flip the session-wide ns legacy flag
@@ -131,7 +134,7 @@ class TsEncodingSpec extends SparkSpec {
   test("µs (UTC-adjusted) fixture loads with literal timestamps") {
     val dir = s"$workDir/us-utc-${System.nanoTime()}"
     writeMicrosFixture(dir, ntz = false)
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.Native(true))
     assert(loadedLiterals(dir) == expectedLiterals)
   }
@@ -139,7 +142,7 @@ class TsEncodingSpec extends SparkSpec {
   test("INT96 fixture (Spark legacy default write) loads with literal timestamps") {
     val dir = s"$workDir/int96-${System.nanoTime()}"
     writeMicrosFixture(dir, ntz = false, outputType = "INT96")
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.Native(true))
     assert(loadedLiterals(dir) == expectedLiterals)
   }
@@ -147,7 +150,7 @@ class TsEncodingSpec extends SparkSpec {
   test("ns fixture loads with literal timestamps (truncated to µs)") {
     val dir = s"$workDir/ns-${System.nanoTime()}"
     writeNanosFixture(dir)
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.NanosLong)
     assert(loadedLiterals(dir) == expectedLiterals)
   }
@@ -203,7 +206,7 @@ class TsEncodingSpec extends SparkSpec {
     // class, this time within one JVM)
     val dir = s"$workDir/regen-${System.nanoTime()}"
     writeMicrosFixture(dir, ntz = true)
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.Native(false))
     assert(loadedLiterals(dir) == expectedLiterals)
     // swap in the ns generation at the same path
@@ -212,7 +215,7 @@ class TsEncodingSpec extends SparkSpec {
       .forEach(p => { Files.deleteIfExists(p); () })
     finally walk.close()
     writeNanosFixture(dir)
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.NanosLong)
     assert(loadedLiterals(dir) == expectedLiterals)
   }
@@ -266,7 +269,7 @@ class TsEncodingSpec extends SparkSpec {
   }
 
   test("explicit LongType read schema decodes NANOS with no session conf") {
-    // the mechanism that lets prepareTsRead mutate no session state:
+    // the mechanism that lets a fixture read mutate no session state:
     // the parquet reader decodes a physical INT64 directly when the
     // REQUESTED type is LongType, regardless of the NANOS annotation —
     // the nanosAsLong conf only gates schema INFERENCE
@@ -338,7 +341,7 @@ class TsEncodingSpec extends SparkSpec {
   }
 
   test("a stray non-parquet file in a fixture dir is skipped by footer resolution") {
-    // VERDICT r14 item 6: resolveParquetFile must not pick a marker /
+    // VERDICT r14 item 6: footer resolution must not pick a marker /
     // csv / log sibling as the "footer" file and fail the load opaquely
     val dir = s"$workDir/stray-${System.nanoTime()}"
     val staging = s"$dir-staging"
@@ -355,14 +358,14 @@ class TsEncodingSpec extends SparkSpec {
       "not parquet".getBytes("UTF-8"))
     Files.write(Paths.get(s"$dir/events.parquet/log.csv"),
       "a,b\n1,2\n".getBytes("UTF-8"))
-    assert(Tables.eventsTsEncoding(spark, s"$dir/events.parquet") ==
+    assert(tsEncoding(s"$dir/events.parquet") ==
       Tables.TsEncoding.Native(false))
     assert(loadedLiterals(dir) == expectedLiterals)
     // a dir holding ONLY strays is "no data yet", not an opaque failure
     val onlyStrays = s"$workDir/strayonly-${System.nanoTime()}"
     Files.createDirectories(Paths.get(onlyStrays))
     Files.write(Paths.get(s"$onlyStrays/junk.txt"), "x".getBytes("UTF-8"))
-    assert(!Tables.hasParquetData(spark, onlyStrays))
+    assert(!Tables.footer(spark, onlyStrays, "events").hasData)
   }
 
   test("real fixture dir decodes to the documented 2024-01 event range") {
