@@ -90,6 +90,11 @@ object JvmProbes {
     if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else 0L
   }
 
+  /** Classes Spark's code generator compiled with Janino; a cached
+    * generated class is reused without a compile. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def codeCachePools =
     ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))

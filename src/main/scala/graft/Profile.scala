@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.JvmProbes.{gcMillis, jitMillis}
+import graft.JvmProbes.{codegenCompiles, gcMillis, jitMillis}
 
 /** Profiler for registered queries, on the session `graft.Bench` times
   * (stats-bearing tables + CBO). For each query it prints:
@@ -19,9 +19,10 @@ import graft.JvmProbes.{gcMillis, jitMillis}
   *     construct-time `localCheckpoint` jobs), plan (analysis +
   *     optimization + physical planning of the constructed frame) and
   *     exec (the noop-sink write of the SAME frame: AQE re-planning,
-  *     shuffles, tasks), with the run's JIT and GC deltas — so a
-  *     construct-vs-exec attribution also says WHY (compile storm vs
-  *     pause vs real work);
+  *     shuffles, tasks), with the run's JIT, GC and codegen-compile
+  *     deltas — so a construct-vs-exec attribution also says WHY
+  *     (compile storm vs pause vs real work; a warm run that compiles
+  *     generated classes missed Spark's codegen cache);
   *   - the last run's stages, hottest first, with job, summed task run
   *     and CPU ms, tasks, rows in and out, operator scopes and call
   *     site — a hot stage from the bench diagnostics maps back to the
@@ -65,7 +66,7 @@ object Profile {
         System.gc(); Thread.sleep(200)
         ListenerFlush.drain(sc)
         stages.reset()
-        val (j0, g0) = (jitMillis, gcMillis)
+        val (j0, g0, c0) = (jitMillis, gcMillis, codegenCompiles)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -75,7 +76,8 @@ object Profile {
         val t3 = System.nanoTime()
         println(f"[profile] $name run $i: construct ${secs(t0, t1)}%.3f s, " +
           f"plan ${secs(t1, t2)}%.3f s, exec ${secs(t2, t3)}%.3f s, " +
-          f"total ${secs(t0, t3)}%.3f s, jit ${jitMillis - j0} ms, gc ${gcMillis - g0} ms")
+          f"total ${secs(t0, t3)}%.3f s, jit ${jitMillis - j0} ms, gc ${gcMillis - g0} ms, " +
+          s"codegen ${codegenCompiles - c0} compiles")
       }
       ListenerFlush.drain(sc)
       stages.byStage.sortBy(-_._2.runMs).foreach { case (id, st) =>

@@ -95,9 +95,21 @@ object MsgPack {
 
   // ---------------------------------------------------------------- decode
 
+  /** The one error a malformed input decodes to: truncated, a length or
+    * count larger than the bytes left, an unknown format byte, or bytes
+    * after the value. */
+  final class DecodeError(msg: String) extends IllegalArgumentException(s"msgpack: $msg")
+
+  /** Decode exactly one value spanning all of `bytes`. Every str/bin
+    * length and array/map count is checked against the bytes left before
+    * anything is allocated (an element takes at least one byte), so no
+    * input allocates more than its own size. */
   def decode(bytes: Array[Byte]): Any = {
     val buf = ByteBuffer.wrap(bytes)
-    val v = read(buf)
+    val v =
+      try read(buf)
+      catch { case _: java.nio.BufferUnderflowException => throw new DecodeError("truncated input") }
+    if (buf.hasRemaining) throw new DecodeError(s"${buf.remaining} trailing bytes after the value")
     v
   }
 
@@ -114,7 +126,7 @@ object MsgPack {
       case 0xc3 => true
       case 0xc4 => readBin(buf, buf.get() & 0xff)
       case 0xc5 => readBin(buf, buf.getShort() & 0xffff)
-      case 0xc6 => readBin(buf, buf.getInt())
+      case 0xc6 => readBin(buf, buf.getInt() & 0xffffffffL)
       case 0xca => buf.getFloat().toDouble
       case 0xcb => buf.getDouble()
       case 0xcc => (buf.get() & 0xff).toLong                           // uint8
@@ -127,29 +139,35 @@ object MsgPack {
       case 0xd3 => buf.getLong()
       case 0xd9 => readStr(buf, buf.get() & 0xff)
       case 0xda => readStr(buf, buf.getShort() & 0xffff)
-      case 0xdb => readStr(buf, buf.getInt())
+      case 0xdb => readStr(buf, buf.getInt() & 0xffffffffL)
       case 0xdc => readArray(buf, buf.getShort() & 0xffff)
-      case 0xdd => readArray(buf, buf.getInt())
+      case 0xdd => readArray(buf, buf.getInt() & 0xffffffffL)
       case 0xde => readMap(buf, buf.getShort() & 0xffff)
-      case 0xdf => readMap(buf, buf.getInt())
-      case other =>
-        throw new IllegalArgumentException(f"msgpack: unsupported format byte 0x$other%02x")
+      case 0xdf => readMap(buf, buf.getInt() & 0xffffffffL)
+      case other => throw new DecodeError(f"unsupported format byte 0x$other%02x")
     }
   }
 
-  private def readStr(buf: ByteBuffer, n: Int): String = {
-    val b = new Array[Byte](n); buf.get(b); new String(b, UTF_8)
+  /** `n`, once the `minBytes` per unit it needs fit in the bytes left. */
+  private def bounded(buf: ByteBuffer, n: Long, minBytes: Int, what: String): Int = {
+    if (n * minBytes > buf.remaining)
+      throw new DecodeError(s"$what of $n needs at least ${n * minBytes} bytes, ${buf.remaining} left")
+    n.toInt
   }
 
-  private def readBin(buf: ByteBuffer, n: Int): Array[Byte] = {
-    val b = new Array[Byte](n); buf.get(b); b
+  private def readStr(buf: ByteBuffer, n: Long): String = {
+    val b = new Array[Byte](bounded(buf, n, 1, "str length")); buf.get(b); new String(b, UTF_8)
   }
 
-  private def readArray(buf: ByteBuffer, n: Int): Vector[Any] =
-    Vector.fill(n)(read(buf))
+  private def readBin(buf: ByteBuffer, n: Long): Array[Byte] = {
+    val b = new Array[Byte](bounded(buf, n, 1, "bin length")); buf.get(b); b
+  }
 
-  private def readMap(buf: ByteBuffer, n: Int): Map[Any, Any] =
-    (0 until n).map(_ => (read(buf), read(buf))).toMap
+  private def readArray(buf: ByteBuffer, n: Long): Vector[Any] =
+    Vector.fill(bounded(buf, n, 1, "array count"))(read(buf))
+
+  private def readMap(buf: ByteBuffer, n: Long): Map[Any, Any] =
+    (0 until bounded(buf, n, 2, "map count")).map(_ => (read(buf), read(buf))).toMap
 
   // ------------------------------------------------------- Row conversion
 

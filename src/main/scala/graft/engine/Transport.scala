@@ -127,8 +127,11 @@ object Transport {
     * envelope; the handler's rows are msgpack-encoded, deflated when at
     * or above the engine's `compressMinBytes`, and returned under the
     * caller's sn. Handler errors travel as a string payload (the engine's
-    * error-result-not-crash contract). One connection may carry many
-    * sequential requests (req/rep pairs).
+    * error-result-not-crash contract), and so does a frame that is not
+    * an rpc envelope: `error: bad request: ...` under its sn, or under
+    * "" when none can be read, after which the connection keeps serving
+    * (the frame's length was read, so framing is intact). One connection
+    * may carry many sequential requests (req/rep pairs).
     */
   final class RpcServer(engine: Engine) extends AutoCloseable {
     private val server = new ServerSocket(0, 50, InetAddress.getLoopbackAddress)
@@ -139,29 +142,51 @@ object Transport {
       val in = new DataInputStream(sock.getInputStream)
       val out = new DataOutputStream(sock.getOutputStream)
       while (running.get()) {
-        val req = MsgPack.decode(frameIn(in)).asInstanceOf[Map[Any, Any]]
-        val sn = req.getOrElse("sn", "").toString
-        val pkt = req.getOrElse("pkt", Map.empty[Any, Any]).asInstanceOf[Map[Any, Any]]
-        val fun = pkt.getOrElse("fun", "").toString
-        val args = pkt.getOrElse("args", Vector.empty) match {
-          case v: Seq[_] => v
-          case _ => Vector.empty
-        }
-        val ctx = pkt.get("ctx").collect { case m: Map[Any, Any] @unchecked =>
-          RequestCtx(
-            m.getOrElse("domain", "").toString,
-            m.getOrElse("ip", "").toString,
-            m.getOrElse("uid", "").toString)
-        }.getOrElse(RequestCtx.anonymous)
-        val payload: Any = engine.queryEnvelope(fun, args, ctx, sn) match {
-          case Success(bytes) => bytes
-          case Failure(e) => s"error: ${e.getMessage}"
+        val (sn, payload) = RpcRequest.parse(frameIn(in)) match {
+          case Left((sn, why)) => (sn, s"error: bad request: $why")
+          case Right(r) =>
+            (r.sn, engine.queryEnvelope(r.fun, r.args, r.ctx, r.sn) match {
+              case Success(bytes) => bytes
+              case Failure(e) => s"error: ${e.getMessage}"
+            })
         }
         frameOut(out, MsgPack.encode(Map[Any, Any]("sn" -> sn, "payload" -> payload)))
       }
     }
 
     def close(): Unit = { running.set(false); Try(server.close()) }
+  }
+
+  /** An rpc envelope `{sn, pkt: {ctx: {domain, ip, uid}, fun, args}}`;
+    * absent fields take the reference's defaults. */
+  private final case class RpcRequest(sn: String, fun: String, args: Seq[Any], ctx: RequestCtx)
+
+  private object RpcRequest {
+    /** The request in `frame`, or the sn it carries ("" if none) and why
+      * it is not a request. */
+    def parse(frame: Array[Byte]): Either[(String, String), RpcRequest] =
+      Try(MsgPack.decode(frame)) match {
+        case Failure(e) => Left(("", e.getMessage)) // a MsgPack.DecodeError
+        case Success(req: Map[Any, Any] @unchecked) =>
+          val sn = str(req, "sn")
+          req.getOrElse("pkt", Map.empty[Any, Any]) match {
+            case pkt: Map[Any, Any] @unchecked =>
+              val args = pkt.getOrElse("args", Vector.empty) match {
+                case v: Seq[_] => v
+                case _ => Vector.empty
+              }
+              val ctx = pkt.get("ctx").collect { case m: Map[Any, Any] @unchecked =>
+                RequestCtx(str(m, "domain"), str(m, "ip"), str(m, "uid"))
+              }.getOrElse(RequestCtx.anonymous)
+              Right(RpcRequest(sn, str(pkt, "fun"), args, ctx))
+            case _ => Left((sn, "pkt is not a map"))
+          }
+        case Success(_) => Left(("", "the envelope is not a map"))
+      }
+
+    /** A field as text; absent or nil reads as "". */
+    private def str(m: Map[Any, Any], key: String): String =
+      m.get(key).flatMap(Option(_)).fold("")(_.toString)
   }
 
   /** Pull-style intake server: drains framed `{cmd, args}` job packets

@@ -24,15 +24,18 @@ import org.apache.spark.sql.types._
   * Recurrence replicated exactly from Spark's XxHash64 over arrays:
   * `h = seed; for each non-null element e in window: h = hash(e, h)`
   * (null elements leave the accumulator unchanged). Elements may be
-  * long, int, or string. `len` and `seed` must be foldable literals;
-  * windows are clamped to the array bounds.
+  * long, int, or string. `len` and `seed` must be foldable literals.
+  * A window running past the end is truncated, like `slice`'s; a
+  * negative `pos` is null, since no 1-based `slice` start maps to it
+  * (the catalog's positions come from `sequence(0, size(w) - L)` over
+  * arrays of at least L elements, so they are never negative).
   */
 case class GramHash(arr: Expression, pos: Expression, len: Expression,
     seed: Expression) extends Expression {
 
   override def children: Seq[Expression] = Seq(arr, pos, len, seed)
   override def dataType: DataType = LongType
-  override def nullable: Boolean = arr.nullable || pos.nullable
+  override def nullable: Boolean = true
   override def prettyName: String = "gram_hash"
 
   private lazy val elemType: DataType = arr.dataType match {
@@ -65,9 +68,10 @@ case class GramHash(arr: Expression, pos: Expression, len: Expression,
     if (p == null) return null
     val ad = a.asInstanceOf[ArrayData]
     val start = p.asInstanceOf[Int]
+    if (start < 0) return null
     val end = math.min(start.toLong + lenVal, ad.numElements().toLong).toInt
     var h = seedVal
-    var i = math.max(start, 0)
+    var i = start
     while (i < end) {
       if (!ad.isNullAt(i)) h = elemType match {
         case LongType =>
@@ -101,13 +105,14 @@ case class GramHash(arr: Expression, pos: Expression, len: Expression,
       code"""
         ${arrGen.code}
         ${posGen.code}
-        boolean ${ev.isNull} = ${arrGen.isNull} || ${posGen.isNull};
+        boolean ${ev.isNull} = ${arrGen.isNull} || ${posGen.isNull} ||
+          ${posGen.value} < 0;
         long ${ev.value} = ${seedVal}L;
         if (!${ev.isNull}) {
           org.apache.spark.sql.catalyst.util.ArrayData $a = ${arrGen.value};
           int $end = (int) Math.min((long) ${posGen.value} + ${lenVal}L,
             (long) $a.numElements());
-          for (int $i = Math.max(${posGen.value}, 0); $i < $end; $i++) {
+          for (int $i = ${posGen.value}; $i < $end; $i++) {
             if (!$a.isNullAt($i)) { $upd }
           }
         }

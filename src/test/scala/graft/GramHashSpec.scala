@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.expressions.GramHash
 
@@ -65,5 +67,29 @@ class GramHashSpec extends SparkSpec {
       .collect()(0)
     assert(q.isNullAt(0), "null array must yield null")
     assert(q.getLong(1) == q.getLong(2), "empty window == hash of empty slice")
+  }
+
+  test("a negative position is null, with whole-stage codegen on and off") {
+    val q = spark.range(30).selectExpr(
+      "cast(id as int) - 12 as p",
+      "transform(sequence(1, 10), i -> xxhash64(id, i)) as la")
+      .selectExpr("p",
+        s"gram_hash(la, p, 3, ${GramHash.DefaultSeed}L) as gh",
+        // slice has no start for a negative position (start 0 throws)
+        "CASE WHEN p >= 0 THEN xxhash64(slice(la, p + 1, 3)) END as xx")
+    Seq("true", "false").foreach { cg =>
+      spark.conf.set("spark.sql.codegen.wholeStage", cg)
+      try {
+        val rows = q.collect()
+        val (neg, nonNeg) = rows.partition(_.getInt(0) < 0)
+        assert(neg.length == 12 && neg.forall(_.isNullAt(1)),
+          s"codegen=$cg: negative positions must be null")
+        assert(nonNeg.forall(r => !r.isNullAt(1) && r.getLong(1) == r.getLong(2)),
+          s"codegen=$cg: non-negative positions must equal xxhash64(slice)")
+      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
+    val arr = Literal.create(Seq(1L, 2L, 3L), ArrayType(LongType))
+    assert(GramHash(arr, Literal(-1), Literal(2), Literal(GramHash.DefaultSeed)).eval() == null,
+      "interpreted eval must be null for a negative position")
   }
 }

@@ -41,6 +41,37 @@ class TransportSpec extends SparkSpec {
     assert(out.toSeq == bytes.toSeq)
   }
 
+  private def hex(s: String): Array[Byte] =
+    s.split(" ").map(Integer.parseInt(_, 16).toByte)
+
+  private def decodeError(bytes: Array[Byte]): MsgPack.DecodeError =
+    intercept[MsgPack.DecodeError](MsgPack.decode(bytes))
+
+  test("msgpack: a str/bin length past the input fails before it allocates") {
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = threads.getCurrentThreadAllocatedBytes
+    decodeError(hex("c6 7f ff ff 00"))                 // bin32 of ~2 GB, 1 byte present
+    assert(threads.getCurrentThreadAllocatedBytes - before < (1L << 20),
+      "a 5-byte input must not allocate its declared length")
+    decodeError(hex("db ff ff ff ff"))                 // str32 of 4 GB: not a negative size
+    Seq("c4 05 00", "c5 01 00 00", "d9 03 61", "da 00 10 61").foreach(h => decodeError(hex(h)))
+  }
+
+  test("msgpack: an array/map count past the input fails with the typed error") {
+    Seq("dc ff ff", "dd ff ff ff ff", "de 00 02 01 02 03", "df 7f ff ff ff", "93 01 02")
+      .foreach(h => decodeError(hex(h)))
+  }
+
+  test("msgpack: trailing bytes after the value, truncation and unknown bytes are rejected") {
+    val v = Map[Any, Any]("sn" -> "s", "pkt" -> Vector(1L, "x"))
+    assert(decodeError(MsgPack.encode(v) :+ 0.toByte).getMessage.contains("trailing"))
+    decodeError(MsgPack.encode(v).dropRight(1))
+    decodeError(Array.empty[Byte])
+    decodeError(hex("cb 00 00"))
+    decodeError(hex("c1"))
+  }
+
   // -------------------------------------------- envelope payload (A6+A9)
 
   test("queryEnvelope: bytes -> inflate -> msgpack-decode equals collected rows") {
@@ -100,6 +131,41 @@ class TransportSpec extends SparkSpec {
       assert(out.isFailure)
       assert(out.failed.get.getMessage.contains("no-such-fun"))
     } finally server.close()
+  }
+
+  test("rpc: a frame that is not an envelope gets an error reply and the connection serves on") {
+    val e = new Engine(spark)
+    e.register("tiny")((s, _, _) => { import s.implicits._; Seq(("a", 1)).toDF("k", "n") })
+    val server = new Transport.RpcServer(e)
+    val sock = new java.net.Socket(InetAddress.getLoopbackAddress, server.port)
+    try {
+      sock.setSoTimeout(60000)
+      val in = new DataInputStream(sock.getInputStream)
+      val out = new DataOutputStream(sock.getOutputStream)
+      def call(frame: Array[Byte]): Map[Any, Any] = {
+        out.writeInt(frame.length); out.write(frame); out.flush()
+        val b = new Array[Byte](in.readInt()); in.readFully(b)
+        MsgPack.decode(b).asInstanceOf[Map[Any, Any]]
+      }
+      def isBadRequest(reply: Map[Any, Any]) =
+        reply("payload").toString.startsWith("error: bad request: ")
+      // a msgpack array: no sn to recover
+      val arr = call(MsgPack.encode(Vector("sn", "s0")))
+      assert(arr("sn") == "" && isBadRequest(arr), arr)
+      // undecodable bytes
+      val junk = call(hex("db ff ff ff ff"))
+      assert(junk("sn") == "" && isBadRequest(junk), junk)
+      // a map whose pkt is not a map: answered under its sn
+      val badPkt = call(MsgPack.encode(Map[Any, Any]("sn" -> "s1", "pkt" -> "tiny")))
+      assert(badPkt("sn") == "s1" && isBadRequest(badPkt), badPkt)
+      // a valid request on the same socket is still served
+      val pkt = Map[Any, Any]("ctx" -> Map[Any, Any]("domain" -> "d", "ip" -> "", "uid" -> "u"),
+        "fun" -> "tiny", "args" -> Vector.empty[Any])
+      val ok = call(MsgPack.encode(Map[Any, Any]("sn" -> "s2", "pkt" -> pkt)))
+      assert(ok("sn") == "s2")
+      assert(MsgPack.decode(ok("payload").asInstanceOf[Array[Byte]]) ==
+        Vector(Map[Any, Any]("k" -> "a", "n" -> 1L)))
+    } finally { sock.close(); server.close() }
   }
 
   test("rpc rejects a reply under a foreign sequence number") {
