@@ -14,10 +14,10 @@ import scala.util.{Failure, Success, Try}
   * @param dataDir        root of the table fixtures (the "database")
   * @param compressMinBytes result blobs at or above this size are
   *                       deflate-compressed (A6; sniffed on read)
-  * @param maxConcurrentJobs advisory job-concurrency ceiling (the PG
-  *                       pool max=2 analog, `src/processor.ts:48`) —
-  *                       enforced via Spark's FAIR scheduler pools in a
-  *                       real deployment
+  * @param maxConcurrentJobs job-concurrency ceiling (the PG pool max=2
+  *                       analog, `src/processor.ts:48`) — enforced by a
+  *                       fair semaphore that every query holds from
+  *                       dispatch to collect
   * @param reapIntervalMs period of the background sweep that unpersists
   *                       expired cache entries (the reference reaps idle
   *                       resources on a 30 s timer, `src/processor.ts:49`);
@@ -137,8 +137,7 @@ final class Engine(
   val cache = new CacheManager(spark)
   // The PG pool max=2 analog (`src/processor.ts:48`), actually enforced:
   // callers beyond the ceiling BLOCK here (fair FIFO) exactly like a
-  // checkout from an exhausted connection pool. Spark-side attribution
-  // rides the scheduler-pool local property set per query.
+  // checkout from an exhausted connection pool.
   private val jobPermits =
     new java.util.concurrent.Semaphore(math.max(1, config.maxConcurrentJobs), true)
   // the 30 s idle-resource reaper analog (`src/processor.ts:49`): without
@@ -212,7 +211,6 @@ final class Engine(
     val sc = spark.sparkContext
     jobPermits.acquire()
     sc.setJobGroup(sn, s"graft:$cmd", interruptOnCancel = true)
-    sc.setLocalProperty("spark.scheduler.pool", "graft")
     RequestCtx.keys.zip(Seq(ctx.domain, ctx.ip, ctx.uid)).foreach {
       case (k, v) => sc.setLocalProperty(k, v)
     }
@@ -220,7 +218,6 @@ final class Engine(
     finally {
       // null removes the property (SparkContext.setLocalProperty contract)
       RequestCtx.keys.foreach(sc.setLocalProperty(_, null))
-      sc.setLocalProperty("spark.scheduler.pool", null)
       sc.clearJobGroup()
       jobPermits.release()
     }

@@ -96,9 +96,14 @@ object MsgPack {
   // ---------------------------------------------------------------- decode
 
   /** The one error a malformed input decodes to: truncated, a length or
-    * count larger than the bytes left, an unknown format byte, or bytes
-    * after the value. */
+    * count larger than the bytes left, nesting deeper than [[MaxDepth]],
+    * an unknown format byte, or bytes after the value. */
   final class DecodeError(msg: String) extends IllegalArgumentException(s"msgpack: $msg")
+
+  /** Arrays and maps nest at most this deep; the decoder recurses once
+    * per level, so a deeper input would overflow the reading thread's
+    * stack. The reference envelope nests three levels. */
+  val MaxDepth = 512
 
   /** Decode exactly one value spanning all of `bytes`. Every str/bin
     * length and array/map count is checked against the bytes left before
@@ -107,19 +112,20 @@ object MsgPack {
   def decode(bytes: Array[Byte]): Any = {
     val buf = ByteBuffer.wrap(bytes)
     val v =
-      try read(buf)
+      try read(buf, 0)
       catch { case _: java.nio.BufferUnderflowException => throw new DecodeError("truncated input") }
     if (buf.hasRemaining) throw new DecodeError(s"${buf.remaining} trailing bytes after the value")
     v
   }
 
-  private def read(buf: ByteBuffer): Any = {
+  /** The value at `buf`, inside `depth` enclosing arrays and maps. */
+  private def read(buf: ByteBuffer, depth: Int): Any = {
     val b = buf.get() & 0xff
     b match {
       case x if x <= 0x7f => x.toLong                                  // positive fixint
       case x if x >= 0xe0 => (x - 256).toLong                          // negative fixint
-      case x if (x & 0xf0) == 0x80 => readMap(buf, x & 0x0f)           // fixmap
-      case x if (x & 0xf0) == 0x90 => readArray(buf, x & 0x0f)         // fixarray
+      case x if (x & 0xf0) == 0x80 => readMap(buf, x & 0x0f, depth)    // fixmap
+      case x if (x & 0xf0) == 0x90 => readArray(buf, x & 0x0f, depth)  // fixarray
       case x if (x & 0xe0) == 0xa0 => readStr(buf, x & 0x1f)           // fixstr
       case 0xc0 => null
       case 0xc2 => false
@@ -140,10 +146,10 @@ object MsgPack {
       case 0xd9 => readStr(buf, buf.get() & 0xff)
       case 0xda => readStr(buf, buf.getShort() & 0xffff)
       case 0xdb => readStr(buf, buf.getInt() & 0xffffffffL)
-      case 0xdc => readArray(buf, buf.getShort() & 0xffff)
-      case 0xdd => readArray(buf, buf.getInt() & 0xffffffffL)
-      case 0xde => readMap(buf, buf.getShort() & 0xffff)
-      case 0xdf => readMap(buf, buf.getInt() & 0xffffffffL)
+      case 0xdc => readArray(buf, buf.getShort() & 0xffff, depth)
+      case 0xdd => readArray(buf, buf.getInt() & 0xffffffffL, depth)
+      case 0xde => readMap(buf, buf.getShort() & 0xffff, depth)
+      case 0xdf => readMap(buf, buf.getInt() & 0xffffffffL, depth)
       case other => throw new DecodeError(f"unsupported format byte 0x$other%02x")
     }
   }
@@ -163,11 +169,21 @@ object MsgPack {
     val b = new Array[Byte](bounded(buf, n, 1, "bin length")); buf.get(b); b
   }
 
-  private def readArray(buf: ByteBuffer, n: Long): Vector[Any] =
-    Vector.fill(bounded(buf, n, 1, "array count"))(read(buf))
+  /** `depth` + 1, the depth of a container's elements, if allowed. */
+  private def nested(depth: Int): Int = {
+    if (depth >= MaxDepth) throw new DecodeError(s"nesting deeper than $MaxDepth")
+    depth + 1
+  }
 
-  private def readMap(buf: ByteBuffer, n: Long): Map[Any, Any] =
-    (0 until bounded(buf, n, 2, "map count")).map(_ => (read(buf), read(buf))).toMap
+  private def readArray(buf: ByteBuffer, n: Long, depth: Int): Vector[Any] = {
+    val d = nested(depth)
+    Vector.fill(bounded(buf, n, 1, "array count"))(read(buf, d))
+  }
+
+  private def readMap(buf: ByteBuffer, n: Long, depth: Int): Map[Any, Any] = {
+    val d = nested(depth)
+    (0 until bounded(buf, n, 2, "map count")).map(_ => (read(buf, d), read(buf, d))).toMap
+  }
 
   // ------------------------------------------------------- Row conversion
 

@@ -171,30 +171,31 @@ object Transport {
           val sn = str(req, "sn")
           req.getOrElse("pkt", Map.empty[Any, Any]) match {
             case pkt: Map[Any, Any] @unchecked =>
-              val args = pkt.getOrElse("args", Vector.empty) match {
-                case v: Seq[_] => v
-                case _ => Vector.empty
-              }
               val ctx = pkt.get("ctx").collect { case m: Map[Any, Any] @unchecked =>
                 RequestCtx(str(m, "domain"), str(m, "ip"), str(m, "uid"))
               }.getOrElse(RequestCtx.anonymous)
-              Right(RpcRequest(sn, str(pkt, "fun"), args, ctx))
+              Right(RpcRequest(sn, str(pkt, "fun"), args(pkt), ctx))
             case _ => Left((sn, "pkt is not a map"))
           }
         case Success(_) => Left(("", "the envelope is not a map"))
       }
-
-    /** A field as text; absent or nil reads as "". */
-    private def str(m: Map[Any, Any], key: String): String =
-      m.get(key).flatMap(Option(_)).fold("")(_.toString)
   }
+
+  /** A field as text; absent or nil reads as "". */
+  private def str(m: Map[Any, Any], key: String): String =
+    m.get(key).flatMap(Option(_)).fold("")(_.toString)
+
+  /** The `args` field; absent or not an array reads as empty. */
+  private def args(m: Map[Any, Any]): Seq[Any] =
+    m.get("args").collect { case v: Seq[_] => v }.getOrElse(Vector.empty)
 
   /** Pull-style intake server: drains framed `{cmd, args}` job packets
     * from any number of producer connections and dispatches each through
     * the engine — the socket-backed twin of [[Engine.serve]]
-    * (`src/processor.ts:61-89`). Unknown commands are reported through
-    * `onResult` as failures and the loop continues (the
-    * `console.error`-and-drop contract, `:86`).
+    * (`src/processor.ts:61-89`). Unknown commands, and packets that do
+    * not decode to a map (reported under cmd ""), go to `onResult` as
+    * failures and the loop continues (the `console.error`-and-drop
+    * contract, `:86`); the frame's length was read, so framing is intact.
     */
   final class IntakeServer(
       engine: Engine)(
@@ -206,13 +207,15 @@ object Transport {
     serveLoop(server, running, "graft-intake") { sock =>
       val in = new DataInputStream(sock.getInputStream)
       while (running.get()) {
-        val pkt = MsgPack.decode(frameIn(in)).asInstanceOf[Map[Any, Any]]
-        val cmd = pkt.getOrElse("cmd", "").toString
-        val args = pkt.getOrElse("args", Vector.empty) match {
-          case v: Seq[_] => v
-          case _ => Vector.empty
+        val frame = frameIn(in)
+        Try(MsgPack.decode(frame)) match {
+          case Success(pkt: Map[Any, Any] @unchecked) =>
+            val cmd = str(pkt, "cmd")
+            onResult(cmd, engine.query(cmd, args(pkt)))
+          case Success(_) =>
+            onResult("", Failure(new IllegalArgumentException("bad packet: not a map")))
+          case Failure(e) => onResult("", Failure(e)) // a MsgPack.DecodeError
         }
-        onResult(cmd, engine.query(cmd, args))
       }
     }
 

@@ -421,20 +421,19 @@ object Multimodal {
       }
   }
 
-  /** TIFF LZW decompression of ONE strip — the dominant wild-TIFF
-    * compression (tag 259 = 5): MSB-first bit packing (GIF's LSB-first
-    * twin), fixed Clear=256 / EOI=257, dictionary from 258, and the
-    * spec's EARLY-CHANGE rule — the code width bumps when the NEXT
-    * table slot is 2^width - 1 (one entry earlier than GIF's LSB
-    * variant). Returns exactly `expect` bytes or None (bad code, bits
-    * exhausted before EOI, output over/underrun) — reject, never
-    * mis-decode. The JDK's own TIFF reader cross-checks the bit-level
-    * behavior in PngDecodeSpec (our encoder, its decoder).
+  /** MSB-first LZW decode: the code stream of TIFF strips (tag 259 =
+    * 5) and PDF `/LZWDecode` — GIF's LSB-first twin, fixed Clear=256 /
+    * EOI=257, dictionary from 258, and the spec's EARLY-CHANGE rule:
+    * the code width bumps when the NEXT table slot is 2^width - 1 (one
+    * entry earlier than GIF's LSB variant). Returns the decoded bytes,
+    * or None on a bad code, bits exhausted before EOI, or output past
+    * `maxOut` — reject, never mis-decode. The JDK's own TIFF reader
+    * cross-checks the bit-level behavior in PngDecodeSpec (our encoder,
+    * its decoder).
     */
-  private[graft] def tiffLzwDecode(b: Array[Byte], off: Int, len: Int,
-      expect: Int): Option[Array[Byte]] = {
-    val out = new Array[Byte](expect)
-    var outN = 0
+  private[graft] def lzwMsbDecodeGrow(b: Array[Byte], off: Int, len: Int,
+      maxOut: Int): Option[Array[Byte]] = {
+    val out = new java.io.ByteArrayOutputStream(math.max(64, len * 2))
     // dictionary as (prefix chain): entry i>=258 = (prev entry, byte)
     val prevOf = new Array[Int](4096)
     val byteOf = new Array[Byte](4096)
@@ -450,82 +449,6 @@ object Multimodal {
         val bp = bitPos + i
         val byt = b(off + (bp >> 3).toInt) & 0xff
         v = (v << 1) | ((byt >> (7 - (bp & 7).toInt)) & 1) // MSB-first
-        i += 1
-      }
-      bitPos += width
-      v
-    }
-    def emit(code: Int): Boolean = { // write entry `code`, reversed chain
-      var n = 0
-      var c = code
-      while (c >= 258) { n += 1; c = prevOf(c) }
-      n += 1
-      if (outN + n > expect) return false
-      var w = outN + n - 1
-      c = code
-      while (c >= 258) { out(w) = byteOf(c); w -= 1; c = prevOf(c) }
-      out(w) = c.toByte
-      outN += n
-      true
-    }
-    def firstByte(code: Int): Byte = {
-      var c = code
-      while (c >= 258) c = prevOf(c)
-      c.toByte
-    }
-    var prev = -1
-    var done = false
-    while (!done) {
-      val code = readCode()
-      if (code < 0) return None // ran out of bits before EOI
-      if (code == 257) done = true // EOI
-      else if (code == 256) { next = 258; width = 9; prev = -1 } // Clear
-      else if (prev < 0) { // first code after Clear: must be a literal
-        if (code > 255) return None
-        if (!emit(code)) return None
-        prev = code
-      } else {
-        if (code > next) return None // beyond the one-ahead KwKwK slot
-        if (code == next) { // the KwKwK case: entry defined by itself
-          if (next >= 4096) return None
-          prevOf(next) = prev; byteOf(next) = firstByte(prev)
-          next += 1
-          if (!emit(code)) return None // the entry just added
-        } else {
-          if (next < 4096) { prevOf(next) = prev; byteOf(next) = firstByte(code); next += 1 }
-          if (!emit(code)) return None
-        }
-        prev = code
-        // EARLY change: bump when the next slot to assign is 2^width - 1
-        if (next == (1 << width) - 1 && width < 12) width += 1
-      }
-    }
-    if (outN != expect) return None
-    Some(out)
-  }
-
-  /** Growable-output twin of [[tiffLzwDecode]] for callers that do not
-    * know the regenerated size upfront (PDF /LZWDecode — same MSB-first
-    * code stream, Clear 256 / EOI 257, default early-change rule).
-    * Returns the decoded bytes or None; output capped at `maxOut`.
-    */
-  private[graft] def lzwMsbDecodeGrow(b: Array[Byte], off: Int, len: Int,
-      maxOut: Int): Option[Array[Byte]] = {
-    val out = new java.io.ByteArrayOutputStream(math.max(64, len * 2))
-    val prevOf = new Array[Int](4096)
-    val byteOf = new Array[Byte](4096)
-    var next = 258
-    var width = 9
-    var bitPos = 0L
-    val bitEnd = len.toLong * 8
-    def readCode(): Int = {
-      if (bitPos + width > bitEnd) return -1
-      var v = 0
-      var i = 0
-      while (i < width) {
-        val bp = bitPos + i
-        val byt = b(off + (bp >> 3).toInt) & 0xff
-        v = (v << 1) | ((byt >> (7 - (bp & 7).toInt)) & 1)
         i += 1
       }
       bitPos += width
@@ -552,16 +475,16 @@ object Multimodal {
     var done = false
     while (!done) {
       val code = readCode()
-      if (code < 0) return None
-      if (code == 257) done = true
-      else if (code == 256) { next = 258; width = 9; prev = -1 }
-      else if (prev < 0) {
+      if (code < 0) return None // ran out of bits before EOI
+      if (code == 257) done = true // EOI
+      else if (code == 256) { next = 258; width = 9; prev = -1 } // Clear
+      else if (prev < 0) { // first code after Clear: must be a literal
         if (code > 255) return None
         if (!emit(code)) return None
         prev = code
       } else {
-        if (code > next) return None
-        if (code == next) {
+        if (code > next) return None // beyond the one-ahead KwKwK slot
+        if (code == next) { // the KwKwK case: entry defined by itself
           if (next >= 4096) return None
           prevOf(next) = prev; byteOf(next) = firstByte(prev)
           next += 1
@@ -571,6 +494,7 @@ object Multimodal {
           if (!emit(code)) return None
         }
         prev = code
+        // EARLY change: bump when the next slot to assign is 2^width - 1
         if (next == (1 << width) - 1 && width < 12) width += 1
       }
     }
@@ -731,7 +655,8 @@ object Multimodal {
           if (sc != expect) return None
           null // summed in place below
         } else {
-          tiffLzwDecode(b, so.toInt, sc.toInt, expect.toInt) match {
+          lzwMsbDecodeGrow(b, so.toInt, sc.toInt, expect.toInt)
+              .filter(_.length == expect) match {
             case Some(d) => d
             case None => return None
           }

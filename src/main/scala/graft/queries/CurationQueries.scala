@@ -12298,7 +12298,7 @@ object CurationQueries {
     * (tag 259 = 5): 25 fixtures cycle compression NONE/LZW on top of
     * the baseline tier's axes (both byte orders, gray/RGB,
     * multi-strip), each LZW strip an independent MSB-first
-    * EARLY-CHANGE stream ([[graft.operators.Multimodal.tiffLzwDecode]]
+    * EARLY-CHANGE stream ([[graft.operators.Multimodal.lzwMsbDecodeGrow]]
     * — the bit-order twin of the GIF tier's LSB decoder, with the
     * width bump one table slot earlier). The decoded pixels are the
     * SAME closed-form gradient whatever the compression, so the oracle

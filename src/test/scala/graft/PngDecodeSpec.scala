@@ -334,10 +334,10 @@ class PngDecodeSpec extends AnyFunSuite {
     val data = Array.tabulate(120000)(i => ((i * 31 + (i / 7)) % 256).toByte)
     val enc = Multimodal.tiffLzwEncode(data)
     assert(enc.length < data.length) // it actually compresses
-    assert(Multimodal.tiffLzwDecode(enc, 0, enc.length, data.length)
+    assert(Multimodal.lzwMsbDecodeGrow(enc, 0, enc.length, data.length)
       .exists(_.sameElements(data)))
     // truncated stream (bits exhausted before EOI) rejects
-    assert(Multimodal.tiffLzwDecode(enc, 0, enc.length / 2, data.length).isEmpty)
+    assert(Multimodal.lzwMsbDecodeGrow(enc, 0, enc.length / 2, data.length).isEmpty)
     // tiles still reject: a tiled layout has no strip tables
     val lzwFile = Multimodal.tiffGradientBytes(16, 10, false, false, 4, lzw = true)
     assert(Multimodal.sniffKind(lzwFile) == "tiff" &&

@@ -72,6 +72,18 @@ class TransportSpec extends SparkSpec {
     decodeError(hex("c1"))
   }
 
+  /** `n` fixarrays, each holding the next; the innermost is empty. */
+  private def nestedArrays(n: Int): Array[Byte] =
+    Array.fill(n - 1)(0x91.toByte) :+ 0x90.toByte
+
+  test("msgpack: nesting past MaxDepth is a typed error, not a stack overflow") {
+    val deepest = (1 until MsgPack.MaxDepth).foldLeft(Vector.empty[Any])((v, _) => Vector(v))
+    assert(MsgPack.decode(nestedArrays(MsgPack.MaxDepth)) == deepest)
+    assert(decodeError(nestedArrays(MsgPack.MaxDepth + 1)).getMessage.contains("nesting"))
+    decodeError(nestedArrays(200000))
+    decodeError(Array.fill(200000)(0x81.toByte)) // fixmaps, each a key of the next
+  }
+
   // -------------------------------------------- envelope payload (A6+A9)
 
   test("queryEnvelope: bytes -> inflate -> msgpack-decode equals collected rows") {
@@ -158,6 +170,9 @@ class TransportSpec extends SparkSpec {
       // a map whose pkt is not a map: answered under its sn
       val badPkt = call(MsgPack.encode(Map[Any, Any]("sn" -> "s1", "pkt" -> "tiny")))
       assert(badPkt("sn") == "s1" && isBadRequest(badPkt), badPkt)
+      // nesting too deep to decode on the connection thread's stack
+      val deep = call(nestedArrays(200000))
+      assert(deep("sn") == "" && isBadRequest(deep), deep)
       // a valid request on the same socket is still served
       val pkt = Map[Any, Any]("ctx" -> Map[Any, Any]("domain" -> "d", "ip" -> "", "uid" -> "u"),
         "fun" -> "tiny", "args" -> Vector.empty[Any])
@@ -209,5 +224,28 @@ class TransportSpec extends SparkSpec {
       assert(byCmd("double").map(_._2.get.head.getInt(0)).toSet == Set(42, 10))
       assert(byCmd("missing-cmd").head._2.isFailure)
     } finally server.close()
+  }
+
+  test("intake: a packet that is not a map is an error result and the connection reads on") {
+    val e = new Engine(spark)
+    e.register("double")((s, _, args) => {
+      import s.implicits._
+      Seq(args.head.toString.toInt * 2).toDF("v")
+    })
+    val results = new LinkedBlockingQueue[(String, scala.util.Try[Array[org.apache.spark.sql.Row]])]()
+    val server = new Transport.IntakeServer(e)((cmd, r) => results.put((cmd, r)))
+    val sock = new java.net.Socket(InetAddress.getLoopbackAddress, server.port)
+    try {
+      val out = new DataOutputStream(sock.getOutputStream)
+      Seq(MsgPack.encode(Vector("cmd", "double")), hex("db ff ff ff ff"),
+          MsgPack.encode(Map[Any, Any]("cmd" -> "double", "args" -> Vector(4L))))
+        .foreach { frame => out.writeInt(frame.length); out.write(frame) }
+      out.flush()
+      val got = (1 to 3).map(_ => results.poll(60, TimeUnit.SECONDS))
+      assert(!got.contains(null), s"intake dropped packets: $got")
+      assert(got.take(2).forall { case (cmd, r) => cmd == "" && r.isFailure }, got)
+      assert(got(1)._2.failed.get.isInstanceOf[MsgPack.DecodeError])
+      assert(got(2)._1 == "double" && got(2)._2.get.head.getInt(0) == 8)
+    } finally { sock.close(); server.close() }
   }
 }

@@ -4,11 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Multimodal, Zstd, ZstdVectors}
 
-/** The zstd decoder's cross-implementation pin and reject matrix: the
-  * embedded [[ZstdVectors]] frames were produced by the real zstd CLI
-  * (v1.5.7) from documented inputs, so a divergence anywhere in the
-  * FSE/Huffman/sequence pipeline shows up as a byte mismatch; every
-  * scope boundary must reject whole-input.
+/** What [[Zstd]] owns on top of libzstd: the frame walk's counts
+  * (standard vs skippable frames), the accept set — every scope
+  * boundary and corruption rejects whole-input, and a window up to
+  * 1 GiB decodes — and the fixture-side frame builders. The embedded
+  * [[ZstdVectors]] frames, made by the zstd CLI (v1.5.7) from
+  * documented inputs, pin the decoded bytes.
   */
 class ZstdSpec extends AnyFunSuite {
 
@@ -90,6 +91,25 @@ class ZstdSpec extends AnyFunSuite {
     assert(Zstd.decompress(Zstd.rleFrame('y', 100000), maxOut = 1000).isEmpty)
     // empty input is not a frame
     assert(Zstd.decompress(Array.emptyByteArray).isEmpty)
+  }
+
+  test("the window boundary: 1 GiB decodes, 2 GiB rejects") {
+    // raw frames re-headed as non-single-segment (FHD 0x84: 4-byte FCS,
+    // checksum) with a window descriptor of exponent e and mantissa 0,
+    // i.e. a 2^(10 + e)-byte window; the same blocks and checksum
+    def windowed(content: Array[Byte], e: Int): Array[Byte] = {
+      val single = Zstd.rawFrame(content)
+      single.take(4) ++ Array(0x84.toByte, (e << 3).toByte) ++ single.drop(5)
+    }
+    // content larger than the decoder's read buffer goes through
+    // libzstd's window buffer; small content decodes in one pass
+    val large = Array.tabulate(100000)(i => ('a' + i % 23).toByte)
+    val small = "windowed raw frame".getBytes("UTF-8")
+    for (content <- Seq(large, small)) {
+      val Some((frames, sk, out)) = Zstd.decompress(windowed(content, 20)): @unchecked
+      assert(frames == 1L && sk == 0L && java.util.Arrays.equals(out, content))
+      assert(Zstd.decompress(windowed(content, 21)).isEmpty, s"${content.length}B at 2 GiB")
+    }
   }
 
   test("the sniffer routes and validates the zstd family") {
