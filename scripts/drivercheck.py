@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Replica of the DRIVER's correctness gate semantics (pandas-based),
-stricter than localcheck.py: exact values, no float rounding.
+"""Replica of the correctness gate's semantics (pandas-based): exact
+values, no float rounding. The one local definition of green.
 
 Flow (mirrors CORRECTNESS_r{N}.json generation as observed):
   - spark side: pandas.read_parquet(outdir/<name>)

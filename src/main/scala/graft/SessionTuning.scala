@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * the session every main runs on and [[persistent]] the Hive-backed
   * one of a deployment; both take [[shared]] and [[apply]]: the r22
   * shuffle I/O tuning below (guide §1.2 step 3 — config AFTER the
-  * algorithm, from measurement) and the generated-class cache size
-  * ([[CodegenCacheEntries]]).
+  * algorithm, from measurement), the generated-class cache size
+  * ([[CodegenCacheEntries]]) and stage-id-free generated class names.
   *
   * Root cause (thread-dump-attributed): with `shuffle.partitions` at
   * the local core count (32 ≤ the 200 default
@@ -86,11 +86,21 @@ object SessionTuning {
     */
   val CodegenCacheEntries: Int = 1024
 
+  /** The tuning every graft session takes: the shuffle settings above,
+    * [[CodegenCacheEntries]], and `spark.sql.codegen.useIdInClassName`
+    * off, so a generated class is named `GeneratedIterator` rather than
+    * `GeneratedIteratorForCodegenStage<id>`. Adaptive execution numbers
+    * codegen stages in the order it creates query stages; when a plan's
+    * independent branches finish in either order their ids swap between
+    * runs, and with the id in the class name the same code misses the
+    * class cache (`ns_pipeline_manifest` compiled 4 classes on most runs).
+    */
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val bypass = sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1")
     val withBypass = b
       .config("spark.shuffle.sort.bypassMergeThreshold", bypass)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
     localDir.fold(withBypass)(d => withBypass.config("spark.local.dir", d))
   }
 

@@ -27,6 +27,10 @@ import scala.util.{Failure, Success, Try}
   */
 object Transport {
 
+  /** The largest frame either side reads, and the largest reply the
+    * server sends: 64 MiB. */
+  val MaxFrameBytes: Int = 64 << 20
+
   private def frameOut(out: DataOutputStream, bytes: Array[Byte]): Unit = {
     out.writeInt(bytes.length)
     out.write(bytes)
@@ -35,7 +39,7 @@ object Transport {
 
   private def frameIn(in: DataInputStream): Array[Byte] = {
     val n = in.readInt()
-    require(n >= 0 && n <= (64 << 20), s"frame length out of range: $n")
+    require(n >= 0 && n <= MaxFrameBytes, s"frame length out of range: $n")
     val b = new Array[Byte](n)
     in.readFully(b)
     b
@@ -130,8 +134,11 @@ object Transport {
     * error-result-not-crash contract), and so does a frame that is not
     * an rpc envelope: `error: bad request: ...` under its sn, or under
     * "" when none can be read, after which the connection keeps serving
-    * (the frame's length was read, so framing is intact). One connection
-    * may carry many sequential requests (req/rep pairs).
+    * (the frame's length was read, so framing is intact). A reply that
+    * would exceed [[MaxFrameBytes]] is replaced by `error: result too
+    * large: ...` under the same sn, so the client gets a typed error
+    * instead of a frame it must refuse. One connection may carry many
+    * sequential requests (req/rep pairs).
     */
   final class RpcServer(engine: Engine) extends AutoCloseable {
     private val server = new ServerSocket(0, 50, InetAddress.getLoopbackAddress)
@@ -150,7 +157,11 @@ object Transport {
               case Failure(e) => s"error: ${e.getMessage}"
             })
         }
-        frameOut(out, MsgPack.encode(Map[Any, Any]("sn" -> sn, "payload" -> payload)))
+        val reply = MsgPack.encode(Map[Any, Any]("sn" -> sn, "payload" -> payload))
+        frameOut(out,
+          if (reply.length <= MaxFrameBytes) reply
+          else MsgPack.encode(Map[Any, Any]("sn" -> sn, "payload" ->
+            s"error: result too large: ${reply.length} bytes > $MaxFrameBytes")))
       }
     }
 

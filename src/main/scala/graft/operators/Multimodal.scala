@@ -2186,35 +2186,9 @@ object Multimodal {
 
   /** Minimal spec-valid PNG: signature, IHDR (8-bit RGB, CRC-correct),
     * one IDAT holding the deflated all-zero scanlines, IEND. */
-  def pngBytes(width: Int, height: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val len = java.nio.ByteBuffer.allocate(4).putInt(data.length).array()
-      out.write(len)
-      val body = typ.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ data
-      out.write(body)
-      val crc = new java.util.zip.CRC32()
-      crc.update(body)
-      out.write(java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array())
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte)  // bit depth
-      .put(2.toByte)  // color type: truecolor RGB
-      .put(0.toByte).put(0.toByte).put(0.toByte) // deflate, adaptive, no interlace
-      .array()
-    chunk("IHDR", ihdr)
-    val raw = new Array[Byte](height * (1 + width * 3)) // filter byte + RGB per row
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    val n = deflater.deflate(buf)
-    deflater.end()
-    chunk("IDAT", buf.take(n))
-    chunk("IEND", Array.empty[Byte])
-    out.toByteArray
-  }
+  def pngBytes(width: Int, height: Int): Array[Byte] =
+    pngContainer(width, height, 2, new Array[Byte](height * (1 + width * 3)), null,
+      java.util.zip.Deflater.DEFAULT_COMPRESSION)
 
   /** PNG carrying a DETERMINISTIC RGB gradient — pixel (x, y) is
     * r = (7x+3y) mod 256, g = (x+2y) mod 256, b = (5x+y) mod 256, all
@@ -2230,23 +2204,6 @@ object Multimodal {
     * pixels, the fixture for pixel-identity (vs byte-identity) dedup.
     */
   def pngGradientBytes(width: Int, height: Int, level: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val len = java.nio.ByteBuffer.allocate(4).putInt(data.length).array()
-      out.write(len)
-      val body = typ.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ data
-      out.write(body)
-      val crc = new java.util.zip.CRC32()
-      crc.update(body)
-      out.write(java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array())
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte).put(2.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte)
-      .array()
-    chunk("IHDR", ihdr)
     val raw = new Array[Byte](height * (1 + width * 3))
     var y = 0
     while (y < height) {
@@ -2261,14 +2218,7 @@ object Multimodal {
       }
       y += 1
     }
-    val deflater = new java.util.zip.Deflater(level)
-    deflater.setInput(raw); deflater.finish()
-    val buf = new Array[Byte](raw.length + 128)
-    val n = deflater.deflate(buf)
-    deflater.end()
-    chunk("IDAT", buf.take(n))
-    chunk("IEND", Array.empty[Byte])
-    out.toByteArray
+    pngContainer(width, height, 2, raw, null, level)
   }
 
   /** RGBA PNG (colorType 6) carrying the SAME RGB gradient as
@@ -2319,13 +2269,14 @@ object Multimodal {
     pngContainer(width, height, 4, raw, null, level)
   }
 
-  /** Shared PNG container writer for the color-type fixture family:
-    * signature, IHDR (8-bit, `colorType`, CRC-correct), optional PLTE,
-    * one IDAT with `raw` (filter-prefixed scanlines) deflated at
-    * `level`, IEND. */
+  /** The one PNG container writer of the fixture family: signature,
+    * IHDR (8-bit, `colorType`, Adam7 when `interlaced`), optional PLTE
+    * and tRNS, one IDAT with `raw` (filter-prefixed scanlines, or the
+    * seven passes' when interlaced) deflated at `level`, IEND; every
+    * chunk CRC-correct. */
   private def pngContainer(width: Int, height: Int, colorType: Int,
       raw: Array[Byte], plte: Array[Byte], level: Int,
-      trns: Array[Byte] = null): Array[Byte] = {
+      trns: Array[Byte] = null, interlaced: Boolean = false): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
     def chunk(typ: String, data: Array[Byte]): Unit = {
@@ -2340,7 +2291,7 @@ object Multimodal {
     val ihdr = java.nio.ByteBuffer.allocate(13)
       .putInt(width).putInt(height)
       .put(8.toByte).put(colorType.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte)
+      .put(0.toByte).put(0.toByte).put((if (interlaced) 1 else 0).toByte)
       .array()
     chunk("IHDR", ihdr)
     if (plte != null) chunk("PLTE", plte)
@@ -2463,18 +2414,7 @@ object Multimodal {
         }
       }
     }
-    val raw = out.toByteArray
-    // pngContainer deflates `raw` as the IDAT payload; write the IHDR
-    // interlace flag afterwards (byte 28 of the container, inside IHDR)
-    val png = pngContainer(width, height, 2, raw, null, 6)
-    png(28) = 1
-    // fix the IHDR CRC for the flipped interlace byte (chunk body = type
-    // + 13 data bytes at offsets 12..28)
-    val crc = new java.util.zip.CRC32()
-    crc.update(png, 12, 17)
-    val bb = java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array()
-    System.arraycopy(bb, 0, png, 29, 4)
-    png
+    pngContainer(width, height, 2, out.toByteArray, null, 6, interlaced = true)
   }
 
   /** PALETTE PNG with a tRNS per-index alpha table — the third alpha
@@ -2892,11 +2832,7 @@ object Multimodal {
   def jpegBytes(width: Int, height: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
-    b(0xff, 0xd8) // SOI
-    b(0xff, 0xe0, 0x00, 0x10) // APP0, len 16
-    b('J', 'F', 'I', 'F', 0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
-    b(0xff, 0xdb, 0x00, 0x43, 0x00) // DQT, len 67, 8-bit table 0
-    (0 until 64).foreach(_ => b(0x10))
+    jpegOpen(out)
     b(0xff, 0xc0, 0x00, 0x0b) // SOF0, len 11 (8 + 3*1 components)
     b(0x08, (height >> 8) & 0xff, height & 0xff, (width >> 8) & 0xff, width & 0xff)
     b(0x01, 0x01, 0x11, 0x00) // 1 component: id 1, 1x1 sampling, qtable 0
@@ -3473,6 +3409,75 @@ object Multimodal {
       }
   }
 
+  /** SOI, JFIF APP0 and DQT table 0 with all 64 entries 16: the opening
+    * every JPEG fixture writer shares. */
+  private def jpegOpen(out: java.io.ByteArrayOutputStream): Unit = {
+    def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
+    b(0xff, 0xd8) // SOI
+    b(0xff, 0xe0, 0x00, 0x10) // APP0 JFIF, len 16
+    b('J', 'F', 'I', 'F', 0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
+    b(0xff, 0xdb, 0x00, 0x43, 0x00) // DQT: 8-bit table 0, all 16s
+    (0 until 64).foreach(_ => b(0x10))
+  }
+
+  /** DHT segment `tc` (class << 4 | id) of six length-3 codes, assigned
+    * to `symbols` in order. */
+  private def jpegDht6(out: java.io.ByteArrayOutputStream, tc: Int,
+      symbols: Seq[Int]): Unit = {
+    Seq(0xff, 0xc4, 0x00, 0x19, tc, 0x00, 0x00, 0x06).foreach(out.write)
+    (0 until 13).foreach(_ => out.write(0x00))
+    symbols.foreach(x => out.write(x & 0xff))
+  }
+
+  /** The T.81 entropy-segment writer the JPEG pattern fixtures share:
+    * bits MSB-first into `out`, a 0x00 stuffed after every 0xFF data
+    * byte, the last partial byte padded with 1-bits, restart markers
+    * written raw. */
+  private final class JpegBitWriter(out: java.io.ByteArrayOutputStream) {
+    private var cur = 0
+    private var nbits = 0
+
+    private def flushByte(): Unit = {
+      out.write(cur)
+      if (cur == 0xff) out.write(0x00) // T.81 byte stuffing
+      cur = 0; nbits = 0
+    }
+
+    def putBits(v: Long, n: Int): Unit = {
+      var i = n - 1
+      while (i >= 0) {
+        cur = (cur << 1) | ((v >> i) & 1L).toInt
+        nbits += 1
+        if (nbits == 8) flushByte()
+        i -= 1
+      }
+    }
+
+    /** Byte-align: pad the partial byte with 1-bits per T.81. */
+    def pad(): Unit =
+      if (nbits > 0) {
+        while (nbits < 8) { cur = (cur << 1) | 1; nbits += 1 }
+        flushByte()
+      }
+
+    /** One DC difference: the 3-bit Huffman code `dcCode(category)`,
+      * then the category's magnitude bits. */
+    def putDiff(diff: Int, dcCode: Int => Long): Unit = {
+      val c =
+        if (diff == 0) 0
+        else 64 - java.lang.Long.numberOfLeadingZeros(math.abs(diff).toLong)
+      putBits(dcCode(c), 3)
+      if (c > 0)
+        putBits(if (diff >= 0) diff.toLong else diff.toLong + (1L << c) - 1, c)
+    }
+
+    /** Byte-align, then the marker RST(n mod 8). */
+    def restart(n: Int): Unit = {
+      pad()
+      out.write(0xff); out.write(0xd0 + (n % 8))
+    }
+  }
+
   /** Baseline grayscale JPEG whose 8x8 blocks carry the deterministic
     * quantized-DC pattern `d(j) = ((7*j) mod 32) - 16` (row-major MCU
     * index j), AC all-EOB — the JPEG analog of [[pngGradientBytes]]: a
@@ -3486,63 +3491,44 @@ object Multimodal {
   def jpegDcPatternBytes(width: Int, height: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
-    b(0xff, 0xd8) // SOI
-    b(0xff, 0xe0, 0x00, 0x10) // APP0 JFIF
-    b('J', 'F', 'I', 'F', 0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
-    b(0xff, 0xdb, 0x00, 0x43, 0x00) // DQT: 8-bit table 0, all 16s
-    (0 until 64).foreach(_ => b(0x10))
+    jpegOpen(out)
     b(0xff, 0xc0, 0x00, 0x0b) // SOF0, 1 component
     b(0x08, (height >> 8) & 0xff, height & 0xff, (width >> 8) & 0xff, width & 0xff)
     b(0x01, 0x01, 0x11, 0x00)
-    b(0xff, 0xc4, 0x00, 0x19, 0x00) // DHT DC 0: six length-3 codes, symbols 0-5
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(c))
+    jpegDht6(out, 0x00, 0 to 5) // DC 0: code(cat) = cat
     b(0xff, 0xc4, 0x00, 0x14, 0x10) // DHT AC 0: one length-1 code, symbol EOB
     b(0x01); (0 until 15).foreach(_ => b(0x00))
     b(0x00)
     b(0xff, 0xda, 0x00, 0x08, 0x01, 0x01, 0x00, 0x00, 0x3f, 0x00) // SOS
-    val ent = new java.io.ByteArrayOutputStream()
-    var cur = 0; var nbits = 0
-    def flushByte(): Unit = {
-      ent.write(cur)
-      if (cur == 0xff) ent.write(0x00) // T.81 byte stuffing
-      cur = 0; nbits = 0
-    }
-    def putBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) flushByte()
-        i -= 1
-      }
-    }
+    val w = new JpegBitWriter(out)
     val nb = ((width + 7) / 8) * ((height + 7) / 8)
     var prev = 0
     var j = 0
     while (j < nb) {
       val d = ((7 * j) % 32) - 16
-      val diff = d - prev
+      w.putDiff(d - prev, c => c.toLong)
       prev = d
-      val cat =
-        if (diff == 0) 0
-        else 64 - java.lang.Long.numberOfLeadingZeros(math.abs(diff).toLong)
-      putBits(cat.toLong, 3) // DC code for category = the category itself
-      if (cat > 0) {
-        val bits =
-          if (diff >= 0) diff.toLong else diff.toLong + (1L << cat) - 1
-        putBits(bits, cat)
-      }
-      putBits(0L, 1) // AC EOB
+      w.putBits(0L, 1) // AC EOB
       j += 1
     }
-    if (nbits > 0) { // pad the final byte with 1-bits per T.81
-      while (nbits < 8) { cur = (cur << 1) | 1; nbits += 1 }
-      flushByte()
-    }
-    out.write(ent.toByteArray)
+    w.pad()
     b(0xff, 0xd9) // EOI
     out.toByteArray
+  }
+
+  /** The four Huffman tables of the 3-component baseline fixtures: DC
+    * 0 with code(cat) = cat, DC 1 the reverse-symbol code
+    * (code(cat) = 5 - cat), AC 0 a length-1 EOB, AC 1 a length-2 EOB. */
+  private def jpegChromaTables(out: java.io.ByteArrayOutputStream): Unit = {
+    def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
+    jpegDht6(out, 0x00, 0 to 5)
+    jpegDht6(out, 0x01, (0 to 5).map(5 - _))
+    b(0xff, 0xc4, 0x00, 0x14, 0x10) // DHT AC 0: one len-1 code, EOB
+    b(0x01); (0 until 15).foreach(_ => b(0x00))
+    b(0x00)
+    b(0xff, 0xc4, 0x00, 0x14, 0x11) // DHT AC 1: one len-2 code, EOB
+    b(0x00, 0x01); (0 until 14).foreach(_ => b(0x00))
+    b(0x00)
   }
 
   /** 3-component (YCbCr) baseline JPEG twin of [[jpegDcPatternBytes]]:
@@ -3563,54 +3549,15 @@ object Multimodal {
       chromaMotion: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
-    b(0xff, 0xd8) // SOI
-    b(0xff, 0xe0, 0x00, 0x10) // APP0 JFIF
-    b('J', 'F', 'I', 'F', 0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
-    b(0xff, 0xdb, 0x00, 0x43, 0x00) // DQT: 8-bit table 0, all 16s
-    (0 until 64).foreach(_ => b(0x10))
+    jpegOpen(out)
     b(0xff, 0xc0, 0x00, 0x11) // SOF0, 3 components, 1x1 sampling, all q0
     b(0x08, (height >> 8) & 0xff, height & 0xff, (width >> 8) & 0xff, width & 0xff)
     b(0x03, 0x01, 0x11, 0x00, 0x02, 0x11, 0x00, 0x03, 0x11, 0x00)
-    b(0xff, 0xc4, 0x00, 0x19, 0x00) // DHT DC 0: len-3 codes, symbols 0-5
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(c))
-    b(0xff, 0xc4, 0x00, 0x19, 0x01) // DHT DC 1: len-3 codes, symbols 5-0
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(5 - c))
-    b(0xff, 0xc4, 0x00, 0x14, 0x10) // DHT AC 0: one len-1 code, EOB
-    b(0x01); (0 until 15).foreach(_ => b(0x00))
-    b(0x00)
-    b(0xff, 0xc4, 0x00, 0x14, 0x11) // DHT AC 1: one len-2 code, EOB
-    b(0x00, 0x01); (0 until 14).foreach(_ => b(0x00))
-    b(0x00)
+    jpegChromaTables(out)
     // SOS: Y -> tables (0,0); Cb, Cr -> tables (1,1)
     b(0xff, 0xda, 0x00, 0x0c, 0x03, 0x01, 0x00, 0x02, 0x11, 0x03, 0x11,
       0x00, 0x3f, 0x00)
-    val ent = new java.io.ByteArrayOutputStream()
-    var cur = 0; var nbits = 0
-    def flushByte(): Unit = {
-      ent.write(cur)
-      if (cur == 0xff) ent.write(0x00) // T.81 byte stuffing
-      cur = 0; nbits = 0
-    }
-    def putBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) flushByte()
-        i -= 1
-      }
-    }
-    def cat(diff: Int): Int =
-      if (diff == 0) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(math.abs(diff).toLong)
-    def putDiff(diff: Int, dcCode: Int => Long): Unit = {
-      val c = cat(diff)
-      putBits(dcCode(c), 3)
-      if (c > 0)
-        putBits(if (diff >= 0) diff.toLong else diff.toLong + (1L << c) - 1, c)
-    }
+    val w = new JpegBitWriter(out)
     val nb = ((width + 7) / 8) * ((height + 7) / 8)
     var prevY = 0
     var prevCb = 0
@@ -3618,24 +3565,20 @@ object Multimodal {
     var j = 0
     while (j < nb) {
       val dY = ((7 * j) % 32) - 16
-      putDiff(dY - prevY, c => c.toLong) // Y: DC table 0 code = cat
+      w.putDiff(dY - prevY, c => c.toLong) // Y: DC table 0 code = cat
       prevY = dY
-      putBits(0L, 1) // Y AC EOB (table 0, len 1)
+      w.putBits(0L, 1) // Y AC EOB (table 0, len 1)
       val dCb = if (chromaMotion && j % 2 == 1) 4 else 0
-      putDiff(dCb - prevCb, c => (5 - c).toLong) // Cb: DC table 1 code = 5-cat
+      w.putDiff(dCb - prevCb, c => (5 - c).toLong) // Cb: DC table 1 code = 5-cat
       prevCb = dCb
-      putBits(0L, 2) // Cb AC EOB (table 1, len 2, code 00)
+      w.putBits(0L, 2) // Cb AC EOB (table 1, len 2, code 00)
       val dCr = if (chromaMotion) -8 else 0
-      putDiff(dCr - prevCr, c => (5 - c).toLong)
+      w.putDiff(dCr - prevCr, c => (5 - c).toLong)
       prevCr = dCr
-      putBits(0L, 2) // Cr AC EOB
+      w.putBits(0L, 2) // Cr AC EOB
       j += 1
     }
-    if (nbits > 0) { // pad the final byte with 1-bits per T.81
-      while (nbits < 8) { cur = (cur << 1) | 1; nbits += 1 }
-      flushByte()
-    }
-    out.write(ent.toByteArray)
+    w.pad()
     b(0xff, 0xd9) // EOI
     out.toByteArray
   }
@@ -3660,60 +3603,16 @@ object Multimodal {
     val sv = samp & 0xf
     val out = new java.io.ByteArrayOutputStream()
     def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
-    b(0xff, 0xd8) // SOI
-    b(0xff, 0xe0, 0x00, 0x10) // APP0 JFIF
-    b('J', 'F', 'I', 'F', 0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
-    b(0xff, 0xdb, 0x00, 0x43, 0x00) // DQT: 8-bit table 0, all 16s
-    (0 until 64).foreach(_ => b(0x10))
+    jpegOpen(out)
     if (restartEvery > 0)
       b(0xff, 0xdd, 0x00, 0x04, (restartEvery >> 8) & 0xff, restartEvery & 0xff)
     b(0xff, 0xc0, 0x00, 0x11) // SOF0, 3 components, Y 2x2 / chroma 1x1
     b(0x08, (height >> 8) & 0xff, height & 0xff, (width >> 8) & 0xff, width & 0xff)
     b(0x03, 0x01, samp, 0x00, 0x02, 0x11, 0x00, 0x03, 0x11, 0x00)
-    b(0xff, 0xc4, 0x00, 0x19, 0x00) // DHT DC 0: len-3 codes, symbols 0-5
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(c))
-    b(0xff, 0xc4, 0x00, 0x19, 0x01) // DHT DC 1: len-3 codes, symbols 5-0
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(5 - c))
-    b(0xff, 0xc4, 0x00, 0x14, 0x10) // DHT AC 0: one len-1 code, EOB
-    b(0x01); (0 until 15).foreach(_ => b(0x00))
-    b(0x00)
-    b(0xff, 0xc4, 0x00, 0x14, 0x11) // DHT AC 1: one len-2 code, EOB
-    b(0x00, 0x01); (0 until 14).foreach(_ => b(0x00))
-    b(0x00)
+    jpegChromaTables(out)
     b(0xff, 0xda, 0x00, 0x0c, 0x03, 0x01, 0x00, 0x02, 0x11, 0x03, 0x11,
       0x00, 0x3f, 0x00) // SOS: Y -> (0,0); Cb, Cr -> (1,1)
-    val ent = new java.io.ByteArrayOutputStream()
-    var cur = 0; var nbits = 0
-    def flushByte(): Unit = {
-      ent.write(cur)
-      if (cur == 0xff) ent.write(0x00) // T.81 byte stuffing
-      cur = 0; nbits = 0
-    }
-    def putBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) flushByte()
-        i -= 1
-      }
-    }
-    def pad(): Unit =
-      if (nbits > 0) {
-        while (nbits < 8) { cur = (cur << 1) | 1; nbits += 1 }
-        flushByte()
-      }
-    def cat(diff: Int): Int =
-      if (diff == 0) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(math.abs(diff).toLong)
-    def putDiff(diff: Int, dcCode: Int => Long): Unit = {
-      val c = cat(diff)
-      putBits(dcCode(c), 3)
-      if (c > 0)
-        putBits(if (diff >= 0) diff.toLong else diff.toLong + (1L << c) - 1, c)
-    }
+    val w = new JpegBitWriter(out)
     val mcusX = (width + 8 * sh - 1) / (8 * sh)
     val mcusY = (height + 8 * sv - 1) / (8 * sv)
     var prevY = 0
@@ -3723,27 +3622,25 @@ object Multimodal {
     var m = 0
     while (m < mcusX * mcusY) {
       if (restartEvery > 0 && m > 0 && m % restartEvery == 0) {
-        pad() // byte-align, then the raw (unstuffed) restart marker
-        ent.write(0xff); ent.write(0xd0 + (rst % 8))
+        w.restart(rst)
         rst += 1
         prevY = 0; prevCb = 0; prevCr = 0
       }
       var sub = 0
       while (sub < sh * sv) { // h*v Y blocks per MCU, row-major
         val dY = ((7 * (m * sh * sv + sub)) % 32) - 16
-        putDiff(dY - prevY, c => c.toLong)
+        w.putDiff(dY - prevY, c => c.toLong)
         prevY = dY
-        putBits(0L, 1) // Y AC EOB
+        w.putBits(0L, 1) // Y AC EOB
         sub += 1
       }
-      putDiff(0 - prevCb, c => (5 - c).toLong); prevCb = 0
-      putBits(0L, 2) // Cb AC EOB
-      putDiff(0 - prevCr, c => (5 - c).toLong); prevCr = 0
-      putBits(0L, 2) // Cr AC EOB
+      w.putDiff(0 - prevCb, c => (5 - c).toLong); prevCb = 0
+      w.putBits(0L, 2) // Cb AC EOB
+      w.putDiff(0 - prevCr, c => (5 - c).toLong); prevCr = 0
+      w.putBits(0L, 2) // Cr AC EOB
       m += 1
     }
-    pad()
-    out.write(ent.toByteArray)
+    w.pad()
     b(0xff, 0xd9) // EOI
     out.toByteArray
   }
@@ -3768,66 +3665,18 @@ object Multimodal {
       restartEvery: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def b(xs: Int*): Unit = xs.foreach(x => out.write(x & 0xff))
-    b(0xff, 0xd8) // SOI
-    b(0xff, 0xe0, 0x00, 0x10) // APP0 JFIF
-    b('J', 'F', 'I', 'F', 0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
-    b(0xff, 0xdb, 0x00, 0x43, 0x00) // DQT: 8-bit table 0, all 16s
-    (0 until 64).foreach(_ => b(0x10))
+    jpegOpen(out)
     if (restartEvery > 0)
       b(0xff, 0xdd, 0x00, 0x04, (restartEvery >> 8) & 0xff, restartEvery & 0xff)
     b(0xff, 0xc2, 0x00, 0x11) // SOF2 progressive, 3 components, 1x1
     b(0x08, (height >> 8) & 0xff, height & 0xff, (width >> 8) & 0xff, width & 0xff)
     b(0x03, 0x01, 0x11, 0x00, 0x02, 0x11, 0x00, 0x03, 0x11, 0x00)
-    b(0xff, 0xc4, 0x00, 0x19, 0x00) // DHT DC 0: len-3 codes, symbols 0-5
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(c))
-    b(0xff, 0xc4, 0x00, 0x19, 0x01) // DHT DC 1: len-3 codes, symbols 5-0
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(c => b(5 - c))
-    // DHT AC 0: six len-3 codes for the EOBn symbols 0x00..0x50
+    jpegDht6(out, 0x00, 0 to 5) // DC 0: code(cat) = cat
+    jpegDht6(out, 0x01, (0 to 5).map(5 - _)) // DC 1: code(cat) = 5 - cat
+    // AC 0: six len-3 codes for the EOBn symbols 0x00..0x50
     // (EOB runs of 1, 2-3, 4-7, 8-15, 16-31, 32-63 blocks)
-    b(0xff, 0xc4, 0x00, 0x19, 0x10)
-    b(0x00, 0x00, 0x06); (0 until 13).foreach(_ => b(0x00))
-    (0 to 5).foreach(k => b(k << 4))
-    val ent = new java.io.ByteArrayOutputStream()
-    var cur = 0; var nbits = 0
-    def flushByte(): Unit = {
-      ent.write(cur)
-      if (cur == 0xff) ent.write(0x00) // T.81 byte stuffing
-      cur = 0; nbits = 0
-    }
-    def putBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) flushByte()
-        i -= 1
-      }
-    }
-    def pad(): Unit =
-      if (nbits > 0) {
-        while (nbits < 8) { cur = (cur << 1) | 1; nbits += 1 }
-        flushByte()
-      }
-    def endScan(): Unit = {
-      pad()
-      out.write(ent.toByteArray)
-      ent.reset()
-    }
-    def cat(diff: Int): Int =
-      if (diff == 0) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(math.abs(diff).toLong)
-    def putDiff(diff: Int, dcCode: Int => Long): Unit = {
-      val c = cat(diff)
-      putBits(dcCode(c), 3)
-      if (c > 0)
-        putBits(if (diff >= 0) diff.toLong else diff.toLong + (1L << c) - 1, c)
-    }
-    def rstMarker(n: Int): Unit = {
-      pad()
-      ent.write(0xff); ent.write(0xd0 + (n % 8))
-    }
+    jpegDht6(out, 0x10, (0 to 5).map(_ << 4))
+    val w = new JpegBitWriter(out)
     val nb = ((width + 7) / 8) * ((height + 7) / 8)
     def d(j: Int): Int = ((7 * j) % 32) - 16
     // ---- scan 1: DC first, interleaved, Ah=0 Al=1 ----
@@ -3838,17 +3687,17 @@ object Multimodal {
     var j = 0
     while (j < nb) {
       if (restartEvery > 0 && j > 0 && j % restartEvery == 0) {
-        rstMarker(rst); rst += 1
+        w.restart(rst); rst += 1
         prevY = 0 // chroma predictors are already 0
       }
       val v = d(j) >> 1 // arithmetic shift: the point-transformed DC
-      putDiff(v - prevY, c => c.toLong)
+      w.putDiff(v - prevY, c => c.toLong)
       prevY = v
-      putDiff(0, c => (5 - c).toLong) // Cb (predictor stays 0)
-      putDiff(0, c => (5 - c).toLong) // Cr
+      w.putDiff(0, c => (5 - c).toLong) // Cb (predictor stays 0)
+      w.putDiff(0, c => (5 - c).toLong) // Cr
       j += 1
     }
-    endScan()
+    w.pad()
     // ---- scans 2-4: AC first per component, Ss=1 Se=63, all-zero AC ----
     var comp = 1
     while (comp <= 3) {
@@ -3863,14 +3712,14 @@ object Multimodal {
         while (seg > 0) {
           val chunk = math.min(seg, 63)
           val k = 31 - java.lang.Integer.numberOfLeadingZeros(chunk)
-          putBits(k.toLong, 3) // the EOBn symbol's len-3 code
-          if (k > 0) putBits((chunk - (1 << k)).toLong, k)
+          w.putBits(k.toLong, 3) // the EOBn symbol's len-3 code
+          if (k > 0) w.putBits((chunk - (1 << k)).toLong, k)
           seg -= chunk
         }
         left -= segLen
-        if (restartEvery > 0 && left > 0) { rstMarker(rstA); rstA += 1 }
+        if (restartEvery > 0 && left > 0) { w.restart(rstA); rstA += 1 }
       }
-      endScan()
+      w.pad()
       comp += 1
     }
     // ---- scan 5: DC refinement, interleaved, Ah=1 Al=0 ----
@@ -3880,14 +3729,14 @@ object Multimodal {
     j = 0
     while (j < nb) {
       if (restartEvery > 0 && j > 0 && j % restartEvery == 0) {
-        rstMarker(rstR); rstR += 1
+        w.restart(rstR); rstR += 1
       }
-      putBits((d(j) & 1).toLong, 1) // Y low bit
-      putBits(0L, 1) // Cb correction bit
-      putBits(0L, 1) // Cr correction bit
+      w.putBits((d(j) & 1).toLong, 1) // Y low bit
+      w.putBits(0L, 1) // Cb correction bit
+      w.putBits(0L, 1) // Cr correction bit
       j += 1
     }
-    endScan()
+    w.pad()
     b(0xff, 0xd9) // EOI
     out.toByteArray
   }

@@ -2112,20 +2112,12 @@ object CurationQueries {
     * before the gate sort; mdat is touched only at the selected
     * keyframe offsets.
     */
-  private val multimodalFrames = Q.scratch("mp4frames")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"v_$k%02d.bin"),
-            graft.operators.Multimodal.mp4MovieBytes(
-              k, 6 + k % 5, 2 + k % 3, 3 + k % 4))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "v_(\\d+)\\.", 1).cast("long")
-          .as("doc_id"), col("content").as("payload"))
-      graft.operators.Multimodal.sampleFrames(scanned).toDF()
+  private val multimodalFrames = Q.media("mp4frames")(
+    k => graft.operators.Multimodal.mp4MovieBytes(
+      k, 6 + k % 5, 2 + k % 3, 3 + k % 4),
+    (_, scanned) => {
+      graft.operators.Multimodal.sampleFrames(scanned.select(
+        col("file_id").as("doc_id"), col("content").as("payload"))).toDF()
         .select(col("docId").as("file_id"), col("frameIdx").as("frame_idx"),
           length(col("frame")).as("n_bytes"),
           lower(hex(col("frame"))).as("frame_hex"))
@@ -2170,19 +2162,10 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — table walk per file, a few
     * longs per track leave the map side; mdat is never read.
     */
-  private val multimodalMp4Samples = Q.scratch("mp4samples")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"v_$k%02d.bin"),
-            graft.operators.Multimodal.mp4MovieBytes(
-              k, 6 + k % 5, 2 + k % 3, 4 + k % 4, corrupt = k % 7 == 6))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "v_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalMp4Samples = Q.media("mp4samples")(
+    k => graft.operators.Multimodal.mp4MovieBytes(
+      k, 6 + k % 5, 2 + k % 3, 4 + k % 4, corrupt = k % 7 == 6),
+    (s, scanned) => {
       import s.implicits._
       scanned.as[(Long, Array[Byte])]
         .flatMap { case (id, bytes) =>
@@ -2471,6 +2454,51 @@ object CurationQueries {
   // Classifier-based quality scoring
   // ---------------------------------------------------------------------
 
+  /** The logistic quality model over `documents`, as columns: `toks`,
+    * the token count `n_toks` (a double), `mean_len`, `stop_ratio`,
+    * `digit_ratio` and the linear term `z`, whose squash
+    * `1 / (1 + exp(-z))` is the keep-probability. One tree of IEEE ops
+    * on identical inputs, so every query that scores with it agrees
+    * bit for bit; [[qualityZSqlCtes]] is its DuckDB twin.
+    */
+  private def qualityZ(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("n_toks", size(col("toks")).cast("double"))
+      .withColumn("mean_len",
+        (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
+      .withColumn("stop_ratio",
+        expr("size(filter(toks, t -> array_contains(" +
+          "array('the','a','of','and','to','in','is','it'), t)))").cast("double")
+          / col("n_toks"))
+      .withColumn("digit_ratio",
+        (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
+          .cast("double") / length(col("text")).cast("double"))
+      .withColumn("z",
+        lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
+          + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+
+  /** DuckDB twin of [[qualityZ]] as CTE text: `f`, every `documents`
+    * column plus `toks`, `n_toks`, `mean_len`, `stop_ratio`,
+    * `digit_ratio` and `z`. */
+  private val qualityZSqlCtes: String =
+    """fz AS (
+      |  SELECT *, string_split(text, ' ') AS toks,
+      |    cast(len(string_split(text, ' ')) as double) AS n_toks,
+      |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
+      |      / len(string_split(text, ' ')) AS mean_len,
+      |    cast(len(list_filter(string_split(text, ' '),
+      |      t -> list_contains(['the','a','of','and','to','in','is','it'], t))) as double)
+      |      / len(string_split(text, ' ')) AS stop_ratio,
+      |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
+      |      / cast(len(text) as double) AS digit_ratio
+      |  FROM documents
+      |), f AS (
+      |  SELECT *, -1.5 + 0.004 * n_toks + 0.35 * mean_len + 4.0 * stop_ratio
+      |    - 6.0 * digit_ratio AS z
+      |  FROM fz
+      |)""".stripMargin
+
   /** Logistic-regression quality scoring — the fastText-classifier
     * analog of the rule-based [[NorthStarQueries]] quality gate: a fixed
     * published-style weight vector over cheap per-doc features (token
@@ -2485,46 +2513,17 @@ object CurationQueries {
     */
   private val qualityLogreg = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .select(col("doc_id"),
           round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6).as("keep_prob"))
         .withColumn("keep", col("keep_prob") >= 0.5)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH f AS (
-           |  SELECT doc_id,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t))) as double)
-           |      / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), z AS (
-           |  SELECT doc_id,
-           |    -1.5 + 0.004 * n_toks + 0.35 * mean_len + 4.0 * stop_ratio
-           |      - 6.0 * digit_ratio AS z
-           |  FROM f
-           |)
+    Some(s"""WITH $qualityZSqlCtes
            |SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS keep_prob,
            |  round(1.0 / (1.0 + exp(-z)), 6) >= 0.5 AS keep
-           |FROM z ORDER BY doc_id""".stripMargin))
+           |FROM f ORDER BY doc_id""".stripMargin))
 
   // ---------------------------------------------------------------------
   // LSH banding-parameter audit
@@ -3522,21 +3521,8 @@ object CurationQueries {
     */
   private val qualityThresholdSweep = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val buckets = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("keep_prob", round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6))
         .withColumn("decile",
           expr("cast(least(floor(keep_prob * 10), 9) as bigint)"))
@@ -3558,21 +3544,9 @@ object CurationQueries {
           col("frac_docs_e6"), col("frac_toks_e6"))
         .orderBy(col("cutoff_e1"))
     },
-    Some("""WITH f AS (
-           |  SELECT doc_id,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t))) as double)
-           |      / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), p AS (
+    Some(s"""WITH $qualityZSqlCtes, p AS (
            |  SELECT doc_id, n_toks,
-           |    round(1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks + 0.35 * mean_len
-           |      + 4.0 * stop_ratio - 6.0 * digit_ratio))), 6) AS keep_prob
+           |    round(1.0 / (1.0 + exp(-z)), 6) AS keep_prob
            |  FROM f
            |), b AS (
            |  SELECT cast(least(floor(keep_prob * 10), 9) as bigint) AS decile,
@@ -3832,28 +3806,14 @@ object CurationQueries {
     */
   private val corpusCurriculum = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks_d", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks_d") - 1.0))
-            / col("n_toks_d"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))")
-            .cast("double") / col("n_toks_d"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks_d") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("kp_e6",
           expr("cast(round((1.0 / (1.0 + exp(-z))) * 1e6) as bigint)"))
         // narrow to 2 ints/doc and checkpoint: the percentile branch and
         // the phase aggregate otherwise each re-run the regexp/HOF
         // scoring over the text — one corpus text pass, not two
-        .select(col("n_toks_d").cast("long").as("n_toks_l"), col("kp_e6"))
+        .select(col("n_toks").cast("long").as("n_toks_l"), col("kp_e6"))
         .localCheckpoint(true)
       val cut = scored.agg(
         expr("percentile(kp_e6, 0.25)").as("q1"),
@@ -3877,22 +3837,9 @@ object CurationQueries {
           expr("kp_sum div n_docs").as("mean_kp_e6"))
         .orderBy(col("phase"))
     },
-    Some("""WITH f AS (
-           |  SELECT doc_id,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t)))
-           |      as double) / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g'))
-           |      as double) / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), p AS (
+    Some(s"""WITH $qualityZSqlCtes, p AS (
            |  SELECT doc_id, cast(n_toks as bigint) AS n_toks_l,
-           |    cast(round((1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks
-           |      + 0.35 * mean_len + 4.0 * stop_ratio - 6.0 * digit_ratio))))
-           |      * 1e6) as bigint) AS kp_e6
+           |    cast(round((1.0 / (1.0 + exp(-z))) * 1e6) as bigint) AS kp_e6
            |  FROM f
            |), cut AS (
            |  SELECT quantile_cont(kp_e6, 0.25) AS q1,
@@ -4568,21 +4515,8 @@ object CurationQueries {
     */
   private val qualityCalibration = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("keep_prob", round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6))
         .withColumn("quality", round(
           size(array_distinct(col("toks"))).cast("double") /
@@ -4608,24 +4542,12 @@ object CurationQueries {
         .withColumn("gap_e6", abs(col("mean_pred_e6") - col("pass_rate_e6")))
         .orderBy(col("decile"))
     },
-    Some("""WITH f AS (
-           |  SELECT text, string_split(text, ' ') AS toks,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t)))
-           |      as double) / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), sc AS (
+    Some(s"""WITH $qualityZSqlCtes, sc AS (
            |  SELECT
-           |    round(1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks + 0.35 * mean_len
-           |      + 4.0 * stop_ratio - 6.0 * digit_ratio))), 6) AS keep_prob,
+           |    round(1.0 / (1.0 + exp(-z)), 6) AS keep_prob,
            |    round(cast(len(list_distinct(toks)) as double) / len(toks) * 0.5
            |      + least(cast(len(toks) as double) / 100, 1.0) * 0.5, 6) AS quality,
-           |    regexp_matches(text, '(^| )(dup|slow)( |$)') AS bad
+           |    regexp_matches(text, '(^| )(dup|slow)( |$$)') AS bad
            |  FROM f
            |), thr AS (
            |  SELECT round(quantile_cont(quality, 0.25), 6) AS q25 FROM sc
@@ -4673,21 +4595,8 @@ object CurationQueries {
     */
   private val qualityIsotonic = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("keep_prob", round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6))
         .withColumn("quality", round(
           size(array_distinct(col("toks"))).cast("double") /
@@ -4737,24 +4646,12 @@ object CurationQueries {
         .withColumn("lift_e6", col("iso_e6") - col("pass_rate_e6"))
         .orderBy(col("decile"))
     },
-    Some("""WITH f AS (
-           |  SELECT text, string_split(text, ' ') AS toks,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t)))
-           |      as double) / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), sc AS (
+    Some(s"""WITH $qualityZSqlCtes, sc AS (
            |  SELECT
-           |    round(1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks + 0.35 * mean_len
-           |      + 4.0 * stop_ratio - 6.0 * digit_ratio))), 6) AS keep_prob,
+           |    round(1.0 / (1.0 + exp(-z)), 6) AS keep_prob,
            |    round(cast(len(list_distinct(toks)) as double) / len(toks) * 0.5
            |      + least(cast(len(toks) as double) / 100, 1.0) * 0.5, 6) AS quality,
-           |    regexp_matches(text, '(^| )(dup|slow)( |$)') AS bad
+           |    regexp_matches(text, '(^| )(dup|slow)( |$$)') AS bad
            |  FROM f
            |), thr AS (
            |  SELECT round(quantile_cont(quality, 0.25), 6) AS q25 FROM sc
@@ -5183,21 +5080,8 @@ object CurationQueries {
     */
   private val qualityRankerNdcg = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("keep_prob", round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6))
         .withColumn("g_e6", expr(
           """cast(round((cast(size(array_distinct(toks)) as double)
@@ -5233,19 +5117,9 @@ object CurationQueries {
           expr("1000000 div top_pos_n").as("mrr_length_e6"))
         .orderBy(col("source"))
     },
-    Some("""WITH f AS (
-           |  SELECT doc_id, source, text, string_split(text, ' ') AS toks,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks
-           |  FROM documents
-           |), sc AS (
+    Some(s"""WITH $qualityZSqlCtes, sc AS (
            |  SELECT doc_id, source, cast(n_toks as bigint) AS nt,
-           |    round(1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks
-           |      + 0.35 * ((cast(len(text) as double) - (n_toks - 1.0)) / n_toks)
-           |      + 4.0 * (cast(len(list_filter(toks,
-           |          t -> list_contains(['the','a','of','and','to','in','is','it'], t)))
-           |          as double) / n_toks)
-           |      - 6.0 * (cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g'))
-           |          as double) / cast(len(text) as double))))), 6) AS keep_prob,
+           |    round(1.0 / (1.0 + exp(-z)), 6) AS keep_prob,
            |    cast(round((cast(len(list_distinct(toks)) as double) / len(toks) * 0.5
            |      + least(cast(len(toks) as double) / 100, 1.0) * 0.5) * 1000000, 0)
            |      as bigint) AS g_e6
@@ -8082,20 +7956,7 @@ object CurationQueries {
   private val qualityKappa = Q(
     (s, dir) => {
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr("size(filter(toks, t -> array_contains(" +
-            "array('the','a','of','and','to','in','is','it'), t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("clf_keep",
           round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6) >= 0.5)
         .withColumn("quality", round(
@@ -8122,24 +7983,12 @@ object CurationQueries {
         .withColumn("kappa_e6", expr(
           fdivSpark("(po_e6 - pe_e6) * 1000000", "1000000 - pe_e6")))
     },
-    Some("""WITH f AS (
-           |  SELECT text, string_split(text, ' ') AS toks,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t)))
-           |      as double) / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), sc AS (
+    Some(s"""WITH $qualityZSqlCtes, sc AS (
            |  SELECT
-           |    (round(1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks + 0.35 * mean_len
-           |      + 4.0 * stop_ratio - 6.0 * digit_ratio))), 6) >= 0.5) AS clf_keep,
+           |    (round(1.0 / (1.0 + exp(-z)), 6) >= 0.5) AS clf_keep,
            |    round(cast(len(list_distinct(toks)) as double) / len(toks) * 0.5
            |      + least(cast(len(toks) as double) / 100, 1.0) * 0.5, 6) AS quality,
-           |    regexp_matches(text, '(^| )(dup|slow)( |$)') AS bad
+           |    regexp_matches(text, '(^| )(dup|slow)( |$$)') AS bad
            |  FROM f
            |), thr AS (
            |  SELECT round(quantile_cont(quality, 0.25), 6) AS q25 FROM sc
@@ -9332,19 +9181,10 @@ object CurationQueries {
     * parseAll narrow shape). RMS derives from the exact bigint
     * sum-of-squares with ONE float sqrt per file.
     */
-  private val multimodalAudioStats = Q.scratch("audiostats")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"a_$k%02d.wav"),
-            graft.operators.Multimodal.wavToneBytes(
-              8000, 200 * (k + 1), 1000 + 50 * k, 100 + k, 8 + (k % 5)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalAudioStats = Q.media("audiostats")(
+    k => graft.operators.Multimodal.wavToneBytes(
+      8000, 200 * (k + 1), 1000 + 50 * k, 100 + k, 8 + (k % 5)),
+    (s, scanned) => {
       graft.operators.Multimodal.pcmStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("nSamples").as("n_samples"),
           col("sumAmp").as("sum_amp"), col("sumSq").as("sum_sq"),
@@ -9408,19 +9248,10 @@ object CurationQueries {
     * frame-count-sized rows. No corpus-wide window — the run window
     * partitions per file over its frames.
     */
-  private val multimodalAudioVad = Q.scratch("audiovad")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"v_$k%02d.wav"),
-            graft.operators.Multimodal.wavBurstBytes(
-              8000, 6 + (k % 5), 160, 800 + 10 * k, 8))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "v_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalAudioVad = Q.media("audiovad")(
+    k => graft.operators.Multimodal.wavBurstBytes(
+      8000, 6 + (k % 5), 160, 800 + 10 * k, 8),
+    (s, scanned) => {
       val frames = graft.operators.Multimodal.pcmSamplesAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("idx"), col("amp"))
         .withColumn("win", expr("idx div 160"))
@@ -11464,6 +11295,56 @@ object CurationQueries {
   // Multimodal: real PNG pixel decode (inflate + unfilter + walk)
   // ---------------------------------------------------------------------
 
+  /** DuckDB geometry of the nation-keyed image fixtures as CTE text: `g`
+    * holds each key `k` with width `w = 16 + k` and height
+    * `h = 10 + k % 7`. */
+  private val imageGeomSqlCtes: String =
+    """g AS (
+      |  SELECT cast(n_nationkey as bigint) AS k,
+      |    cast(16 + n_nationkey as bigint) AS w,
+      |    cast(10 + (n_nationkey % 7) as bigint) AS h
+      |  FROM nation
+      |)""".stripMargin
+
+  /** [[imageGeomSqlCtes]] expanded to every pixel: `ps` holds
+    * (k, w, h, x, y). */
+  private val imagePixelsSqlCtes: String =
+    s"""$imageGeomSqlCtes, xs AS (
+       |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
+       |), ps AS (
+       |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
+       |)""".stripMargin
+
+  /** Closed-form channel sums of the RGB gradient fixtures (pixel (x, y)
+    * is (7x+3y, x+2y, 5x+y) mod 256): `sm` holds (k, w, h, n_px, sum_r,
+    * sum_g, sum_b). */
+  private val gradientSumsSqlCtes: String =
+    s"""$imagePixelsSqlCtes, sm AS (
+       |  SELECT k, w, h, cast(count(*) as bigint) AS n_px,
+       |    cast(sum((7 * x + 3 * y) % 256) as bigint) AS sum_r,
+       |    cast(sum((x + 2 * y) % 256) as bigint) AS sum_g,
+       |    cast(sum((5 * x + y) % 256) as bigint) AS sum_b
+       |  FROM ps GROUP BY k, w, h
+       |)""".stripMargin
+
+  /** The oracle of every decoder whose fixtures decode to the gradient:
+    * per file, its geometry and exact channel sums. */
+  private val gradientSumsSql: String =
+    s"""WITH $gradientSumsSqlCtes
+       |SELECT k AS file_id, w AS width, h AS height, n_px,
+       |  sum_r, sum_g, sum_b, true AS valid
+       |FROM sm ORDER BY file_id""".stripMargin
+
+  /** [[graft.operators.Multimodal.pngStatsAll]] under the catalog's
+    * column names: file_id, width, height, n_px, sum_r, sum_g, sum_b,
+    * valid. */
+  private def pngStats(scanned: DataFrame): DataFrame =
+    graft.operators.Multimodal.pngStatsAll(scanned).toDF()
+      .select(col("fileId").as("file_id"), col("width"), col("height"),
+        (col("width") * col("height")).as("n_px"),
+        col("sumR").as("sum_r"), col("sumG").as("sum_g"),
+        col("sumB").as("sum_b"), col("valid"))
+
   /** IMAGE-STATS extraction over real PNG pixels — the deepest tier of
     * the multimodal family (headers → audio samples → image pixels):
     * 25 PNGs carry a deterministic RGB gradient (r = (7x+3y) mod 256
@@ -11478,44 +11359,16 @@ object CurationQueries {
     * partition-mapped decode pass, no shuffle; stats rows are tiny
     * regardless of image size.
     */
-  private val multimodalImageStats = Q.scratch("imagestats")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"i_$k%02d.png"),
-            graft.operators.Multimodal.pngGradientBytes(16 + k, 10 + (k % 7)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "i_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          (col("width") * col("height")).as("n_px"),
-          col("sumR").as("sum_r"), col("sumG").as("sum_g"),
-          col("sumB").as("sum_b"), col("valid"))
+  private val multimodalImageStats = Q.media("imagestats")(
+    k => graft.operators.Multimodal.pngGradientBytes(16 + k, 10 + (k % 7)),
+    (s, scanned) => {
+      pngStats(scanned)
         .withColumn("mean_r_e3", expr("(sum_r * 1000) div n_px"))
         .withColumn("mean_g_e3", expr("(sum_g * 1000) div n_px"))
         .withColumn("mean_b_e3", expr("(sum_b * 1000) div n_px"))
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), sm AS (
-           |  SELECT k, w, h, cast(count(*) as bigint) AS n_px,
-           |    cast(sum((7 * x + 3 * y) % 256) as bigint) AS sum_r,
-           |    cast(sum((x + 2 * y) % 256) as bigint) AS sum_g,
-           |    cast(sum((5 * x + y) % 256) as bigint) AS sum_b
-           |  FROM ps GROUP BY k, w, h
-           |)
+    Some(s"""WITH $gradientSumsSqlCtes
            |SELECT k AS file_id, w AS width, h AS height, n_px,
            |  sum_r, sum_g, sum_b, true AS valid,
            |  (sum_r * 1000) // n_px AS mean_r_e3,
@@ -11543,28 +11396,17 @@ object CurationQueries {
     * partition-mapped decode pass, no shuffle; stats rows are
     * constant-size regardless of pixel count.
     */
-  private val multimodalPngTypes = Q.scratch("pngtypes")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val (w, h) = (16 + k, 10 + (k % 7))
-          val bytes = (k % 3) match {
-            case 0 => graft.operators.Multimodal.pngGrayBytes(w, h)
-            case 1 => graft.operators.Multimodal.pngPaletteBytes(w, h)
-            case _ => graft.operators.Multimodal.pngGradientBytes(w, h)
-          }
-          java.nio.file.Files.write(p.resolve(f"t_$k%02d.png"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "t_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          (col("width") * col("height")).as("n_px"),
-          col("sumR").as("sum_r"), col("sumG").as("sum_g"),
-          col("sumB").as("sum_b"), col("valid"))
+  private val multimodalPngTypes = Q.media("pngtypes")(
+    k => {
+      val (w, h) = (16 + k, 10 + (k % 7))
+      (k % 3) match {
+        case 0 => graft.operators.Multimodal.pngGrayBytes(w, h)
+        case 1 => graft.operators.Multimodal.pngPaletteBytes(w, h)
+        case _ => graft.operators.Multimodal.pngGradientBytes(w, h)
+      }
+    },
+    (s, scanned) => {
+      pngStats(scanned)
         // the PNG colorType code each fixture was written with (fixture
         // metadata, derived identically in the oracle)
         .withColumn("color_type", expr(
@@ -11575,16 +11417,7 @@ object CurationQueries {
           col("sum_b"), col("valid"))
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), px AS (
+    Some(s"""WITH $imagePixelsSqlCtes, px AS (
            |  SELECT k, w, h,
            |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
            |         WHEN k % 3 = 1 THEN (3 * x + 5 * y) % 256
@@ -11629,45 +11462,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode
     * pass, no shuffle.
     */
-  private val multimodalPngFilters = Q.scratch("pngfilters")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"f_$k%02d.png"),
-            graft.operators.Multimodal.pngFilteredGradientBytes(
-              16 + k, 10 + (k % 7)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "f_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          (col("width") * col("height")).as("n_px"),
-          col("sumR").as("sum_r"), col("sumG").as("sum_g"),
-          col("sumB").as("sum_b"), col("valid"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), sm AS (
-           |  SELECT k, w, h, cast(count(*) as bigint) AS n_px,
-           |    cast(sum((7 * x + 3 * y) % 256) as bigint) AS sum_r,
-           |    cast(sum((x + 2 * y) % 256) as bigint) AS sum_g,
-           |    cast(sum((5 * x + y) % 256) as bigint) AS sum_b
-           |  FROM ps GROUP BY k, w, h
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_px,
-           |  sum_r, sum_g, sum_b, true AS valid
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalPngFilters = Q.media("pngfilters")(
+    k => graft.operators.Multimodal.pngFilteredGradientBytes(
+      16 + k, 10 + (k % 7)),
+    (_, scanned) => pngStats(scanned).orderBy(col("file_id")),
+    Some(gradientSumsSql))
 
   /** PNG ALPHA tiers (colorTypes 6 RGBA, 4 gray+alpha, and PALETTE
     * with a tRNS per-index alpha table) — the largest share of real
@@ -11691,25 +11490,18 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalPngAlpha = Q.scratch("pngalpha")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val (w, h) = (16 + k, 10 + (k % 7))
-          val bytes = (k % 5) match {
-            case 0 => graft.operators.Multimodal.pngRgbaBytes(w, h, translucent = true)
-            case 1 => graft.operators.Multimodal.pngRgbaBytes(w, h, translucent = false)
-            case 2 => graft.operators.Multimodal.pngGrayAlphaBytes(w, h, translucent = true)
-            case 3 => graft.operators.Multimodal.pngGrayAlphaBytes(w, h, translucent = false)
-            case _ => graft.operators.Multimodal.pngPaletteTrnsBytes(w, h)
-          }
-          java.nio.file.Files.write(p.resolve(f"a_$k%02d.png"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalPngAlpha = Q.media("pngalpha")(
+    k => {
+      val (w, h) = (16 + k, 10 + (k % 7))
+      (k % 5) match {
+        case 0 => graft.operators.Multimodal.pngRgbaBytes(w, h, translucent = true)
+        case 1 => graft.operators.Multimodal.pngRgbaBytes(w, h, translucent = false)
+        case 2 => graft.operators.Multimodal.pngGrayAlphaBytes(w, h, translucent = true)
+        case 3 => graft.operators.Multimodal.pngGrayAlphaBytes(w, h, translucent = false)
+        case _ => graft.operators.Multimodal.pngPaletteTrnsBytes(w, h)
+      }
+    },
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -11726,16 +11518,7 @@ object CurationQueries {
           "sum_a", "n_translucent", "valid")
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), px AS (
+    Some(s"""WITH $imagePixelsSqlCtes, px AS (
            |  SELECT k, w, h,
            |    CASE WHEN k % 5 IN (0, 1) THEN (7 * x + 3 * y) % 256
            |         WHEN k % 5 = 4 THEN (3 * x + 5 * y) % 256
@@ -11780,45 +11563,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalPngAdam7 = Q.scratch("pngadam7")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"i_$k%02d.png"),
-            graft.operators.Multimodal.pngInterlacedGradientBytes(
-              16 + k, 10 + (k % 7)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "i_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.pngStatsAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          (col("width") * col("height")).as("n_px"),
-          col("sumR").as("sum_r"), col("sumG").as("sum_g"),
-          col("sumB").as("sum_b"), col("valid"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), sm AS (
-           |  SELECT k, w, h, cast(count(*) as bigint) AS n_px,
-           |    cast(sum((7 * x + 3 * y) % 256) as bigint) AS sum_r,
-           |    cast(sum((x + 2 * y) % 256) as bigint) AS sum_g,
-           |    cast(sum((5 * x + y) % 256) as bigint) AS sum_b
-           |  FROM ps GROUP BY k, w, h
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_px,
-           |  sum_r, sum_g, sum_b, true AS valid
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalPngAdam7 = Q.media("pngadam7")(
+    k => graft.operators.Multimodal.pngInterlacedGradientBytes(
+      16 + k, 10 + (k % 7)),
+    (_, scanned) => pngStats(scanned).orderBy(col("file_id")),
+    Some(gradientSumsSql))
 
   /** BMP (Windows DIB) decode — the uncompressed image container
     * screenshots and scanner output still arrive in: 24-bit BI_RGB,
@@ -11836,18 +11585,9 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalBmpStats = Q.scratch("bmpstats")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"b_$k%02d.bmp"),
-            graft.operators.Multimodal.bmpGradientBytes(16 + k, 10 + (k % 7)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "b_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalBmpStats = Q.media("bmpstats")(
+    k => graft.operators.Multimodal.bmpGradientBytes(16 + k, 10 + (k % 7)),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -11865,25 +11605,7 @@ object CurationQueries {
           col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), sm AS (
-           |  SELECT k, w, h, cast(count(*) as bigint) AS n_px,
-           |    cast(sum((7 * x + 3 * y) % 256) as bigint) AS sum_r,
-           |    cast(sum((x + 2 * y) % 256) as bigint) AS sum_g,
-           |    cast(sum((5 * x + y) % 256) as bigint) AS sum_b
-           |  FROM ps GROUP BY k, w, h
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_px,
-           |  sum_r, sum_g, sum_b, true AS valid
-           |FROM sm ORDER BY file_id""".stripMargin))
+    Some(gradientSumsSql))
 
   /** ARCHIVE CENSUS (ZIP + TAR) — the container a delivered corpus
     * actually arrives in, walked for REAL: ZIP entries inflate through
@@ -11905,27 +11627,20 @@ object CurationQueries {
     * archive, no shuffle; this is the unpack-accounting stage an
     * archive-delivered 100 TB corpus runs before extraction.
     */
-  private val multimodalArchiveCensus = Q.scratch("archives")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val ne = 3 + (k % 5)
-          // r20: the cycle grows a .tar.zst member (zstd-framed tar --
-          // the shape modern corpus releases ship); rawFrame is a
-          // spec-valid store-mode zstd frame with a verified checksum
-          val bytes = (k % 3) match {
-            case 0 => graft.operators.Multimodal.zipBytes(k, ne)
-            case 1 => graft.operators.Multimodal.tarBytes(k, ne)
-            case _ => graft.operators.Zstd.rawFrame(
-              graft.operators.Multimodal.tarBytes(k, ne))
-          }
-          java.nio.file.Files.write(p.resolve(f"ar_$k%02d.bin"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "ar_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalArchiveCensus = Q.media("archives")(
+    k => {
+      val ne = 3 + (k % 5)
+      // r20: the cycle grows a .tar.zst member (zstd-framed tar --
+      // the shape modern corpus releases ship); rawFrame is a
+      // spec-valid store-mode zstd frame with a verified checksum
+      (k % 3) match {
+        case 0 => graft.operators.Multimodal.zipBytes(k, ne)
+        case 1 => graft.operators.Multimodal.tarBytes(k, ne)
+        case _ => graft.operators.Zstd.rawFrame(
+          graft.operators.Multimodal.tarBytes(k, ne))
+      }
+    },
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -12004,18 +11719,9 @@ object CurationQueries {
     * cluster-scale WARC reader fans out on, which is exactly why the
     * census walks members rather than one opaque stream.
     */
-  private val multimodalWarcCensus = Q.scratch("warcs")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"wa_$k%02d.warc.gz"),
-            graft.operators.Multimodal.warcBytes(k, 2 + (k % 5)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "wa_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalWarcCensus = Q.media("warcs")(
+    k => graft.operators.Multimodal.warcBytes(k, 2 + (k % 5)),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -12073,20 +11779,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalTiffStats = Q.scratch("tiffstats")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"t_$k%02d.tif"),
-            graft.operators.Multimodal.tiffGradientBytes(
-              16 + k, 10 + (k % 7), bigEndian = k % 2 == 1,
-              gray = k % 3 == 0, rowsPerStrip = 4 + (k % 5)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "t_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalTiffStats = Q.media("tiffstats")(
+    k => graft.operators.Multimodal.tiffGradientBytes(
+      16 + k, 10 + (k % 7), bigEndian = k % 2 == 1,
+      gray = k % 3 == 0, rowsPerStrip = 4 + (k % 5)),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -12104,16 +11801,7 @@ object CurationQueries {
           col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), px AS (
+    Some(s"""WITH $imagePixelsSqlCtes, px AS (
            |  SELECT k, w, h,
            |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
            |         ELSE (7 * x + 3 * y) % 256 END AS r,
@@ -12155,18 +11843,9 @@ object CurationQueries {
     * framing + HTTP parse, rows out are response-sized; payload bytes
     * never shuffle.
     */
-  private val multimodalWarcHttp = Q.scratch("warchttp")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"wh_$k%02d.warc.gz"),
-            graft.operators.Multimodal.warcHttpBytes(k, 3 + (k % 4)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "wh_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalWarcHttp = Q.media("warchttp")(
+    k => graft.operators.Multimodal.warcHttpBytes(k, 3 + (k % 4)),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -12312,21 +11991,12 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalTiffLzw = Q.scratch("tifflzw")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"z_$k%02d.tif"),
-            graft.operators.Multimodal.tiffGradientBytes(
-              16 + k, 10 + (k % 7), bigEndian = k % 2 == 1,
-              gray = k % 3 == 0, rowsPerStrip = 4 + (k % 5),
-              lzw = k % 2 == 0))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "z_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalTiffLzw = Q.media("tifflzw")(
+    k => graft.operators.Multimodal.tiffGradientBytes(
+      16 + k, 10 + (k % 7), bigEndian = k % 2 == 1,
+      gray = k % 3 == 0, rowsPerStrip = 4 + (k % 5),
+      lzw = k % 2 == 0),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -12346,16 +12016,7 @@ object CurationQueries {
           col("valid"))
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), xs AS (
-           |  SELECT k, w, h, unnest(generate_series(0, w - 1)) AS x FROM g
-           |), ps AS (
-           |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
-           |), px AS (
+    Some(s"""WITH $imagePixelsSqlCtes, px AS (
            |  SELECT k, w, h,
            |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
            |         ELSE (7 * x + 3 * y) % 256 END AS r,
@@ -12395,40 +12056,31 @@ object CurationQueries {
     * sniff+decode pass, no shuffle; this is the map-side dispatch
     * stage every 100 TB multimodal ingest runs first.
     */
-  private val multimodalSniffRoute = Q.scratch("sniffroute")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val bytes = (k % 15) match {
-            case 0 => graft.operators.Multimodal.pngGradientBytes(16 + k, 10)
-            case 1 => graft.operators.Multimodal.pngPaletteBytes(16 + k, 10)
-            case 2 => graft.operators.Multimodal.gifPatternBytes(16 + k, 10)
-            case 3 => graft.operators.Multimodal.gifAnimBytes(16, 10, 2 + k % 3)
-            case 4 => graft.operators.Multimodal.jpegDcPatternBytes(16 + k, 10)
-            case 5 => graft.operators.Multimodal.wavToneBytes(8000, 100 + k, 5, 1, 4)
-            case 6 => graft.operators.Multimodal.wavG711Bytes(8000, 100 + k, 7)
-            case 7 => graft.operators.Multimodal.warcBytes(k, 2 + k % 4)
-            case 8 => graft.operators.Multimodal.mp4Bytes(
-              k, 1 + k % 3, 1000L, 1500L + k, 64)
-            case 9 => graft.operators.Multimodal.mp3Bytes(
-              k, 4, k % 3, id3v2 = k % 2 == 0, id3v1 = false)
-            case 10 => graft.operators.Multimodal.webpBytes(
-              k % 3, 16 + k, 10, alpha = k % 2 == 0, anim = false, tag = k)
-            case 11 => graft.operators.Multimodal.flacBytes(
-              44100, 1 + k % 3, 16, 88200L + 997L * k, k)
-            case 12 => graft.operators.PdfText.pdfBytes(
-              k, 1 + k % 3, flate = k % 2 == 0)
-            case 13 => graft.operators.ZstdVectors.all(k % 12)._2
-            case _ => (s"not a media file #$k " * 4).getBytes(
-              java.nio.charset.StandardCharsets.UTF_8)
-          }
-          java.nio.file.Files.write(p.resolve(f"m_$k%02d.bin"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "m_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalSniffRoute = Q.media("sniffroute")(
+    k => (k % 15) match {
+      case 0 => graft.operators.Multimodal.pngGradientBytes(16 + k, 10)
+      case 1 => graft.operators.Multimodal.pngPaletteBytes(16 + k, 10)
+      case 2 => graft.operators.Multimodal.gifPatternBytes(16 + k, 10)
+      case 3 => graft.operators.Multimodal.gifAnimBytes(16, 10, 2 + k % 3)
+      case 4 => graft.operators.Multimodal.jpegDcPatternBytes(16 + k, 10)
+      case 5 => graft.operators.Multimodal.wavToneBytes(8000, 100 + k, 5, 1, 4)
+      case 6 => graft.operators.Multimodal.wavG711Bytes(8000, 100 + k, 7)
+      case 7 => graft.operators.Multimodal.warcBytes(k, 2 + k % 4)
+      case 8 => graft.operators.Multimodal.mp4Bytes(
+        k, 1 + k % 3, 1000L, 1500L + k, 64)
+      case 9 => graft.operators.Multimodal.mp3Bytes(
+        k, 4, k % 3, id3v2 = k % 2 == 0, id3v1 = false)
+      case 10 => graft.operators.Multimodal.webpBytes(
+        k % 3, 16 + k, 10, alpha = k % 2 == 0, anim = false, tag = k)
+      case 11 => graft.operators.Multimodal.flacBytes(
+        44100, 1 + k % 3, 16, 88200L + 997L * k, k)
+      case 12 => graft.operators.PdfText.pdfBytes(
+        k, 1 + k % 3, flate = k % 2 == 0)
+      case 13 => graft.operators.ZstdVectors.all(k % 12)._2
+      case _ => (s"not a media file #$k " * 4).getBytes(
+        java.nio.charset.StandardCharsets.UTF_8)
+    },
+    (s, scanned) => {
       graft.operators.Multimodal.sniffAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("detected"), col("valid"))
         .orderBy(col("file_id"))
@@ -12467,26 +12119,17 @@ object CurationQueries {
     * parse+inflate per file; page/op counts and the text leave the
     * map side, raw PDF bytes never shuffle.
     */
-  private val multimodalPdfText = Q.scratch("pdftext")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"d_$k%02d.bin"),
-            graft.operators.PdfText.pdfBytes(
-              k, 1 + k % 3, flate = k % 2 == 0, encrypted = k % 6 == 5,
-              // cycle the real-world layout AND filter ladders:
-              // classic tables / xref+object streams / predicted xref
-              // streams, and Flate / LZW / ASCIIHex-chained content —
-              // extraction is invariant to all of it, so one oracle
-              // covers every combination
-              xrefStream = k % 3 != 0, predictor = k % 3 == 2,
-              lzw = k % 4 == 1, ahx = k % 8 == 3))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "d_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalPdfText = Q.media("pdftext")(
+    k => graft.operators.PdfText.pdfBytes(
+      k, 1 + k % 3, flate = k % 2 == 0, encrypted = k % 6 == 5,
+      // cycle the real-world layout AND filter ladders:
+      // classic tables / xref+object streams / predicted xref
+      // streams, and Flate / LZW / ASCIIHex-chained content —
+      // extraction is invariant to all of it, so one oracle
+      // covers every combination
+      xrefStream = k % 3 != 0, predictor = k % 3 == 2,
+      lzw = k % 4 == 1, ahx = k % 8 == 3),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -12545,39 +12188,32 @@ object CurationQueries {
     * per member; at 100 TB this is the WARC/shard ingest edge, and
     * compressed payload bytes never shuffle.
     */
-  private val multimodalZstdCensus = Q.scratch("zstdcensus")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val i = (k / 5) % 6
-          val vecs = Seq(
-            graft.operators.ZstdVectors.v0L19, graft.operators.ZstdVectors.v1L19,
-            graft.operators.ZstdVectors.v2L19, graft.operators.ZstdVectors.v3L19,
-            graft.operators.ZstdVectors.v4L19, graft.operators.ZstdVectors.v5L19)
-          val vecs1 = Seq(
-            graft.operators.ZstdVectors.v0L1, graft.operators.ZstdVectors.v1L1,
-            graft.operators.ZstdVectors.v2L1, graft.operators.ZstdVectors.v3L1,
-            graft.operators.ZstdVectors.v4L1, graft.operators.ZstdVectors.v5L1)
-          val bytes: Array[Byte] = (k % 5) match {
-            case 0 => vecs(i)
-            case 1 => vecs1(i)
-            case 2 =>
-              graft.operators.Zstd.skippableFrame(s"meta $k".getBytes) ++
-                graft.operators.Zstd.rawFrame(
-                  (s"raw member $k data " * 4).getBytes("UTF-8"))
-            case 3 => graft.operators.Zstd.rleFrame('z', 120 + k)
-            case _ =>
-              val bad = vecs(i).clone()
-              bad(bad.length - 1) = (bad(bad.length - 1) ^ 0x5a).toByte
-              bad
-          }
-          java.nio.file.Files.write(p.resolve(f"z_$k%02d.bin"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "z_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalZstdCensus = Q.media("zstdcensus")(
+    k => {
+      val i = (k / 5) % 6
+      val vecs = Seq(
+        graft.operators.ZstdVectors.v0L19, graft.operators.ZstdVectors.v1L19,
+        graft.operators.ZstdVectors.v2L19, graft.operators.ZstdVectors.v3L19,
+        graft.operators.ZstdVectors.v4L19, graft.operators.ZstdVectors.v5L19)
+      val vecs1 = Seq(
+        graft.operators.ZstdVectors.v0L1, graft.operators.ZstdVectors.v1L1,
+        graft.operators.ZstdVectors.v2L1, graft.operators.ZstdVectors.v3L1,
+        graft.operators.ZstdVectors.v4L1, graft.operators.ZstdVectors.v5L1)
+      (k % 5) match {
+        case 0 => vecs(i)
+        case 1 => vecs1(i)
+        case 2 =>
+          graft.operators.Zstd.skippableFrame(s"meta $k".getBytes) ++
+            graft.operators.Zstd.rawFrame(
+              (s"raw member $k data " * 4).getBytes("UTF-8"))
+        case 3 => graft.operators.Zstd.rleFrame('z', 120 + k)
+        case _ =>
+          val bad = vecs(i).clone()
+          bad(bad.length - 1) = (bad(bad.length - 1) ^ 0x5a).toByte
+          bad
+      }
+    },
+    (s, scanned) => {
       import s.implicits._
       scanned.as[(Long, Array[Byte])]
         .mapPartitions { it =>
@@ -12639,18 +12275,9 @@ object CurationQueries {
     * (host)-keyed partial aggregates move — the exact shape a 100 TB
     * `.jsonl.zst` release ingests with.
     */
-  private val pipelineZstdJsonl = Q.scratch("zstdjsonl")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"m_$k%02d.jsonl.zst"),
-            graft.operators.ZstdVectors.jsonl(k % 4)._2)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "m_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val pipelineZstdJsonl = Q.media("zstdjsonl")(
+    k => graft.operators.ZstdVectors.jsonl(k % 4)._2,
+    (s, scanned) => {
       import s.implicits._
       val lines = scanned.as[(Long, Array[Byte])]
         .flatMap { case (id, bytes) =>
@@ -12690,6 +12317,44 @@ object CurationQueries {
   // Multimodal: real JPEG entropy decode (DC-coefficient tier)
   // ---------------------------------------------------------------------
 
+  /** [[graft.operators.Multimodal.jpegDcAll]] under the catalog's column
+    * names, plus each image's mean luma level in thousandths: the decode
+    * of every JPEG DC-pattern query. */
+  private def jpegDcLevels(scanned: DataFrame): DataFrame =
+    graft.operators.Multimodal.jpegDcAll(scanned).toDF()
+      .select(col("fileId").as("file_id"), col("width"), col("height"),
+        col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
+        col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
+        col("valid"))
+      .withColumn("mean_level_e3",
+        expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
+      .orderBy(col("file_id"))
+
+  /** DuckDB closed form of [[jpegDcLevels]] over the DC-pattern fixtures:
+    * Y block j carries the quantized DC `16 * (((7 * j) % 32) - 16)`,
+    * over the `nBlocks` Y blocks (an expression of k, w, h) that the
+    * fixture's sampling layout codes. */
+  private def jpegDcOracle(nBlocks: String): Option[String] = Some(
+    s"""WITH $imageGeomSqlCtes, nb AS (
+       |  SELECT k, w, h, $nBlocks AS n_blocks FROM g
+       |), ds AS (
+       |  SELECT k, w, h, n_blocks,
+       |    unnest(generate_series(0, n_blocks - 1)) AS j
+       |  FROM nb
+       |), dd AS (
+       |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
+       |), sm AS (
+       |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
+       |    cast(min(dcq) as bigint) AS min_dcq,
+       |    cast(max(dcq) as bigint) AS max_dcq
+       |  FROM dd GROUP BY k, w, h, n_blocks
+       |)
+       |SELECT k AS file_id, w AS width, h AS height, n_blocks,
+       |  sum_dcq, min_dcq, max_dcq, true AS valid,
+       |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
+       |    AS mean_level_e3
+       |FROM sm ORDER BY file_id""".stripMargin)
+
   /** JPEG DC-coefficient statistics over REALLY entropy-decoded
     * baseline JPEGs — the tier the r14 verdict named missing ("an
     * image-heavy corpus is mostly JPEG; even DC-coefficient-only stats
@@ -12709,51 +12374,10 @@ object CurationQueries {
     * partition-mapped decode, no shuffle; stats rows are constant-size
     * per image regardless of pixel count.
     */
-  private val multimodalJpegDc = Q.scratch("jpegdc")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"j_$k%02d.jpg"),
-            graft.operators.Multimodal.jpegDcPatternBytes(16 + k, 10 + (k % 7)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
-          col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
-          col("valid"))
-        .withColumn("mean_level_e3",
-          expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), nb AS (
-           |  SELECT k, w, h, ((w + 7) // 8) * ((h + 7) // 8) AS n_blocks FROM g
-           |), ds AS (
-           |  SELECT k, w, h, n_blocks,
-           |    unnest(generate_series(0, n_blocks - 1)) AS j
-           |  FROM nb
-           |), dd AS (
-           |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
-           |), sm AS (
-           |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
-           |    cast(min(dcq) as bigint) AS min_dcq,
-           |    cast(max(dcq) as bigint) AS max_dcq
-           |  FROM dd GROUP BY k, w, h, n_blocks
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_blocks,
-           |  sum_dcq, min_dcq, max_dcq, true AS valid,
-           |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
-           |    AS mean_level_e3
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalJpegDc = Q.media("jpegdc")(
+    k => graft.operators.Multimodal.jpegDcPatternBytes(16 + k, 10 + (k % 7)),
+    (_, scanned) => jpegDcLevels(scanned),
+    jpegDcOracle("((w + 7) // 8) * ((h + 7) // 8)"))
 
   /** COLOR (3-component YCbCr) JPEG DC statistics — the tier the r15
     * verdict ranked first: a real image corpus is overwhelmingly color,
@@ -12773,52 +12397,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — binaryFile scan, one
     * partition-mapped decode, no shuffle.
     */
-  private val multimodalJpegColor = Q.scratch("jpegcolor")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"j_$k%02d.jpg"),
-            graft.operators.Multimodal.jpegDcColorPatternBytes(
-              16 + k, 10 + (k % 7), chromaMotion = k % 2 == 0))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
-          col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
-          col("valid"))
-        .withColumn("mean_level_e3",
-          expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), nb AS (
-           |  SELECT k, w, h, ((w + 7) // 8) * ((h + 7) // 8) AS n_blocks FROM g
-           |), ds AS (
-           |  SELECT k, w, h, n_blocks,
-           |    unnest(generate_series(0, n_blocks - 1)) AS j
-           |  FROM nb
-           |), dd AS (
-           |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
-           |), sm AS (
-           |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
-           |    cast(min(dcq) as bigint) AS min_dcq,
-           |    cast(max(dcq) as bigint) AS max_dcq
-           |  FROM dd GROUP BY k, w, h, n_blocks
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_blocks,
-           |  sum_dcq, min_dcq, max_dcq, true AS valid,
-           |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
-           |    AS mean_level_e3
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalJpegColor = Q.media("jpegcolor")(
+    k => graft.operators.Multimodal.jpegDcColorPatternBytes(
+      16 + k, 10 + (k % 7), chromaMotion = k % 2 == 0),
+    (_, scanned) => jpegDcLevels(scanned),
+    jpegDcOracle("((w + 7) // 8) * ((h + 7) // 8)"))
 
   /** 4:2:0 SUBSAMPLED JPEG DC statistics with RESTART intervals — the
     * final tier of the r15 verdict's "what's missing" item 1: the
@@ -12836,54 +12419,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalJpeg420 = Q.scratch("jpeg420")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"j_$k%02d.jpg"),
-            graft.operators.Multimodal.jpegDcSubPatternBytes(
-              16 + k, 10 + (k % 7), restartEvery = k % 3))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
-          col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
-          col("valid"))
-        .withColumn("mean_level_e3",
-          expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), nb AS (
-           |  SELECT k, w, h,
-           |    ((w + 15) // 16) * ((h + 15) // 16) * 4 AS n_blocks
-           |  FROM g
-           |), ds AS (
-           |  SELECT k, w, h, n_blocks,
-           |    unnest(generate_series(0, n_blocks - 1)) AS j
-           |  FROM nb
-           |), dd AS (
-           |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
-           |), sm AS (
-           |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
-           |    cast(min(dcq) as bigint) AS min_dcq,
-           |    cast(max(dcq) as bigint) AS max_dcq
-           |  FROM dd GROUP BY k, w, h, n_blocks
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_blocks,
-           |  sum_dcq, min_dcq, max_dcq, true AS valid,
-           |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
-           |    AS mean_level_e3
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalJpeg420 = Q.media("jpeg420")(
+    k => graft.operators.Multimodal.jpegDcSubPatternBytes(
+      16 + k, 10 + (k % 7), restartEvery = k % 3),
+    (_, scanned) => jpegDcLevels(scanned),
+    jpegDcOracle("((w + 15) // 16) * ((h + 15) // 16) * 4"))
 
   /** STEREO PCM statistics — the channel tier above
     * `ns_multimodal_audio_stats`' 16-bit mono: real-world audio is
@@ -12897,21 +12437,12 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle; two constant-size rows per file.
     */
-  private val multimodalAudioStereo = Q.scratch("audiostereo")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"a_$k%02d.wav"),
-            graft.operators.Multimodal.wavStereoToneBytes(
-              8000, 200 * (k + 1),
-              1000 + 50 * k, 100 + k, 8 + (k % 5),
-              700 + 30 * k, 50 + 2 * k, 5 + (k % 4)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalAudioStereo = Q.media("audiostereo")(
+    k => graft.operators.Multimodal.wavStereoToneBytes(
+      8000, 200 * (k + 1),
+      1000 + 50 * k, 100 + k, 8 + (k % 5),
+      700 + 30 * k, 50 + 2 * k, 5 + (k % 4)),
+    (s, scanned) => {
       graft.operators.Multimodal.pcmStereoAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("channel"),
           col("nSamples").as("n_samples"),
@@ -12972,19 +12503,10 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalAudioG711 = Q.scratch("audiog711")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"g_$k%02d.wav"),
-            graft.operators.Multimodal.wavG711Bytes(
-              8000, 200 * (k + 1), if (k % 2 == 0) 7 else 6))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "g_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalAudioG711 = Q.media("audiog711")(
+    k => graft.operators.Multimodal.wavG711Bytes(
+      8000, 200 * (k + 1), if (k % 2 == 0) 7 else 6),
+    (s, scanned) => {
       graft.operators.Multimodal.g711StatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("law"),
           col("nSamples").as("n_samples"), col("sumLin").as("sum_lin"),
@@ -13043,18 +12565,9 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalAudioFloat = Q.scratch("audiofloat")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"fl_$k%02d.wav"),
-            graft.operators.Multimodal.wavFloatToneBytes(8000, 200 * (k + 1)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "fl_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalAudioFloat = Q.media("audiofloat")(
+    k => graft.operators.Multimodal.wavFloatToneBytes(8000, 200 * (k + 1)),
+    (s, scanned) => {
       graft.operators.Multimodal.floatPcmStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"),
           col("nSamples").as("n_samples"), col("sumQ8").as("sum_q8"),
@@ -13090,30 +12603,23 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalAudioDepths = Q.scratch("audiodepths")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val bits = Seq(8, 16, 24)(k % 3)
-          val amp = bits match {
-            case 8 => 40 + k
-            case 16 => 1000 + 50 * k
-            case _ => 100000 + 5000 * k
-          }
-          val bias = bits match {
-            case 8 => 10 + k % 8
-            case 16 => 100 + k
-            case _ => 10000 + 100 * k
-          }
-          java.nio.file.Files.write(p.resolve(f"a_$k%02d.wav"),
-            graft.operators.Multimodal.wavToneBytesDepth(
-              8000, 200 * (k + 1), amp, bias, 8 + (k % 5), bits))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalAudioDepths = Q.media("audiodepths")(
+    k => {
+      val bits = Seq(8, 16, 24)(k % 3)
+      val amp = bits match {
+        case 8 => 40 + k
+        case 16 => 1000 + 50 * k
+        case _ => 100000 + 5000 * k
+      }
+      val bias = bits match {
+        case 8 => 10 + k % 8
+        case 16 => 100 + k
+        case _ => 10000 + 100 * k
+      }
+      graft.operators.Multimodal.wavToneBytesDepth(
+        8000, 200 * (k + 1), amp, bias, 8 + (k % 5), bits)
+    },
+    (s, scanned) => {
       graft.operators.Multimodal.pcmDepthAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("bits"),
           col("nSamples").as("n_samples"),
@@ -13166,57 +12672,13 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode, no
     * shuffle.
     */
-  private val multimodalJpeg422 = Q.scratch("jpeg422")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"j_$k%02d.jpg"),
-            graft.operators.Multimodal.jpegDcSubPatternBytes(
-              16 + k, 10 + (k % 7), restartEvery = k % 3,
-              samp = if (k % 2 == 0) 0x21 else 0x12))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
-          col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
-          col("valid"))
-        .withColumn("mean_level_e3",
-          expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), nb AS (
-           |  SELECT k, w, h,
-           |    CASE WHEN k % 2 = 0
-           |      THEN ((w + 15) // 16) * ((h + 7) // 8) * 2
-           |      ELSE ((w + 7) // 8) * ((h + 15) // 16) * 2 END AS n_blocks
-           |  FROM g
-           |), ds AS (
-           |  SELECT k, w, h, n_blocks,
-           |    unnest(generate_series(0, n_blocks - 1)) AS j
-           |  FROM nb
-           |), dd AS (
-           |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
-           |), sm AS (
-           |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
-           |    cast(min(dcq) as bigint) AS min_dcq,
-           |    cast(max(dcq) as bigint) AS max_dcq
-           |  FROM dd GROUP BY k, w, h, n_blocks
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_blocks,
-           |  sum_dcq, min_dcq, max_dcq, true AS valid,
-           |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
-           |    AS mean_level_e3
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalJpeg422 = Q.media("jpeg422")(
+    k => graft.operators.Multimodal.jpegDcSubPatternBytes(
+      16 + k, 10 + (k % 7), restartEvery = k % 3,
+      samp = if (k % 2 == 0) 0x21 else 0x12),
+    (_, scanned) => jpegDcLevels(scanned),
+    jpegDcOracle("CASE WHEN k % 2 = 0 THEN ((w + 15) // 16) * ((h + 7) // 8) * 2 " +
+      "ELSE ((w + 7) // 8) * ((h + 15) // 16) * 2 END"))
 
   /** 4:1:1 JPEG DC statistics — the last common sampling layout that
     * still rejected (camera/DV-derived stills: luma 4x1 against 1x1
@@ -13233,54 +12695,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode, no
     * shuffle.
     */
-  private val multimodalJpeg411 = Q.scratch("jpeg411")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"j_$k%02d.jpg"),
-            graft.operators.Multimodal.jpegDcSubPatternBytes(
-              16 + k, 10 + (k % 7), restartEvery = k % 3, samp = 0x41))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
-          col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
-          col("valid"))
-        .withColumn("mean_level_e3",
-          expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), nb AS (
-           |  SELECT k, w, h,
-           |    ((w + 31) // 32) * ((h + 7) // 8) * 4 AS n_blocks
-           |  FROM g
-           |), ds AS (
-           |  SELECT k, w, h, n_blocks,
-           |    unnest(generate_series(0, n_blocks - 1)) AS j
-           |  FROM nb
-           |), dd AS (
-           |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
-           |), sm AS (
-           |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
-           |    cast(min(dcq) as bigint) AS min_dcq,
-           |    cast(max(dcq) as bigint) AS max_dcq
-           |  FROM dd GROUP BY k, w, h, n_blocks
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_blocks,
-           |  sum_dcq, min_dcq, max_dcq, true AS valid,
-           |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
-           |    AS mean_level_e3
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalJpeg411 = Q.media("jpeg411")(
+    k => graft.operators.Multimodal.jpegDcSubPatternBytes(
+      16 + k, 10 + (k % 7), restartEvery = k % 3, samp = 0x41),
+    (_, scanned) => jpegDcLevels(scanned),
+    jpegDcOracle("((w + 31) // 32) * ((h + 7) // 8) * 4"))
 
   /** PROGRESSIVE (SOF2) JPEG DC statistics — the r16 verdict's top
     * missing tier: a large share of real web JPEGs are progressive, and
@@ -13302,52 +12721,11 @@ object CurationQueries {
     * shuffle; the per-block DC store the refinement pass needs is
     * dimension-capped (16M blocks) against crafted headers.
     */
-  private val multimodalJpegProg = Q.scratch("jpegprog")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"j_$k%02d.jpg"),
-            graft.operators.Multimodal.jpegDcProgPatternBytes(
-              16 + k, 10 + (k % 7), restartEvery = k % 3))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "j_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
-      graft.operators.Multimodal.jpegDcAll(scanned).toDF()
-        .select(col("fileId").as("file_id"), col("width"), col("height"),
-          col("nBlocks").as("n_blocks"), col("sumDcq").as("sum_dcq"),
-          col("minDcq").as("min_dcq"), col("maxDcq").as("max_dcq"),
-          col("valid"))
-        .withColumn("mean_level_e3",
-          expr("((1024 * n_blocks + sum_dcq) * 1000) div (8 * n_blocks)"))
-        .orderBy(col("file_id"))
-    },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), nb AS (
-           |  SELECT k, w, h, ((w + 7) // 8) * ((h + 7) // 8) AS n_blocks FROM g
-           |), ds AS (
-           |  SELECT k, w, h, n_blocks,
-           |    unnest(generate_series(0, n_blocks - 1)) AS j
-           |  FROM nb
-           |), dd AS (
-           |  SELECT k, w, h, n_blocks, 16 * (((7 * j) % 32) - 16) AS dcq FROM ds
-           |), sm AS (
-           |  SELECT k, w, h, n_blocks, cast(sum(dcq) as bigint) AS sum_dcq,
-           |    cast(min(dcq) as bigint) AS min_dcq,
-           |    cast(max(dcq) as bigint) AS max_dcq
-           |  FROM dd GROUP BY k, w, h, n_blocks
-           |)
-           |SELECT k AS file_id, w AS width, h AS height, n_blocks,
-           |  sum_dcq, min_dcq, max_dcq, true AS valid,
-           |  ((1024 * n_blocks + sum_dcq) * 1000) // (8 * n_blocks)
-           |    AS mean_level_e3
-           |FROM sm ORDER BY file_id""".stripMargin))
+  private val multimodalJpegProg = Q.media("jpegprog")(
+    k => graft.operators.Multimodal.jpegDcProgPatternBytes(
+      16 + k, 10 + (k % 7), restartEvery = k % 3),
+    (_, scanned) => jpegDcLevels(scanned),
+    jpegDcOracle("((w + 7) // 8) * ((h + 7) // 8)"))
 
   /** GIF PIXEL-INDEX statistics — the second real CODEC family in the
     * multimodal ladder (LZW after the JPEG tier's Huffman/DCT): real
@@ -13365,19 +12743,10 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle.
     */
-  private val multimodalGifStats = Q.scratch("gifstats")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"g_$k%02d.gif"),
-            graft.operators.Multimodal.gifPatternBytes(16 + k, 10 + (k % 7),
-              interlaced = k % 3 == 0))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "g_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalGifStats = Q.media("gifstats")(
+    k => graft.operators.Multimodal.gifPatternBytes(16 + k, 10 + (k % 7),
+      interlaced = k % 3 == 0),
+    (s, scanned) => {
       graft.operators.Multimodal.gifStatsAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("width"), col("height"),
           col("nPixels").as("n_pixels"), col("sumIdx").as("sum_idx"),
@@ -13386,12 +12755,7 @@ object CurationQueries {
         .withColumn("mean_idx_e3", expr("(sum_idx * 1000) div n_pixels"))
         .orderBy(col("file_id"))
     },
-    Some("""WITH g AS (
-           |  SELECT cast(n_nationkey as bigint) AS k,
-           |    cast(16 + n_nationkey as bigint) AS w,
-           |    cast(10 + (n_nationkey % 7) as bigint) AS h
-           |  FROM nation
-           |), ds AS (
+    Some(s"""WITH $imageGeomSqlCtes, ds AS (
            |  SELECT k, w, h, w * h AS n_pixels,
            |    unnest(generate_series(0, w * h - 1)) AS j
            |  FROM g
@@ -13426,19 +12790,10 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one partition-mapped decode,
     * no shuffle; per-file cost is linear in total entropy bytes.
     */
-  private val multimodalGifAnim = Q.scratch("gifanim")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"a_$k%02d.gif"),
-            graft.operators.Multimodal.gifAnimBytes(
-              16 + (k % 10), 10 + (k % 5), 2 + (k % 4)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalGifAnim = Q.media("gifanim")(
+    k => graft.operators.Multimodal.gifAnimBytes(
+      16 + (k % 10), 10 + (k % 5), 2 + (k % 4)),
+    (s, scanned) => {
       graft.operators.Multimodal.gifAnimAll(scanned).toDF()
         .select(col("fileId").as("file_id"), col("nFrames").as("n_frames"),
           col("width"), col("height"), col("totalPx").as("total_px"),
@@ -13609,21 +12964,8 @@ object CurationQueries {
     */
   private val qualityRankNormalize = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("score_fp",
           floor(lit(1000000.0) / (lit(1.0) + exp(-col("z")))).cast("long"))
         .select(col("doc_id"), col("source"), col("score_fp"))
@@ -13650,22 +12992,9 @@ object CurationQueries {
             .as("flipped_off"))
         .orderBy(col("source"))
     },
-    Some("""WITH f AS (
+    Some(s"""WITH $qualityZSqlCtes, scored AS (
            |  SELECT doc_id, source,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t))) as double)
-           |      / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), scored AS (
-           |  SELECT doc_id, source,
-           |    cast(floor(1000000.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks
-           |      + 0.35 * mean_len + 4.0 * stop_ratio - 6.0 * digit_ratio))))
-           |      as bigint) AS score_fp
+           |    cast(floor(1000000.0 / (1.0 + exp(-z))) as bigint) AS score_fp
            |  FROM f
            |), sc AS (
            |  SELECT source, score_fp, count(*) AS c
@@ -14580,21 +13909,8 @@ object CurationQueries {
     */
   private val pipelineOrderAudit = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("pass",
           floor(lit(1000000.0) / (lit(1.0) + exp(-col("z")))).cast("long") >= 500000L)
         .select(col("doc_id"), col("source"), sha2(col("text"), 256).as("sha"),
@@ -14623,22 +13939,9 @@ object CurationQueries {
           coalesce(col("rescued"), lit(0L)).as("rescued"))
         .orderBy(col("source"))
     },
-    Some("""WITH f AS (
+    Some(s"""WITH $qualityZSqlCtes, scored AS (
            |  SELECT doc_id, source, sha256(text) AS sha,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t))) as double)
-           |      / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), scored AS (
-           |  SELECT doc_id, source, sha,
-           |    cast(floor(1000000.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks
-           |      + 0.35 * mean_len + 4.0 * stop_ratio - 6.0 * digit_ratio))))
-           |      as bigint) >= 500000 AS pass
+           |    cast(floor(1000000.0 / (1.0 + exp(-z))) as bigint) >= 500000 AS pass
            |  FROM f
            |), g AS (
            |  SELECT sha, min(doc_id) AS min_doc,
@@ -14867,25 +14170,18 @@ object CurationQueries {
     * shuffle) into a digest-keyed count — byte volume never shuffles,
     * only 64-char digests.
     */
-  private val multimodalPixelDedup = Q.scratch("pixeldedup")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val (w, h) = (16 + (k % 10), 10 + (k % 5))
-          val bytes = (k / 10) match {
-            // same decoded pixels three ways: one truecolor encode, one
-            // fully-opaque RGBA re-encode, one palette re-encode
-            case 0 => graft.operators.Multimodal.pngPaletteAsRgbBytes(w, h, 1)
-            case 1 => graft.operators.Multimodal.pngPaletteAsRgbaBytes(w, h, 9)
-            case _ => graft.operators.Multimodal.pngPaletteBytes(w, h, 6)
-          }
-          java.nio.file.Files.write(p.resolve(f"d_$k%02d.png"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "d_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalPixelDedup = Q.media("pixeldedup")(
+    k => {
+      val (w, h) = (16 + (k % 10), 10 + (k % 5))
+      (k / 10) match {
+        // same decoded pixels three ways: one truecolor encode, one
+        // fully-opaque RGBA re-encode, one palette re-encode
+        case 0 => graft.operators.Multimodal.pngPaletteAsRgbBytes(w, h, 1)
+        case 1 => graft.operators.Multimodal.pngPaletteAsRgbaBytes(w, h, 9)
+        case _ => graft.operators.Multimodal.pngPaletteBytes(w, h, 6)
+      }
+    },
+    (s, scanned) => {
       graft.operators.Multimodal.pngPixelIdAll(scanned).toDF()
         .groupBy(col("pixelSha"))
         .agg(min(col("fileId")).as("canonical_file"),
@@ -14994,21 +14290,8 @@ object CurationQueries {
     */
   private val sampleUncertainty = Q(
     (s, dir) => {
-      val stopArr = "array('the','a','of','and','to','in','is','it')"
       TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr(s"size(filter(toks, t -> array_contains($stopArr, t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("score_fp",
           floor(lit(1000000.0) / (lit(1.0) + exp(-col("z")))).cast("long"))
         .withColumn("margin_e6", abs(col("score_fp") - lit(500000L)))
@@ -15016,22 +14299,9 @@ object CurationQueries {
         .orderBy(col("margin_e6"), col("doc_id"))
         .limit(50)
     },
-    Some("""WITH f AS (
+    Some(s"""WITH $qualityZSqlCtes, scored AS (
            |  SELECT doc_id, source,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t))) as double)
-           |      / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), scored AS (
-           |  SELECT doc_id, source,
-           |    cast(floor(1000000.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks
-           |      + 0.35 * mean_len + 4.0 * stop_ratio - 6.0 * digit_ratio))))
-           |      as bigint) AS score_fp
+           |    cast(floor(1000000.0 / (1.0 + exp(-z))) as bigint) AS score_fp
            |  FROM f
            |)
            |SELECT doc_id, source, score_fp,
@@ -15974,20 +15244,7 @@ object CurationQueries {
   private val qualityKrippendorff = Q(
     (s, dir) => {
       val scored = TS(s, dir, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("mean_len",
-          (length(col("text")).cast("double") - (col("n_toks") - 1.0)) / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr("size(filter(toks, t -> array_contains(" +
-            "array('the','a','of','and','to','in','is','it'), t)))").cast("double")
-            / col("n_toks"))
-        .withColumn("digit_ratio",
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .cast("double") / length(col("text")).cast("double"))
-        .withColumn("z",
-          lit(-1.5) + lit(0.004) * col("n_toks") + lit(0.35) * col("mean_len")
-            + lit(4.0) * col("stop_ratio") - lit(6.0) * col("digit_ratio"))
+        .transform(qualityZ)
         .withColumn("r1", round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6) >= 0.5)
         .withColumn("quality", round(
           size(array_distinct(col("toks"))).cast("double") /
@@ -16018,24 +15275,12 @@ object CurationQueries {
         .select(col("n_units"), col("keep_r1"), col("keep_r2"), col("keep_r3"),
           col("discord"), col("do_e6"), col("de_e6"), col("alpha_e6"))
     },
-    Some("""WITH f AS (
-           |  SELECT text, string_split(text, ' ') AS toks,
-           |    cast(len(string_split(text, ' ')) as double) AS n_toks,
-           |    (cast(len(text) as double) - (len(string_split(text, ' ')) - 1.0))
-           |      / len(string_split(text, ' ')) AS mean_len,
-           |    cast(len(list_filter(string_split(text, ' '),
-           |      t -> list_contains(['the','a','of','and','to','in','is','it'], t)))
-           |      as double) / len(string_split(text, ' ')) AS stop_ratio,
-           |    cast(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) as double)
-           |      / cast(len(text) as double) AS digit_ratio
-           |  FROM documents
-           |), sc AS (
+    Some(s"""WITH $qualityZSqlCtes, sc AS (
            |  SELECT
-           |    (round(1.0 / (1.0 + exp(-(-1.5 + 0.004 * n_toks + 0.35 * mean_len
-           |      + 4.0 * stop_ratio - 6.0 * digit_ratio))), 6) >= 0.5) AS r1,
+           |    (round(1.0 / (1.0 + exp(-z)), 6) >= 0.5) AS r1,
            |    round(cast(len(list_distinct(toks)) as double) / len(toks) * 0.5
            |      + least(cast(len(toks) as double) / 100, 1.0) * 0.5, 6) AS quality,
-           |    regexp_matches(text, '(^| )(dup|slow)( |$)') AS bad
+           |    regexp_matches(text, '(^| )(dup|slow)( |$$)') AS bad
            |  FROM f
            |), thr AS (
            |  SELECT round(quantile_cont(quality, 0.25), 6) AS q25 FROM sc
@@ -16839,18 +16084,9 @@ object CurationQueries {
     * file, rows out are response-sized; payload bytes never shuffle.
     * On a cluster the gzip members are the split points.
     */
-  private val multimodalWarcText = Q.scratch("warctext")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"wt_$k%02d.warc.gz"),
-            graft.operators.Multimodal.warcHtmlBytes(k, 3 + (k % 3)))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "wt_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalWarcText = Q.media("warctext")(
+    k => graft.operators.Multimodal.warcHtmlBytes(k, 3 + (k % 3)),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -16985,21 +16221,12 @@ object CurationQueries {
     * string + 8 longs per file leave the map side; payload bytes never
     * shuffle (the census never touches mdat content).
     */
-  private val multimodalMp4Boxes = Q.scratch("mp4box")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"m_$k%02d.mp4"),
-            graft.operators.Multimodal.mp4Bytes(
-              k, 1 + k % 3, 1000L * (1 + k % 4), 1500L + 137L * k,
-              64 + 16 * k, largesize = k % 4 == 0,
-              toEof = k % 4 != 0 && k % 5 == 4))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "m_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalMp4Boxes = Q.media("mp4box")(
+    k => graft.operators.Multimodal.mp4Bytes(
+      k, 1 + k % 3, 1000L * (1 + k % 4), 1500L + 137L * k,
+      64 + 16 * k, largesize = k % 4 == 0,
+      toEof = k % 4 != 0 && k % 5 == 4),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -17050,23 +16277,15 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — marker walk + two IFDs per
     * file, no pixel decode, no shuffle of payload bytes.
     */
-  private val multimodalExif = Q.scratch("exif")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val w = 16 + (k % 3) * 8
-          val h = 8 + (k % 2) * 8
-          val bytes =
-            if (k % 6 == 5) graft.operators.Multimodal.jpegBytes(w, h)
-            else graft.operators.Multimodal.exifJpegBytes(
-              w, h, littleEndian = k % 2 == 0, orientation = 1 + k % 8)
-          java.nio.file.Files.write(p.resolve(f"x_$k%02d.jpg"), bytes)
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "x_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalExif = Q.media("exif")(
+    k => {
+      val w = 16 + (k % 3) * 8
+      val h = 8 + (k % 2) * 8
+      if (k % 6 == 5) graft.operators.Multimodal.jpegBytes(w, h)
+      else graft.operators.Multimodal.exifJpegBytes(
+        w, h, littleEndian = k % 2 == 0, orientation = 1 + k % 8)
+    },
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -17117,19 +16336,10 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one header walk per file, six
     * small values out; audio bytes never shuffle.
     */
-  private val multimodalMp3Frames = Q.scratch("mp3f")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"a_$k%02d.mp3"),
-            graft.operators.Multimodal.mp3Bytes(
-              k, 5 + k % 6, k % 3, id3v2 = k % 2 == 0, id3v1 = k % 3 == 0))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "a_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalMp3Frames = Q.media("mp3f")(
+    k => graft.operators.Multimodal.mp3Bytes(
+      k, 5 + k % 6, k % 3, id3v2 = k % 2 == 0, id3v1 = k % 3 == 0),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -17510,20 +16720,11 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — fixed-offset header reads per
     * file, payload bytes never touched or shuffled.
     */
-  private val multimodalWebpInfo = Q.scratch("webp")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          java.nio.file.Files.write(p.resolve(f"w_$k%02d.webp"),
-            graft.operators.Multimodal.webpBytes(
-              k % 3, 16 + k, 10 + k % 7, alpha = k % 2 == 0,
-              anim = k % 4 == 0, tag = k))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "w_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalWebpInfo = Q.media("webp")(
+    k => graft.operators.Multimodal.webpBytes(
+      k % 3, 16 + k, 10 + k % 7, alpha = k % 2 == 0,
+      anim = k % 4 == 0, tag = k),
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]
@@ -17568,21 +16769,14 @@ object CurationQueries {
     * Scale: the parseAll narrow shape — one metadata walk per file,
     * six longs out; audio bytes never shuffle.
     */
-  private val multimodalFlacInfo = Q.scratch("flac")(
-    (s, dir, base) => {
-      val p = java.nio.file.Paths.get(base)
-      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
-        .foreach { r =>
-          val k = r.getInt(0)
-          val rate = Seq(44100, 48000, 96000)(k % 3)
-          java.nio.file.Files.write(p.resolve(f"f_$k%02d.flac"),
-            graft.operators.Multimodal.flacBytes(
-              rate, 1 + k % 3, if (k % 2 == 0) 16 else 24,
-              88200L + 997L * k, k))
-        }
-      val scanned = s.read.format("binaryFile").load(base)
-        .select(regexp_extract(col("path"), "f_(\\d+)\\.", 1).cast("long")
-          .as("file_id"), col("content"))
+  private val multimodalFlacInfo = Q.media("flac")(
+    k => {
+      val rate = Seq(44100, 48000, 96000)(k % 3)
+      graft.operators.Multimodal.flacBytes(
+        rate, 1 + k % 3, if (k % 2 == 0) 16 else 24,
+        88200L + 997L * k, k)
+    },
+    (s, scanned) => {
       import s.implicits._
       scanned.select(col("file_id"), col("content"))
         .as[(Long, Array[Byte])]

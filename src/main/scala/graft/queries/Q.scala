@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, regexp_extract}
 import graft.Tables
 
 /** One declared capability from SURVEY.md §2: a Spark query plus (when the
@@ -55,6 +56,27 @@ object Q {
       val base = scratchDir(prefix)
       try fn(s, dir, base).localCheckpoint(true)
       finally scratchDelete(base)
+    }, oracle)
+
+  /** A query over generated media files, built on [[scratch]]: one file
+    * per `n_nationkey` of the fixture's `nation` table, `gen(key)` its
+    * bytes, named `<prefix>-<key>.bin`, scanned back with `binaryFile`
+    * and handed to `decode` as `(file_id: long, content: binary)`.
+    */
+  def media(prefix: String)(
+      gen: Int => Array[Byte],
+      decode: (SparkSession, DataFrame) => DataFrame,
+      oracle: Option[String]): Q =
+    scratch(prefix)((s, dir, base) => {
+      val p = java.nio.file.Paths.get(base)
+      T(s, dir, "nation").select(col("n_nationkey")).collect() // 25-row dim
+        .foreach { r =>
+          val k = r.getInt(0)
+          java.nio.file.Files.write(p.resolve(f"$prefix-$k%02d.bin"), gen(k))
+        }
+      decode(s, s.read.format("binaryFile").load(base)
+        .select(regexp_extract(col("path"), "-(\\d+)\\.bin$", 1).cast("long")
+          .as("file_id"), col("content")))
     }, oracle)
 
   /** A fresh `graft-<prefix>-*` directory under `java.io.tmpdir`. Queries

@@ -8,7 +8,10 @@ import graft.plans.GraftExtensions
   * [[SparkEntry.engineFor]] has run on it; source guards keep session
   * building, function registration and task-metric listening each in
   * one place, scratch trees in [[graft.queries.Q]], fixture tables in
-  * [[Tables]] and fixture views in [[graft.queries.Q.sql]].
+  * [[Tables]] and fixture views in [[graft.queries.Q.sql]]; and each
+  * decision the query catalog shares (generated-media scans, the
+  * quality model, the media oracles, the fixture writers) has one
+  * definition.
   */
 class SessionShapeSpec extends SparkSpec {
 
@@ -71,5 +74,39 @@ class SessionShapeSpec extends SparkSpec {
     assert("createOrReplaceTempView".r
       .findAllIn(SourceText.main("graft/queries/Q.scala")).size == 1,
       "Q.sql is the one place a query binds fixture views")
+  }
+
+  /** Occurrences of `pattern` in the code of every main file. */
+  private def mainCount(pattern: String): Int =
+    SourceText.main.values.map(java.util.regex.Pattern.quote(pattern).r.findAllIn(_).size).sum
+
+  test("source guard: generated media files are written and scanned only by Q.media") {
+    val scan = "read.format(\"binaryFile\")"
+    // besides Q.media: the binaryFile source test (one file per nation
+    // name) and the header census, whose 26th file is not nation-keyed
+    assert(SourceText.mainFilesWith(scan) == Set("graft/queries/Q.scala",
+      "graft/queries/SourcesQueries.scala", "graft/queries/NorthStarQueries.scala"))
+    assert(mainCount(scan) == 3)
+    assert(mainCount("Q.media(") == 38)
+  }
+
+  test("source guard: the quality model and the media oracles have one definition each") {
+    // the logistic model's linear term, Spark and DuckDB
+    assert(mainCount("lit(0.004) * col(") == 1)
+    assert(mainCount("0.004 * n_toks") == 1)
+    // the image fixtures' geometry, pixel expansion and JPEG DC closed form
+    assert(mainCount("cast(16 + n_nationkey as bigint) AS w") == 1)
+    assert(mainCount("unnest(generate_series(0, w - 1)) AS x FROM g") == 1)
+    assert(mainCount("16 * (((7 * j) % 32) - 16)") == 1)
+    // the PNG and JPEG decode selects
+    assert(mainCount("Multimodal.pngStatsAll(") == 1)
+    assert(mainCount("Multimodal.jpegDcAll(") == 1)
+  }
+
+  test("source guard: one PNG chunk writer and one JPEG bit writer") {
+    val mm = SourceText.main("graft/operators/Multimodal.scala")
+    assert("def chunk\\(".r.findAllIn(mm).size == 1)
+    assert("def putBits\\(".r.findAllIn(mm).size == 1)
+    assert(SourceText.mainFilesWith("def putBits(") == Set("graft/operators/Multimodal.scala"))
   }
 }

@@ -183,6 +183,47 @@ class TransportSpec extends SparkSpec {
     } finally { sock.close(); server.close() }
   }
 
+  test("rpc: a reply past MaxFrameBytes is a typed error and the connection serves on") {
+    val e = new Engine(spark)
+    // 68 rows of 1 MiB random bytes: deflate cannot bring the reply
+    // under the 64 MiB frame limit
+    e.register("huge")((s, _, _) => {
+      import s.implicits._
+      s.range(0, 68, 1, 4).map { i =>
+        val b = new Array[Byte](1 << 20)
+        new scala.util.Random(i).nextBytes(b)
+        b
+      }.toDF("b")
+    })
+    e.register("tiny")((s, _, _) => { import s.implicits._; Seq(("a", 1)).toDF("k", "n") })
+    val server = new Transport.RpcServer(e)
+    val sock = new java.net.Socket(InetAddress.getLoopbackAddress, server.port)
+    try {
+      sock.setSoTimeout(120000)
+      val in = new DataInputStream(sock.getInputStream)
+      val out = new DataOutputStream(sock.getOutputStream)
+      def call(sn: String, fun: String): Map[Any, Any] = {
+        val pkt = Map[Any, Any]("ctx" -> Map[Any, Any]("domain" -> "d", "ip" -> "", "uid" -> "u"),
+          "fun" -> fun, "args" -> Vector.empty[Any])
+        val frame = MsgPack.encode(Map[Any, Any]("sn" -> sn, "pkt" -> pkt))
+        out.writeInt(frame.length); out.write(frame); out.flush()
+        val n = in.readInt()
+        assert(n <= Transport.MaxFrameBytes, s"reply frame of $n bytes")
+        val b = new Array[Byte](n); in.readFully(b)
+        MsgPack.decode(b).asInstanceOf[Map[Any, Any]]
+      }
+      val big = call("s1", "huge")
+      assert(big("sn") == "s1")
+      val why = big("payload").toString
+      assert(why.startsWith("error: result too large: ") &&
+        why.endsWith(s" bytes > ${Transport.MaxFrameBytes}"), why)
+      val ok = call("s2", "tiny")
+      assert(ok("sn") == "s2")
+      assert(MsgPack.decode(ok("payload").asInstanceOf[Array[Byte]]) ==
+        Vector(Map[Any, Any]("k" -> "a", "n" -> 1L)))
+    } finally { sock.close(); server.close() }
+  }
+
   test("rpc rejects a reply under a foreign sequence number") {
     // rogue server: replies with a different sn (processor.ts:113,126)
     val server = new ServerSocket(0, 5, InetAddress.getLoopbackAddress)
