@@ -409,7 +409,7 @@ object Tables {
     * registration silently creates EMPTY tables — observed r11 with
     * `target/benchsf1`, where every corpus query then ran on zero rows.
     */
-  private def canon(dir: String): String =
+  private[graft] def canon(dir: String): String =
     java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
 
   /** Catalog name of fixture `name` registered from `dir` — the one

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expressions.GramHash
+import graft.streaming.Replay
 
 import Q.{T, TS}
 
@@ -450,8 +451,6 @@ object CurationQueries {
     */
   private val pipelineDeltaStream = Q.scratch("deltastream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val inDir = s"$base/in"
       val docs = T(s, dir, "documents")
       val neu = docs
         .where(col("doc_id") % 10 =!= 3)
@@ -465,12 +464,10 @@ object CurationQueries {
       def tag(df: DataFrame, side: String) = df.select(
         col("doc_id"), col("source"), lit(side).as("side"),
         sha2(col("text"), 256).as("h"), t0.as("ts"))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-      // one file per micro-batch, mod-times ascending so the file source
+      // one file per micro-batch, landed in order so the file source
       // processes the sentinel LAST (a sentinel-first order would set
       // the watermark past the data and drop every record as late)
-      val now = System.currentTimeMillis()
-      val parts: Seq[(String, DataFrame)] = Seq(
+      val parts = Seq(
         "old" -> tag(docs, "old"),
         "new0" -> tag(neu.where(col("doc_id") % 2 === 0), "new"),
         "new1" -> tag(neu.where(col("doc_id") % 2 === 1), "new"),
@@ -478,32 +475,10 @@ object CurationQueries {
           docs.limit(1).select(lit(-1L).as("doc_id"), lit("tick").as("source"),
             col("lang"), col("n_chars"), lit("").as("text")),
           "tick").withColumn("ts", lit("2024-01-02 00:00:00").cast("timestamp")))
-      parts.zipWithIndex.foreach { case ((name, df), i) =>
-        val part = s"$base/part-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dest = java.nio.file.Paths.get(s"$inDir/$name.parquet")
-        java.nio.file.Files.move(f.toPath, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(now + i * 1000L))
-      }
-      val tagged = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("side", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("h", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType))))
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      val q = graft.streaming.DocumentStreams.snapshotDelta(tagged)
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.land(s"$base/in", parts)
+      Replay.drain(graft.streaming.DocumentStreams.snapshotDelta(
+          Replay.stream(s, s"$base/in", parts.head._2.schema)),
+        s"$base/out", s"$base/cp")
       s.read.parquet(s"$base/out")
         .groupBy(col("status"), col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1502,39 +1477,17 @@ object CurationQueries {
     */
   private val simIvfAppendStream = Q.scratch("ivfappendstream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
       val cellSorted = ivfCellSortedExpr(v)
       val cb = NorthStarQueries.pqCodebook(v)
       val store = s"$base/store"
-      val land = s"$base/land"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(land))
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        val cond =
-          if (p == 0) col("vec_id") % 10 =!= 0 else col("vec_id") % 10 === 0
-        v.where(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(s"$land/batch$p.parquet")
-        java.nio.file.Files.move(f.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + p * 60000L)
-      }
-      val stream = s.readStream.schema(v.schema)
-        .option("maxFilesPerTrigger", "1").parquet(land)
-      val streamVc = stream
-        .withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
-      def run(): Unit = {
-        val q = ivfPqIndexRows(streamVc, cb)
-          .writeStream.format("parquet")
-          .option("path", store)
-          .option("checkpointLocation", s"$base/cp")
-          .partitionBy("cell")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      Replay.land(s"$base/land", Seq(
+        "batch0" -> v.where(col("vec_id") % 10 =!= 0),
+        "batch1" -> v.where(col("vec_id") % 10 === 0)))
+      val rows = ivfPqIndexRows(Replay.stream(s, s"$base/land", v.schema)
+        .withColumn("cell", expr(s"element_at($cellSorted, 1).j")), cb)
+      def run(): Unit =
+        Replay.drain(rows, store, s"$base/cp", partitionBy = Seq("cell"))
       run()
       val n1 = s.read.parquet(store).count()
       run() // replay from the same checkpoint over the same input
@@ -5351,28 +5304,12 @@ object CurationQueries {
     */
   private val dedupLinesStream = Q.scratch("linestream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val inDir = s"$base/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val docs = T(s, dir, "documents")
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        docs.where(col("doc_id") % 2 === p)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(f.toPath,
-          java.nio.file.Paths.get(s"$inDir/batch$p.parquet"))
-      }
-      val gated = graft.streaming.DocumentStreams.lineBoilerplateGate(
-        s.readStream.schema(graft.Tables.schemas("documents"))
-          .option("maxFilesPerTrigger", "1").parquet(inDir))
-      val q = gated.writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.land(s"$base/in", Seq(0, 1).map(p =>
+        s"batch$p" -> docs.where(col("doc_id") % 2 === p)))
+      Replay.drain(graft.streaming.DocumentStreams.lineBoilerplateGate(
+          Replay.stream(s, s"$base/in", graft.Tables.schemas("documents"))),
+        s"$base/out", s"$base/cp")
       s.read.parquet(s"$base/out")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_lines"),
@@ -6860,30 +6797,13 @@ object CurationQueries {
     */
   private val sketchHhStream = Q.scratch("hhstream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
       val K = 32
-      val inDir = s"$base/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val docs = TS(s, dir, "documents")
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        docs.where(pmod(col("doc_id"), lit(2)) === p)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(s"$inDir/batch$p.parquet")
-        java.nio.file.Files.move(f.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + p * 60000L)
-      }
-      val stream = s.readStream.schema(graft.Tables.schemas("documents"))
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      val q = graft.streaming.DocumentStreams.heavyHittersMonitor(stream, K)
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.land(s"$base/in", Seq(0, 1).map(p =>
+        s"batch$p" -> docs.where(pmod(col("doc_id"), lit(2)) === p)))
+      Replay.drain(graft.streaming.DocumentStreams.heavyHittersMonitor(
+          Replay.stream(s, s"$base/in", graft.Tables.schemas("documents")), K),
+        s"$base/out", s"$base/cp")
       val emitted = s.read.parquet(s"$base/out")
       val lastSeq = emitted.groupBy(col("shard")).agg(max(col("seq")).as("mseq"))
       val cand = emitted.join(lastSeq, Seq("shard"))
@@ -7373,31 +7293,15 @@ object CurationQueries {
     */
   private val corpusTrajectoriesStream = Q.scratch("trajstream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val inDir = s"$base/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val ev = T(s, dir, "events")
       val cut = ev.agg(expr("percentile(cast(ts as double), 0.5)"))
         .first().getDouble(0)
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        val sel = if (p == 0) ev.where(col("ts").cast("double") <= cut)
-                  else ev.where(col("ts").cast("double") > cut)
-        sel.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(f.toPath,
-          java.nio.file.Paths.get(s"$inDir/batch$p.parquet"))
-      }
-      val gated = graft.streaming.EventStreams.trajectoryGate(
-        s.readStream.schema(s.read.parquet(inDir).schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir))
-      val q = gated.writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.land(s"$base/in", Seq(
+        "batch0" -> ev.where(col("ts").cast("double") <= cut),
+        "batch1" -> ev.where(col("ts").cast("double") > cut)))
+      Replay.drain(graft.streaming.EventStreams.trajectoryGate(
+          Replay.stream(s, s"$base/in", ev.schema)),
+        s"$base/out", s"$base/cp")
       s.read.parquet(s"$base/out")
         .orderBy(col("user_id"), col("session_idx"))
     },
@@ -10048,32 +9952,12 @@ object CurationQueries {
     */
   private val textFtsStream = Q.scratch("ftsstream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val inDir = s"$base/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val docs = T(s, dir, "documents")
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        docs.where(col("doc_id") % 2 === p)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(s"$inDir/batch$p.parquet")
-        java.nio.file.Files.move(f.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + p * 60000L)
-      }
-      def run(): Unit = {
-        val q = graft.streaming.DocumentStreams.ftsMatch(
-            s.readStream.schema(graft.Tables.schemas("documents"))
-              .option("maxFilesPerTrigger", "1").parquet(inDir))
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/cp")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      Replay.land(s"$base/in", Seq(0, 1).map(p =>
+        s"batch$p" -> docs.where(col("doc_id") % 2 === p)))
+      val matches = graft.streaming.DocumentStreams.ftsMatch(
+        Replay.stream(s, s"$base/in", graft.Tables.schemas("documents")))
+      def run(): Unit = Replay.drain(matches, s"$base/out", s"$base/cp")
       run()
       val n1 = s.read.parquet(s"$base/out").count()
       run() // replay from the same checkpoint over the same input
@@ -11315,6 +11199,21 @@ object CurationQueries {
        |  SELECT k, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs
        |)""".stripMargin
 
+  /** [[imagePixelsSqlCtes]] under the TIFF fixtures' pixel values: `px`
+    * holds (k, w, h, r, gg, bb); every third key is the grayscale
+    * ramp `(3x + 7y) mod 256`, the rest the RGB gradient. */
+  private val tiffPixelsSqlCtes: String =
+    s"""$imagePixelsSqlCtes, px AS (
+       |  SELECT k, w, h,
+       |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
+       |         ELSE (7 * x + 3 * y) % 256 END AS r,
+       |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
+       |         ELSE (x + 2 * y) % 256 END AS gg,
+       |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
+       |         ELSE (5 * x + y) % 256 END AS bb
+       |  FROM ps
+       |)""".stripMargin
+
   /** Closed-form channel sums of the RGB gradient fixtures (pixel (x, y)
     * is (7x+3y, x+2y, 5x+y) mod 256): `sm` holds (k, w, h, n_px, sum_r,
     * sum_g, sum_b). */
@@ -11344,6 +11243,35 @@ object CurationQueries {
         (col("width") * col("height")).as("n_px"),
         col("sumR").as("sum_r"), col("sumG").as("sum_g"),
         col("sumB").as("sum_b"), col("valid"))
+
+  /** `decode` over every scanned file, its five longs under `names`, plus
+    * `valid`: a file `decode` rejects is one row of zeros with
+    * `valid = false`. The fold of every media query whose decoder
+    * yields five longs. */
+  private def decodeOrInvalid(s: SparkSession, scanned: DataFrame,
+      decode: Array[Byte] => Option[(Long, Long, Long, Long, Long)],
+      names: Seq[String]): DataFrame = {
+    import s.implicits._
+    scanned.select(col("file_id"), col("content"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.map { case (id, bytes) =>
+        decode(bytes) match {
+          case Some((a, b, c, d, e)) => (id, a, b, c, d, e, true)
+          case None => (id, 0L, 0L, 0L, 0L, 0L, false)
+        }
+      })
+      .toDF("file_id" +: names :+ "valid": _*)
+  }
+
+  /** Pixel sums of a decoder yielding (width, height, sum_r, sum_g,
+    * sum_b), under [[pngStats]]'s columns. */
+  private def pixelSums(s: SparkSession, scanned: DataFrame,
+      decode: Array[Byte] => Option[(Long, Long, Long, Long, Long)]): DataFrame =
+    decodeOrInvalid(s, scanned, decode,
+        Seq("width", "height", "sum_r", "sum_g", "sum_b"))
+      .select(col("file_id"), col("width"), col("height"),
+        (col("width") * col("height")).as("n_px"),
+        col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
 
   /** IMAGE-STATS extraction over real PNG pixels — the deepest tier of
     * the multimodal family (headers → audio samples → image pixels):
@@ -11587,24 +11515,8 @@ object CurationQueries {
     */
   private val multimodalBmpStats = Q.media("bmpstats")(
     k => graft.operators.Multimodal.bmpGradientBytes(16 + k, 10 + (k % 7)),
-    (s, scanned) => {
-      import s.implicits._
-      scanned.select(col("file_id"), col("content"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, bytes) =>
-            graft.operators.Multimodal.bmpPixelStats(bytes) match {
-              case Some((w, h, r, g, bl)) => (id, w, h, r, g, bl, true)
-              case None => (id, 0L, 0L, 0L, 0L, 0L, false)
-            }
-          }
-        }
-        .toDF("file_id", "width", "height", "sum_r", "sum_g", "sum_b", "valid")
-        .withColumn("n_px", col("width") * col("height"))
-        .select(col("file_id"), col("width"), col("height"), col("n_px"),
-          col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
-        .orderBy(col("file_id"))
-    },
+    (s, scanned) => pixelSums(s, scanned,
+      graft.operators.Multimodal.bmpPixelStats).orderBy(col("file_id")),
     Some(gradientSumsSql))
 
   /** ARCHIVE CENSUS (ZIP + TAR) — the container a delivered corpus
@@ -11721,22 +11633,10 @@ object CurationQueries {
     */
   private val multimodalWarcCensus = Q.media("warcs")(
     k => graft.operators.Multimodal.warcBytes(k, 2 + (k % 5)),
-    (s, scanned) => {
-      import s.implicits._
-      scanned.select(col("file_id"), col("content"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, bytes) =>
-            graft.operators.Multimodal.warcCensus(bytes) match {
-              case Some((nm, nr, nresp, pb, ps)) => (id, nm, nr, nresp, pb, ps, true)
-              case None => (id, 0L, 0L, 0L, 0L, 0L, false)
-            }
-          }
-        }
-        .toDF("file_id", "n_members", "n_records", "n_response",
-          "payload_bytes", "payload_sum", "valid")
-        .orderBy(col("file_id"))
-    },
+    (s, scanned) => decodeOrInvalid(s, scanned,
+        graft.operators.Multimodal.warcCensus, Seq("n_members", "n_records",
+          "n_response", "payload_bytes", "payload_sum"))
+      .orderBy(col("file_id")),
     Some("""WITH g AS (
            |  SELECT cast(n_nationkey as bigint) AS k,
            |    cast(2 + (n_nationkey % 5) as bigint) AS nr
@@ -11783,34 +11683,9 @@ object CurationQueries {
     k => graft.operators.Multimodal.tiffGradientBytes(
       16 + k, 10 + (k % 7), bigEndian = k % 2 == 1,
       gray = k % 3 == 0, rowsPerStrip = 4 + (k % 5)),
-    (s, scanned) => {
-      import s.implicits._
-      scanned.select(col("file_id"), col("content"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, bytes) =>
-            graft.operators.Multimodal.tiffPixelStats(bytes) match {
-              case Some((w, h, r, g, bl)) => (id, w, h, r, g, bl, true)
-              case None => (id, 0L, 0L, 0L, 0L, 0L, false)
-            }
-          }
-        }
-        .toDF("file_id", "width", "height", "sum_r", "sum_g", "sum_b", "valid")
-        .withColumn("n_px", col("width") * col("height"))
-        .select(col("file_id"), col("width"), col("height"), col("n_px"),
-          col("sum_r"), col("sum_g"), col("sum_b"), col("valid"))
-        .orderBy(col("file_id"))
-    },
-    Some(s"""WITH $imagePixelsSqlCtes, px AS (
-           |  SELECT k, w, h,
-           |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
-           |         ELSE (7 * x + 3 * y) % 256 END AS r,
-           |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
-           |         ELSE (x + 2 * y) % 256 END AS gg,
-           |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
-           |         ELSE (5 * x + y) % 256 END AS bb
-           |  FROM ps
-           |), sm AS (
+    (s, scanned) => pixelSums(s, scanned,
+      graft.operators.Multimodal.tiffPixelStats).orderBy(col("file_id")),
+    Some(s"""WITH $tiffPixelsSqlCtes, sm AS (
            |  SELECT k, w, h, cast(count(*) as bigint) AS n_px,
            |    cast(sum(r) as bigint) AS sum_r,
            |    cast(sum(gg) as bigint) AS sum_g,
@@ -11996,36 +11871,15 @@ object CurationQueries {
       16 + k, 10 + (k % 7), bigEndian = k % 2 == 1,
       gray = k % 3 == 0, rowsPerStrip = 4 + (k % 5),
       lzw = k % 2 == 0),
-    (s, scanned) => {
-      import s.implicits._
-      scanned.select(col("file_id"), col("content"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, bytes) =>
-            graft.operators.Multimodal.tiffPixelStats(bytes) match {
-              case Some((w, h, r, g, bl)) => (id, w, h, r, g, bl, true)
-              case None => (id, 0L, 0L, 0L, 0L, 0L, false)
-            }
-          }
-        }
-        .toDF("file_id", "width", "height", "sum_r", "sum_g", "sum_b", "valid")
-        .withColumn("compression",
-          expr("cast(CASE WHEN file_id % 2 = 0 THEN 5 ELSE 1 END as bigint)"))
-        .select(col("file_id"), col("compression"), col("width"),
-          col("height"), col("sum_r"), col("sum_g"), col("sum_b"),
-          col("valid"))
-        .orderBy(col("file_id"))
-    },
-    Some(s"""WITH $imagePixelsSqlCtes, px AS (
-           |  SELECT k, w, h,
-           |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
-           |         ELSE (7 * x + 3 * y) % 256 END AS r,
-           |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
-           |         ELSE (x + 2 * y) % 256 END AS gg,
-           |    CASE WHEN k % 3 = 0 THEN (3 * x + 7 * y) % 256
-           |         ELSE (5 * x + y) % 256 END AS bb
-           |  FROM ps
-           |), sm AS (
+    (s, scanned) => pixelSums(s, scanned,
+        graft.operators.Multimodal.tiffPixelStats)
+      .withColumn("compression",
+        expr("cast(CASE WHEN file_id % 2 = 0 THEN 5 ELSE 1 END as bigint)"))
+      .select(col("file_id"), col("compression"), col("width"),
+        col("height"), col("sum_r"), col("sum_g"), col("sum_b"),
+        col("valid"))
+      .orderBy(col("file_id")),
+    Some(s"""WITH $tiffPixelsSqlCtes, sm AS (
            |  SELECT k, w, h, cast(sum(r) as bigint) AS sum_r,
            |    cast(sum(gg) as bigint) AS sum_g,
            |    cast(sum(bb) as bigint) AS sum_b
@@ -14472,9 +14326,6 @@ object CurationQueries {
     */
   private val tsCusumStream = Q.scratch("cusumstream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val inDir = s"$base/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val ev = T(s, dir, "events")
       val bl = ev
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
@@ -14488,32 +14339,14 @@ object CurationQueries {
         expr("unix_micros(date_trunc('hour', min(ts)))").as("lo"),
         expr("unix_micros(date_trunc('hour', max(ts)))").as("hi")).head()
       val mid = (mm.getLong(0) + mm.getLong(1)) / 2
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        val cond =
-          if (p == 0) expr(s"unix_micros(date_trunc('hour', ts)) < ${mid}L")
-          else expr(s"unix_micros(date_trunc('hour', ts)) >= ${mid}L")
-        ev.where(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(s"$inDir/batch$p.parquet")
-        java.nio.file.Files.move(f.toPath, dst)
-        // FileStreamSource orders files by modification time; the two
-        // moves can land in the same mtime granularity, so pin strictly
-        // increasing mtimes to make batch order deterministic.
-        dst.toFile.setLastModified(1700000000000L + p * 60000L)
-      }
-      val stream = s.readStream
-        .schema(graft.Tables.eventsSchema(graft.Tables.TsEncoding.Native(false)))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-      val q = graft.streaming.EventStreams.cusumMonitor(stream, bl)
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val hourUs = "unix_micros(date_trunc('hour', ts))"
+      Replay.land(s"$base/in", Seq(
+        "batch0" -> ev.where(expr(s"$hourUs < ${mid}L")),
+        "batch1" -> ev.where(expr(s"$hourUs >= ${mid}L"))))
+      Replay.drain(graft.streaming.EventStreams.cusumMonitor(
+          Replay.stream(s, s"$base/in",
+            graft.Tables.eventsSchema(graft.Tables.TsEncoding.Native(false))), bl),
+        s"$base/out", s"$base/cp")
       val res = s.read.parquet(s"$base/out")
       val muDf = {
         import s.implicits._

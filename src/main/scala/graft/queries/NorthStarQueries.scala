@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Replay
+
 import Q.{T, TS}
 
 /** SURVEY.md §2C — LLM-data-pipeline operators over `documents` and
@@ -276,8 +278,6 @@ object NorthStarQueries {
     */
   private val dedupIncrementalStream = Q.scratch("incstream")(
     (s, dir, base) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val inDir = s"$base/in"
       val d = T(s, dir, "documents")
         .withColumn("existing",
           expr("cast(substring(source, 4) as int)") % 2 === 0)
@@ -285,27 +285,13 @@ object NorthStarQueries {
       val arriving = d.where(!col("existing")).drop("existing")
       // two-batch fixture split by doc_id parity: each half lands as one
       // file; in-stream duplicates straddle the boundary either way
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-      Seq(0, 1).foreach { p =>
-        val part = s"$base/part$p"
-        arriving.where(col("doc_id") % 2 === p)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(f.toPath,
-          java.nio.file.Paths.get(s"$inDir/batch$p.parquet"))
-      }
+      Replay.land(s"$base/in", Seq(0, 1).map(p =>
+        s"batch$p" -> arriving.where(col("doc_id") % 2 === p)))
       val stream = graft.streaming.DocumentStreams.incrementalGate(
-        s.readStream.schema(graft.Tables.schemas("documents"))
-          .option("maxFilesPerTrigger", "1").parquet(inDir),
+        Replay.stream(s, s"$base/in", graft.Tables.schemas("documents")),
         existing)
-      val q = stream.select(col("content_hash"), col("n_chars"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.drain(stream.select(col("content_hash"), col("n_chars")),
+        s"$base/out", s"$base/cp")
       s.read.parquet(s"$base/out")
         .orderBy(col("content_hash"))
     },

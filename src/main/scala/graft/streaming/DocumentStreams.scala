@@ -60,8 +60,9 @@ object DocumentStreams {
     * `ns_corpus_shard_manifest` writer: each arriving document gets its
     * deterministic hash shard (content-hash based, since a stream
     * cannot rank a global order) and lands in shard-partitioned parquet
-    * through the file sink. EXACTLY-ONCE is the file sink's
-    * `_spark_metadata` transaction log: a replay from the same
+    * through the file sink, run to completion by [[Replay.drain]].
+    * EXACTLY-ONCE is the file sink's `_spark_metadata` transaction log:
+    * a replay from the same
     * checkpoint must not duplicate rows, and readers that honor the log
     * (any Spark parquet read of the directory) see each committed batch
     * once — asserted in StreamingSpec by re-running the same checkpoint
@@ -72,19 +73,12 @@ object DocumentStreams {
     * manifests derivable by the batch manifest query at any time.
     */
   def shardAppend(
-      docs: DataFrame, outDir: String, checkpoint: String, shards: Int = 8):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs
-      .withColumn("shard_id",
+      docs: DataFrame, outDir: String, checkpoint: String, shards: Int = 8): Unit =
+    Replay.drain(
+      docs.withColumn("shard_id",
         pmod(expr("cast(conv(substring(md5(concat('shard:', cast(doc_id as string))), 1, 8), 16, 10) as bigint)"),
-          lit(shards.toLong)))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("shard_id")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          lit(shards.toLong))),
+      outDir, checkpoint, partitionBy = Seq("shard_id"))
 
   /** One heavy-hitter monitor shard's state: the carried Misra-Gries
     * counter map (<= k entries) and the emission sequence number.

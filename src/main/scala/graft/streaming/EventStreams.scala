@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.Tables
@@ -47,9 +47,9 @@ object EventStreams {
       // a redefinition over now-present data resolves any earlier
       // assumption for this dir — drop it so later unrelated failures
       // are not misattributed to encoding drift here
-      assumedEncodings.remove(canonDir(dir))
+      assumedEncodings.remove(Tables.canon(dir))
     } else {
-      assumedEncodings.put(canonDir(dir), enc)
+      assumedEncodings.put(Tables.canon(dir), enc)
       System.err.println(
         s"[graft] readEvents($dir): landing dir is empty; assuming the " +
           s"current fixture generation's ts encoding ($enc). If a " +
@@ -65,9 +65,6 @@ object EventStreams {
     */
   private val assumedEncodings =
     new java.util.concurrent.ConcurrentHashMap[String, Tables.TsEncoding]()
-
-  private def canonDir(dir: String): String =
-    java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
 
   /** Re-detect the footer encoding of every assumed-encoding dir; if one
     * now disagrees with what the stream definition baked in, raise the
@@ -395,18 +392,6 @@ object EventStreams {
     }
     df.sparkSession.table(sinkName).collect()
   }
-
-  /** Parquet streaming sink (append, checkpointed) — the streaming write
-    * path; used by tests and as the durable-output analog of the
-    * reference's result delivery.
-    */
-  def parquetSink(df: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
 
   // --- Streaming trajectory assembly (ns_corpus_trajectories twin) ----
 

@@ -52,6 +52,26 @@ class ScratchSpec extends SparkSpec {
     assert(df.collect().map(_.getLong(0)).toSeq == (0L until 5L))
   }
 
+  test("Q.scratch deletes its tree when the streamed gate throws") {
+    import org.apache.spark.sql.functions.expr
+    import graft.streaming.Replay
+    val before = trees("spec-replay")
+    var base = ""
+    val q = Q.scratch("spec-replay")((s, _, b) => {
+      base = b
+      Replay.land(s"$b/in", Seq("batch0" -> s.range(5).toDF()))
+      Replay.drain(Replay.stream(s, s"$b/in", s.range(1).schema)
+          .select(expr("if(id = 3, raise_error('gate failed'), id)").as("id")),
+        s"$b/out", s"$b/cp")
+      s.read.parquet(s"$b/out")
+    }, None)
+    val e = intercept[Exception](q.fn(spark, sfDir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("gate failed")), e)
+    assert(base.nonEmpty && !Files.exists(Paths.get(base)))
+    assert(trees("spec-replay") == before)
+  }
+
   Seq("src_csv_roundtrip", "src_bucketed_join").foreach { name =>
     test(s"two concurrent $name calls on one engine both succeed with the same rows") {
       val e = SparkEntry.engineFor(spark)

@@ -103,6 +103,21 @@ class SessionShapeSpec extends SparkSpec {
     assert(mainCount("Multimodal.jpegDcAll(") == 1)
   }
 
+  test("source guard: one file-stream replay path") {
+    // every parquet stream sink drains through Replay.drain; the memory
+    // sink of runAvailableNow serves the complete- and update-mode specs
+    assert(SourceText.mainFilesWith("writeStream") ==
+      Set("graft/streaming/Replay.scala", "graft/streaming/EventStreams.scala"))
+    assert(mainCount("writeStream") == 2)
+    assert(SourceText.mainFilesWith("maxFilesPerTrigger") ==
+      Set("graft/streaming/Replay.scala"))
+    // batches land, with pinned mtimes, only through Replay.land
+    Seq("setLastModified", "listFiles()").foreach(p =>
+      assert(!SourceText.mainFilesWith(p).exists(_.startsWith("graft/queries/")), p))
+    // the five-long decode-or-invalid fold of the media decoders
+    assert(mainCount("case None => (id, 0L, 0L, 0L, 0L, 0L, false)") == 1)
+  }
+
   test("source guard: one PNG chunk writer and one JPEG bit writer") {
     val mm = SourceText.main("graft/operators/Multimodal.scala")
     assert("def chunk\\(".r.findAllIn(mm).size == 1)

@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, Replay}
 
 /** Stream-batch replay equivalence (SURVEY.md §5.2.5): each streaming
   * query run with Trigger.AvailableNow over the fixture files must
@@ -27,6 +29,36 @@ class StreamingSpec extends SparkSpec {
       Paths.get(s"$in/events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     (in, cp)
+  }
+
+  test("Replay.land: batches stream in landing order and only their files remain") {
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import spark.implicits._
+    val in = s"$workDir/replay-in-${System.nanoTime()}"
+    val out = s"$workDir/replay-out-${System.nanoTime()}"
+    val cp = s"$workDir/replay-cp-${System.nanoTime()}"
+    // names in reverse lexical order, so a name-ordered read would
+    // consume "a" (ids 30..59) first
+    Replay.land(in, Seq("c" -> spark.range(0, 10).toDF(),
+      "b" -> spark.range(10, 30).toDF(), "a" -> spark.range(30, 60).toDF()))
+    val ls = Files.list(Paths.get(in))
+    val landed = try ls.iterator.asScala.toSeq finally ls.close()
+    assert(landed.map(_.getFileName.toString).toSet ==
+      Set("a.parquet", "b.parquet", "c.parquet"))
+    val mtimes = Seq("c", "b", "a").map(n => new java.io.File(s"$in/$n.parquet").lastModified)
+    assert(mtimes == mtimes.sorted && mtimes.distinct.size == 3, s"mtimes=$mtimes")
+    // one row per micro-batch: its sequence number and its max(id)
+    val perBatch = Replay.stream(spark, in, spark.range(1).schema).as[Long]
+      .groupByKey(_ => 0)
+      .flatMapGroupsWithState[Long, (Long, Long)](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) { (_, ids, st) =>
+        val seq = st.getOption.getOrElse(0L) + 1
+        st.update(seq)
+        Iterator.single((seq, ids.max))
+      }
+    Replay.drain(perBatch, out, cp)
+    val got = spark.read.parquet(out).as[(Long, Long)].collect().sortBy(_._1)
+    assert(got.toSeq == Seq((1L, 9L), (2L, 29L), (3L, 59L)), s"got=${got.toSeq}")
   }
 
   test("document ingest stream: re-crawled duplicates dropped, gate matches batch") {
@@ -155,8 +187,7 @@ class StreamingSpec extends SparkSpec {
     val (in, cp) = freshDirs()
     val out = s"$workDir/out-${System.nanoTime()}"
     val stream = EventStreams.dedupEvents(EventStreams.readEvents(spark, in))
-    val q = EventStreams.parquetSink(stream, out, cp).start()
-    q.awaitTermination()
+    Replay.drain(stream, out, cp)
     val written = spark.read.parquet(out).count()
     val batch = Tables.load(spark, sfDir, "events").dropDuplicates("event_id").count()
     assert(written == batch)
@@ -283,7 +314,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val in = s"$workDir/delta-in-${System.nanoTime()}"
     val cp = s"$workDir/delta-cp-${System.nanoTime()}"
-    Files.createDirectories(Paths.get(in))
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val tick = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
     // old snapshot: docs 1,2,3; new crawl: 1 unchanged, 2 changed,
@@ -297,23 +327,12 @@ class StreamingSpec extends SparkSpec {
       // unmatched old-side group finalizes as `removed`; its own window
       // never flushes, so it must not appear in the output
       "tick" -> Seq((-1L, "tick", "tick", "", tick)))
-    val now = System.currentTimeMillis()
-    files.zipWithIndex.foreach { case ((name, rows), i) =>
-      val part = s"$in-part-$name"
-      rows.toDF("doc_id", "source", "side", "h", "ts")
-        .coalesce(1).write.mode("overwrite").parquet(part)
-      val f = new java.io.File(part).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = Paths.get(s"$in/$name.parquet")
-      Files.move(f.toPath, dest)
-      // ascending mod times: the file source must process the sentinel
-      // LAST or the early watermark drops the data as late
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(now + i * 1000L))
-    }
-    val tagged = spark.readStream
-      .schema(spark.read.parquet(s"$in/old.parquet").schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
+    // landed in order: the file source must process the sentinel LAST
+    // or the early watermark drops the data as late
+    Replay.land(in, files.map { case (name, rows) =>
+      name -> rows.toDF("doc_id", "source", "side", "h", "ts") })
+    val tagged = Replay.stream(spark, in,
+      spark.read.parquet(s"$in/old.parquet").schema)
     val got = EventStreams.runAvailableNow(
       DocumentStreams.snapshotDelta(tagged), "delta_sink", "append", cp)
       .map(r => (r.getLong(0), r.getString(2))).sortBy(_._1)
@@ -343,39 +362,25 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val in = s"$workDir/late-in-${System.nanoTime()}"
     val cp = s"$workDir/late-cp-${System.nanoTime()}"
-    Files.createDirectories(Paths.get(in))
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val now = System.currentTimeMillis()
-    def land(name: String, idx: Int,
-             rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]): Unit = {
-      val part = s"$in-part-$name"
+    def batch(rows: (Long, java.sql.Timestamp, Long, String, Double, String)*) =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(part)
-      val f = new java.io.File(part).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = Paths.get(s"$in/$name.parquet")
-      Files.move(f.toPath, dest)
-      // ascending mod times: the file source processes b1 before b2
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(now + idx * 1000L))
-    }
-    // batch 1 (on time): max event time 13:00 -> watermark 12:30 after it
-    land("b1", 0, Seq(
-      (1L, ts("2024-01-01 12:00:00"), 1L, "click", 1.0, "{}"),
-      (2L, ts("2024-01-01 12:15:00"), 1L, "click", 1.0, "{}"),
-      (3L, ts("2024-01-01 13:00:00"), 1L, "click", 1.0, "{}")))
-    // batch 2 (on time): advances the watermark to 12:40
-    land("b2", 1, Seq(
-      (5L, ts("2024-01-01 13:10:00"), 2L, "click", 1.0, "{}")))
-    // batch 3 (out of order): event 4 is 100 min behind the watermark.
-    // Late-record filtering uses the PREVIOUS batch's watermark
-    // (SPARK-40925 two-watermark semantics), which by batch 3 is 12:30
-    // — so this row, and only this row, must be dropped and counted.
-    land("b3", 2, Seq(
-      (4L, ts("2024-01-01 11:00:00"), 2L, "click", 1.0, "{}")))
+    // landed in order: the file source processes b1, b2, b3
+    Replay.land(in, Seq(
+      // batch 1 (on time): max event time 13:00 -> watermark 12:30 after it
+      "b1" -> batch(
+        (1L, ts("2024-01-01 12:00:00"), 1L, "click", 1.0, "{}"),
+        (2L, ts("2024-01-01 12:15:00"), 1L, "click", 1.0, "{}"),
+        (3L, ts("2024-01-01 13:00:00"), 1L, "click", 1.0, "{}")),
+      // batch 2 (on time): advances the watermark to 12:40
+      "b2" -> batch((5L, ts("2024-01-01 13:10:00"), 2L, "click", 1.0, "{}")),
+      // batch 3 (out of order): event 4 is 100 min behind the watermark.
+      // Late-record filtering uses the PREVIOUS batch's watermark
+      // (SPARK-40925 two-watermark semantics), which by batch 3 is 12:30
+      // — so this row, and only this row, must be dropped and counted.
+      "b3" -> batch((4L, ts("2024-01-01 11:00:00"), 2L, "click", 1.0, "{}"))))
     val events = Tables.normalizeTs(
-      spark.readStream.schema(Tables.footer(spark, in, "events").schema)
-        .option("maxFilesPerTrigger", "1").parquet(in))
+      Replay.stream(spark, in, Tables.footer(spark, in, "events").schema))
     val dropped = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -463,11 +468,8 @@ class StreamingSpec extends SparkSpec {
     (1L to 40L).map(i => (i, s"doc body $i", "en", "crawl", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(in)
-    def runOnce(): Unit = {
-      val q = DocumentStreams.shardAppend(
-        DocumentStreams.readDocuments(spark, in), out, cp).start()
-      q.awaitTermination()
-    }
+    def runOnce(): Unit =
+      DocumentStreams.shardAppend(DocumentStreams.readDocuments(spark, in), out, cp)
     runOnce()
     val first = spark.read.parquet(out)
     assert(first.count() == 40)
@@ -540,13 +542,10 @@ class StreamingSpec extends SparkSpec {
     // min instead of restarting the detector. Two hour-disjoint files,
     // one type; crafted counts (3, 3, 9) around mu make the final
     // statistic provably different from a restarted batch-2 detector.
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStreams
     import spark.implicits._
     val in = s"$workDir/cusum-in-${System.nanoTime()}"
     val out = s"$workDir/cusum-out-${System.nanoTime()}"
     val cp = s"$workDir/cusum-cp-${System.nanoTime()}"
-    Files.createDirectories(Paths.get(in))
     val hourUs = 3600L * 1000000L
     def evts(hour: Long, n: Int) = (0 until n).map(i =>
       (hour * 100 + i, new java.sql.Timestamp(hour * 3600000L), 1L, "view",
@@ -555,28 +554,16 @@ class StreamingSpec extends SparkSpec {
     // chosen so the carried positive prefix (S=1e6 after batch 1, min
     // still the EMPTY prefix 0) makes batch 2's statistic 4.5e6, while
     // a restarted detector would read only dev(9)=3.5e6
-    Seq(evts(0, 9) ++ evts(1, 3), evts(2, 9)).zipWithIndex.foreach {
-      case (rows, p) =>
-        val part = s"$workDir/cusum-part-$p-${System.nanoTime()}"
+    Replay.land(in, Seq(evts(0, 9) ++ evts(1, 3), evts(2, 9)).zipWithIndex.map {
+      case (rows, p) => s"batch$p" ->
         rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = Paths.get(s"$in/batch$p.parquet")
-        Files.move(f.toPath, dst)
-        // FileStreamSource orders by mtime — pin strictly increasing
-        dst.toFile.setLastModified(1700000000000L + p * 60000L)
-    }
+    })
     // fixed offline baseline (the monitor's contract): mu = 5e6
     val mu = 5000000L
-    val stream = spark.readStream
-      .schema(Tables.eventsSchema(Tables.TsEncoding.Native(false)))
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = EventStreams.cusumMonitor(stream, Map("view" -> (mu, mu / 10)))
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val stream = Replay.stream(spark, in,
+      Tables.eventsSchema(Tables.TsEncoding.Native(false)))
+    Replay.drain(EventStreams.cusumMonitor(stream, Map("view" -> (mu, mu / 10))),
+      out, cp)
     val rows = spark.read.parquet(out)
       .as[EventStreams.CusumOut].collect().sortBy(_.seq)
     assert(rows.map(_.seq).toSeq == Seq(1L, 2L), s"one row per batch: ${rows.toSeq}")
@@ -601,41 +588,27 @@ class StreamingSpec extends SparkSpec {
     // folded it twice (as x=2 and x=3) and drifted from the batch
     // detector. Also proves an event type ABSENT from the baseline map
     // is skipped, not fatal.
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStreams
     import spark.implicits._
     val in = s"$workDir/cusum-mid-in-${System.nanoTime()}"
     val out = s"$workDir/cusum-mid-out-${System.nanoTime()}"
     val cp = s"$workDir/cusum-mid-cp-${System.nanoTime()}"
-    Files.createDirectories(Paths.get(in))
     def evts(hour: Long, n: Int, typ: String = "view") = (0 until n).map(i =>
       (hour * 1000 + i + (if (typ == "view") 0 else 500),
         new java.sql.Timestamp(hour * 3600000L + i * 60000L), 1L, typ,
         1.0, "{}"))
     // batch 0: hour 0 (x=4) + the FIRST 2 rows of hour 1 + an unknown
     // type; batch 1: hour 1's REMAINING 3 rows + hour 2 (x=6)
-    Seq(evts(0, 4) ++ evts(1, 2) ++ evts(0, 1, "unknown_type"),
+    Replay.land(in, Seq(evts(0, 4) ++ evts(1, 2) ++ evts(0, 1, "unknown_type"),
         evts(1, 3).map { case (id, ts, u, t, v, p) => (id + 100, ts, u, t, v, p) }
-          ++ evts(2, 6)).zipWithIndex.foreach {
-      case (rows, p) =>
-        val part = s"$workDir/cusum-mid-part-$p-${System.nanoTime()}"
+          ++ evts(2, 6)).zipWithIndex.map {
+      case (rows, p) => s"batch$p" ->
         rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val dst = Paths.get(s"$in/batch$p.parquet")
-        val f = new java.io.File(part).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        Files.move(f.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + p * 60000L)
-    }
+    })
     val mu = 5000000L // dev(x) = x*1e6 - 5.5e6
-    val stream = spark.readStream
-      .schema(Tables.eventsSchema(Tables.TsEncoding.Native(false)))
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = EventStreams.cusumMonitor(stream, Map("view" -> (mu, mu / 10)))
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val stream = Replay.stream(spark, in,
+      Tables.eventsSchema(Tables.TsEncoding.Native(false)))
+    Replay.drain(EventStreams.cusumMonitor(stream, Map("view" -> (mu, mu / 10))),
+      out, cp)
     val rows = spark.read.parquet(out)
       .as[EventStreams.CusumOut].collect().sortBy(_.seq)
     assert(rows.forall(_.event_type == "view"),
