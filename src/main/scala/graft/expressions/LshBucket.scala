@@ -8,9 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
-/** Fused 8-bit sign-LSH bucket over an `array<float>` embedding — the
-  * codegen'd native form of [[graft.queries.NorthStarQueries.lshBucketExpr]]'s
-  * HOF chain (`aggregate(zip_with(embedding, plane_j, ...)) >= 0` per bit).
+/** Fused 8-bit sign-LSH bucket over an `array<float>` embedding, which
+  * every query buckets with. It replaced the HOF chain
+  * (`aggregate(zip_with(embedding, plane_j, ...)) >= 0` per bit) that
+  * [[graft.queries.NorthStarQueries.lshBucketExpr]] keeps as
+  * `LshBucketSpec`'s reference.
   *
   * Bit j of the bucket is set iff
   * `sum_i sign(j,i) * floor(embedding[i] * 2^40) >= 0`, with the exact

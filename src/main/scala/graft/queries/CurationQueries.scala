@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.expressions.GramHash
 import graft.streaming.Replay
 
+import NorthStarQueries.{bucketed, bucketedSqlCte, cosine, cosineSql, knnEdges, knnSqlCte,
+  scaledDotSql}
 import Q.{T, TS}
 
 /** SURVEY.md §2C, round-10 additions — corpus-curation operators a
@@ -1595,8 +1597,7 @@ object CurationQueries {
       e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("nrm").as("nc"))
         .join(broadcast(q), col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .where(col("cos") >= 0.25)
         .groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_in_range"),
@@ -1614,15 +1615,14 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
             |), q AS (
             |  SELECT vec_id AS q_id, embedding AS q_emb, nrm AS nq
             |  FROM e WHERE vec_id < 16
             |), p AS (
             |  SELECT q.q_id,
-            |    cast(${NorthStarQueries.scaledDotSql("q.q_emb", "c.embedding")} as double)
-            |      / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q.q_emb", "c.embedding"), "q.nq", "c.nrm")} AS cos
             |  FROM q JOIN e c ON q.q_id <> c.vec_id
             |), a AS (
             |  SELECT q_id, count(*) AS n_in_range,
@@ -2178,32 +2178,24 @@ object CurationQueries {
     * re-rank the candidate union to a top-5. Complements IVF-PQ: same
     * recall-recovery goal, graph structure instead of coarse cells.
     *
-    * Scale: the edge list is the [[NorthStarQueries]] k-NN build
-    * (bucket-equi join, rank-pruned to 3 edges/vector) and is built once
-    * (localCheckpoint); per query the candidate set is bucket mates +
-    * 3x that many hop-2 rows — corpus-independent for bounded buckets;
-    * the exact re-rank joins candidate ids back to the corpus by key.
+    * Scale: the edge list is [[NorthStarQueries.knnEdges]] (bucket-equi
+    * join, rank-pruned to 3 edges/vector) over the checkpointed bucketed
+    * frame, itself checkpointed for the hop-2 join; per query the
+    * candidate set is bucket mates + 3x that many hop-2 rows —
+    * corpus-independent for bounded buckets; the exact re-rank joins
+    * candidate ids back to the corpus by key.
     * Ranking uses the exact integer `scaled_dot` grid, ties to c_id, so
     * both engines agree bitwise.
     */
   private val simKnn2Hop = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          expr("lsh_bucket(embedding)").as("bucket"),
-          expr("scaled_dot(embedding, embedding)").as("nrm"))
-        .localCheckpoint(true)
-      val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("bucket"), col("nrm").as("a_nrm"))
-      val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
-      val wE = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b, col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
-        .withColumn("rn", row_number().over(wE))
-        .where(col("rn") <= 3)
-        .select(col("a_id"), col("b_id"))
+      // five consumers: both sides of the edge build, the query set, the
+      // hop-1 seeds and the re-rank join
+      val e = bucketed(s, dir).localCheckpoint(true)
+      // one consumer (the hop-2 join), checkpointed anyway: built inline,
+      // the edge job moves from construct into exec, and exec grew by
+      // 37% and 109% in two sf0.01 runs with construct + exec no lower
+      val edges = knnEdges(e).select(col("a_id"), col("b_id"))
         .localCheckpoint(true)
       val q = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -2223,28 +2215,13 @@ object CurationQueries {
         .join(e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("nrm").as("nc")), Seq("c_id"))
         .join(broadcast(q.select(col("q_id"), col("q_emb"), col("nq"))), Seq("q_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rnk", row_number().over(wTop))
         .where(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("c_id"), round(col("cos"), 6).as("cos_sim"))
         .orderBy(col("q_id"), col("rnk"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding, ${NorthStarQueries.lshBucketSql} AS bucket,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), p AS (
-            |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-            |    cast(${NorthStarQueries.scaledDotSql("a.embedding", "b.embedding")} as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
-            |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-            |), edges AS (
-            |  SELECT a_id, b_id FROM (
-            |    SELECT a_id, b_id,
-            |      row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
-            |    FROM p) WHERE rn <= 3
-            |), q AS (
+    Some(s"""WITH $bucketedSqlCte, $knnSqlCte, q AS (
             |  SELECT vec_id AS q_id, embedding AS q_emb, nrm AS nq, bucket AS q_bucket
             |  FROM e WHERE vec_id < 16
             |), seeds AS (
@@ -2252,15 +2229,14 @@ object CurationQueries {
             |    ON q.q_bucket = e.bucket AND q.q_id <> e.vec_id
             |), hop2 AS (
             |  SELECT s.q_id, ed.b_id AS c_id FROM seeds s
-            |  JOIN edges ed ON s.c_id = ed.a_id
+            |  JOIN knn ed ON s.c_id = ed.a_id
             |  WHERE s.q_id <> ed.b_id
             |), cand AS (
             |  SELECT DISTINCT q_id, c_id FROM (
             |    SELECT * FROM seeds UNION ALL SELECT * FROM hop2)
             |), scored AS (
             |  SELECT cand.q_id, cand.c_id,
-            |    cast(${NorthStarQueries.scaledDotSql("q.q_emb", "c.embedding")} as double)
-            |      / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q.q_emb", "c.embedding"), "q.nq", "c.nrm")} AS cos
             |  FROM cand
             |  JOIN e c ON c.vec_id = cand.c_id
             |  JOIN q ON q.q_id = cand.q_id
@@ -2688,10 +2664,7 @@ object CurationQueries {
     */
   private val embedLabelProp = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding"),
-          expr("lsh_bucket(embedding)").as("bucket"),
-          expr("scaled_dot(embedding, embedding)").as("nrm"))
+      val e = bucketed(s, dir, "label")
       val u = e.where(col("vec_id") % 4 =!= 0)
         .select(col("vec_id").as("a_id"), col("label").as("label_true"),
           col("embedding").as("a_emb"), col("bucket"), col("nrm").as("a_nrm"))
@@ -2701,8 +2674,7 @@ object CurationQueries {
           col("nrm").as("b_nrm"))
       val w = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
       val k3 = u.join(seeds, col("bucket") === col("bucket_b"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(a_emb, b_emb)"), "a_nrm", "b_nrm"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 3)
         .select(col("a_id"), col("seed_label"),
@@ -2731,15 +2703,9 @@ object CurationQueries {
           coalesce(col("label_pred") === col("label_true"), lit(false)).as("correct"))
         .orderBy(col("vec_id"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, label, embedding,
-            |    ${NorthStarQueries.lshBucketSql} AS bucket,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), ed AS (
+    Some(s"""WITH $bucketedSqlCte, ed AS (
             |  SELECT a.vec_id AS a_id, b.vec_id AS b_id, b.label AS seed_label,
-            |    cast(${NorthStarQueries.scaledDotSql("a.embedding", "b.embedding")} as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("a.embedding", "b.embedding"), "a.nrm", "b.nrm")} AS cos
             |  FROM e a JOIN e b ON a.bucket = b.bucket
             |  WHERE a.vec_id % 4 <> 0 AND b.vec_id % 4 = 0
             |), k AS (
@@ -2811,8 +2777,7 @@ object CurationQueries {
                qSel: DataFrame, cSel: DataFrame): DataFrame = {
         val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
         broadcast(qSel).join(cSel, col("q_id") =!= col("c_id"))
-          .withColumn("cos", expr(s"scaled_dot($qEmb, $cEmb)").cast("double") /
-            (sqrt(col(qN).cast("double")) * sqrt(col(cN).cast("double"))))
+          .withColumn("cos", cosine(expr(s"scaled_dot($qEmb, $cEmb)"), qN, cN))
           .withColumn("rn", row_number().over(w))
           .where(col("rn") <= 5)
           .select(col("q_id"), col("c_id"))
@@ -2840,13 +2805,12 @@ object CurationQueries {
             |  SELECT vec_id, embedding, embedding[1:16] AS emb16 FROM embeddings
             |), e AS (
             |  SELECT vec_id, embedding, emb16,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm,
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm,
             |    ${dotSqlK("emb16", "emb16", 16)} AS nrm16
             |  FROM e0
             |), pf AS (
             |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-            |    cast(${NorthStarQueries.scaledDotSql("q.embedding", "c.embedding")} as double)
-            |      / (sqrt(cast(q.nrm as double)) * sqrt(cast(c.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q.embedding", "c.embedding"), "q.nrm", "c.nrm")} AS cos
             |  FROM e q, e c WHERE q.vec_id < 16 AND q.vec_id <> c.vec_id
             |), rf AS (
             |  SELECT q_id, c_id,
@@ -2855,8 +2819,7 @@ object CurationQueries {
             |), ff AS (SELECT q_id, c_id FROM rf WHERE rn <= 5
             |), pt AS (
             |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-            |    cast(${dotSqlK("q.emb16", "c.emb16", 16)} as double)
-            |      / (sqrt(cast(q.nrm16 as double)) * sqrt(cast(c.nrm16 as double))) AS cos
+            |    ${cosineSql(dotSqlK("q.emb16", "c.emb16", 16), "q.nrm16", "c.nrm16")} AS cos
             |  FROM e q, e c WHERE q.vec_id < 16 AND q.vec_id <> c.vec_id
             |), rt AS (
             |  SELECT q_id, c_id,
@@ -3928,8 +3891,7 @@ object CurationQueries {
             .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
               col("nrm").as("cen_nrm"))), lit(true))
         .withColumn("cen_cos",
-          expr("scaled_dot(embedding, cen_emb)").cast("double") /
-            (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+          cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
         .where(col("arn") === 1)
         .groupBy(col("cen_id").as("cell"))
@@ -3946,7 +3908,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
             |), cen AS (
             |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
@@ -3957,9 +3919,7 @@ object CurationQueries {
             |                       ORDER BY cen_cos DESC, cen_id) AS arn
             |  FROM (
             |    SELECT e.vec_id, cen.cen_id,
-            |      cast(${NorthStarQueries.scaledDotSql("e.embedding", "cen.cen_emb")}
-            |        as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(cen.cen_nrm as double)))
+            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
             |        AS cen_cos
             |    FROM e, cen)
             |), cells AS (
@@ -4136,6 +4096,10 @@ object CurationQueries {
     }.mkString("array(", ",", ")")
   }
 
+  /** DuckDB dot of the 16-long JL projections `p` of aliases `a`, `b`. */
+  private def jlDotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, 16), k -> $a.p[k] * $b.p[k]))"
+
   /** Johnson-Lindenstrauss random projection 64 -> 16 dims with a
     * retrieval-quality audit: recall@5 of projected-space search vs
     * exact full-dim search, plus the per-query mean cosine DISTORTION
@@ -4187,8 +4151,7 @@ object CurationQueries {
         .join(e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("nrm").as("nc")), col("q_id") =!= col("c_id"))
         .withColumn("cos",
-          expr("scaled_dot(q_emb, c_emb)").cast("double") /
-            (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+          cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 5)
         .select(col("q_id"), col("c_id"), col("cos").as("cosf"))
@@ -4198,10 +4161,9 @@ object CurationQueries {
             col("p").as("qp"), col("nrmp").as("nqp")))
         .join(e.select(col("vec_id").as("c_id"), col("p").as("cp"),
           col("nrmp").as("ncp")), col("q_id") =!= col("c_id"))
-        .withColumn("cos",
-          expr("""cast(aggregate(zip_with(qp, cp, (x, y) -> x * y),
-                 |  cast(0 as bigint), (a, x) -> a + x) as double)""".stripMargin) /
-            (sqrt(col("nqp").cast("double")) * sqrt(col("ncp").cast("double"))))
+        .withColumn("cos", cosine(
+          expr("aggregate(zip_with(qp, cp, (x, y) -> x * y), cast(0 as bigint), " +
+            "(a, x) -> a + x)"), "nqp", "ncp"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 5)
         .select(col("q_id"), col("c_id"))
@@ -4212,10 +4174,9 @@ object CurationQueries {
         .join(broadcast(full), Seq("q_id"))
         .join(e.select(col("vec_id").as("c_id"), col("p").as("cp2"),
           col("nrmp").as("nc2")), Seq("c_id"))
-        .withColumn("cosj",
-          expr("""cast(aggregate(zip_with(qp2, cp2, (x, y) -> x * y),
-                 |  cast(0 as bigint), (a, x) -> a + x) as double)""".stripMargin) /
-            (sqrt(col("nq2").cast("double")) * sqrt(col("nc2").cast("double"))))
+        .withColumn("cosj", cosine(
+          expr("aggregate(zip_with(qp2, cp2, (x, y) -> x * y), cast(0 as bigint), " +
+            "(a, x) -> a + x)"), "nq2", "nc2"))
         .withColumn("d_e6",
           expr("cast(floor(abs(cosf - cosj) * 1000000.0) as bigint)"))
         .groupBy(col("q_id"))
@@ -4232,7 +4193,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm,
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm,
             |    list_transform(generate_series(0, 15), j ->
             |      list_sum(list_transform(generate_series(1, 64), i ->
             |        (1 - 2 * (cast('0x' || substr(md5('jl:' || j || ':' || i), 1, 1)
@@ -4245,9 +4206,7 @@ object CurationQueries {
             |  FROM e
             |), pf AS (
             |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-            |    cast(${NorthStarQueries.scaledDotSql("q.embedding", "c.embedding")}
-            |      as double)
-            |      / (sqrt(cast(q.nrm as double)) * sqrt(cast(c.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q.embedding", "c.embedding"), "q.nrm", "c.nrm")} AS cos
             |  FROM e2 q, e2 c WHERE q.vec_id < 16 AND q.vec_id <> c.vec_id
             |), ff AS (
             |  SELECT q_id, c_id, cos AS cosf FROM (
@@ -4256,9 +4215,7 @@ object CurationQueries {
             |    FROM pf) WHERE rn <= 5
             |), pj AS (
             |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-            |    cast(list_sum(list_transform(generate_series(1, 16), k ->
-            |      q.p[k] * c.p[k])) as double)
-            |      / (sqrt(cast(q.nrmp as double)) * sqrt(cast(c.nrmp as double))) AS cos
+            |    ${cosineSql(jlDotSql("q", "c"), "q.nrmp", "c.nrmp")} AS cos
             |  FROM e2 q, e2 c WHERE q.vec_id < 16 AND q.vec_id <> c.vec_id
             |), fj AS (
             |  SELECT q_id, c_id FROM (
@@ -4271,10 +4228,7 @@ object CurationQueries {
             |  GROUP BY f.q_id
             |), dd AS (
             |  SELECT f.q_id,
-            |    cast(floor(abs(f.cosf -
-            |      cast(list_sum(list_transform(generate_series(1, 16), k ->
-            |        a.p[k] * b.p[k])) as double)
-            |        / (sqrt(cast(a.nrmp as double)) * sqrt(cast(b.nrmp as double))))
+            |    cast(floor(abs(f.cosf - ${cosineSql(jlDotSql("a", "b"), "a.nrmp", "b.nrmp")})
             |      * 1000000.0) as bigint) AS d_e6
             |  FROM ff f JOIN e2 a ON a.vec_id = f.q_id
             |            JOIN e2 b ON b.vec_id = f.c_id
@@ -4327,8 +4281,7 @@ object CurationQueries {
             .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
               col("nrm").as("cen_nrm"))), lit(true))
         .withColumn("cen_cos",
-          expr("scaled_dot(embedding, cen_emb)").cast("double") /
-            (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+          cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
@@ -4341,8 +4294,7 @@ object CurationQueries {
       val cand = probes.join(assigned,
           col("cell") === col("cell_c") && col("q_id") =!= col("c_id") &&
             col("lq") === col("lc"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rnk", row_number().over(wTop))
         .select(col("q_id"), col("c_id"), col("rnk"))
         .localCheckpoint(true)
@@ -4356,8 +4308,7 @@ object CurationQueries {
         .join(e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("nrm").as("nc"), col("label").as("lc")),
           col("q_id") =!= col("c_id") && col("lq") === col("lc"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rnk", row_number().over(wTop))
         .where(col("rnk") <= 3)
         .select(col("q_id"), col("c_id"))
@@ -4378,7 +4329,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding, label,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
             |), cen AS (
             |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
@@ -4388,9 +4339,7 @@ object CurationQueries {
             |                               ORDER BY cen_cos DESC, cen_id) AS arn
             |  FROM (
             |    SELECT e.vec_id, e.embedding, e.label, e.nrm, cen.cen_id,
-            |      cast(${NorthStarQueries.scaledDotSql("e.embedding", "cen.cen_emb")}
-            |        as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(cen.cen_nrm as double)))
+            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
             |        AS cen_cos
             |    FROM e, cen)
             |), assigned AS (
@@ -4404,8 +4353,7 @@ object CurationQueries {
             |), cand AS (
             |  SELECT q.q_id, c.c_id,
             |    row_number() OVER (PARTITION BY q.q_id ORDER BY
-            |      cast(${NorthStarQueries.scaledDotSql("q.q_emb", "c.c_emb")} as double)
-            |        / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nc as double))) DESC,
+            |      ${cosineSql(scaledDotSql("q.q_emb", "c.c_emb"), "q.nq", "c.nc")} DESC,
             |      c.c_id) AS rnk
             |  FROM probes q JOIN assigned c
             |    ON q.cell = c.cell_c AND q.q_id <> c.c_id AND q.lq = c.lc
@@ -4418,9 +4366,7 @@ object CurationQueries {
             |  SELECT q_id, c_id FROM (
             |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
             |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            |        cast(${NorthStarQueries.scaledDotSql("q.embedding", "c.embedding")}
-            |          as double)
-            |          / (sqrt(cast(q.nrm as double)) * sqrt(cast(c.nrm as double))) DESC,
+            |        ${cosineSql(scaledDotSql("q.embedding", "c.embedding"), "q.nrm", "c.nrm")} DESC,
             |        c.vec_id) AS rnk
             |    FROM e q JOIN e c
             |      ON q.vec_id < 16 AND q.vec_id <> c.vec_id AND q.label = c.label)
@@ -5452,34 +5398,22 @@ object CurationQueries {
     * transitivity measure — plus the raw census so the trend is
     * watchable across index rebuilds.
     *
-    * Scale: the edge list is the shared bucket-equi k=3 construction
-    * (O(N·k), never all-pairs) and localCheckpoints for its three
-    * graph-side consumers; every downstream join is on the
-    * DEGREE-BOUNDED mutual edge list (deg <= k, so wedges <= N·k² and
-    * the closure semi-join probes <= that) — triangle counting stays
-    * linear-ish in vectors for fixed k. All counts exact integers; the
+    * Scale: the edge list is [[NorthStarQueries.knnEdges]], the shared
+    * bucket-equi k=3 construction (O(N·k), never all-pairs),
+    * checkpointed for both sides of the mutual-edge semi-join; every
+    * downstream join is on the DEGREE-BOUNDED mutual edge list (deg <=
+    * k, so wedges <= N·k² and the closure semi-join probes <= that) —
+    * triangle counting stays linear-ish in vectors for fixed k. All counts exact integers; the
     * coefficient is an integer div of non-negatives.
     */
   private val embedKnnTriangles = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          expr("lsh_bucket(embedding)").as("bucket"),
-          expr("scaled_dot(embedding, embedding)").as("nrm"))
-      val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("bucket"), col("nrm").as("a_nrm"))
-      val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
-      val w = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b,
-          col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 3)
-        .select(col("a_id"), col("b_id"))
+      // two consumers: both sides of the mutual-edge semi-join
+      val edges = knnEdges(bucketed(s, dir)).select(col("a_id"), col("b_id"))
         .localCheckpoint(true)
-      // canonical (u < v) mutual edges: both directions picked each other
+      // canonical (u < v) mutual edges: both directions picked each other;
+      // four consumers: both adjacency directions, the edge count and the
+      // closure probe
       val mutual = edges
         .join(edges.select(col("b_id").as("a_id"), col("a_id").as("b_id")),
           Seq("a_id", "b_id"), "left_semi")
@@ -5515,25 +5449,10 @@ object CurationQueries {
                  |THEN n_closed * 1000000 div n_wedges
                  |ELSE cast(0 as bigint) END""".stripMargin).as("global_cc_e6"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding, ${NorthStarQueries.lshBucketSql} AS bucket,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), p AS (
-            |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-            |    cast(${NorthStarQueries.scaledDotSql("a.embedding", "b.embedding")}
-            |      as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
-            |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-            |), k AS (
-            |  SELECT a_id, b_id FROM (
-            |    SELECT a_id, b_id,
-            |      row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
-            |    FROM p) WHERE rn <= 3
-            |), mu AS (
-            |  SELECT k.a_id AS u, k.b_id AS v FROM k
+    Some(s"""WITH $bucketedSqlCte, $knnSqlCte, mu AS (
+            |  SELECT k.a_id AS u, k.b_id AS v FROM knn k
             |  WHERE k.a_id < k.b_id
-            |    AND EXISTS (SELECT 1 FROM k r WHERE r.a_id = k.b_id AND r.b_id = k.a_id)
+            |    AND EXISTS (SELECT 1 FROM knn r WHERE r.a_id = k.b_id AND r.b_id = k.a_id)
             |), adj AS (
             |  SELECT u, v FROM mu UNION ALL SELECT v AS u, u AS v FROM mu
             |), wd AS (
@@ -6168,9 +6087,6 @@ object CurationQueries {
         .join(asg, Seq("vec_id"))
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cl"))
         .localCheckpoint(true) // cluster pair join both sides + 2 m-side attaches
-      val cosE6 = (ea: String, eb: String, na: String, nb: String) =>
-        s"cast(floor(cast(scaled_dot($ea, $eb) as double) / " +
-          s"(sqrt(cast($na as double)) * sqrt(cast($nb as double))) * 1000000) as bigint)"
       // MinHash-LSH flagged pairs (the dedupAgreement plan verbatim)
       val bands = NorthStarQueries.minhashBands(s, dir)
         .localCheckpoint(true) // both sides of the candidate self-join
@@ -6197,7 +6113,8 @@ object CurationQueries {
           col("nrm").as("mna"), col("cl").as("mca")), Seq("a"))
         .join(emb.select(col("vec_id").as("b"), col("embedding").as("meb"),
           col("nrm").as("mnb"), col("cl").as("mcb")), Seq("b"))
-        .withColumn("m_cos_e6", expr(cosE6("mea", "meb", "mna", "mnb")))
+        .withColumn("m_cos_e6",
+          floor(cosine(expr("scaled_dot(mea, meb)"), "mna", "mnb") * 1000000).cast("bigint"))
         .withColumn("cross_cl", col("mca") =!= col("mcb"))
         .select(col("a"), col("b"), col("jacc_e6"), col("m_cos_e6"),
           col("cross_cl"), lit(1L).as("in_m"))
@@ -6207,10 +6124,9 @@ object CurationQueries {
       val eb = emb.select(col("vec_id").as("b"), col("embedding").as("seb"),
         col("nrm").as("snb"), col("cl").as("cl_b"))
       val sver = ea.join(eb, col("cl") === col("cl_b") && col("a") < col("b"))
-        .where(expr("cast(scaled_dot(sea, seb) as double)").cast("double") /
-          (sqrt(col("sna").cast("double")) * sqrt(col("snb").cast("double")))
-          > 0.4)
-        .withColumn("s_cos_e6", expr(cosE6("sea", "seb", "sna", "snb")))
+        .withColumn("s_cos", cosine(expr("scaled_dot(sea, seb)"), "sna", "snb"))
+        .where(col("s_cos") > 0.4)
+        .withColumn("s_cos_e6", floor(col("s_cos") * 1000000).cast("bigint"))
         .select(col("a"), col("b"), col("s_cos_e6"))
       val s2 = withJacc(sver)
         .withColumnRenamed("jacc_e6", "s_jacc_e6")
@@ -6248,16 +6164,13 @@ object CurationQueries {
       NorthStarQueries.kmeansAssignKprop(s, dir)
         .select(col("vec_id"), col("cl"))),
     Some {
-      def cosE6(ea: String, eb: String, na: String, nb: String) =
-        s"cast(floor(cast(${NorthStarQueries.scaledDotSql(ea, eb)} as double) / " +
-          s"(sqrt(cast($na as double)) * sqrt(cast($nb as double))) * 1000000) as bigint)"
       val kctes = NorthStarQueries.kmeansKpropOracleCtes
       s"""WITH ${NorthStarQueries.minhashBandsSqlCtes}, shl AS (
          |  SELECT doc_id, list_distinct(${NorthStarQueries.hashedShinglesSql}) AS hs
          |  FROM documents
          |), $kctes, en AS (
          |  SELECT e.vec_id, e.embedding, a1.cl,
-         |    ${NorthStarQueries.scaledDotSql("e.embedding", "e.embedding")} AS nrm
+         |    ${scaledDotSql("e.embedding", "e.embedding")} AS nrm
          |  FROM embeddings e JOIN a1 ON e.vec_id = a1.vec_id
          |), mcand AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -6272,19 +6185,20 @@ object CurationQueries {
          |    JOIN shl hb ON hb.doc_id = c.b
          |), mver AS (
          |  SELECT m.a, m.b, m.jacc_e6,
-         |    ${cosE6("ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm")}
-         |      AS m_cos_e6,
+         |    cast(floor(
+         |      ${cosineSql(scaledDotSql("ea.embedding", "eb.embedding"), "ea.nrm", "eb.nrm")}
+         |      * 1000000) as bigint) AS m_cos_e6,
          |    (ea.cl <> eb.cl) AS cross_cl
          |  FROM mver0 m JOIN en ea ON ea.vec_id = m.a
          |    JOIN en eb ON eb.vec_id = m.b
          |  WHERE m.jacc_e6 >= 500000
          |), sim AS (
-         |  SELECT x.vec_id AS a, y.vec_id AS b,
-         |    ${cosE6("x.embedding", "y.embedding", "x.nrm", "y.nrm")}
-         |      AS s_cos_e6
-         |  FROM en x JOIN en y ON x.cl = y.cl AND x.vec_id < y.vec_id
-         |  WHERE cast(${NorthStarQueries.scaledDotSql("x.embedding", "y.embedding")} as double)
-         |    / (sqrt(cast(x.nrm as double)) * sqrt(cast(y.nrm as double))) > 0.4
+         |  SELECT a, b, cast(floor(s_cos * 1000000) as bigint) AS s_cos_e6
+         |  FROM (
+         |    SELECT x.vec_id AS a, y.vec_id AS b,
+         |      ${cosineSql(scaledDotSql("x.embedding", "y.embedding"), "x.nrm", "y.nrm")} AS s_cos
+         |    FROM en x JOIN en y ON x.cl = y.cl AND x.vec_id < y.vec_id)
+         |  WHERE s_cos > 0.4
          |), sver AS (
          |  SELECT sim.a, sim.b, sim.s_cos_e6,
          |    (len(list_intersect(ha.hs, hb.hs)) * 1000000)
@@ -6991,8 +6905,7 @@ object CurationQueries {
       val q = clean.unionByName(derived)
         .withColumn("nq", expr("scaled_dot(q_emb, q_emb)"))
       corpus.join(broadcast(q), lit(true))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("pack",
           expr("cast(floor(cos * 1000000) as bigint) " +
             "* cast(1099511627776 as bigint) - c_id"))
@@ -7006,7 +6919,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
             |), c AS (
             |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc
@@ -7024,13 +6937,11 @@ object CurationQueries {
             |  FROM embeddings WHERE vec_id BETWEEN 32 AND 39
             |), q AS (
             |  SELECT eval_id, q_emb,
-            |    ${NorthStarQueries.scaledDotSql("q_emb", "q_emb")} AS nq
+            |    ${scaledDotSql("q_emb", "q_emb")} AS nq
             |  FROM (SELECT * FROM cl UNION ALL SELECT * FROM dv)
             |), p AS (
             |  SELECT q.eval_id, c.c_id,
-            |    cast(${NorthStarQueries.scaledDotSql("q.q_emb", "c.c_emb")}
-            |      as double)
-            |      / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nc as double)))
+            |    ${cosineSql(scaledDotSql("q.q_emb", "c.c_emb"), "q.nq", "c.nc")}
             |      AS cos
             |  FROM q, c
             |), k AS (
@@ -7081,8 +6992,7 @@ object CurationQueries {
             .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
               col("nrm").as("cen_nrm"))), lit(true))
         .withColumn("cen_cos",
-          expr("scaled_dot(embedding, cen_emb)").cast("double") /
-            (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+          cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
         .where(col("arn") === 1)
         .select(col("vec_id"), col("cen_id").as("cell"))
@@ -7103,7 +7013,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
             |), cen AS (
             |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
@@ -7114,9 +7024,7 @@ object CurationQueries {
             |                       ORDER BY cen_cos DESC, cen_id) AS arn
             |  FROM (
             |    SELECT e.vec_id, cen.cen_id,
-            |      cast(${NorthStarQueries.scaledDotSql("e.embedding", "cen.cen_emb")}
-            |        as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(cen.cen_nrm as double)))
+            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
             |        AS cen_cos
             |    FROM e, cen)
             |), a AS (
@@ -8606,9 +8514,8 @@ object CurationQueries {
           col("nrm").as("nb"))
       val w = Window.partitionBy(col("a_id")).orderBy(col("cos_e9").desc, col("b_id"))
       broadcast(q).join(c, col("a_id") =!= col("b_id"))
-        .withColumn("cos_e9", expr(
-          "cast(floor(cast(scaled_dot(a_emb, b_emb) as double) " +
-            "/ (sqrt(cast(na as double)) * sqrt(cast(nb as double))) * 1000000000) as bigint)"))
+        .withColumn("cos_e9",
+          floor(cosine(expr("scaled_dot(a_emb, b_emb)"), "na", "nb") * 1000000000).cast("bigint"))
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 4)
         .groupBy(col("a_id"))
@@ -8624,7 +8531,7 @@ object CurationQueries {
     },
     Some(s"""WITH j AS (
             |  SELECT e.vec_id, e.embedding, d.lang,
-            |    ${NorthStarQueries.scaledDotSql("e.embedding", "e.embedding")} AS nrm
+            |    ${scaledDotSql("e.embedding", "e.embedding")} AS nrm
             |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
             |), q AS (
             |  SELECT vec_id AS a_id, embedding AS a_emb, nrm AS na
@@ -8634,8 +8541,7 @@ object CurationQueries {
             |  FROM j WHERE lang = 'de'
             |), p AS (
             |  SELECT a_id, b_id,
-            |    cast(floor(cast(${NorthStarQueries.scaledDotSql("a_emb", "b_emb")} as double)
-            |      / (sqrt(cast(na as double)) * sqrt(cast(nb as double)))
+            |    cast(floor(${cosineSql(scaledDotSql("a_emb", "b_emb"), "na", "nb")}
             |      * 1000000000) as bigint) AS cos_e9
             |  FROM q JOIN c ON a_id <> b_id
             |), r AS (
@@ -8920,29 +8826,17 @@ object CurationQueries {
     * update so the iteration never overflows and the oracle's unrolled
     * CTEs reproduce it exactly.
     *
-    * Scale: the edge build is the bucket-equi candidate join (the
-    * pagerank stress axis, bucket-bounded); each half-round is one
+    * Scale: the edge build is [[NorthStarQueries.knnEdges]], the
+    * bucket-equi candidate join (the pagerank stress axis,
+    * bucket-bounded); each half-round is one
     * edge join + one keyed agg over the checkpointed O(N·k) edge list;
     * normalization is a broadcast 1-row max. Edge-linear per round.
     */
   private val embedHits = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          expr("lsh_bucket(embedding)").as("bucket"),
-          expr("scaled_dot(embedding, embedding)").as("nrm"))
-      val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("bucket"), col("nrm").as("a_nrm"))
-      val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
-      val wTop = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b,
-          col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
-        .withColumn("rn", row_number().over(wTop))
-        .where(col("rn") <= 3)
-        .select(col("a_id"), col("b_id"))
+      val e = bucketed(s, dir)
+      // four consumers: both half-rounds of both rounds
+      val edges = knnEdges(e).select(col("a_id"), col("b_id"))
         .localCheckpoint(true)
       val nodes = e.select(col("vec_id").as("id"))
       // raw sums reach indeg·1e12, so the e12 re-scale pre-divides both
@@ -8953,6 +8847,9 @@ object CurationQueries {
         df.crossJoin(broadcast(mx))
           .select(col("id"),
             expr(s"(($c div sc) * 1000000000000) div (mx div sc)").as(c))
+          // one or two consumers (the next half-round; the last scores also
+          // the final attach); the re-scale reads its input twice, so each
+          // half-round would otherwise double the plan below it
           .localCheckpoint(true)
       }
       // r21: the per-round nodes left-joins only materialized zero rows —
@@ -8998,25 +8895,11 @@ object CurationQueries {
           round(col("h").cast("double") / lit(1.0e12), 6).as("hub"))
         .orderBy(col("rnk"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding, ${NorthStarQueries.lshBucketSql} AS bucket,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), p AS (
-            |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-            |    cast(${NorthStarQueries.scaledDotSql("a.embedding", "b.embedding")} as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
-            |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-            |), ranked AS (
-            |  SELECT a_id, b_id,
-            |    row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
-            |  FROM p
-            |), edges AS (SELECT a_id, b_id FROM ranked WHERE rn <= 3
-            |), nodes AS (SELECT vec_id AS id FROM e
+    Some(s"""WITH $bucketedSqlCte, $knnSqlCte, nodes AS (SELECT vec_id AS id FROM e
             |), h0 AS (SELECT id, cast(1000000000000 as bigint) AS h FROM nodes
             |), a1r AS (
             |  SELECT e.b_id AS id, cast(sum(h.h) as bigint) AS a
-            |  FROM edges e JOIN h0 h ON h.id = e.a_id GROUP BY e.b_id
+            |  FROM knn e JOIN h0 h ON h.id = e.a_id GROUP BY e.b_id
             |), a1n AS (
             |  SELECT n.id, coalesce(r.a, 0) AS a FROM nodes n LEFT JOIN a1r r USING (id)
             |), a1s AS (
@@ -9026,7 +8909,7 @@ object CurationQueries {
             |  FROM a1n, a1s s
             |), h1r AS (
             |  SELECT e.a_id AS id, cast(sum(a.a) as bigint) AS h
-            |  FROM edges e JOIN a1 a ON a.id = e.b_id GROUP BY e.a_id
+            |  FROM knn e JOIN a1 a ON a.id = e.b_id GROUP BY e.a_id
             |), h1n AS (
             |  SELECT n.id, coalesce(r.h, 0) AS h FROM nodes n LEFT JOIN h1r r USING (id)
             |), h1s AS (
@@ -9036,7 +8919,7 @@ object CurationQueries {
             |  FROM h1n, h1s s
             |), a2r AS (
             |  SELECT e.b_id AS id, cast(sum(h.h) as bigint) AS a
-            |  FROM edges e JOIN h1 h ON h.id = e.a_id GROUP BY e.b_id
+            |  FROM knn e JOIN h1 h ON h.id = e.a_id GROUP BY e.b_id
             |), a2n AS (
             |  SELECT n.id, coalesce(r.a, 0) AS a FROM nodes n LEFT JOIN a2r r USING (id)
             |), a2s AS (
@@ -9046,7 +8929,7 @@ object CurationQueries {
             |  FROM a2n, a2s s
             |), h2r AS (
             |  SELECT e.a_id AS id, cast(sum(a.a) as bigint) AS h
-            |  FROM edges e JOIN a2 a ON a.id = e.b_id GROUP BY e.a_id
+            |  FROM knn e JOIN a2 a ON a.id = e.b_id GROUP BY e.a_id
             |), h2n AS (
             |  SELECT n.id, coalesce(r.h, 0) AS h FROM nodes n LEFT JOIN h2r r USING (id)
             |), h2s AS (
@@ -11090,26 +10973,22 @@ object CurationQueries {
     */
   private val simRecallCurve = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-        .withColumn("bkt", expr("lsh_bucket(embedding)"))
+      val e = bucketed(s, dir)
       val q16 = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("nq"), col("bkt").as("qbkt"))
+          col("nrm").as("nq"), col("bucket").as("qbkt"))
       val corp = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nrm").as("nc"), col("bkt"))
+        col("nrm").as("nc"), col("bucket").as("bkt"))
       val wEx = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
       val exact = broadcast(q16).join(corp, col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("ern", row_number().over(wEx))
         .where(col("ern") <= 10)
         .select(col("q_id"), col("c_id"), col("ern"))
         .localCheckpoint(true)
       val lsh = broadcast(q16)
         .join(corp, col("qbkt") === col("bkt") && col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("lrn", row_number().over(wEx))
         .select(col("q_id"), col("c_id"), col("lrn"))
         .localCheckpoint(true)
@@ -11132,28 +11011,21 @@ object CurationQueries {
           col("avg_cands_e2"))
         .orderBy(col("k"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm,
-            |    ${NorthStarQueries.lshBucketSql} AS bkt
-            |  FROM embeddings
-            |), q AS (
-            |  SELECT vec_id AS q_id, embedding AS q_emb, nrm AS nq, bkt AS qbkt
+    Some(s"""WITH $bucketedSqlCte, q AS (
+            |  SELECT vec_id AS q_id, embedding AS q_emb, nrm AS nq, bucket AS qbkt
             |  FROM e WHERE vec_id < 16
             |), c AS (
-            |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc, bkt FROM e
+            |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc, bucket AS bkt FROM e
             |), ex AS (
             |  SELECT q_id, c_id,
             |    row_number() OVER (PARTITION BY q_id ORDER BY
-            |      cast(${NorthStarQueries.scaledDotSql("q_emb", "c_emb")} as double)
-            |        / (sqrt(cast(nq as double)) * sqrt(cast(nc as double))) DESC,
+            |      ${cosineSql(scaledDotSql("q_emb", "c_emb"), "nq", "nc")} DESC,
             |      c_id) AS ern
             |  FROM q JOIN c ON q_id <> c_id
             |), lsh AS (
             |  SELECT q_id, c_id,
             |    row_number() OVER (PARTITION BY q_id ORDER BY
-            |      cast(${NorthStarQueries.scaledDotSql("q_emb", "c_emb")} as double)
-            |        / (sqrt(cast(nq as double)) * sqrt(cast(nc as double))) DESC,
+            |      ${cosineSql(scaledDotSql("q_emb", "c_emb"), "nq", "nc")} DESC,
             |      c_id) AS lrn
             |  FROM q JOIN c ON qbkt = bkt AND q_id <> c_id
             |), nq2 AS (SELECT cast(count(*) as bigint) AS nq FROM q
@@ -12701,8 +12573,7 @@ object CurationQueries {
       val wAssign = Window.partitionBy(col("vec_id"))
         .orderBy(col("cen_cos").desc, col("cen_id"))
       val ranked = e.join(cen, lit(true))
-        .withColumn("cen_cos", expr("scaled_dot(embedding, cen_emb)").cast("double") /
-          (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
@@ -12735,7 +12606,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding,
-            |    ${NorthStarQueries.scaledDotSql("embedding", "embedding")} AS nrm
+            |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
             |), cen AS (
             |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
@@ -12743,8 +12614,7 @@ object CurationQueries {
             |), rk AS (
             |  SELECT e.vec_id, e.embedding, c.cen_id,
             |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-            |      cast(${NorthStarQueries.scaledDotSql("e.embedding", "c.cen_emb")} as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(c.cen_nrm as double))) DESC,
+            |      ${cosineSql(scaledDotSql("e.embedding", "c.cen_emb"), "e.nrm", "c.cen_nrm")} DESC,
             |      c.cen_id) AS arn
             |  FROM e, cen c
             |), assigned AS (
@@ -15197,7 +15067,7 @@ object CurationQueries {
         .orderBy(col("pick_order"))
     },
     Some {
-      val dot = NorthStarQueries.scaledDotSql("e.embedding", "c.c_emb")
+      val dot = scaledDotSql("e.embedding", "c.c_emb")
       def md(prev: String) =
         s"""SELECT e.vec_id, cast(min(e.nrm + c.c_nrm - 2 * cast(($dot) as bigint))
            |    as bigint) AS mind
@@ -15221,7 +15091,7 @@ object CurationQueries {
       }.mkString(", ")
       s"""WITH e AS MATERIALIZED (
          |  SELECT vec_id, embedding,
-         |    cast(${NorthStarQueries.scaledDotSql("embedding", "embedding")} as bigint) AS nrm
+         |    cast(${scaledDotSql("embedding", "embedding")} as bigint) AS nrm
          |  FROM embeddings
          |), c1 AS MATERIALIZED (
          |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS c_nrm

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -822,17 +822,26 @@ object NorthStarQueries {
   // Similarity 1: brute-force cosine top-k (ANN baseline)
   // ---------------------------------------------------------------------
 
-  /** Spark-side scaled dot product of two array<float> columns — the
-    * codegen'd native expression [[graft.expressions.ScaledDotProduct]]
-    * (exactly `sum floor(x*y*2^40)` like the HOF chain it replaced, but
-    * inside whole-stage codegen with no per-pair array allocation).
+  /** DuckDB form of Spark's `scaled_dot` — the codegen'd native
+    * expression [[graft.expressions.ScaledDotProduct]], exactly
+    * `sum floor(x*y*2^40)` over the 64 dims.
     */
-  private def scaledDot(aCol: String, bCol: String): String =
-    s"scaled_dot($aCol, $bCol)"
-
   private[queries] def scaledDotSql(aCol: String, bCol: String): String =
     s"list_sum(list_transform(generate_series(1, 64), i -> " +
       s"cast(floor($aCol[i]::double * $bCol[i]::double * $S) as bigint)))"
+
+  /** The cosine of two embeddings from their scaled dot product `dot`
+    * and the columns `na`, `nb` holding each side's scaled dot with
+    * itself: one tree of IEEE ops on exact integers, so every query that
+    * scores with it agrees bit for bit. [[cosineSql]] is its SQL-text
+    * twin for the DuckDB oracles. Callers add their own fixed-point
+    * scaling on top.
+    */
+  private[queries] def cosine(dot: Column, na: String, nb: String): Column =
+    dot.cast("double") / (sqrt(col(na).cast("double")) * sqrt(col(nb).cast("double")))
+
+  private[queries] def cosineSql(dot: String, na: String, nb: String): String =
+    s"cast($dot as double) / (sqrt(cast($na as double)) * sqrt(cast($nb as double)))"
 
   /** Brute-force cosine top-3 for a fixed 16-vector query set against the
     * whole corpus — the correctness baseline for ANN. The query side is
@@ -843,16 +852,15 @@ object NorthStarQueries {
   private val simCosineTopk = Q(
     (s, dir) => {
       val e = TS(s, dir, "embeddings")
-      val withNorm = e.withColumn("nrm", expr(scaledDot("embedding", "embedding")))
+      val withNorm = e.withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val q = withNorm.where(col("vec_id") < 16)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("nq"))
       val c = withNorm
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"), col("nrm").as("nc"))
       val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
       broadcast(q).join(c, col("q_id") =!= col("c_id"))
-        .withColumn("dot", expr(scaledDot("q_emb", "c_emb")))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("dot", expr("scaled_dot(q_emb, c_emb)"))
+        .withColumn("cos", cosine(col("dot"), "nq", "nc"))
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 3)
         .select(col("q_id"), col("rnk"), col("c_id"), round(col("cos"), 6).as("cos_sim"))
@@ -868,8 +876,7 @@ object NorthStarQueries {
             |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc FROM n
             |), p AS (
             |  SELECT q_id, c_id,
-            |    cast(${scaledDotSql("q_emb", "c_emb")} as double)
-            |      / (sqrt(cast(nq as double)) * sqrt(cast(nc as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q_emb", "c_emb"), "nq", "nc")} AS cos
             |  FROM q, c WHERE q_id <> c_id
             |), r AS (
             |  SELECT q_id, c_id, cos,
@@ -899,9 +906,11 @@ object NorthStarQueries {
     Seq.tabulate(8, 64)((j, i) => sign(j, i + 1))
   }
 
-  /** Spark-side 8-bit sign-LSH bucket expression (and its DuckDB twin
-    * below) — shared by the bucket histogram and the cosine near-dup
-    * blocking join.
+  /** The 8-bit sign-LSH bucket as the HOF chain that the native
+    * `lsh_bucket` ([[graft.expressions.LshBucket]]) replaced. No query
+    * reads it: every Spark plan calls `lsh_bucket`, and `LshBucketSpec`
+    * checks that against this reference. [[lshBucketSql]] below is the
+    * DuckDB form the oracles use.
     */
   private[graft] val lshBucketExpr: String = {
     val bit = (j: Int) => {
@@ -922,6 +931,62 @@ object NorthStarQueries {
     }
     (0 until 8).map(bit).mkString(" + ")
   }
+
+  /** The bucketed-embedding frame: `vec_id`, the `embeddings` columns
+    * named in `keep`, `embedding`, its sign-LSH `bucket` and its squared
+    * norm `nrm` (`scaled_dot` of the vector with itself).
+    * [[bucketedSqlCte]] is its DuckDB twin.
+    */
+  private[queries] def bucketed(s: SparkSession, dir: String, keep: String*): DataFrame =
+    TS(s, dir, "embeddings")
+      .select((("vec_id" +: keep :+ "embedding").map(col) :+
+        expr("lsh_bucket(embedding)").as("bucket") :+
+        expr("scaled_dot(embedding, embedding)").as("nrm")): _*)
+
+  /** DuckDB twin of [[bucketed]] as the CTE `e`, with every `embeddings`
+    * column. */
+  private[queries] val bucketedSqlCte: String =
+    s"""e AS (
+       |  SELECT *, $lshBucketSql AS bucket,
+       |    ${scaledDotSql("embedding", "embedding")} AS nrm
+       |  FROM embeddings
+       |)""".stripMargin
+
+  /** The LSH top-3 k-NN graph over a [[bucketed]] frame: for each
+    * vector, the 3 most cosine-similar other vectors in its bucket, as
+    * `(a_id, rn, b_id, cos)` with dense `rn` from 1. Equal cosines rank
+    * the lower `b_id` first; no edge links a vector to itself. The
+    * candidate join is bucket-equi (never all-pairs) and the rank-only
+    * window lets WindowGroupLimit prune map-side inside each bucket.
+    * Nothing is materialized here: each caller checkpoints for its own
+    * consumers. [[knnSqlCte]] is the DuckDB twin.
+    */
+  private[graft] def knnEdges(e: DataFrame): DataFrame = {
+    val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
+      col("bucket"), col("nrm").as("a_nrm"))
+    val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
+      col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
+    val w = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
+    a.join(b, col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
+      .withColumn("cos", cosine(expr("scaled_dot(a_emb, b_emb)"), "a_nrm", "b_nrm"))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= 3)
+      .select(col("a_id"), col("rn"), col("b_id"), col("cos"))
+  }
+
+  /** DuckDB twin of [[knnEdges]] as the CTE `knn`, over the `e` of
+    * [[bucketedSqlCte]]. */
+  private[queries] val knnSqlCte: String =
+    s"""knn AS (
+       |  SELECT a_id, rn, b_id, cos FROM (
+       |    SELECT a_id, b_id, cos,
+       |      row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
+       |    FROM (
+       |      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+       |        ${cosineSql(scaledDotSql("a.embedding", "b.embedding"), "a.nrm", "b.nrm")} AS cos
+       |      FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id))
+       |  WHERE rn <= 3
+       |)""".stripMargin
 
   /** Random-hyperplane (sign) LSH: 8 sign bits -> 256 buckets; docs in
     * the same bucket are cosine-similar candidates. Verified via bucket
@@ -949,29 +1014,20 @@ object NorthStarQueries {
     */
   private val dedupEmbeddingCosine = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-                expr("lsh_bucket(embedding)").as("bucket"),
-                expr("scaled_dot(embedding, embedding)").as("nrm"))
+      val e = bucketed(s, dir)
       val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
                        col("bucket"), col("nrm").as("a_nrm"))
       val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
                        col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
       a.join(b, col("bucket") === col("bucket_b") && col("a_id") < col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(a_emb, b_emb)"), "a_nrm", "b_nrm"))
         .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("a_id"), col("b_id"))
         .limit(10)
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding, $lshBucketSql AS bucket,
-            |    ${scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), p AS (
+    Some(s"""WITH $bucketedSqlCte, p AS (
             |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-            |    cast(${scaledDotSql("a.embedding", "b.embedding")} as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("a.embedding", "b.embedding"), "a.nrm", "b.nrm")} AS cos
             |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
             |)
             |SELECT a_id, b_id, round(cos, 6) AS cos_sim
@@ -999,8 +1055,7 @@ object NorthStarQueries {
           e.where(col("vec_id").between(100, 115))
             .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
                     col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos", expr("scaled_dot(embedding, cen_emb)").cast("double") /
-          (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
       // corpus: every vector in exactly its nearest cell
       val assigned = ranked.where(col("arn") === 1)
@@ -1014,8 +1069,7 @@ object NorthStarQueries {
                 col("nrm").as("nc"), col("cell").as("cell_c"))
       val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
       q.join(c, col("cell") === col("cell_c") && col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rnk", row_number().over(wTop))
         .where(col("rnk") <= 3)
         .select(col("q_id"), col("rnk"), col("c_id"), round(col("cos"), 6).as("cos_sim"))
@@ -1033,8 +1087,8 @@ object NorthStarQueries {
             |                               ORDER BY cen_cos DESC, cen_id) AS arn
             |  FROM (
             |    SELECT e.vec_id, e.embedding, e.nrm, cen.cen_id,
-            |      cast(${scaledDotSql("e.embedding", "cen.cen_emb")} as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(cen.cen_nrm as double))) AS cen_cos
+            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
+            |        AS cen_cos
             |    FROM e, cen)
             |), assigned AS (
             |  SELECT vec_id, embedding, nrm, cen_id AS cell FROM ranked WHERE arn = 1
@@ -1043,8 +1097,7 @@ object NorthStarQueries {
             |  FROM ranked WHERE arn <= $nprobe AND vec_id < 16
             |), p AS (
             |  SELECT q.q_id, c.vec_id AS c_id,
-            |    cast(${scaledDotSql("q.q_emb", "c.embedding")} as double)
-            |      / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nrm as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q.q_emb", "c.embedding"), "q.nq", "c.nrm")} AS cos
             |  FROM probes q JOIN assigned c
             |    ON q.cell = c.cell AND q.q_id <> c.vec_id
             |), r AS (
@@ -1624,31 +1677,14 @@ object NorthStarQueries {
   /** k-NN GRAPH construction (k=3, in-bucket): per vector, its 3 most
     * cosine-similar neighbors within its sign-LSH bucket — the edge
     * list behind graph-based clustering, diversity sampling, and label
-    * propagation over embeddings. The candidate join is bucket-equi
-    * (never all-pairs), scoring uses the codegen'd scaled_dot, and the
-    * per-vector top-3 is a rank-only window, so WindowGroupLimit prunes
-    * map-side inside each bucket. Edges also report whether they are
-    * MUTUAL (both endpoints pick each other) — the signal density
-    * metric mutual-kNN methods start from — via a self-join on the
-    * k-bounded edge list (O(N*k), not O(N^2)).
+    * propagation over embeddings, built by [[knnEdges]]. Edges also
+    * report whether they are MUTUAL (both endpoints pick each other) —
+    * the signal density metric mutual-kNN methods start from — via a
+    * self-join on the k-bounded edge list (O(N*k), not O(N^2)).
     */
   private val embedKnnGraph = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-                expr("lsh_bucket(embedding)").as("bucket"),
-                expr("scaled_dot(embedding, embedding)").as("nrm"))
-      val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-                       col("bucket"), col("nrm").as("a_nrm"))
-      val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-                       col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
-      val w = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b, col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 3)
-        .select(col("a_id"), col("rn"), col("b_id"), col("cos"))
+      val edges = knnEdges(bucketed(s, dir))
       val reverse = edges.select(col("b_id").as("a_id"), col("a_id").as("b_id"))
       edges.join(reverse, Seq("a_id", "b_id"), "left_semi")
         .withColumn("mutual", lit(true))
@@ -1658,24 +1694,11 @@ object NorthStarQueries {
                 round(col("cos"), 6).as("cos_r"), col("mutual"))
         .orderBy(col("a_id"), col("rn"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding, $lshBucketSql AS bucket,
-            |    ${scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), p AS (
-            |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-            |    cast(${scaledDotSql("a.embedding", "b.embedding")} as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
-            |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-            |), edges AS (
-            |  SELECT a_id, b_id, cos,
-            |    row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
-            |  FROM p
-            |), k AS (SELECT a_id, rn, b_id, cos FROM edges WHERE rn <= 3)
+    Some(s"""WITH $bucketedSqlCte, $knnSqlCte
             |SELECT k.a_id, k.rn, k.b_id, round(k.cos, 6) AS cos_r,
-            |  EXISTS (SELECT 1 FROM k r WHERE r.a_id = k.b_id AND r.b_id = k.a_id)
+            |  EXISTS (SELECT 1 FROM knn r WHERE r.a_id = k.b_id AND r.b_id = k.a_id)
             |    AS mutual
-            |FROM k ORDER BY k.a_id, k.rn""".stripMargin))
+            |FROM knn k ORDER BY k.a_id, k.rn""".stripMargin))
 
   /** FUZZY DECONTAMINATION by containment: exact shingle-overlap flags
     * only verbatim leaks; the robust test scores, per (corpus doc,
@@ -2931,8 +2954,7 @@ object NorthStarQueries {
       val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
                        col("nrm").as("b_nrm"), col("cl").as("cl_b"))
       val sim = a.join(b, col("cl") === col("cl_b") && col("a_id") < col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(a_emb, b_emb)"), "a_nrm", "b_nrm"))
         .where(col("cos") > 0.4)
         .select(col("cl"), col("a_id"), col("b_id"))
       // one pass over the (small) similar-pair set: pair count + distinct
@@ -2959,8 +2981,7 @@ object NorthStarQueries {
             |), sim AS (
             |  SELECT a.cl, a.vec_id AS a_id, b.vec_id AS b_id
             |  FROM en a JOIN en b ON a.cl = b.cl AND a.vec_id < b.vec_id
-            |  WHERE cast(${scaledDotSql("a.embedding", "b.embedding")} as double)
-            |    / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) > 0.4
+            |  WHERE ${cosineSql(scaledDotSql("a.embedding", "b.embedding"), "a.nrm", "b.nrm")} > 0.4
             |), pc AS (
             |  SELECT cl, count(*) AS n_sim_pairs, count(DISTINCT b_id) AS n_dropped
             |  FROM sim GROUP BY cl
@@ -3291,8 +3312,7 @@ object NorthStarQueries {
             |), sim AS (
             |  SELECT a.cl, a.vec_id AS a_id, b.vec_id AS b_id
             |  FROM en a JOIN en b ON a.cl = b.cl AND a.vec_id < b.vec_id
-            |  WHERE cast(${scaledDotSql("a.embedding", "b.embedding")} as double)
-            |    / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) > 0.4
+            |  WHERE ${cosineSql(scaledDotSql("a.embedding", "b.embedding"), "a.nrm", "b.nrm")} > 0.4
             |), pc AS (
             |  SELECT cl, count(*) AS n_sim_pairs, count(DISTINCT b_id) AS n_dropped
             |  FROM sim GROUP BY cl
@@ -3631,16 +3651,15 @@ object NorthStarQueries {
   private val simHybridRrf = Q(
     (s, dir) => {
       val e = TS(s, dir, "embeddings")
-      val withNorm = e.withColumn("nrm", expr(scaledDot("embedding", "embedding")))
+      val withNorm = e.withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
       val qv = withNorm.where(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("embedding").as("q_emb"), col("nrm").as("nq"))
       val cv = withNorm
         .select(col("vec_id").as("id"), col("embedding").as("c_emb"), col("nrm").as("nc"))
       val wd = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))
       val dense = broadcast(qv).join(cv, col("qid") =!= col("id"))
-        .withColumn("dot", expr(scaledDot("q_emb", "c_emb")))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("dot", expr("scaled_dot(q_emb, c_emb)"))
+        .withColumn("cos", cosine(col("dot"), "nq", "nc"))
         .withColumn("rnk_d", row_number().over(wd))
         .where(col("rnk_d") <= 20)
         .select(col("qid"), col("id"), col("rnk_d"))
@@ -3671,8 +3690,7 @@ object NorthStarQueries {
             |  SELECT vec_id AS id, embedding AS c_emb, nrm AS nc FROM nv
             |), dp AS (
             |  SELECT qid, id,
-            |    cast(${scaledDotSql("q_emb", "c_emb")} as double)
-            |      / (sqrt(cast(nq as double)) * sqrt(cast(nc as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q_emb", "c_emb"), "nq", "nc")} AS cos
             |  FROM dq, dc WHERE qid <> id
             |), dense AS (
             |  SELECT qid, id, rnk_d FROM (
@@ -3731,8 +3749,7 @@ object NorthStarQueries {
                           col("nrm").as("nc"))
       val wEx = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
       val exact = broadcast(q16).join(corp, col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("ern", row_number().over(wEx))
         .where(col("ern") <= 10)
         .select(col("q_id"), col("c_id"))
@@ -3743,8 +3760,7 @@ object NorthStarQueries {
           e.where(col("vec_id").between(100, 115))
             .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
                     col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos", expr("scaled_dot(embedding, cen_emb)").cast("double") /
-          (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
@@ -3760,8 +3776,7 @@ object NorthStarQueries {
         .orderBy(col("cos").desc, col("c_id"))
       val ivf = probes.join(broadcast(np), col("arn") <= col("nprobe"))
         .join(assigned, col("cell") === col("cell_c") && col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("irn", row_number().over(wIvf))
         .where(col("irn") <= 10)
         .select(col("nprobe"), col("q_id"), col("c_id"))
@@ -3785,8 +3800,7 @@ object NorthStarQueries {
             |  SELECT q_id, c_id FROM (
             |    SELECT q.q_id, c.vec_id AS c_id,
             |      row_number() OVER (PARTITION BY q.q_id ORDER BY
-            |        cast(${scaledDotSql("q.q_emb", "c.embedding")} as double)
-            |          / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nrm as double))) DESC,
+            |        ${cosineSql(scaledDotSql("q.q_emb", "c.embedding"), "q.nq", "c.nrm")} DESC,
             |        c.vec_id) AS ern
             |    FROM q16 q JOIN e c ON q.q_id <> c.vec_id
             |  ) WHERE ern <= 10
@@ -3798,8 +3812,8 @@ object NorthStarQueries {
             |                               ORDER BY cen_cos DESC, cen_id) AS arn
             |  FROM (
             |    SELECT e.vec_id, e.embedding, e.nrm, cen.cen_id,
-            |      cast(${scaledDotSql("e.embedding", "cen.cen_emb")} as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(cen.cen_nrm as double))) AS cen_cos
+            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
+            |        AS cen_cos
             |    FROM e, cen)
             |), assigned AS (
             |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc, cen_id AS cell_c
@@ -3812,8 +3826,7 @@ object NorthStarQueries {
             |  SELECT nprobe, q_id, c_id FROM (
             |    SELECT np.nprobe, p.q_id, c.c_id,
             |      row_number() OVER (PARTITION BY np.nprobe, p.q_id ORDER BY
-            |        cast(${scaledDotSql("p.q_emb", "c.c_emb")} as double)
-            |          / (sqrt(cast(p.nq as double)) * sqrt(cast(c.nc as double))) DESC,
+            |        ${cosineSql(scaledDotSql("p.q_emb", "c.c_emb"), "p.nq", "c.nc")} DESC,
             |        c.c_id) AS irn
             |    FROM probes p JOIN np ON p.arn <= np.nprobe
             |    JOIN assigned c ON p.cell = c.cell_c AND p.q_id <> c.c_id
@@ -3974,28 +3987,17 @@ object NorthStarQueries {
     * are bit-exact in both engines. Dangling nodes (empty LSH bucket)
     * contribute nothing, per the simplified-PageRank convention.
     *
-    * Scale: the edge list is built once and localCheckpoint'd (the
-    * Lloyd/label-propagation pattern); each round is ONE src-keyed
-    * join + one dst-keyed aggregate — shuffles proportional to edges
+    * Scale: the edge list ([[knnEdges]] plus outdeg) is built once and
+    * localCheckpoint'd (the Lloyd/label-propagation pattern); each round
+    * is ONE src-keyed join + one dst-keyed aggregate — shuffles proportional to edges
     * (O(N*k)), never pairs; outdeg rides the edge-construction
     * partitioning as a window, not an extra join.
     */
   private val embedPagerank = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-                expr("lsh_bucket(embedding)").as("bucket"),
-                expr("scaled_dot(embedding, embedding)").as("nrm"))
-      val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-                       col("bucket"), col("nrm").as("a_nrm"))
-      val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-                       col("bucket").as("bucket_b"), col("nrm").as("b_nrm"))
-      val wTop = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b, col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
-        .withColumn("cos", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("a_nrm").cast("double")) * sqrt(col("b_nrm").cast("double"))))
-        .withColumn("rn", row_number().over(wTop))
-        .where(col("rn") <= 3)
+      val e = bucketed(s, dir)
+      // three consumers: one contribution pass per round
+      val edges = knnEdges(e)
         .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("a_id"))))
         .select(col("a_id"), col("b_id"), col("outdeg"))
         .localCheckpoint(true)
@@ -4030,22 +4032,9 @@ object NorthStarQueries {
         .select(col("vec_id"), col("r").as("rank_fp"),
           round(col("r").cast("double") / lit(1.0e12), 6).as("pr"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding, $lshBucketSql AS bucket,
-            |    ${scaledDotSql("embedding", "embedding")} AS nrm
-            |  FROM embeddings
-            |), p AS (
-            |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-            |    cast(${scaledDotSql("a.embedding", "b.embedding")} as double)
-            |      / (sqrt(cast(a.nrm as double)) * sqrt(cast(b.nrm as double))) AS cos
-            |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-            |), ranked AS (
-            |  SELECT a_id, b_id,
-            |    row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
-            |  FROM p
-            |), k AS (SELECT a_id, b_id FROM ranked WHERE rn <= 3
-            |), deg AS (SELECT a_id, count(*) AS outdeg FROM k GROUP BY a_id
-            |), edges AS (SELECT k.a_id, k.b_id, d.outdeg FROM k JOIN deg d USING (a_id)
+    Some(s"""WITH $bucketedSqlCte, $knnSqlCte,
+            |deg AS (SELECT a_id, count(*) AS outdeg FROM knn GROUP BY a_id
+            |), edges AS (SELECT k.a_id, k.b_id, d.outdeg FROM knn k JOIN deg d USING (a_id)
             |), nodes AS (SELECT vec_id FROM e
             |), r0 AS (SELECT vec_id, cast(1000000000000 as bigint) AS r FROM nodes
             |), c1 AS (
@@ -4094,8 +4083,7 @@ object NorthStarQueries {
       val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
       broadcast(q).join(c,
           col("q_id") =!= col("c_id") && col("q_label") =!= col("c_label"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("c_id"), col("c_label"),
@@ -4114,8 +4102,7 @@ object NorthStarQueries {
             |  FROM n
             |), p AS (
             |  SELECT q_id, c_id, c_label,
-            |    cast(${scaledDotSql("q_emb", "c_emb")} as double)
-            |      / (sqrt(cast(nq as double)) * sqrt(cast(nc as double))) AS cos
+            |    ${cosineSql(scaledDotSql("q_emb", "c_emb"), "nq", "nc")} AS cos
             |  FROM q, c WHERE q_id <> c_id AND q_label <> c_label
             |), r AS (
             |  SELECT q_id, c_id, c_label, cos,
@@ -4144,8 +4131,7 @@ object NorthStarQueries {
           e.where(col("vec_id").between(100, 115))
             .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
                     col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos", expr("scaled_dot(embedding, cen_emb)").cast("double") /
-          (sqrt(col("nrm").cast("double")) * sqrt(col("cen_nrm").cast("double"))))
+        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
         .withColumn("arn", row_number().over(wAssign))
         .where(col("arn") === 1)
         .select(col("vec_id"), col("label"), col("cen_id").as("cell"))
@@ -4176,8 +4162,8 @@ object NorthStarQueries {
             |                       ORDER BY cen_cos DESC, cen_id) AS arn
             |  FROM (
             |    SELECT e.vec_id, e.label, cen.cen_id,
-            |      cast(${scaledDotSql("e.embedding", "cen.cen_emb")} as double)
-            |        / (sqrt(cast(e.nrm as double)) * sqrt(cast(cen.cen_nrm as double))) AS cen_cos
+            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
+            |        AS cen_cos
             |    FROM e, cen)
             |), assigned AS (
             |  SELECT vec_id, label, cen_id AS cell FROM ranked WHERE arn = 1
@@ -4225,8 +4211,7 @@ object NorthStarQueries {
                        col("nrm").as("nc"))
       val wS = Window.partitionBy(col("q_id")).orderBy(col("rel_fp").desc, col("c_id"))
       val short = broadcast(q).join(c, col("q_id") =!= col("c_id"))
-        .withColumn("cos", expr("scaled_dot(q_emb, c_emb)").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+        .withColumn("cos", cosine(expr("scaled_dot(q_emb, c_emb)"), "nq", "nc"))
         .withColumn("rel_fp", floor(col("cos") * lit(1000000.0)).cast("long"))
         .withColumn("srn", row_number().over(wS))
         .where(col("srn") <= 20)
@@ -4237,8 +4222,7 @@ object NorthStarQueries {
       val pb = short.select(col("q_id").as("q2"), col("c_id").as("b_id"),
                             col("c_emb").as("b_emb"), col("nc").as("nb"))
       val pairs = pa.join(pb, col("q_id") === col("q2") && col("a_id") =!= col("b_id"))
-        .withColumn("sim", expr("scaled_dot(a_emb, b_emb)").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        .withColumn("sim", cosine(expr("scaled_dot(a_emb, b_emb)"), "na", "nb"))
         .select(col("q_id"), col("a_id"), col("b_id"),
           floor(col("sim") * lit(1000000.0)).cast("long").as("sim_fp"))
         .localCheckpoint(true)
@@ -4297,21 +4281,18 @@ object NorthStarQueries {
          |), short AS (
          |  SELECT q_id, c_id, rel_fp, c_emb, nc FROM (
          |    SELECT q.q_id, c.c_id,
-         |      cast(floor(cast(${scaledDotSql("q.q_emb", "c.c_emb")} as double)
-         |        / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nc as double)))
+         |      cast(floor(${cosineSql(scaledDotSql("q.q_emb", "c.c_emb"), "q.nq", "c.nc")}
          |        * 1000000.0) as bigint) AS rel_fp,
          |      c.c_emb, c.nc,
          |      row_number() OVER (PARTITION BY q.q_id ORDER BY
-         |        cast(floor(cast(${scaledDotSql("q.q_emb", "c.c_emb")} as double)
-         |          / (sqrt(cast(q.nq as double)) * sqrt(cast(c.nc as double)))
+         |        cast(floor(${cosineSql(scaledDotSql("q.q_emb", "c.c_emb"), "q.nq", "c.nc")}
          |          * 1000000.0) as bigint) DESC,
          |        c.c_id) AS srn
          |    FROM qv q JOIN cv c ON q.q_id <> c.c_id
          |  ) WHERE srn <= 20
          |), pairs AS (
          |  SELECT a.q_id, a.c_id AS a_id, b.c_id AS b_id,
-         |    cast(floor(cast(${scaledDotSql("a.c_emb", "b.c_emb")} as double)
-         |      / (sqrt(cast(a.nc as double)) * sqrt(cast(b.nc as double)))
+         |    cast(floor(${cosineSql(scaledDotSql("a.c_emb", "b.c_emb"), "a.nc", "b.nc")}
          |      * 1000000.0) as bigint) AS sim_fp
          |  FROM short a JOIN short b ON a.q_id = b.q_id AND a.c_id <> b.c_id
          |), cands AS (

@@ -118,6 +118,25 @@ class SessionShapeSpec extends SparkSpec {
     assert(mainCount("case None => (id, 0L, 0L, 0L, 0L, 0L, false)") == 1)
   }
 
+  test("source guard: one embedding-similarity definition per engine") {
+    // the cosine ratio, a product of two square roots: NorthStarQueries.
+    // cosine (a Spark Column) and cosineSql (SQL text for the oracles)
+    val ratios = SourceText.main.toSeq.flatMap { case (f, src) =>
+      "sqrt\\(.*\\) \\* sqrt\\(".r.findAllIn(src).map(_ => f)
+    }
+    assert(ratios == Seq.fill(2)("graft/queries/NorthStarQueries.scala"), ratios.mkString(", "))
+    assert(mainCount("def scaledDot(") == 0)
+    assert(mainCount("cosE6") == 0)
+    // the bucketed-embedding frame, bucketed and bucketedSqlCte; the other
+    // bucket expression per engine is the ns_sim_lsh_buckets histogram
+    assert(mainCount("expr(\"lsh_bucket(embedding)\")") == 2)
+    assert(mainCount("lshBucketSql AS bucket") + mainCount("lshBucketSql} AS bucket") == 2)
+    // the bucket-equi top-3 edge build, knnEdges and knnSqlCte
+    assert(mainCount(
+      "col(\"bucket\") === col(\"bucket_b\") && col(\"a_id\") =!= col(\"b_id\")") == 1)
+    assert(mainCount("a.bucket = b.bucket AND a.vec_id <> b.vec_id") == 1)
+  }
+
   test("source guard: one PNG chunk writer and one JPEG bit writer") {
     val mm = SourceText.main("graft/operators/Multimodal.scala")
     assert("def chunk\\(".r.findAllIn(mm).size == 1)
