@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
@@ -170,9 +172,13 @@ object Tables {
     * NANOS column goes through an EXPLICIT LongType read schema, which
     * the parquet reader decodes directly (asserted in TsEncodingSpec).
     */
-  private[graft] def footer(spark: SparkSession, path: String, name: String): Footer = {
+  private[graft] def footer(spark: SparkSession, path: String, name: String): Footer =
+    versioned(spark, path, name)._2
+
+  /** The [[fileStamp]] of `path` and the [[footer]] of that version. */
+  private def versioned(spark: SparkSession, path: String, name: String): (String, Footer) = {
     val (stamp, file) = locate(spark, path)
-    footers.computeIfAbsent(stamp + "#" + name, _ => readFooter(spark, path, name, file))
+    (stamp, footers.computeIfAbsent(stamp + "#" + name, _ => readFooter(spark, path, name, file)))
   }
 
   private val footers = new java.util.concurrent.ConcurrentHashMap[String, Footer]()
@@ -382,21 +388,23 @@ object Tables {
     * null-fill), never an opaque scan failure or silent mis-decode.
     *
     * When [[registerWithStats]] registered THIS dir's table from the
-    * same read schema, the load is the stats-bearing catalog table —
+    * same file version, the load is the stats-bearing catalog table —
     * identical data and schema, but the scan carries rowCount/NDV so
     * CBO join-reorder and build-side choice see real cardinalities
     * instead of file-size heuristics. A table registered from another
-    * file version's schema (a mid-JVM ns↔µs regeneration) would decode
-    * wrong-unit values through its frozen ts DDL, so it is bypassed for
-    * the direct footer-aware read until registration is re-run.
+    * file version is bypassed for the direct footer-aware read until
+    * registration is re-run: its frozen ts DDL would decode a mid-JVM
+    * ns↔µs regeneration in the wrong unit, and a relation Spark cached
+    * over the old file would miss rows of the new one.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val f = footer(spark, path, name)
+    val (stamp, f) = versioned(spark, path, name)
     f.drift.foreach(msg => throw new IllegalStateException(msg))
     val tbl = statsTableName(dir, name)
     val df =
-      if (registered.get(tbl) == f.schema && spark.catalog.tableExists(tbl)) spark.table(tbl)
+      if (registered.get(tbl) == ((f.schema, stamp)) && spark.catalog.tableExists(tbl))
+        spark.table(tbl)
       else fixtureRead(spark, f.schema, path)
     normalizeTs(df, tsColumnsOf(name))
   }
@@ -437,12 +445,14 @@ object Tables {
       if (shape(have) != shape(want)) spark.sql(s"DROP TABLE $table")
     }
 
-  /** Catalog tables [[registerWithStats]] created or confirmed in this
-    * JVM, mapped to the read schema they were registered from — what
-    * [[load]] checks before it serves one.
+  /** Catalog tables [[registerWithStats]] analyzed in this JVM, mapped
+    * to the read schema they were registered from and the [[fileStamp]]
+    * of the file version analyzed: [[load]] serves only that version
+    * from the table, and registration keeps its statistics instead of
+    * analyzing it again.
     */
   private val registered =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (StructType, String)]()
 
   /** Register the fixtures under `dir` as external parquet tables in the
     * session's catalog and collect row-count + column stats, then enable
@@ -452,37 +462,89 @@ object Tables {
     * way a fixture becomes a named table: the bench and gate sessions
     * run it on their in-memory catalog, and [[graft.engine.Engine]]'s
     * persistent deployment on its Hive metastore, where the tables and
-    * their stats outlive the process. Idempotent: an existing table
-    * whose DDL still matches is kept and re-analyzed.
+    * their stats outlive the process.
+    *
+    * The tables register concurrently, one task per table on at most as
+    * many threads as the JVM has processors, so their ANALYZE jobs
+    * overlap; the catalogs serialize their own metadata calls. The first
+    * failing table, in [[schemas]] order, fails the call with its name,
+    * after every task has ended. Idempotent: a table whose DDL still
+    * matches is kept, and so are its statistics when this JVM analyzed
+    * the same file version of it (same read schema and [[fileStamp]])
+    * and the catalog still holds its `rowCount`. A new catalog or a
+    * regenerated file is analyzed again. One stderr line reports the
+    * count of tables analyzed and kept, and the wall time.
     */
   def registerWithStats(spark: SparkSession, dir: String): Unit = {
+    val started = System.nanoTime()
     val abs = canon(dir)
     require(new java.io.File(abs).isDirectory,
       s"registerWithStats: fixture dir does not exist: $abs (from '$dir')")
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    schemas.keys.foreach { name =>
-      // footer-aware DDL for timestamp-bearing tables (ANALYZE scans
-      // the file through this table)
-      val schema = footer(spark, s"$abs/$name.parquet", name).schema
-      val t = statsTableName(abs, name)
-      dropIfSchemaDrifted(spark, t, schema)
-      // pathGlobFilter mirrors [[fixtureRead]]: stray non-parquet
-      // siblings in a part-file directory are skipped, not fatal
-      spark.sql(
-        s"""CREATE TABLE IF NOT EXISTS $t (${schema.toDDL})
-           |USING PARQUET OPTIONS (pathGlobFilter '*.parquet')
-           |LOCATION '$abs/$name.parquet'""".stripMargin)
-      spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS")
-      // column stats only for atomic types — ANALYZE rejects array/map
-      val atomic = schema.fields.collect {
-        case f if !f.dataType.typeName.matches("array|map|struct") => f.name
+    val names = schemas.keys.toSeq
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(names.size, Runtime.getRuntime.availableProcessors), { r =>
+        val t = new Thread(r, s"graft-register-${threads.size + 1}")
+        t.setDaemon(true); threads.add(t); t
+      })
+    val outcomes =
+      try names.map(name => pool.submit(() => registerTable(spark, abs, name)))
+        .map(task => Try(task.get()))
+      finally {
+        pool.shutdown()
+        threads.forEach(_.join())
       }
-      if (atomic.nonEmpty)
-        spark.sql(
-          s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${atomic.mkString(", ")}")
-      registered.put(t, schema)
+    val analyzed = names.zip(outcomes).map {
+      case (_, Success(a)) => a
+      case (name, Failure(e)) =>
+        val cause = Option(e.getCause).getOrElse(e)
+        throw new IllegalStateException(
+          s"registerWithStats: fixture '$name' from $abs failed: ${cause.getMessage}", cause)
+    }.count(identity)
+    System.err.println(f"[session] registered ${names.size} fixtures from $abs in " +
+      f"${(System.nanoTime() - started) / 1e9}%.2f s ($analyzed analyzed, " +
+      s"${names.size - analyzed} kept)")
+  }
+
+  /** One fixture's step of [[registerWithStats]]: its footer, the drift
+    * drop, the DDL and, unless this JVM already analyzed the same file
+    * version, the column ANALYZE. True when it analyzed.
+    */
+  private def registerTable(spark: SparkSession, abs: String, name: String): Boolean = {
+    // footer-aware DDL for timestamp-bearing tables (ANALYZE scans
+    // the file through this table)
+    val (stamp, f) = versioned(spark, s"$abs/$name.parquet", name)
+    // column stats only for atomic types — ANALYZE rejects array/map
+    val atomic = f.schema.fields.collect {
+      case c if !c.dataType.typeName.matches("array|map|struct") => c.name
     }
+    if (atomic.isEmpty)
+      throw new IllegalStateException(
+        s"fixture '$name' has no atomic column, so ANALYZE cannot count its rows")
+    val t = statsTableName(abs, name)
+    dropIfSchemaDrifted(spark, t, f.schema)
+    // pathGlobFilter mirrors [[fixtureRead]]: stray non-parquet
+    // siblings in a part-file directory are skipped, not fatal
+    spark.sql(
+      s"""CREATE TABLE IF NOT EXISTS $t (${f.schema.toDDL})
+         |USING PARQUET OPTIONS (pathGlobFilter '*.parquet')
+         |LOCATION '$abs/$name.parquet'""".stripMargin)
+    val catalog = spark.sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(t)
+    val key = (f.schema, stamp)
+    val kept = registered.get(t) == key &&
+      catalog.getTableMetadata(id).stats.exists(_.rowCount.isDefined)
+    if (!kept) {
+      // a relation cached before a regeneration still lists the old file
+      catalog.refreshTable(id)
+      // the column command also writes sizeInBytes and rowCount, so no
+      // table-level ANALYZE runs first
+      spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${atomic.mkString(", ")}")
+      registered.put(t, key)
+    }
+    !kept
   }
 
   /** Like [[load]], but spreads the rows across the session's default

@@ -69,6 +69,9 @@ class SessionShapeSpec extends SparkSpec {
   test("source guard: fixtures become named tables in Tables and views only in Q.sql") {
     Seq("CREATE TABLE", "ANALYZE TABLE").foreach(p =>
       assert(SourceText.mainFilesWith(p) == Set("graft/Tables.scala"), p))
+    // one ANALYZE per table: the column command also writes the
+    // table-level sizeInBytes and rowCount
+    assert(mainCount("ANALYZE TABLE") == 1)
     assert(SourceText.mainFilesWith("createOrReplaceTempView") ==
       Set("graft/queries/Q.scala", "graft/ScaleProbe.scala"))
     assert("createOrReplaceTempView".r
