@@ -177,6 +177,8 @@ object Multimodal {
       ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
   private def be16(b: Array[Byte], o: Int): Int =
     ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+  private def le16(b: Array[Byte], o: Int): Int =
+    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
   private def le32(b: Array[Byte], o: Int): Long =
     ((b(o + 3) & 0xffL) << 24) | ((b(o + 2) & 0xffL) << 16) |
       ((b(o + 1) & 0xffL) << 8) | (b(o) & 0xffL)
@@ -1189,6 +1191,51 @@ object Multimodal {
     }
   }
 
+  /** Append one WARC record to `bos` as its own gzip member: the WARC/1.0
+    * header (type `typ`, record id
+    * `urn:uuid:00000000-0000-0000-<series>-<id>`, a fixed date, the
+    * payload length), the payload and the closing CRLF CRLF. Each
+    * fixture writer numbers its records in its own id series. */
+  private def writeWarcMember(bos: java.io.ByteArrayOutputStream, typ: String,
+      series: Int, id: Long, payload: Array[Byte]): Unit = {
+    val rec = new java.io.ByteArrayOutputStream()
+    val hdr = s"WARC/1.0\r\n" +
+      s"WARC-Type: $typ\r\n" +
+      f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-$series%04d-$id%012d>\r\n" +
+      s"WARC-Date: 2024-01-01T00:00:00Z\r\n" +
+      s"Content-Length: ${payload.length}\r\n" +
+      "\r\n"
+    rec.write(hdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    rec.write(payload)
+    rec.write("\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    gz.write(rec.toByteArray)
+    gz.finish() // end THIS member; the stream stays open for the next
+  }
+
+  /** `body` in HTTP/1.1 chunked transfer coding, as the WARC fixture
+    * writers ship it: chunk i carries 3 + i % 5 bytes (the last one
+    * what is left), each as a hex size line and the data with CRLFs,
+    * then the zero-size last chunk and an empty trailer. */
+  private def chunkedBody(body: Array[Byte]): Array[Byte] = {
+    val cb = new java.io.ByteArrayOutputStream()
+    var o = 0
+    var ci = 0
+    while (o < body.length) {
+      val n = math.min(3 + (ci % 5), body.length - o)
+      cb.write(java.lang.Long.toHexString(n.toLong)
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      cb.write('\r'); cb.write('\n')
+      cb.write(body, o, n)
+      cb.write('\r'); cb.write('\n')
+      o += n
+      ci += 1
+    }
+    cb.write('0'); cb.write('\r'); cb.write('\n')
+    cb.write('\r'); cb.write('\n')
+    cb.toByteArray
+  }
+
   /** Deterministic WARC fixture whose RESPONSE payloads are real
     * HTTP/1.1 messages (status cycling 200/404/301 by response index,
     * Content-Type + Content-Length + X-Crawl headers, body "body <r>
@@ -1217,26 +1264,7 @@ object Multimodal {
           // de-chunked body, so the closed-form body oracle is invariant
           // to the wire framing — which is itself the check
           val chunked = resp % 4 == 3
-          val wire: Array[Byte] =
-            if (!chunked) body
-            else {
-              val cb = new java.io.ByteArrayOutputStream()
-              var o = 0
-              var ci = 0
-              while (o < body.length) {
-                val n = math.min(3 + (ci % 5), body.length - o)
-                cb.write(java.lang.Long.toHexString(n.toLong)
-                  .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-                cb.write('\r'); cb.write('\n')
-                cb.write(body, o, n)
-                cb.write('\r'); cb.write('\n')
-                o += n
-                ci += 1
-              }
-              cb.write('0'); cb.write('\r'); cb.write('\n')
-              cb.write('\r'); cb.write('\n')
-              cb.toByteArray
-            }
+          val wire = if (chunked) chunkedBody(body) else body
           val hdr = s"HTTP/1.1 $code\r\n" +
             "Content-Type: text/plain\r\n" +
             (if (chunked) "Transfer-Encoding: chunked\r\n"
@@ -1246,20 +1274,8 @@ object Multimodal {
           resp += 1
           hdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ wire
         }
-      val typ = if (isReq) "request" else "response"
-      val rec = new java.io.ByteArrayOutputStream()
-      val whdr = s"WARC/1.0\r\n" +
-        s"WARC-Type: $typ\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0001-${tag.toLong * 100000 + r}%012d>\r\n" +
-        s"WARC-Date: 2024-01-01T00:00:00Z\r\n" +
-        s"Content-Length: ${payload.length}\r\n" +
-        "\r\n"
-      rec.write(whdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      rec.write(payload)
-      rec.write("\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(rec.toByteArray)
-      gz.finish()
+      writeWarcMember(bos, if (isReq) "request" else "response", 1,
+        tag.toLong * 100000 + r, payload)
       r += 1
     }
     bos.toByteArray
@@ -1330,21 +1346,6 @@ object Multimodal {
     */
   def warcHtmlBytes(tag: Int, nResponses: Int): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    def writeRecord(typ: String, payload: Array[Byte], id: Long): Unit = {
-      val rec = new java.io.ByteArrayOutputStream()
-      val whdr = s"WARC/1.0\r\n" +
-        s"WARC-Type: $typ\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0002-$id%012d>\r\n" +
-        s"WARC-Date: 2024-01-01T00:00:00Z\r\n" +
-        s"Content-Length: ${payload.length}\r\n" +
-        "\r\n"
-      rec.write(whdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      rec.write(payload)
-      rec.write("\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(rec.toByteArray)
-      gz.finish()
-    }
     var p = 0
     while (p < nResponses) {
       val is404 = p % 3 == 1
@@ -1353,39 +1354,18 @@ object Multimodal {
         else HtmlText.htmlPage(tag * 10 + p, 2 + (tag + p) % 3, 1 + (tag + p) % 4)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val chunked = p % 2 == 1
-      val wire: Array[Byte] =
-        if (!chunked) body
-        else {
-          val cb = new java.io.ByteArrayOutputStream()
-          var o = 0
-          var ci = 0
-          while (o < body.length) {
-            val n = math.min(3 + (ci % 5), body.length - o)
-            cb.write(java.lang.Long.toHexString(n.toLong)
-              .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-            cb.write('\r'); cb.write('\n')
-            cb.write(body, o, n)
-            cb.write('\r'); cb.write('\n')
-            o += n
-            ci += 1
-          }
-          cb.write('0'); cb.write('\r'); cb.write('\n')
-          cb.write('\r'); cb.write('\n')
-          cb.toByteArray
-        }
+      val wire = if (chunked) chunkedBody(body) else body
       val hdr = s"HTTP/1.1 ${if (is404) "404 Not Found" else "200 OK"}\r\n" +
         "Content-Type: text/html; charset=utf-8\r\n" +
         (if (chunked) "Transfer-Encoding: chunked\r\n"
          else s"Content-Length: ${body.length}\r\n") +
         "\r\n"
-      writeRecord("response",
-        hdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ wire,
-        tag.toLong * 100000 + p * 2)
+      writeWarcMember(bos, "response", 2, tag.toLong * 100000 + p * 2,
+        hdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ wire)
       if (p % 2 == 0)
-        writeRecord("request",
+        writeWarcMember(bos, "request", 2, tag.toLong * 100000 + p * 2 + 1,
           (s"GET /page/$p HTTP/1.1\r\nHost: crawl-$tag.example\r\n\r\n")
-            .getBytes(java.nio.charset.StandardCharsets.US_ASCII),
-          tag.toLong * 100000 + p * 2 + 1)
+            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
       p += 1
     }
     bos.toByteArray
@@ -1406,19 +1386,7 @@ object Multimodal {
         case 1 => "request"
         case _ => "metadata"
       }
-      val rec = new java.io.ByteArrayOutputStream()
-      val hdr = s"WARC/1.0\r\n" +
-        s"WARC-Type: $typ\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-${tag.toLong * 100000 + r}%012d>\r\n" +
-        s"WARC-Date: 2024-01-01T00:00:00Z\r\n" +
-        s"Content-Length: ${payload.length}\r\n" +
-        "\r\n"
-      rec.write(hdr.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      rec.write(payload)
-      rec.write("\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(rec.toByteArray)
-      gz.finish() // end THIS member; the stream stays open for the next
+      writeWarcMember(bos, typ, 0, tag.toLong * 100000 + r, payload)
       r += 1
     }
     bos.toByteArray
@@ -3125,15 +3093,60 @@ object Multimodal {
       return jpegProgressiveDc(b, sosAt, scanAl, huffs, qY, compTq(0),
         nComp, compTd, hs, vs, nMcus, nb, restartInterval, w, h)
     val br = new JpegBits(b, sosAt)
-    val dcPred = new Array[Long](3)
     var sum = 0L
     var mn = Long.MaxValue
     var mx = Long.MinValue
+    val ok = jpegDcMcus(br, huffs, compTd, nComp, hs, vs, nMcus,
+        restartInterval) { (ci, dc) =>
+      if (ci == 0) {
+        val dq = dc * qY
+        sum += dq
+        mn = math.min(mn, dq)
+        mx = math.max(mx, dq)
+      }
+      // skip the block's AC coefficients
+      var k = 1
+      var eob = false
+      var bad = false
+      val ac = huffs(1)(compTa(ci))
+      while (!bad && !eob && k <= 63) {
+        val sym = ac.decode(br)
+        if (sym < 0) bad = true
+        else if (sym == 0x00) eob = true // EOB
+        else if (sym == 0xf0) k += 16 // ZRL
+        else {
+          k += (sym >> 4) + 1
+          var i = 0
+          while (!bad && i < (sym & 0x0f)) {
+            if (br.readBit() < 0) bad = true
+            i += 1
+          }
+        }
+      }
+      !bad
+    }
+    if (ok) Some((w.toLong, h.toLong, nb, sum, mn, mx)) else None
+  }
+
+  /** Walk `nMcus` interleaved MCUs of a Huffman-coded DC scan from `br`.
+    * Each MCU holds hs*vs luma blocks (row-major), then one block per
+    * chroma component. At every restart interval the stream
+    * byte-aligns at its RSTn and every DC predictor resets (T.81
+    * §F.2.1.3.1). Per block, the DC difference (a Huffman category,
+    * then that many bits through T.81 §F.2.2.1 EXTEND) is added to the
+    * component's predictor, and `onBlock(ci, dc)` receives the new
+    * value; it consumes whatever else the block codes and returns
+    * false to reject. False on a malformed stream.
+    */
+  private def jpegDcMcus(br: JpegBits, huffs: Array[Array[JpegHuff]],
+      compTd: Array[Int], nComp: Int, hs: Int, vs: Int, nMcus: Long,
+      restartInterval: Int)(onBlock: (Int, Long) => Boolean): Boolean = {
+    val dcPred = new Array[Long](3)
     var rstCount = 0
     var m0 = 0L
     while (m0 < nMcus) {
       if (restartInterval > 0 && m0 > 0 && m0 % restartInterval == 0) {
-        if (!br.consumeRst(rstCount)) return None
+        if (!br.consumeRst(rstCount)) return false
         rstCount += 1
         java.util.Arrays.fill(dcPred, 0L)
       }
@@ -3143,48 +3156,27 @@ object Multimodal {
         var blk = 0
         while (blk < nBlk) {
           val cat = huffs(0)(compTd(ci)).decode(br)
-          if (cat < 0 || cat > 11) return None
+          if (cat < 0 || cat > 11) return false
           var diff = 0L
           if (cat > 0) {
             var bits = 0L; var i = 0
             while (i < cat) {
-              val v = br.readBit(); if (v < 0) return None
+              val v = br.readBit(); if (v < 0) return false
               bits = (bits << 1) | v; i += 1
             }
-            // T.81 §F.2.2.1 EXTEND: low-range values are negatives
+            // EXTEND: low-range values are negatives
             diff = if (bits < (1L << (cat - 1))) bits - (1L << cat) + 1
               else bits
           }
           dcPred(ci) += diff
-          if (ci == 0) {
-            val dq = dcPred(0) * qY
-            sum += dq
-            mn = math.min(mn, dq)
-            mx = math.max(mx, dq)
-          }
-          var k = 1
-          var eob = false
-          val ac = huffs(1)(compTa(ci))
-          while (!eob && k <= 63) {
-            val sym = ac.decode(br); if (sym < 0) return None
-            if (sym == 0x00) eob = true // EOB
-            else if (sym == 0xf0) k += 16 // ZRL
-            else {
-              k += (sym >> 4) + 1
-              var i = 0
-              while (i < (sym & 0x0f)) {
-                if (br.readBit() < 0) return None
-                i += 1
-              }
-            }
-          }
+          if (!onBlock(ci, dcPred(ci))) return false
           blk += 1
         }
         ci += 1
       }
       m0 += 1
     }
-    Some((w.toLong, h.toLong, nb, sum, mn, mx))
+    true
   }
 
   /** Progressive (SOF2) DC-tier walk — T.81 G.1/G.2: decodes the DC
@@ -3217,42 +3209,13 @@ object Multimodal {
     val dcY = new Array[Long](nb.toInt)
     // ---- DC first scan (diffs of DC >> Al, interleaved) ----
     val br = new JpegBits(b, firstScanAt)
-    val dcPred = new Array[Long](3)
-    var rstCount = 0
     var yIdx = 0
-    var m0 = 0L
-    while (m0 < nMcus) {
-      if (restartInterval > 0 && m0 > 0 && m0 % restartInterval == 0) {
-        if (!br.consumeRst(rstCount)) return None
-        rstCount += 1
-        java.util.Arrays.fill(dcPred, 0L)
-      }
-      var ci = 0
-      while (ci < nComp) {
-        val nBlk = if (ci == 0) hs * vs else 1
-        var blk = 0
-        while (blk < nBlk) {
-          val cat = huffs(0)(compTd(ci)).decode(br)
-          if (cat < 0 || cat > 11) return None
-          var diff = 0L
-          if (cat > 0) {
-            var bits = 0L; var i = 0
-            while (i < cat) {
-              val v = br.readBit(); if (v < 0) return None
-              bits = (bits << 1) | v; i += 1
-            }
-            // T.81 §F.2.2.1 EXTEND
-            diff = if (bits < (1L << (cat - 1))) bits - (1L << cat) + 1
-              else bits
-          }
-          dcPred(ci) += diff
-          if (ci == 0) { dcY(yIdx) = dcPred(0) << firstAl; yIdx += 1 }
-          blk += 1
-        }
-        ci += 1
-      }
-      m0 += 1
+    val firstOk = jpegDcMcus(br, huffs, compTd, nComp, hs, vs, nMcus,
+        restartInterval) { (ci, dc) =>
+      if (ci == 0) { dcY(yIdx) = dc << firstAl; yIdx += 1 }
+      true
     }
+    if (!firstOk) return None
     // ---- subsequent scans until EOI ----
     var curAl = firstAl // low bits still unrefined
     var p = br.nextMarkerPos
@@ -3770,10 +3733,37 @@ object Multimodal {
 
   private def gifIndexStatsImpl(
       b: Array[Byte]): Option[(Long, Long, Long, Long, Long, Long)] = {
+    var stats: Option[(Long, Long, Long, Long, Long, Long)] = None
+    // a trailer before any image leaves `stats` empty
+    gifBlocks(b)(_ => ()) { (iw, ih, minCode, data) =>
+      // width/height are the IMAGE descriptor's (iw, ih) — the pixels
+      // the stats actually cover — not the logical-screen (sw, sh):
+      // a first frame that is a subrectangle of the screen would
+      // otherwise report width*height != n_pixels.
+      stats = gifLzwStats(data, minCode, iw.toLong * ih, iw, ih)
+      false
+    }
+    stats
+  }
+
+  /** Walk the blocks of a GIF87a/GIF89a stream after its logical screen
+    * descriptor and global color table. An extension is handed to
+    * `onExt` at its introducer's offset, then skipped through its
+    * sub-block grammar. An image descriptor is parsed — local color
+    * table skipped, LZW minimum code size checked (2..8), data
+    * sub-blocks concatenated — and handed to `onImage(iw, ih, minCode,
+    * data)`, which returns whether to walk on. Interlaced images are
+    * accepted: the four-pass row order is a permutation of the raster,
+    * and index stats are order-invariant (GifLzwSpec cross-checks an
+    * interlaced fixture against the JDK's deinterlacing decode).
+    * Some(true) at the trailer, Some(false) when `onImage` stopped the
+    * walk, None on a malformed stream or one without a trailer.
+    */
+  private def gifBlocks(b: Array[Byte])(onExt: Int => Unit)(
+      onImage: (Int, Int, Int, Array[Byte]) => Boolean): Option[Boolean] = {
     if (b.length < 14) return None
     val sig = new String(b, 0, 6, java.nio.charset.StandardCharsets.US_ASCII)
     if (sig != "GIF87a" && sig != "GIF89a") return None
-    def le16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
     // logical-screen dims at offsets 6/8 are NOT the stats surface
     // (the image descriptor's iw/ih are) — only the packed byte matters
     val packed = b(10) & 0xff
@@ -3781,8 +3771,9 @@ object Multimodal {
     if ((packed & 0x80) != 0) pos += 3 * (1 << ((packed & 7) + 1)) // GCT
     while (pos < b.length) {
       val bt = b(pos) & 0xff
-      if (bt == 0x3b) return None // trailer before any image
+      if (bt == 0x3b) return Some(true) // trailer
       else if (bt == 0x21) { // 89a extension: label byte + sub-blocks
+        onExt(pos)
         pos += 2
         var n = -1
         while (n != 0) {
@@ -3792,13 +3783,9 @@ object Multimodal {
         }
       } else if (bt == 0x2c) { // image descriptor
         if (pos + 10 > b.length) return None
-        val iw = le16(pos + 5)
-        val ih = le16(pos + 7)
+        val iw = le16(b, pos + 5)
+        val ih = le16(b, pos + 7)
         val ip = b(pos + 9) & 0xff
-        // interlaced images are ACCEPTED: the four-pass row order is a
-        // permutation of the raster, and index stats are order-invariant
-        // (GifLzwSpec cross-checks an interlaced fixture against the
-        // JDK's deinterlacing decode)
         pos += 10
         if ((ip & 0x80) != 0) pos += 3 * (1 << ((ip & 7) + 1)) // local CT
         if (pos >= b.length) return None
@@ -3815,11 +3802,7 @@ object Multimodal {
           pos += 1 + n
         }
         if (iw <= 0 || ih <= 0) return None
-        // width/height are the IMAGE descriptor's (iw, ih) — the pixels
-        // the stats actually cover — not the logical-screen (sw, sh):
-        // a first frame that is a subrectangle of the screen would
-        // otherwise report width*height != n_pixels.
-        return gifLzwStats(data.toByteArray, minCode, iw.toLong * ih, iw, ih)
+        if (!onImage(iw, ih, minCode, data.toByteArray)) return Some(false)
       } else return None
     }
     None
@@ -3845,70 +3828,35 @@ object Multimodal {
 
   private def gifAnimStatsImpl(
       b: Array[Byte]): Option[(Long, Long, Long, Long, Long, Long)] = {
-    if (b.length < 14) return None
-    val sig = new String(b, 0, 6, java.nio.charset.StandardCharsets.US_ASCII)
-    if (sig != "GIF87a" && sig != "GIF89a") return None
-    def le16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    val packed = b(10) & 0xff
-    var pos = 13
-    if ((packed & 0x80) != 0) pos += 3 * (1 << ((packed & 7) + 1)) // GCT
     var nFrames = 0L
     var w0 = 0L; var h0 = 0L
     var totalPx = 0L
     var sumIdx = 0L
     var sumDelay = 0L
     var pendingDelay = 0L
-    while (pos < b.length) {
-      val bt = b(pos) & 0xff
-      if (bt == 0x3b) { // trailer: the census is complete
-        return if (nFrames == 0) None
-          else Some((nFrames, w0, h0, totalPx, sumIdx, sumDelay))
-      } else if (bt == 0x21) { // extension: label byte + sub-blocks
-        val label = b(pos + 1) & 0xff
-        if (label == 0xf9 && pos + 6 < b.length && (b(pos + 2) & 0xff) == 4)
-          pendingDelay = le16(pos + 4).toLong // GCE delay, centiseconds
-        pos += 2
-        var n = -1
-        while (n != 0) {
-          if (pos >= b.length) return None
-          n = b(pos) & 0xff
-          pos += 1 + n
-        }
-      } else if (bt == 0x2c) { // image descriptor
-        if (pos + 10 > b.length) return None
-        val iw = le16(pos + 5)
-        val ih = le16(pos + 7)
-        val ip = b(pos + 9) & 0xff
-        pos += 10
-        if ((ip & 0x80) != 0) pos += 3 * (1 << ((ip & 7) + 1)) // local CT
-        if (pos >= b.length) return None
-        val minCode = b(pos) & 0xff
-        pos += 1
-        if (minCode < 2 || minCode > 8) return None
-        val data = new java.io.ByteArrayOutputStream()
-        var n = -1
-        while (n != 0) {
-          if (pos >= b.length) return None
-          n = b(pos) & 0xff
-          if (pos + 1 + n > b.length) return None
-          data.write(b, pos + 1, n)
-          pos += 1 + n
-        }
-        if (iw <= 0 || ih <= 0) return None
-        if (nFrames == 0) { w0 = iw.toLong; h0 = ih.toLong }
-        else if (iw.toLong != w0 || ih.toLong != h0) return None
-        gifLzwStats(data.toByteArray, minCode, iw.toLong * ih, iw, ih) match {
-          case Some((_, _, nPix, s, _, _)) =>
-            nFrames += 1
-            totalPx += nPix
-            sumIdx += s
-            sumDelay += pendingDelay
-            pendingDelay = 0L
-          case None => return None
-        }
-      } else return None
+    val end = gifBlocks(b) { pos =>
+      val label = b(pos + 1) & 0xff
+      if (label == 0xf9 && pos + 6 < b.length && (b(pos + 2) & 0xff) == 4)
+        pendingDelay = le16(b, pos + 4).toLong // GCE delay, centiseconds
+    } { (iw, ih, minCode, data) =>
+      if (nFrames == 0) { w0 = iw.toLong; h0 = ih.toLong }
+      if (iw.toLong != w0 || ih.toLong != h0) false
+      else gifLzwStats(data, minCode, iw.toLong * ih, iw, ih) match {
+        case Some((_, _, nPix, s, _, _)) =>
+          nFrames += 1
+          totalPx += nPix
+          sumIdx += s
+          sumDelay += pendingDelay
+          pendingDelay = 0L
+          true
+        case None => false
+      }
     }
-    None // ran off the end without a trailer
+    // only the trailer completes the census; a rejected frame rejects
+    // the whole file
+    if (end.contains(true) && nFrames > 0)
+      Some((nFrames, w0, h0, totalPx, sumIdx, sumDelay))
+    else None
   }
 
   /** Multi-frame fixture: [[gifPatternBytes]]'s frame block (GCE +

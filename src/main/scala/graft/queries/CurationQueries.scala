@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.expressions.GramHash
 import graft.streaming.Replay
 
-import NorthStarQueries.{bucketed, bucketedSqlCte, cosine, cosineSql, knnEdges, knnSqlCte,
-  scaledDotSql}
+import NorthStarQueries.{bucketed, bucketedSqlCte, cosine, cosineSql, ivfRanked,
+  ivfRankedSqlCtes, knnEdges, knnSqlCte, scaledDotSql}
 import Q.{T, TS}
 
 /** SURVEY.md §2C, round-10 additions — corpus-curation operators a
@@ -1224,15 +1224,7 @@ object CurationQueries {
   private val simIvfPq = Q(
     (s, dir) => {
       val v = NorthStarQueries.kmeansQuantizedIndex(s, dir)
-      val cents: Seq[(Int, Seq[Long])] = v
-        .where(col("vec_id").between(100, 115)).collect()
-        .map(r => ((r.getLong(0) - 100).toInt, r.getSeq[Long](1)))
-        .sortBy(_._1).toSeq
-      val cellStructs = cents.map { case (j, c) =>
-        s"struct(sq_l2(xq, cast(array(${c.mkString(",")}) as array<bigint>)) AS d, " +
-          s"cast($j as bigint) AS j)"
-      }
-      val cellSorted = s"array_sort(array(${cellStructs.mkString(", ")}))"
+      val cellSorted = ivfCellSortedExpr(v)
       val vc = v.withColumn("cell", expr(s"element_at($cellSorted, 1).j"))
       // queries probe their 2 nearest cells
       val probes = v.where(col("vec_id") < PQ_CODES)
@@ -1241,21 +1233,8 @@ object CurationQueries {
       // PQ codebook + encode exprs: the shared builder (same convention
       // and byte-identical expression text as ns_sim_pq / ns_sim_pq_adc)
       val cb = NorthStarQueries.pqCodebook(v)
-      val encExprs = NorthStarQueries.pqEncodeExprs(cb)
-      val enc = vc
-        .select(col("vec_id").as("c_id"), col("cell"),
-          explode(expr(s"array(${encExprs.mkString(", ")})")).as("e"))
-        .select(col("c_id"), col("cell"), col("e.em").as("em"), col("e.code").as("code"))
-      val dtabStructs = (0 until PQ_M).flatMap { m =>
-        cb(m).map { case (j, c) =>
-          s"struct(cast($m as bigint) AS m, cast($j as bigint) AS j, " +
-            s"sq_l2(xq, cast(array(${c.mkString(",")}) as array<bigint>), ${m * 8}) AS d)"
-        }
-      }
-      val dtab = v.where(col("vec_id") < PQ_CODES)
-        .select(col("vec_id").as("tq_id"),
-          explode(expr(s"array(${dtabStructs.mkString(", ")})")).as("t"))
-        .select(col("tq_id"), col("t.m").as("m"), col("t.j").as("j"), col("t.d").as("d"))
+      val enc = ivfPqIndexRows(vc, cb)
+      val dtab = ivfPqDistTable(v, cb)
       val wTop = Window.partitionBy(col("q_id")).orderBy(col("adc_d"), col("c_id"))
       enc.join(broadcast(probes),
           col("cell") === col("pcell") && col("q_id") =!= col("c_id"))
@@ -1364,6 +1343,23 @@ object CurationQueries {
         col("e.code").as("code"))
   }
 
+  /** The per-query ADC distance tables: one (tq_id, m, j, d) row per
+    * query vector, subspace and code, `d` the squared distance from the
+    * query's subvector to that code's centroid.
+    */
+  private def ivfPqDistTable(v: DataFrame, cb: Map[Int, Seq[(Int, Seq[Long])]]): DataFrame = {
+    val dtabStructs = (0 until PQ_M).flatMap { m =>
+      cb(m).map { case (j, c) =>
+        s"struct(cast($m as bigint) AS m, cast($j as bigint) AS j, " +
+          s"sq_l2(xq, cast(array(${c.mkString(",")}) as array<bigint>), ${m * 8}) AS d)"
+      }
+    }
+    v.where(col("vec_id") < PQ_CODES)
+      .select(col("vec_id").as("tq_id"),
+        explode(expr(s"array(${dtabStructs.mkString(", ")})")).as("t"))
+      .select(col("tq_id"), col("t.m").as("m"), col("t.j").as("j"), col("t.d").as("d"))
+  }
+
   /** Serve an ADC top-3 search over a PERSISTED cell-partitioned index:
     * probed cells collected (bounded <= IVF_CELLS values) and applied as
     * a STATIC partition filter — only those cells' files are read;
@@ -1387,16 +1383,7 @@ object CurationQueries {
     // on the probed slice only (the stored files are untouched)
     val served = tombstones.fold(servedAll)(t =>
       servedAll.join(broadcast(t), Seq("c_id"), "left_anti"))
-    val dtabStructs = (0 until PQ_M).flatMap { m =>
-      cb(m).map { case (j, c) =>
-        s"struct(cast($m as bigint) AS m, cast($j as bigint) AS j, " +
-          s"sq_l2(xq, cast(array(${c.mkString(",")}) as array<bigint>), ${m * 8}) AS d)"
-      }
-    }
-    val dtab = v.where(col("vec_id") < PQ_CODES)
-      .select(col("vec_id").as("tq_id"),
-        explode(expr(s"array(${dtabStructs.mkString(", ")})")).as("t"))
-      .select(col("tq_id"), col("t.m").as("m"), col("t.j").as("j"), col("t.d").as("d"))
+    val dtab = ivfPqDistTable(v, cb)
     val wTop = Window.partitionBy(col("q_id")).orderBy(col("adc_d"), col("c_id"))
     served.join(broadcast(probes),
         col("cell") === col("pcell") && col("q_id") =!= col("c_id"))
@@ -3882,17 +3869,8 @@ object CurationQueries {
     */
   private val simIvfBalance = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val cells = e.join(broadcast(
-          e.where(col("vec_id").between(100, 115))
-            .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-              col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos",
-          cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val cells = ivfRanked(TS(s, dir, "embeddings")
+          .withColumn("nrm", expr("scaled_dot(embedding, embedding)")))
         .where(col("arn") === 1)
         .groupBy(col("cen_id").as("cell"))
         .agg(count(lit(1)).as("n_vecs"))
@@ -3910,19 +3888,7 @@ object CurationQueries {
             |  SELECT vec_id, embedding,
             |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), ranked AS (
-            |  SELECT vec_id, cen_id,
-            |    row_number() OVER (PARTITION BY vec_id
-            |                       ORDER BY cen_cos DESC, cen_id) AS arn
-            |  FROM (
-            |    SELECT e.vec_id, cen.cen_id,
-            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
-            |        AS cen_cos
-            |    FROM e, cen)
-            |), cells AS (
+            |), $ivfRankedSqlCtes, cells AS (
             |  SELECT cen_id AS cell, count(*) AS n_vecs
             |  FROM ranked WHERE arn = 1 GROUP BY 1
             |), t AS (SELECT cast(sum(n_vecs) as bigint) AS n_total FROM cells)
@@ -4274,15 +4240,7 @@ object CurationQueries {
     (s, dir) => {
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val ranked = e.join(broadcast(
-          e.where(col("vec_id").between(100, 115))
-            .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-              col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos",
-          cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val ranked = ivfRanked(e)
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("nrm").as("nc"), col("label").as("lc"), col("cen_id").as("cell_c"))
@@ -4331,18 +4289,7 @@ object CurationQueries {
             |  SELECT vec_id, embedding, label,
             |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), ranked AS (
-            |  SELECT *, row_number() OVER (PARTITION BY vec_id
-            |                               ORDER BY cen_cos DESC, cen_id) AS arn
-            |  FROM (
-            |    SELECT e.vec_id, e.embedding, e.label, e.nrm, cen.cen_id,
-            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
-            |        AS cen_cos
-            |    FROM e, cen)
-            |), assigned AS (
+            |), $ivfRankedSqlCtes, assigned AS (
             |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc, label AS lc,
             |    cen_id AS cell_c
             |  FROM ranked WHERE arn = 1
@@ -6983,17 +6930,8 @@ object CurationQueries {
   private val sampleClusterBalance = Q(
     (s, dir) => {
       val CAP = 24
-      val e = TS(s, dir, "embeddings")
-        .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val assigned = e.join(broadcast(
-          e.where(col("vec_id").between(100, 115))
-            .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-              col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos",
-          cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val assigned = ivfRanked(TS(s, dir, "embeddings")
+          .withColumn("nrm", expr("scaled_dot(embedding, embedding)")))
         .where(col("arn") === 1)
         .select(col("vec_id"), col("cen_id").as("cell"))
         .withColumn("hkey", expr(
@@ -7015,19 +6953,7 @@ object CurationQueries {
             |  SELECT vec_id, embedding,
             |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), ranked AS (
-            |  SELECT vec_id, cen_id,
-            |    row_number() OVER (PARTITION BY vec_id
-            |                       ORDER BY cen_cos DESC, cen_id) AS arn
-            |  FROM (
-            |    SELECT e.vec_id, cen.cen_id,
-            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
-            |        AS cen_cos
-            |    FROM e, cen)
-            |), a AS (
+            |), $ivfRankedSqlCtes, a AS (
             |  SELECT vec_id, cen_id AS cell,
             |    cast('0x' || substr(md5('cb:' || cast(vec_id as varchar)), 1, 8)
             |      as bigint) AS hkey
@@ -10794,19 +10720,13 @@ object CurationQueries {
         .select(col("q_id"), col("rnk"), col("c_id"), col("score_fp"))
         .orderBy(col("q_id"), col("rnk"))
     },
-    Some("""WITH q AS (
+    Some(s"""WITH q AS (
            |  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
            |  WHERE vec_id < 16
            |), c AS (
            |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
            |), p AS (
-           |  SELECT q_id, c_id,
-           |    list_sum(list_transform(generate_series(0, 7), qs ->
-           |      list_max(list_transform(generate_series(0, 7), ds ->
-           |        list_sum(list_transform(generate_series(1, 8), i ->
-           |          cast(floor(q_emb[qs * 8 + i]::double * 1048576) as bigint)
-           |          * cast(floor(c_emb[ds * 8 + i]::double * 1048576) as bigint)))))))
-           |      AS score_fp
+           |  SELECT q_id, c_id, ${maxsimScoreSql("q_emb", "c_emb")} AS score_fp
            |  FROM q JOIN c ON q_id <> c_id
            |), r AS (
            |  SELECT q_id, c_id, score_fp,
@@ -10816,6 +10736,33 @@ object CurationQueries {
            |)
            |SELECT q_id, rnk, c_id, cast(score_fp as bigint) AS score_fp
            |FROM r WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin))
+
+  /** DuckDB form of `maxsim_score` over the 64-dim embedding columns
+    * `q` and `c`: over the query's 8 sub-vectors, the sum of each one's
+    * best sub-dot against the candidate's 8, every sub-dot an exact sum
+    * of floor(x * 2^20) products.
+    */
+  private def maxsimScoreSql(q: String, c: String): String =
+    s"""list_sum(list_transform(generate_series(0, 7), qs ->
+       |  list_max(list_transform(generate_series(0, 7), ds ->
+       |    list_sum(list_transform(generate_series(1, 8), i ->
+       |      cast(floor($q[qs * 8 + i]::double * 1048576) as bigint)
+       |      * cast(floor($c[ds * 8 + i]::double * 1048576) as bigint)))))))""".stripMargin
+
+  /** The exhaustive MaxSim top-3 of the 16 query vectors over a CTE `e`
+    * (`vec_id`, `embedding`), as the CTE `ex` (`q_id`, `c_id`): the
+    * audit each two-stage MaxSim oracle scores its shortlist against.
+    */
+  private val maxsimExactSqlCte: String =
+    s"""ex AS (
+       |  SELECT q_id, c_id FROM (
+       |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
+       |        ${maxsimScoreSql("q.embedding", "c.embedding")} DESC,
+       |        c.vec_id) AS ern
+       |    FROM e q JOIN e c ON q.vec_id < 16 AND q.vec_id <> c.vec_id)
+       |  WHERE ern <= 3
+       |)""".stripMargin
 
   // ---------------------------------------------------------------------
   // IPF mixing solver (match target marginals)
@@ -12567,14 +12514,7 @@ object CurationQueries {
     (s, dir) => {
       val e = TS(s, dir, "embeddings")
         .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-      val cen = broadcast(e.where(col("vec_id").between(100, 115))
-        .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-          col("nrm").as("cen_nrm")))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val ranked = e.join(cen, lit(true))
-        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val ranked = ivfRanked(e)
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("cen_id").as("cell"))
@@ -12608,29 +12548,14 @@ object CurationQueries {
             |  SELECT vec_id, embedding,
             |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), rk AS (
-            |  SELECT e.vec_id, e.embedding, c.cen_id,
-            |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-            |      ${cosineSql(scaledDotSql("e.embedding", "c.cen_emb"), "e.nrm", "c.cen_nrm")} DESC,
-            |      c.cen_id) AS arn
-            |  FROM e, cen c
-            |), assigned AS (
+            |), $ivfRankedSqlCtes, assigned AS (
             |  SELECT vec_id AS c_id, embedding AS c_emb, cen_id AS cell
-            |  FROM rk WHERE arn = 1
+            |  FROM ranked WHERE arn = 1
             |), probes AS (
             |  SELECT vec_id AS q_id, embedding AS q_emb, cen_id AS pcell
-            |  FROM rk WHERE arn <= 2 AND vec_id < 16
+            |  FROM ranked WHERE arn <= 2 AND vec_id < 16
             |), ms AS (
-            |  SELECT p.q_id, a.c_id,
-            |    list_sum(list_transform(generate_series(0, 7), qs ->
-            |      list_max(list_transform(generate_series(0, 7), ds ->
-            |        list_sum(list_transform(generate_series(1, 8), i ->
-            |          cast(floor(p.q_emb[qs * 8 + i]::double * 1048576) as bigint)
-            |          * cast(floor(a.c_emb[ds * 8 + i]::double * 1048576) as bigint)))))))
-            |      AS score_fp
+            |  SELECT p.q_id, a.c_id, ${maxsimScoreSql("p.q_emb", "a.c_emb")} AS score_fp
             |  FROM probes p JOIN assigned a
             |    ON p.pcell = a.cell AND p.q_id <> a.c_id
             |), two AS (
@@ -12638,23 +12563,7 @@ object CurationQueries {
             |    row_number() OVER (PARTITION BY q_id
             |      ORDER BY score_fp DESC, c_id) AS rnk
             |  FROM ms
-            |), ex0 AS (
-            |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-            |    list_sum(list_transform(generate_series(0, 7), qs ->
-            |      list_max(list_transform(generate_series(0, 7), ds ->
-            |        list_sum(list_transform(generate_series(1, 8), i ->
-            |          cast(floor(q.embedding[qs * 8 + i]::double * 1048576) as bigint)
-            |          * cast(floor(c.embedding[ds * 8 + i]::double * 1048576) as bigint)))))))
-            |      AS score_fp
-            |  FROM e q JOIN e c ON q.vec_id < 16 AND q.vec_id <> c.vec_id
-            |), ex AS (
-            |  SELECT q_id, c_id FROM (
-            |    SELECT q_id, c_id,
-            |      row_number() OVER (PARTITION BY q_id
-            |        ORDER BY score_fp DESC, c_id) AS ern
-            |    FROM ex0)
-            |  WHERE ern <= 3
-            |)
+            |), $maxsimExactSqlCte
             |SELECT t.q_id, t.rnk, t.c_id, cast(t.score_fp as bigint) AS score_fp,
             |  ex.c_id IS NOT NULL AS in_exact
             |FROM two t LEFT JOIN ex ON ex.q_id = t.q_id AND ex.c_id = t.c_id
@@ -12939,49 +12848,17 @@ object CurationQueries {
     * [[dedupExactSubstr]] for semantics. Consumed by the span inventory
     * and the source-flow rollup.
     */
-  private def exactSubstrSpans(s: SparkSession, dir: String): DataFrame = {
-    val L = XS_L
-    val g = TS(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .where(size(col("w")) >= L)
-      // r22 (guide §2.3/§4): gram identity is INTERNAL (grouped, joined,
-      // then dropped — no output column carries it), so the md5-hex
-      // STRING key (per gram: L-token array_join + md5 + 32-char hex,
-      // then string sort/hash keys through every exchange) becomes a
-      // 128-bit pair of xxhash64 longs over the token slice itself —
-      // no string building, and the slices are hashed in whole-stage
-      // codegen AFTER the explode (the HOF lambda only slices).
-      // Distinct seeds (the 7L prefix re-seeds the chain) give two
-      // different 64-bit hashes; being one hash function over the same
-      // input, they are not provably independent, so the pair's 128-bit
-      // collision odds are assumed rather than derived. The oracle twin
-      // keeps md5 — outputs agree unless BOTH hashes collide on real
-      // data (checked bit-identical at all 3 SFs).
-      // explode bare POSITIONS (ints), then hash the L-element window
-      // in place via the native gram_hash (== xxhash64(slice(...)) bit
-      // for bit) in whole-stage codegen — the HOF lambda form evaluated
-      // slice/hash interpreted, one lambda frame per gram, and even the
-      // codegen'd slice boxed every element on the copy (~20 us/gram
-      // measured; the hash itself is nanoseconds)
-      .select(col("doc_id"), col("w"),
-        explode(expr(s"sequence(0, size(w) - $L)")).as("pos0"))
-      .select(col("doc_id"), col("pos0"),
-        expr(s"gram_hash(w, pos0, $L, ${GramHash.DefaultSeed}L)").as("g1"),
-        expr(s"gram_hash(w, pos0, $L, ${GramHash.AltSeed}L)").as("g2"))
-    // r22 (guide §2.4 — remove shuffles outright): every gram row needs
-    // its own group's (count, min fk), so the groupBy + join-back pair
-    // (two gram-scale exchanges + an SMJ + a checkpoint to stop the
-    // double-scan) collapses into entire-frame window aggregates over
-    // ONE gram-keyed exchange. No orderBy on the window: the whole
-    // group is the frame, computed once per group. With a single
-    // consumer the r15/r16 double-scan checkpoint is obsolete too.
-    val wG = Window.partitionBy(col("g1"), col("g2"))
-    val sites = g
-      .withColumn("c", count(lit(1)).over(wG))
-      .withColumn("fk", min(col("doc_id") * lit(4294967296L) + col("pos0"))
-        .over(wG))
-      .where(col("c") >= 2)
-      .select(col("doc_id"), col("pos0"), col("fk"))
+  private def exactSubstrSpans(s: SparkSession, dir: String): DataFrame =
+    substrSpans(substrDupSites(substrGrams(TS(s, dir, "documents"), XS_L)), XS_L)
+
+  /** Island-merge duplicated L-gram sites (`doc_id`, `pos0`, `fk`, the
+    * site's gram's keep-first key) into each document's maximal
+    * duplicated spans: a site starts a new island unless it lies within
+    * one token of the running end of the sites before it. Columns
+    * (doc_id, span_start, span_end, span_tokens, n_grams, owner_fk,
+    * is_first). [[substrSpansSqlCtes]] is the DuckDB twin.
+    */
+  private def substrSpans(sites: DataFrame, L: Int): DataFrame = {
     val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos0"))
     sites
       .withColumn("prev_end", max(col("pos0") + lit(L - 1))
@@ -13003,6 +12880,54 @@ object CurationQueries {
           .as("is_first"))
   }
 
+  /** The duplicated sites of a gram stream (`doc_id`, `pos0`, `g1`,
+    * `g2`): every site whose gram occurs at least twice, with `fk`, the
+    * gram's minimal packed `doc_id * 2^32 + pos0` key.
+    *
+    * r22 (guide §2.4 — remove shuffles outright): every gram row needs
+    * its own group's (count, min fk), so the groupBy + join-back pair
+    * (two gram-scale exchanges + an SMJ + a checkpoint to stop the
+    * double-scan) collapses into entire-frame window aggregates over
+    * ONE gram-keyed exchange. No orderBy on the window: the whole group
+    * is the frame, computed once per group.
+    */
+  private def substrDupSites(g: DataFrame): DataFrame = {
+    val wG = Window.partitionBy(col("g1"), col("g2"))
+    g.withColumn("c", count(lit(1)).over(wG))
+      .withColumn("fk", min(col("doc_id") * lit(4294967296L) + col("pos0"))
+        .over(wG))
+      .where(col("c") >= 2)
+      .select(col("doc_id"), col("pos0"), col("fk"))
+  }
+
+  /** DuckDB twin of [[substrDupSites]] and [[substrSpans]] over a CTE
+    * `g` (doc_id, pos0, gk) of L-grams — the CTEs `stats`, `sites`,
+    * `isl` and `sp(doc_id, isl, span_start, span_end, n_grams,
+    * owner_fk)`.
+    */
+  private def substrSpansSqlCtes(L: Int): String =
+    s"""stats AS (
+       |  SELECT gk, count(*) AS c, min(doc_id * 4294967296 + pos0) AS fk
+       |  FROM g GROUP BY gk HAVING count(*) >= 2
+       |), sites AS (
+       |  SELECT g.doc_id, g.pos0, s.fk FROM g JOIN stats s USING (gk)
+       |), isl AS (
+       |  SELECT doc_id, pos0, fk,
+       |    cast(sum(CASE WHEN prev_end IS NULL OR pos0 > prev_end + 1
+       |      THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos0)
+       |      as bigint) AS isl
+       |  FROM (
+       |    SELECT doc_id, pos0, fk,
+       |      max(pos0 + ${L - 1}) OVER (PARTITION BY doc_id ORDER BY pos0
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+       |    FROM sites)
+       |), sp AS (
+       |  SELECT doc_id, isl, min(pos0) AS span_start,
+       |    max(pos0) + ${L - 1} AS span_end,
+       |    count(*) AS n_grams, arg_min(fk, pos0) AS owner_fk
+       |  FROM isl GROUP BY doc_id, isl
+       |)""".stripMargin
+
   /** DuckDB twin of [[exactSubstrSpans]] — CTE block ending in
     * `sp(doc_id, isl, span_start, span_end, n_grams, owner_fk)`.
     */
@@ -13016,27 +12941,7 @@ object CurationQueries {
        |  FROM (SELECT doc_id, w,
        |          unnest(generate_series(1, len(w) - ${XS_L - 1})) AS i
        |        FROM wd)
-       |), stats AS (
-       |  SELECT gk, count(*) AS c, min(doc_id * 4294967296 + pos0) AS fk
-       |  FROM g GROUP BY gk HAVING count(*) >= 2
-       |), sites AS (
-       |  SELECT g.doc_id, g.pos0, s.fk FROM g JOIN stats s USING (gk)
-       |), isl AS (
-       |  SELECT doc_id, pos0, fk,
-       |    cast(sum(CASE WHEN prev_end IS NULL OR pos0 > prev_end + 1
-       |      THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos0)
-       |      as bigint) AS isl
-       |  FROM (
-       |    SELECT doc_id, pos0, fk,
-       |      max(pos0 + ${XS_L - 1}) OVER (PARTITION BY doc_id ORDER BY pos0
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |    FROM sites)
-       |), sp AS (
-       |  SELECT doc_id, isl, min(pos0) AS span_start,
-       |    max(pos0) + ${XS_L - 1} AS span_end,
-       |    count(*) AS n_grams, arg_min(fk, pos0) AS owner_fk
-       |  FROM isl GROUP BY doc_id, isl
-       |)""".stripMargin
+       |), ${substrSpansSqlCtes(XS_L)}""".stripMargin
 
   private val dedupExactSubstr = Q(
     (s, dir) =>
@@ -13133,9 +13038,23 @@ object CurationQueries {
     * store byte-identical, and a replayed probe returns an identical
     * frame.
     */
-  /** L-gram stream of a documents frame — (doc_id, pos0, g1, g2); the
-    * gram identity is the r22 two-seed xxhash64 pair over the token
-    * slice (see [[exactSubstrSpans]] — internal key, never output).
+  /** L-gram stream of a documents frame — (doc_id, pos0, g1, g2).
+    *
+    * r22 (guide §2.3/§4): gram identity is INTERNAL (grouped, joined,
+    * then dropped — no output column carries it), so instead of an
+    * md5-hex STRING key (per gram: L-token array_join + md5 + 32-char
+    * hex, then string sort/hash keys through every exchange) it is a
+    * 128-bit pair of xxhash64 longs over the token slice itself. Bare
+    * POSITIONS are exploded and the native `gram_hash` (== xxhash64 of
+    * the slice, bit for bit) hashes the L-element window in place in
+    * whole-stage codegen; the HOF lambda form evaluated slice/hash
+    * interpreted (~20 us/gram measured; the hash itself is
+    * nanoseconds). Distinct seeds give two different 64-bit hashes;
+    * being one hash function over the same input, they are not
+    * provably independent, so the pair's 128-bit collision odds are
+    * assumed rather than derived. The oracle twins keep md5 — outputs
+    * agree unless BOTH hashes collide on real data (checked
+    * bit-identical at all 3 SFs).
     */
   private[graft] def substrGrams(df: DataFrame, L: Int): DataFrame = df
     .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -13186,27 +13105,7 @@ object CurationQueries {
       .select(col("doc_id"), col("pos0"),
         when(col("base_fk").isNull, col("arr_fk"))
           .otherwise(least(col("arr_fk"), col("base_fk"))).as("fk"))
-    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos0"))
-    sites
-      .withColumn("prev_end", max(col("pos0") + lit(L - 1))
-        .over(wOrd.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("new_isl",
-        when(col("prev_end").isNull || col("pos0") > col("prev_end") + 1, 1L)
-          .otherwise(0L))
-      .withColumn("isl", sum(col("new_isl")).over(wOrd))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg(min(col("pos0")).as("span_start"),
-        (max(col("pos0")) + lit(L - 1)).cast("long").as("span_end"),
-        count(lit(1)).as("n_grams"),
-        min_by(col("fk"), col("pos0")).as("owner_fk"))
-      .select(col("doc_id"),
-        col("span_start").cast("long").as("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).cast("long")
-          .as("span_tokens"),
-        col("n_grams"), col("owner_fk"),
-        (col("owner_fk") ===
-          col("doc_id") * lit(4294967296L) + col("span_start"))
-          .as("is_first"))
+    substrSpans(sites, L)
   }
 
   private val dedupSubstrIncr = Q.scratch("substrstore")(
@@ -13308,7 +13207,7 @@ object CurationQueries {
       // r22 (guide §2.3/§4/§2.5): gram identity is internal — the md5
       // over a '-'-joined string of L id casts (per gram: 50 casts, a
       // ~150-char concat, md5, 32-char hex) becomes the two-seed
-      // xxhash64 pair over the raw id slice (see exactSubstrSpans;
+      // xxhash64 pair over the raw id slice (see substrGrams;
       // hashed in codegen after the explode). The ids aggregate is also
       // round-robined to the session parallelism first: AQE's
       // byte-based coalescing had shrunk the 5000-doc frame to ~10
@@ -13321,36 +13220,9 @@ object CurationQueries {
         .select(col("doc_id"), col("pos0"),
           expr(s"gram_hash(ids, pos0, $L, ${GramHash.DefaultSeed}L)").as("g1"),
           expr(s"gram_hash(ids, pos0, $L, ${GramHash.AltSeed}L)").as("g2"))
-      // entire-frame window stats over one gram-keyed exchange replace
-      // the groupBy + SMJ join-back + checkpoint (see exactSubstrSpans)
-      val wG = Window.partitionBy(col("g1"), col("g2"))
-      val sites = g
-        .withColumn("c", count(lit(1)).over(wG))
-        .withColumn("fk", min(col("doc_id") * lit(4294967296L) + col("pos0"))
-          .over(wG))
-        .where(col("c") >= 2)
-        .select(col("doc_id"), col("pos0"), col("fk"))
-      val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos0"))
-      sites
-        .withColumn("prev_end", max(col("pos0") + lit(L - 1))
-          .over(wOrd.rowsBetween(Window.unboundedPreceding, -1)))
-        .withColumn("new_isl",
-          when(col("prev_end").isNull || col("pos0") > col("prev_end") + 1, 1L)
-            .otherwise(0L))
-        .withColumn("isl", sum(col("new_isl")).over(wOrd))
-        .groupBy(col("doc_id"), col("isl"))
-        .agg(min(col("pos0")).as("span_start"),
-          (max(col("pos0")) + lit(L - 1)).cast("long").as("span_end"),
-          count(lit(1)).as("n_grams"),
-          min_by(col("fk"), col("pos0")).as("owner_fk"))
-        .select(col("doc_id"),
-          col("span_start").cast("long").as("span_start"),
-          col("span_end"),
-          (col("span_end") - col("span_start") + 1).cast("long")
-            .as("span_ids"),
-          col("n_grams"),
-          (col("owner_fk") === col("doc_id") * lit(4294967296L)
-            + col("span_start")).as("is_first"))
+      substrSpans(substrDupSites(g), L)
+        .withColumnRenamed("span_tokens", "span_ids")
+        .drop("owner_fk")
         .orderBy(col("doc_id"), col("span_start"))
     },
     Some(s"""WITH $bpeMergeSqlCtes, m AS (
@@ -13386,28 +13258,7 @@ object CurationQueries {
             |  FROM (SELECT doc_id, ids,
             |          unnest(generate_series(1, len(ids) - ${L - 1})) AS i
             |        FROM ids WHERE len(ids) >= $L)
-            |), stats AS (
-            |  SELECT gk, count(*) AS c, min(doc_id * 4294967296 + pos0) AS fk
-            |  FROM g GROUP BY gk HAVING count(*) >= 2
-            |), sites AS (
-            |  SELECT g.doc_id, g.pos0, s.fk FROM g JOIN stats s USING (gk)
-            |), isl AS (
-            |  SELECT doc_id, pos0, fk,
-            |    cast(sum(CASE WHEN prev_end IS NULL OR pos0 > prev_end + 1
-            |      THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos0)
-            |      as bigint) AS isl
-            |  FROM (
-            |    SELECT doc_id, pos0, fk,
-            |      max(pos0 + ${L - 1}) OVER (PARTITION BY doc_id ORDER BY pos0
-            |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-            |        AS prev_end
-            |    FROM sites)
-            |), sp AS (
-            |  SELECT doc_id, isl, min(pos0) AS span_start,
-            |    max(pos0) + ${L - 1} AS span_end,
-            |    count(*) AS n_grams, arg_min(fk, pos0) AS owner_fk
-            |  FROM isl GROUP BY doc_id, isl
-            |)
+            |), ${substrSpansSqlCtes(L)}
             |SELECT doc_id, cast(span_start as bigint) AS span_start,
             |  cast(span_end as bigint) AS span_end,
             |  cast(span_end - span_start + 1 as bigint) AS span_ids,
@@ -14239,6 +14090,46 @@ object CurationQueries {
   // MaxSim-aware (sub-vector) ANN routing — the PLAID/ColBERT pattern
   // ---------------------------------------------------------------------
 
+  /** PLAID's slot sub-vectors over a frame `e` (`vec_id`, `embedding`):
+    * `sub` holds each vector's 8 slots (`vec_id`, `sl`, `sv`, the 8-dim
+    * slice); `subc` the 128 sub-centroids (`cell`, `csv`), slot `cs` of
+    * the fixed centroid vector 100..115 being cell (vec_id - 100) * 8 + cs.
+    * [[plaidDotsSqlCtes]] is the DuckDB twin, with the dots of every slot
+    * against every sub-centroid.
+    */
+  private def plaidSlots(e: DataFrame): (DataFrame, DataFrame) = {
+    val subc = e.where(col("vec_id").between(100, 115))
+      .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("cs"),
+        col("embedding"))
+      .select(((col("vec_id") - 100) * 8 + col("cs")).as("cell"),
+        expr("slice(embedding, cs * 8 + 1, 8)").as("csv"))
+    val sub = e
+      .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("sl"),
+        col("embedding"))
+      .select(col("vec_id"), col("sl"),
+        expr("slice(embedding, sl * 8 + 1, 8)").as("sv"))
+    (sub, subc)
+  }
+
+  /** The CTEs `slots`, `subc` and `dots` (`vec_id`, `sl`, `cell`, `d`)
+    * over a CTE `e`: DuckDB twin of [[plaidSlots]] joined and scored
+    * with the exact `scaled_dot` of each slot against each sub-centroid.
+    */
+  private val plaidDotsSqlCtes: String =
+    """slots AS (SELECT unnest(generate_series(0, 7)) AS sl
+      |), subc AS (
+      |  SELECT (vec_id - 100) * 8 + sl AS cell, sl AS csl,
+      |    embedding AS cemb
+      |  FROM e, slots WHERE vec_id BETWEEN 100 AND 115
+      |), dots AS (
+      |  SELECT e.vec_id, s.sl, c.cell,
+      |    list_sum(list_transform(generate_series(1, 8), i ->
+      |      cast(floor(e.embedding[s.sl * 8 + i]::double
+      |        * c.cemb[c.csl * 8 + i]::double * 1099511627776) as bigint)))
+      |      AS d
+      |  FROM e, slots s, subc c
+      |)""".stripMargin
+
   /** SUB-VECTOR-AWARE routing for late-interaction retrieval — the fix
     * for the honest failure `ns_sim_maxsim_ivf` measures (~21% recall@3
     * when MaxSim queries route through POOLED-cosine-trained IVF cells):
@@ -14278,16 +14169,7 @@ object CurationQueries {
   private val simMaxsimPlaid = Q(
     (s, dir) => {
       val e = TS(s, dir, "embeddings")
-      val subc = e.where(col("vec_id").between(100, 115))
-        .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("cs"),
-          col("embedding"))
-        .select(((col("vec_id") - 100) * 8 + col("cs")).as("cell"),
-          expr("slice(embedding, cs * 8 + 1, 8)").as("csv"))
-      val sub = e
-        .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("sl"),
-          col("embedding"))
-        .select(col("vec_id"), col("sl"),
-          expr("slice(embedding, sl * 8 + 1, 8)").as("sv"))
+      val (sub, subc) = plaidSlots(e)
       val cells = sub.join(broadcast(subc), lit(true))
         .withColumn("d", expr("scaled_dot(sv, csv)"))
         .groupBy(col("vec_id"), col("sl"))
@@ -14323,19 +14205,7 @@ object CurationQueries {
     },
     Some(s"""WITH e AS (
             |  SELECT vec_id, embedding FROM embeddings
-            |), slots AS (SELECT unnest(generate_series(0, 7)) AS sl
-            |), subc AS (
-            |  SELECT (vec_id - 100) * 8 + sl AS cell, sl AS csl,
-            |    embedding AS cemb
-            |  FROM e, slots WHERE vec_id BETWEEN 100 AND 115
-            |), dots AS (
-            |  SELECT e.vec_id, s.sl, c.cell,
-            |    list_sum(list_transform(generate_series(1, 8), i ->
-            |      cast(floor(e.embedding[s.sl * 8 + i]::double
-            |        * c.cemb[c.csl * 8 + i]::double * 1099511627776) as bigint)))
-            |      AS d
-            |  FROM e, slots s, subc c
-            |), cells AS (
+            |), $plaidDotsSqlCtes, cells AS (
             |  SELECT vec_id, sl, cell FROM (
             |    SELECT vec_id, sl, cell,
             |      row_number() OVER (PARTITION BY vec_id, sl
@@ -14349,13 +14219,7 @@ object CurationQueries {
             |  SELECT DISTINCT p.q_id, i.c_id
             |  FROM probes p JOIN idx i USING (cell) WHERE p.q_id <> i.c_id
             |), ms AS (
-            |  SELECT sh.q_id, sh.c_id,
-            |    list_sum(list_transform(generate_series(0, 7), qs ->
-            |      list_max(list_transform(generate_series(0, 7), ds ->
-            |        list_sum(list_transform(generate_series(1, 8), i ->
-            |          cast(floor(q.embedding[qs * 8 + i]::double * 1048576) as bigint)
-            |          * cast(floor(c.embedding[ds * 8 + i]::double * 1048576) as bigint)))))))
-            |      AS score_fp
+            |  SELECT sh.q_id, sh.c_id, ${maxsimScoreSql("q.embedding", "c.embedding")} AS score_fp
             |  FROM short sh JOIN e q ON q.vec_id = sh.q_id
             |    JOIN e c ON c.vec_id = sh.c_id
             |), two AS (
@@ -14363,23 +14227,7 @@ object CurationQueries {
             |    row_number() OVER (PARTITION BY q_id
             |      ORDER BY score_fp DESC, c_id) AS rnk
             |  FROM ms
-            |), ex0 AS (
-            |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-            |    list_sum(list_transform(generate_series(0, 7), qs ->
-            |      list_max(list_transform(generate_series(0, 7), ds ->
-            |        list_sum(list_transform(generate_series(1, 8), i ->
-            |          cast(floor(q.embedding[qs * 8 + i]::double * 1048576) as bigint)
-            |          * cast(floor(c.embedding[ds * 8 + i]::double * 1048576) as bigint)))))))
-            |      AS score_fp
-            |  FROM e q JOIN e c ON q.vec_id < 16 AND q.vec_id <> c.vec_id
-            |), ex AS (
-            |  SELECT q_id, c_id FROM (
-            |    SELECT q_id, c_id,
-            |      row_number() OVER (PARTITION BY q_id
-            |        ORDER BY score_fp DESC, c_id) AS ern
-            |    FROM ex0)
-            |  WHERE ern <= 3
-            |)
+            |), $maxsimExactSqlCte
             |SELECT t.q_id, t.rnk, t.c_id, cast(t.score_fp as bigint) AS score_fp,
             |  ex.c_id IS NOT NULL AS in_exact
             |FROM two t LEFT JOIN ex ON ex.q_id = t.q_id AND ex.c_id = t.c_id
@@ -14424,16 +14272,7 @@ object CurationQueries {
   private val simPlaidCurve = Q(
     (s, dir) => {
       val e = TS(s, dir, "embeddings")
-      val subc = e.where(col("vec_id").between(100, 115))
-        .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("cs"),
-          col("embedding"))
-        .select(((col("vec_id") - 100) * 8 + col("cs")).as("cell"),
-          expr("slice(embedding, cs * 8 + 1, 8)").as("csv"))
-      val sub = e
-        .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("sl"),
-          col("embedding"))
-        .select(col("vec_id"), col("sl"),
-          expr("slice(embedding, sl * 8 + 1, 8)").as("sv"))
+      val (sub, subc) = plaidSlots(e)
       // corpus assignment: the dot stream pipelines into a fixed-state
       // aggregate — max(struct(d, -cell)) is argmax-with-lowest-cell-tie
       // (ties impossible across distinct cells of equal d except by
@@ -14512,21 +14351,9 @@ object CurationQueries {
             .as("scored_frac_e6"))
         .orderBy(col("cells"), col("probes"))
     },
-    Some("""WITH e AS (
+    Some(s"""WITH e AS (
            |  SELECT vec_id, embedding FROM embeddings
-           |), slots AS (SELECT unnest(generate_series(0, 7)) AS sl
-           |), subc AS (
-           |  SELECT (vec_id - 100) * 8 + sl AS cell, sl AS csl,
-           |    embedding AS cemb
-           |  FROM e, slots WHERE vec_id BETWEEN 100 AND 115
-           |), dots AS (
-           |  SELECT e.vec_id, s.sl, c.cell,
-           |    list_sum(list_transform(generate_series(1, 8), i ->
-           |      cast(floor(e.embedding[s.sl * 8 + i]::double
-           |        * c.cemb[c.csl * 8 + i]::double * 1099511627776) as bigint)))
-           |      AS d
-           |  FROM e, slots s, subc c
-           |), cfgc AS (SELECT unnest([64, 128]) AS cells
+           |), $plaidDotsSqlCtes, cfgc AS (SELECT unnest([64, 128]) AS cells
            |), rnk0 AS (
            |  SELECT f.cells, d.vec_id, d.sl, d.cell,
            |    row_number() OVER (PARTITION BY f.cells, d.vec_id, d.sl
@@ -14546,13 +14373,7 @@ object CurationQueries {
            |  WHERE pr.q_id <> i.c_id
            |), pairs AS (SELECT DISTINCT q_id, c_id FROM short
            |), ms AS (
-           |  SELECT p.q_id, p.c_id,
-           |    list_sum(list_transform(generate_series(0, 7), qs ->
-           |      list_max(list_transform(generate_series(0, 7), ds ->
-           |        list_sum(list_transform(generate_series(1, 8), i ->
-           |          cast(floor(q.embedding[qs * 8 + i]::double * 1048576) as bigint)
-           |          * cast(floor(c.embedding[ds * 8 + i]::double * 1048576) as bigint)))))))
-           |      AS score_fp
+           |  SELECT p.q_id, p.c_id, ${maxsimScoreSql("q.embedding", "c.embedding")} AS score_fp
            |  FROM pairs p JOIN e q ON q.vec_id = p.q_id
            |    JOIN e c ON c.vec_id = p.c_id
            |), two AS (
@@ -14560,22 +14381,7 @@ object CurationQueries {
            |    row_number() OVER (PARTITION BY s.cells, s.probes, s.q_id
            |      ORDER BY m.score_fp DESC, s.c_id) AS rnk
            |  FROM short s JOIN ms m ON m.q_id = s.q_id AND m.c_id = s.c_id
-           |), ex0 AS (
-           |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-           |    list_sum(list_transform(generate_series(0, 7), qs ->
-           |      list_max(list_transform(generate_series(0, 7), ds ->
-           |        list_sum(list_transform(generate_series(1, 8), i ->
-           |          cast(floor(q.embedding[qs * 8 + i]::double * 1048576) as bigint)
-           |          * cast(floor(c.embedding[ds * 8 + i]::double * 1048576) as bigint)))))))
-           |      AS score_fp
-           |  FROM e q, e c WHERE q.vec_id < 16 AND q.vec_id <> c.vec_id
-           |), ex AS (
-           |  SELECT q_id, c_id FROM (
-           |    SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY score_fp DESC, c_id) AS ern
-           |    FROM ex0)
-           |  WHERE ern <= 3
-           |), hits AS (
+           |), $maxsimExactSqlCte, hits AS (
            |  SELECT t.cells, t.probes, count(x.c_id) AS hits3
            |  FROM two t LEFT JOIN ex x
            |    ON x.q_id = t.q_id AND x.c_id = t.c_id

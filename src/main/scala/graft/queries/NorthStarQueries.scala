@@ -944,9 +944,11 @@ object NorthStarQueries {
         expr("scaled_dot(embedding, embedding)").as("nrm")): _*)
 
   /** DuckDB twin of [[bucketed]] as the CTE `e`, with every `embeddings`
-    * column. */
+    * column. MATERIALIZED: the k-NN oracles read `e` at several
+    * references, and DuckDB would otherwise recompute the LSH bucket and
+    * the norm at each one. */
   private[queries] val bucketedSqlCte: String =
-    s"""e AS (
+    s"""e AS MATERIALIZED (
        |  SELECT *, $lshBucketSql AS bucket,
        |    ${scaledDotSql("embedding", "embedding")} AS nrm
        |  FROM embeddings
@@ -975,9 +977,10 @@ object NorthStarQueries {
   }
 
   /** DuckDB twin of [[knnEdges]] as the CTE `knn`, over the `e` of
-    * [[bucketedSqlCte]]. */
+    * [[bucketedSqlCte]]. MATERIALIZED, so the graph oracles that probe
+    * `knn` many times build it once. */
   private[queries] val knnSqlCte: String =
-    s"""knn AS (
+    s"""knn AS MATERIALIZED (
        |  SELECT a_id, rn, b_id, cos FROM (
        |    SELECT a_id, b_id, cos,
        |      row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn
@@ -986,6 +989,42 @@ object NorthStarQueries {
        |        ${cosineSql(scaledDotSql("a.embedding", "b.embedding"), "a.nrm", "b.nrm")} AS cos
        |      FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id))
        |  WHERE rn <= 3
+       |)""".stripMargin
+
+  /** The IVF coarse assignment over a frame `e` with `vec_id`,
+    * `embedding` and its squared norm `nrm`: every row of `e` against
+    * each of the 16 fixed coarse centroids (the vectors with `vec_id`
+    * 100..115, broadcast), with `cen_id`, `cen_cos` and `arn`, the
+    * centroid's rank for that vector by `cen_cos` desc, ties to the
+    * lower `cen_id`. `arn === 1` places every vector in exactly one
+    * cell; `arn <= nprobe && vec_id < 16` are the query probes. Nothing
+    * is materialized here. [[ivfRankedSqlCtes]] is the DuckDB twin.
+    */
+  private[graft] def ivfRanked(e: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("cen_cos").desc, col("cen_id"))
+    e.join(broadcast(
+        e.where(col("vec_id").between(100, 115))
+          .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
+            col("nrm").as("cen_nrm"))), lit(true))
+      .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
+      .withColumn("arn", row_number().over(w))
+      .drop("cen_emb", "cen_nrm")
+  }
+
+  /** DuckDB twin of [[ivfRanked]] as the CTEs `cen` and `ranked`, over a
+    * CTE `e` with `vec_id`, `embedding` and `nrm`. */
+  private[queries] val ivfRankedSqlCtes: String =
+    s"""cen AS (
+       |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
+       |  FROM e WHERE vec_id BETWEEN 100 AND 115
+       |), ranked AS (
+       |  SELECT *, row_number() OVER (PARTITION BY vec_id
+       |                               ORDER BY cen_cos DESC, cen_id) AS arn
+       |  FROM (
+       |    SELECT e.*, cen.cen_id,
+       |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
+       |        AS cen_cos
+       |    FROM e, cen)
        |)""".stripMargin
 
   /** Random-hyperplane (sign) LSH: 8 sign bits -> 256 buckets; docs in
@@ -1047,16 +1086,8 @@ object NorthStarQueries {
     */
   private def ivfTopk(nprobe: Int): Q = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val ranked = e.join(broadcast(
-          e.where(col("vec_id").between(100, 115))
-            .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-                    col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val ranked = ivfRanked(TS(s, dir, "embeddings")
+        .withColumn("nrm", expr("scaled_dot(embedding, embedding)")))
       // corpus: every vector in exactly its nearest cell
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cen_id").as("cell"))
@@ -1079,18 +1110,7 @@ object NorthStarQueries {
             |  SELECT vec_id, embedding,
             |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), ranked AS (
-            |  SELECT *, row_number() OVER (PARTITION BY vec_id
-            |                               ORDER BY cen_cos DESC, cen_id) AS arn
-            |  FROM (
-            |    SELECT e.vec_id, e.embedding, e.nrm, cen.cen_id,
-            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
-            |        AS cen_cos
-            |    FROM e, cen)
-            |), assigned AS (
+            |), $ivfRankedSqlCtes, assigned AS (
             |  SELECT vec_id, embedding, nrm, cen_id AS cell FROM ranked WHERE arn = 1
             |), probes AS (
             |  SELECT vec_id AS q_id, embedding AS q_emb, nrm AS nq, cen_id AS cell
@@ -3754,14 +3774,7 @@ object NorthStarQueries {
         .where(col("ern") <= 10)
         .select(col("q_id"), col("c_id"))
       // IVF assignment (same 16 fixed coarse centroids as ivfTopk)
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val ranked = e.join(broadcast(
-          e.where(col("vec_id").between(100, 115))
-            .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-                    col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val ranked = ivfRanked(e)
       val assigned = ranked.where(col("arn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
                 col("nrm").as("nc"), col("cen_id").as("cell_c"))
@@ -3804,18 +3817,7 @@ object NorthStarQueries {
             |        c.vec_id) AS ern
             |    FROM q16 q JOIN e c ON q.q_id <> c.vec_id
             |  ) WHERE ern <= 10
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), ranked AS (
-            |  SELECT *, row_number() OVER (PARTITION BY vec_id
-            |                               ORDER BY cen_cos DESC, cen_id) AS arn
-            |  FROM (
-            |    SELECT e.vec_id, e.embedding, e.nrm, cen.cen_id,
-            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
-            |        AS cen_cos
-            |    FROM e, cen)
-            |), assigned AS (
+            |), $ivfRankedSqlCtes, assigned AS (
             |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS nc, cen_id AS cell_c
             |  FROM ranked WHERE arn = 1
             |), probes AS (
@@ -4123,16 +4125,8 @@ object NorthStarQueries {
     */
   private val embedClusterPurity = Q(
     (s, dir) => {
-      val e = TS(s, dir, "embeddings")
-        .withColumn("nrm", expr("scaled_dot(embedding, embedding)"))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cen_cos").desc, col("cen_id"))
-      val assigned = e.join(broadcast(
-          e.where(col("vec_id").between(100, 115))
-            .select(col("vec_id").as("cen_id"), col("embedding").as("cen_emb"),
-                    col("nrm").as("cen_nrm"))), lit(true))
-        .withColumn("cen_cos", cosine(expr("scaled_dot(embedding, cen_emb)"), "nrm", "cen_nrm"))
-        .withColumn("arn", row_number().over(wAssign))
+      val assigned = ivfRanked(TS(s, dir, "embeddings")
+          .withColumn("nrm", expr("scaled_dot(embedding, embedding)")))
         .where(col("arn") === 1)
         .select(col("vec_id"), col("label"), col("cen_id").as("cell"))
       val hist = assigned.groupBy(col("cell"), col("label"))
@@ -4153,19 +4147,7 @@ object NorthStarQueries {
             |  SELECT vec_id, embedding, label,
             |    ${scaledDotSql("embedding", "embedding")} AS nrm
             |  FROM embeddings
-            |), cen AS (
-            |  SELECT vec_id AS cen_id, embedding AS cen_emb, nrm AS cen_nrm
-            |  FROM e WHERE vec_id BETWEEN 100 AND 115
-            |), ranked AS (
-            |  SELECT vec_id, label, cen_id,
-            |    row_number() OVER (PARTITION BY vec_id
-            |                       ORDER BY cen_cos DESC, cen_id) AS arn
-            |  FROM (
-            |    SELECT e.vec_id, e.label, cen.cen_id,
-            |      ${cosineSql(scaledDotSql("e.embedding", "cen.cen_emb"), "e.nrm", "cen.cen_nrm")}
-            |        AS cen_cos
-            |    FROM e, cen)
-            |), assigned AS (
+            |), $ivfRankedSqlCtes, assigned AS (
             |  SELECT vec_id, label, cen_id AS cell FROM ranked WHERE arn = 1
             |), hist AS (
             |  SELECT cell, label, count(*) AS n_label

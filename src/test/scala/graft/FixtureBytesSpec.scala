@@ -3,12 +3,12 @@ package graft
 import graft.operators.Multimodal
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The PNG and JPEG fixture writers pin their exact bytes: one SHA-256
-  * per writer over its outputs for the 25 nation-keyed geometries the
-  * catalog queries write plus a few corner sizes. Byte identity matters
-  * beyond the decoders' closed forms: `ns_multimodal_pixel_dedup` hashes
-  * container bytes, so a writer that re-encodes the same pixels
-  * differently changes an answer.
+/** The PNG, JPEG and WARC fixture writers pin their exact bytes: one
+  * SHA-256 per writer over its outputs for the 25 nation-keyed
+  * geometries the catalog queries write plus a few corner sizes. Byte
+  * identity matters beyond the decoders' closed forms:
+  * `ns_multimodal_pixel_dedup` hashes container bytes, so a writer that
+  * re-encodes the same pixels differently changes an answer.
   */
 class FixtureBytesSpec extends AnyFunSuite {
 
@@ -74,5 +74,24 @@ class FixtureBytesSpec extends AnyFunSuite {
     got.foreach { case (name, d) =>
       assert(pinned.get(name).contains(d), s"$name wrote different bytes: $d")
     }
+  }
+
+  /** (tag, record count) pairs for the WARC writers: 1..12 records per
+    * file covers both catalog queries' sizes, chunked and plain
+    * responses and the request interleave; 0 and 20 are the corners. */
+  private val warcSizes: Seq[(Int, Int)] =
+    (0 until 25).map(k => (k, 1 + k % 12)) ++ Seq((7, 0), (9, 20))
+
+  private val warcPinned: Map[String, String] = Map(
+    "warcBytes" -> "862d74d79eba399b714daf3f411f038db5332038713674e55ae5832999d24ca3",
+    "warcHttpBytes" -> "f40cdbae76e4aa04ca92210c4298b357cf7f6ba277c7ef4e21b818ca757d97a4",
+    "warcHtmlBytes" -> "9afa6f20138779d690337118b06a990422c797b78434b2960627a3581026d355")
+
+  test("WARC fixture writers produce their pinned bytes") {
+    val got = Seq(
+      "warcBytes" -> digest(warcSizes.map { case (t, n) => Multimodal.warcBytes(t, n) }),
+      "warcHttpBytes" -> digest(warcSizes.map { case (t, n) => Multimodal.warcHttpBytes(t, n) }),
+      "warcHtmlBytes" -> digest(warcSizes.map { case (t, n) => Multimodal.warcHtmlBytes(t, n) }))
+    assert(got.toMap == warcPinned)
   }
 }

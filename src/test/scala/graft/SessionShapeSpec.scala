@@ -140,6 +140,20 @@ class SessionShapeSpec extends SparkSpec {
     assert(mainCount("a.bucket = b.bucket AND a.vec_id <> b.vec_id") == 1)
   }
 
+  test("source guard: one IVF coarse assignment per engine") {
+    // ivfRanked (Spark) and ivfRankedSqlCtes (DuckDB)
+    assert(mainCount("col(\"cen_cos\").desc") == 1)
+    assert(mainCount("ORDER BY cen_cos DESC, cen_id") == 1)
+  }
+
+  test("source guard: one GIF sub-block walk, one JPEG EXTEND, one WARC member writer") {
+    val mm = SourceText.main("graft/operators/Multimodal.scala")
+    assert("n = b\\(pos\\) & 0xff\\s+pos \\+= 1 \\+ n".r.findAllIn(mm).size == 1)
+    assert(mainCount("bits - (1L << cat) + 1") == 1)
+    assert(mainCount("WARC-Record-ID: <urn:uuid:") == 1)
+    assert(mainCount("cb.write(body, o, n)") == 1)
+  }
+
   test("source guard: one PNG chunk writer and one JPEG bit writer") {
     val mm = SourceText.main("graft/operators/Multimodal.scala")
     assert("def chunk\\(".r.findAllIn(mm).size == 1)
