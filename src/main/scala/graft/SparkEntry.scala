@@ -28,7 +28,8 @@ object SparkEntry {
     graft.queries.CurationQueries.all
 
   /** One Engine per SparkSession, with every catalog query registered as
-    * a handler taking the fixture dir as its single argument. The native
+    * a handler taking the fixture dir as its single argument; the one
+    * [[graft.engine.Engine.persistent]] returns too. The native
     * functions are added here too, so a session built without
     * [[graft.plans.GraftExtensions]] (e.g. one the calling application
     * built) still runs every query.

@@ -3,6 +3,7 @@ package graft
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 
@@ -89,13 +90,6 @@ object Tables {
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
   )
-
-  /** Tables whose cardinality is FIXED regardless of scale factor (region
-    * 5, nation 25) — safe to broadcast unconditionally at any deployment
-    * size. supplier/customer/part grow with SF, so their build-side choice
-    * is left to Catalyst + AQE (autoBroadcastJoinThreshold).
-    */
-  val broadcastDims: Set[String] = Set("region", "nation")
 
   /** How `events.ts` is physically stored, per the parquet footer. An
     * engine reading third-party parquet must honor the footer's logical
@@ -387,15 +381,12 @@ object Tables {
     * footer drift surfaces as a targeted error (or sanctioned
     * null-fill), never an opaque scan failure or silent mis-decode.
     *
-    * When [[registerWithStats]] registered THIS dir's table from the
-    * same file version, the load is the stats-bearing catalog table —
-    * identical data and schema, but the scan carries rowCount/NDV so
-    * CBO join-reorder and build-side choice see real cardinalities
-    * instead of file-size heuristics. A table registered from another
-    * file version is bypassed for the direct footer-aware read until
-    * registration is re-run: its frozen ts DDL would decode a mid-JVM
-    * ns↔µs regeneration in the wrong unit, and a relation Spark cached
-    * over the old file would miss rows of the new one.
+    * When the catalog holds THIS dir's table in the footer's column
+    * shape, analyzed from this file version ([[StampProperty]]), the load
+    * is that table: same data, but its rowCount/NDV steer CBO. Any other
+    * table is bypassed for the direct read until registration re-runs:
+    * its frozen ts DDL would decode a ns↔µs regeneration in the wrong
+    * unit, and a relation cached over the old file would miss new rows.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -403,7 +394,8 @@ object Tables {
     f.drift.foreach(msg => throw new IllegalStateException(msg))
     val tbl = statsTableName(dir, name)
     val df =
-      if (registered.get(tbl) == ((f.schema, stamp)) && spark.catalog.tableExists(tbl))
+      if (catalogRecord(spark, tbl).exists(m =>
+          m.properties.get(StampProperty).contains(stamp) && sameShape(m.schema, f.schema)))
         spark.table(tbl)
       else fixtureRead(spark, f.schema, path)
     normalizeTs(df, tsColumnsOf(name))
@@ -428,31 +420,32 @@ object Tables {
   private[graft] def statsTableName(dir: String, name: String): String =
     s"g_${name}_s" + java.lang.Integer.toHexString(canon(dir).hashCode)
 
-  /** Drop a catalog table whose column shape no longer matches the
-    * desired DDL. `CREATE TABLE IF NOT EXISTS` silently KEEPS a stale
-    * registration — observed r13 with a persistent (Hive/Derby)
-    * metastore carrying an events table from the ns-fixture era
-    * (`ts BIGINT`) over the regenerated µs fixture: every catalog-path
-    * read decoded garbage. Comparing (name, dataType) pairs — not full
-    * StructType equality — ignores nullability/metadata drift that
-    * catalog round-trips introduce.
-    */
-  private def dropIfSchemaDrifted(
-      spark: SparkSession, table: String, want: StructType): Unit =
-    if (spark.catalog.tableExists(table)) {
-      val have = spark.table(table).schema
-      val shape = (s: StructType) => s.fields.map(f => (f.name, f.dataType)).toSeq
-      if (shape(have) != shape(want)) spark.sql(s"DROP TABLE $table")
-    }
+  /** Table property holding the [[fileStamp]] a fixture table was
+    * analyzed from: the one record of it, so a persistent metastore
+    * carries it across restarts. */
+  private[graft] val StampProperty = "graft.fileStamp"
 
-  /** Catalog tables [[registerWithStats]] analyzed in this JVM, mapped
-    * to the read schema they were registered from and the [[fileStamp]]
-    * of the file version analyzed: [[load]] serves only that version
-    * from the table, and registration keeps its statistics instead of
-    * analyzing it again.
-    */
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[String, (StructType, String)]()
+  /** The catalog's record of table `t` in the current database, or None
+    * — one metastore call, with no exception for a missing table. */
+  private def catalogRecord(spark: SparkSession, t: String): Option[CatalogTable] = {
+    val catalog = spark.sessionState.catalog
+    catalog.externalCatalog.getTablesByName(catalog.getCurrentDatabase, Seq(t)).headOption
+  }
+
+  /** Same column names and types, in order. Nullability and metadata,
+    * which catalog round-trips change, are ignored. */
+  private def sameShape(a: StructType, b: StructType): Boolean =
+    a.map(f => (f.name, f.dataType)) == b.map(f => (f.name, f.dataType))
+
+  /** The one fixture DDL. `pathGlobFilter` mirrors [[fixtureRead]]. With
+    * `skipHiveMetadata` a Hive metastore stores the table in Spark's format
+    * in one create, not after a refused Hive-form create and its stack
+    * trace: that form needs a directory LOCATION, a fixture is one parquet
+    * file, and the test data is read-only, so per-table dirs are out. */
+  private[graft] def fixtureDdl(t: String, schema: StructType, location: String): String =
+    s"""CREATE TABLE IF NOT EXISTS $t (${schema.toDDL})
+       |USING PARQUET OPTIONS (pathGlobFilter '*.parquet', skipHiveMetadata 'true')
+       |LOCATION '$location'""".stripMargin
 
   /** Register the fixtures under `dir` as external parquet tables in the
     * session's catalog and collect row-count + column stats, then enable
@@ -469,11 +462,11 @@ object Tables {
     * overlap; the catalogs serialize their own metadata calls. The first
     * failing table, in [[schemas]] order, fails the call with its name,
     * after every task has ended. Idempotent: a table whose DDL still
-    * matches is kept, and so are its statistics when this JVM analyzed
-    * the same file version of it (same read schema and [[fileStamp]])
-    * and the catalog still holds its `rowCount`. A new catalog or a
-    * regenerated file is analyzed again. One stderr line reports the
-    * count of tables analyzed and kept, and the wall time.
+    * matches is kept, and so are its statistics when the catalog has its
+    * `rowCount` and records this file version ([[StampProperty]]), from
+    * this process or an earlier one. A new catalog or a regenerated file
+    * is analyzed again. One stderr line reports the count of tables
+    * analyzed and kept, and the wall time.
     */
   def registerWithStats(spark: SparkSession, dir: String): Unit = {
     val started = System.nanoTime()
@@ -508,9 +501,22 @@ object Tables {
       s"${names.size - analyzed} kept)")
   }
 
+  /** The catalog record of table `t`, or None after dropping a table
+    * whose column shape drifted from `want`. `CREATE TABLE IF NOT EXISTS`
+    * silently KEEPS a stale table — observed r13 with a persistent
+    * metastore's `ts BIGINT` events table over the regenerated µs
+    * fixture: every catalog-path read decoded garbage. */
+  private def dropIfSchemaDrifted(
+      spark: SparkSession, t: String, want: StructType): Option[CatalogTable] =
+    catalogRecord(spark, t).filter { m =>
+      val same = sameShape(m.schema, want)
+      if (!same) spark.sql(s"DROP TABLE $t")
+      same
+    }
+
   /** One fixture's step of [[registerWithStats]]: its footer, the drift
-    * drop, the DDL and, unless this JVM already analyzed the same file
-    * version, the column ANALYZE. True when it analyzed.
+    * drop, the DDL and, unless the catalog records this file version as
+    * analyzed, the column ANALYZE and that record. True when it analyzed.
     */
   private def registerTable(spark: SparkSession, abs: String, name: String): Boolean = {
     // footer-aware DDL for timestamp-bearing tables (ANALYZE scans
@@ -524,25 +530,17 @@ object Tables {
       throw new IllegalStateException(
         s"fixture '$name' has no atomic column, so ANALYZE cannot count its rows")
     val t = statsTableName(abs, name)
-    dropIfSchemaDrifted(spark, t, f.schema)
-    // pathGlobFilter mirrors [[fixtureRead]]: stray non-parquet
-    // siblings in a part-file directory are skipped, not fatal
-    spark.sql(
-      s"""CREATE TABLE IF NOT EXISTS $t (${f.schema.toDDL})
-         |USING PARQUET OPTIONS (pathGlobFilter '*.parquet')
-         |LOCATION '$abs/$name.parquet'""".stripMargin)
-    val catalog = spark.sessionState.catalog
-    val id = org.apache.spark.sql.catalyst.TableIdentifier(t)
-    val key = (f.schema, stamp)
-    val kept = registered.get(t) == key &&
-      catalog.getTableMetadata(id).stats.exists(_.rowCount.isDefined)
+    val have = dropIfSchemaDrifted(spark, t, f.schema)
+    if (have.isEmpty) spark.sql(fixtureDdl(t, f.schema, s"$abs/$name.parquet"))
+    val kept = have.exists(m =>
+      m.properties.get(StampProperty).contains(stamp) && m.stats.exists(_.rowCount.isDefined))
     if (!kept) {
       // a relation cached before a regeneration still lists the old file
-      catalog.refreshTable(id)
+      spark.sessionState.catalog.refreshTable(org.apache.spark.sql.catalyst.TableIdentifier(t))
       // the column command also writes sizeInBytes and rowCount, so no
       // table-level ANALYZE runs first
       spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${atomic.mkString(", ")}")
-      registered.put(t, key)
+      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('$StampProperty' = '$stamp')")
     }
     !kept
   }

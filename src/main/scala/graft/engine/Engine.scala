@@ -88,22 +88,22 @@ object RequestCtx {
 object Engine {
 
   /** Deployment entry point: a Hive-metastore session
-    * ([[graft.SessionTuning.persistent]]) with the configured fixtures
-    * registered as stats-bearing tables by
+    * ([[graft.SessionTuning.persistent]]) with the fixtures under
+    * `dataDir` registered as stats-bearing tables by
     * [[graft.Tables.registerWithStats]] — the same registration the
-    * bench and gate sessions run. Every handler's `Tables.load` of
-    * `config.dataDir` then plans over those tables, so the ANALYZE
-    * stats steer its joins. Like the reference's always-on PG database
-    * (`src/processor.ts:41-51`), the tables exist before the process
-    * starts and survive after it stops.
+    * bench and gate sessions run — and the session's one engine,
+    * [[graft.SparkEntry.engineFor]], with every catalog handler. Like
+    * the reference's always-on PG database (`src/processor.ts:41-51`),
+    * the tables and their stats exist before the process starts and
+    * survive after it stops, so a restart analyzes no unchanged file.
     */
   def persistent(
-      config: EngineConfig = EngineConfig.resolve(),
+      dataDir: String = EngineConfig.resolve().dataDir,
       warehouseDir: String = "spark-warehouse",
       metastoreDir: String = "."): Engine = {
     val spark = graft.SessionTuning.persistent(warehouseDir, metastoreDir).getOrCreate()
-    graft.Tables.registerWithStats(spark, config.dataDir)
-    new Engine(spark, config)
+    graft.Tables.registerWithStats(spark, dataDir)
+    graft.SparkEntry.engineFor(spark)
   }
 }
 

@@ -5,14 +5,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
-import graft.engine.{Engine, EngineConfig}
+import graft.engine.Engine
 
 /** The persistent-catalog contract: fixture tables registered by
   * [[Tables.registerWithStats]] on the Hive-backed session live in the
   * metastore (not session temp views), survive a new session, carry
   * ANALYZE statistics, and those statistics steer the cost-based
-  * optimizer — including for a handler's [[Tables.load]] on an engine
-  * built by [[Engine.persistent]].
+  * optimizer — including for a handler's [[Tables.load]] on the engine
+  * [[Engine.persistent]] returns, which is the session's one engine.
   */
 class PersistentCatalogSpec extends SparkSpec {
 
@@ -22,7 +22,7 @@ class PersistentCatalogSpec extends SparkSpec {
 
   private def persistentEngine(dir: String): Engine =
     Engine.persistent(
-      EngineConfig(dataDir = dir, reapIntervalMs = 0L),
+      dir,
       warehouseDir = new java.io.File("target/test-warehouse").getAbsolutePath,
       metastoreDir = new java.io.File("target/test-metastore").getAbsolutePath)
 
@@ -77,18 +77,16 @@ class PersistentCatalogSpec extends SparkSpec {
 
   test("Engine.persistent: one-call bootstrap yields a queryable engine over the catalog") {
     // getOrCreate reuses the suite's Hive-backed context; registration
-    // must be idempotent over the already-registered tables
+    // must be idempotent over the already-registered tables. The engine
+    // is shared with every other user of the session, so it is not shut
+    // down here.
     val e = persistentEngine(sfDir)
-    try {
-      e.register("dim_count") { (s, _, _) =>
-        Tables.load(s, sfDir, "nation").groupBy().count()
-      }
-      val rows = e.query("dim_count").get
-      assert(rows.length == 1 && rows(0).getLong(0) == 25L)
-      // stats survived the re-registration (ANALYZE is idempotent)
-      val stats = e.spark.table(table("nation")).queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.contains(BigInt(25)))
-    } finally e.shutdown()
+    assert(e eq SparkEntry.engineFor(spark))
+    val rows = e.query("agg_pricing_summary", Seq(sfDir)).get
+    assert(rows.nonEmpty)
+    // stats survived the re-registration (ANALYZE is idempotent)
+    val stats = e.spark.table(table("nation")).queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(25)))
   }
 
   test("Engine.persistent: a handler's load plans over the stats-bearing table") {
@@ -100,13 +98,12 @@ class PersistentCatalogSpec extends SparkSpec {
     Files.createDirectories(Paths.get(d))
     Tables.schemas.keys.foreach(t =>
       Files.copy(Paths.get(s"$sfDir/$t.parquet"), Paths.get(s"$d/$t.parquet")))
-    val e = persistentEngine(d)
     try {
+      val e = persistentEngine(d)
       val nation = Tables.load(e.spark, d, "nation")
       assert(nation.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(25)))
       assert(nation.count() == 25L)
     } finally {
-      e.shutdown()
       Tables.schemas.keys.foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS ${Tables.statsTableName(d, t)}"))
       graft.queries.Q.scratchDelete(base)

@@ -15,9 +15,10 @@ import graft.queries.Q
   * the shared Hive session, which has column histograms on. The
   * statistics equal those of a table-level ANALYZE followed by a column
   * ANALYZE over the same files, and registration runs at least one job
-  * fewer per table to get them. An unchanged file version is not
-  * analyzed again, a rewritten one is, and a failing table is named
-  * without leaving a registration thread behind.
+  * fewer per table to get them. A file version the catalog records as
+  * analyzed, by this process or an earlier one, is not analyzed again, a
+  * rewritten one is, and a failing table is named without leaving a
+  * registration thread behind.
   */
 class RegistrationSpec extends SparkSpec {
 
@@ -64,6 +65,19 @@ class RegistrationSpec extends SparkSpec {
     spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).stats
       .getOrElse(fail(s"$table carries no statistics"))
 
+  /** The columns of `schema` that ANALYZE can collect statistics for. */
+  private def atomic(schema: org.apache.spark.sql.types.StructType): Seq[String] =
+    schema.fields.toSeq.map(_.name).filterNot(c =>
+      schema(c).dataType.typeName.matches("array|map|struct"))
+
+  /** The stderr line of one [[Tables.registerWithStats]] call on `dir`,
+    * and the Spark jobs the call started. */
+  private def register(dir: String): (String, Int) = {
+    var err = ""
+    val jobs = jobsDuring { err = stderrOf(Tables.registerWithStats(spark, dir)) }
+    (err.linesIterator.find(_.startsWith("[session] registered")).getOrElse(fail(err)), jobs)
+  }
+
   /** `sizeInBytes`, `rowCount` and every column statistic, histograms
     * included, in the form the catalog stores them. */
   private def stored(s: CatalogStatistics) =
@@ -78,16 +92,11 @@ class RegistrationSpec extends SparkSpec {
           val t = Tables.statsTableName(dir, name)
           val ref = s"${t}_ref"
           val schema = Tables.footer(spark, s"$dir/$name.parquet", name).schema
-          val atomic = schema.fields.map(_.name).filterNot(c =>
-            schema(c).dataType.typeName.matches("array|map|struct"))
           try {
-            spark.sql(
-              s"""CREATE TABLE $ref (${schema.toDDL})
-                 |USING PARQUET OPTIONS (pathGlobFilter '*.parquet')
-                 |LOCATION '$dir/$name.parquet'""".stripMargin)
+            spark.sql(Tables.fixtureDdl(ref, schema, s"$dir/$name.parquet"))
             val n = jobsDuring {
               spark.sql(s"ANALYZE TABLE $ref COMPUTE STATISTICS")
-              spark.sql(s"ANALYZE TABLE $ref COMPUTE STATISTICS FOR COLUMNS ${atomic.mkString(", ")}")
+              spark.sql(s"ANALYZE TABLE $ref COMPUTE STATISTICS FOR COLUMNS ${atomic(schema).mkString(", ")}")
             }
             assert(stored(stats(t)) == stored(stats(ref)), name)
             n
@@ -105,6 +114,40 @@ class RegistrationSpec extends SparkSpec {
     assert(jobsDuring(Tables.registerWithStats(spark, sfDir)) == 0)
     Tables.schemas.keys.foreach(name =>
       assert(stats(Tables.statsTableName(sfDir, name)).rowCount.isDefined, name))
+  }
+
+  test("a table analyzed by another process is kept") {
+    withCopy(sfDir) { dir =>
+      // what an earlier process leaves in a persistent metastore: the
+      // tables, their column statistics and the analyzed file version
+      Tables.schemas.keys.foreach { name =>
+        val t = Tables.statsTableName(dir, name)
+        val path = s"$dir/$name.parquet"
+        val schema = Tables.footer(spark, path, name).schema
+        spark.sql(Tables.fixtureDdl(t, schema, path))
+        spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${atomic(schema).mkString(", ")}")
+        spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+          s"('${Tables.StampProperty}' = '${Tables.fileStamp(spark, path)}')")
+      }
+      val (line, jobs) = register(dir)
+      assert(line.endsWith(" s (0 analyzed, 10 kept)"), line)
+      assert(jobs == 0)
+      val lineitem = Tables.load(spark, dir, "lineitem")
+      assert(lineitem.queryExecution.optimizedPlan.stats.rowCount.isDefined,
+        "load did not serve the stats-bearing table")
+      // a table analyzed without the record, as earlier versions of the
+      // registration left it, is analyzed once and then kept
+      val nation = Tables.statsTableName(dir, "nation")
+      spark.sql(s"ALTER TABLE $nation UNSET TBLPROPERTIES ('${Tables.StampProperty}')")
+      assert(Tables.load(spark, dir, "nation").queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+      val (once, _) = register(dir)
+      assert(once.endsWith(" s (1 analyzed, 9 kept)"), once)
+      val (again, againJobs) = register(dir)
+      assert(again.endsWith(" s (0 analyzed, 10 kept)"), again)
+      assert(againJobs == 0)
+      assert(Tables.load(spark, dir, "nation").queryExecution.optimizedPlan.stats.rowCount
+        .contains(BigInt(25)))
+    }
   }
 
   test("fixtures rewritten with fewer and with more rows are analyzed again") {

@@ -8,7 +8,8 @@ import graft.plans.GraftExtensions
   * [[SparkEntry.engineFor]] has run on it; source guards keep session
   * building, function registration and task-metric listening each in
   * one place, scratch trees in [[graft.queries.Q]], fixture tables in
-  * [[Tables]] and fixture views in [[graft.queries.Q.sql]]; and each
+  * [[Tables]], fixture views in [[graft.queries.Q.sql]] and the
+  * session's engine in [[SparkEntry.engineFor]]; and each
   * decision the query catalog shares (generated-media scans, the
   * quality model, the media oracles, the fixture writers) has one
   * definition.
@@ -72,11 +73,19 @@ class SessionShapeSpec extends SparkSpec {
     // one ANALYZE per table: the column command also writes the
     // table-level sizeInBytes and rowCount
     assert(mainCount("ANALYZE TABLE") == 1)
+    // one fixture DDL, Tables.fixtureDdl
+    assert(mainCount("CREATE TABLE") == 1)
     assert(SourceText.mainFilesWith("createOrReplaceTempView") ==
       Set("graft/queries/Q.scala", "graft/ScaleProbe.scala"))
     assert("createOrReplaceTempView".r
       .findAllIn(SourceText.main("graft/queries/Q.scala")).size == 1,
       "Q.sql is the one place a query binds fixture views")
+  }
+
+  test("source guard: one engine per session") {
+    // SparkEntry.engineFor builds it; Engine.persistent returns it
+    assert(SourceText.mainFilesWith("new Engine(") == Set("graft/SparkEntry.scala"))
+    assert(mainCount("new Engine(") == 1)
   }
 
   /** Occurrences of `pattern` in the code of every main file. */
