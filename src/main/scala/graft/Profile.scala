@@ -23,6 +23,10 @@ import graft.JvmProbes.{codegenCompiles, gcMillis, jitMillis}
   *     deltas — so a construct-vs-exec attribution also says WHY
   *     (compile storm vs pause vs real work; a warm run that compiles
   *     generated classes missed Spark's codegen cache);
+  *   - each timed run's stage-operator multiset (the operator scopes of
+  *     all its stages, counted), and one line saying whether the three
+  *     agree: a multiset that moves between runs of one tree is adaptive
+  *     execution's timing, not a plan change;
   *   - the last run's stages, hottest first, with job, summed task run
   *     and CPU ms, tasks, rows in and out, operator scopes and call
   *     site — a hot stage from the bench diagnostics maps back to the
@@ -62,7 +66,7 @@ object Profile {
       println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
       val (passes, best) = Bench.warmUp(() => exec(fn(spark, sfDir)))
       println(f"[profile] $name warmed ($passes passes, best $best%.3f s)")
-      (1 to Runs).foreach { i =>
+      val multisets = (1 to Runs).map { i =>
         System.gc(); Thread.sleep(200)
         ListenerFlush.drain(sc)
         stages.reset()
@@ -78,7 +82,16 @@ object Profile {
           f"plan ${secs(t1, t2)}%.3f s, exec ${secs(t2, t3)}%.3f s, " +
           f"total ${secs(t0, t3)}%.3f s, jit ${jitMillis - j0} ms, gc ${gcMillis - g0} ms, " +
           s"codegen ${codegenCompiles - c0} compiles")
+        ListenerFlush.drain(sc)
+        val ops = stages.byStage.flatMap(_._2.ops).groupBy(identity).view
+          .mapValues(_.size).toSeq.sorted
+        println(s"[profile] $name run $i stage ops: ${ops.map(_._2).sum} operators: " +
+          ops.map { case (op, n) => s"$op x$n" }.mkString(", "))
+        ops
       }
+      println(s"[profile] $name stage-operator multisets: " +
+        (if (multisets.distinct.size == 1) s"agree over $Runs runs"
+         else s"differ over $Runs runs (${multisets.map(_.map(_._2).sum).mkString(" / ")} operators)"))
       ListenerFlush.drain(sc)
       stages.byStage.sortBy(-_._2.runMs).foreach { case (id, st) =>
         println(f"[profile] stage $id%5d job ${st.jobId}%3d run ${st.runMs}%7d ms cpu " +

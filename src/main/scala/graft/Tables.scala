@@ -5,7 +5,10 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.graftengine.PlanFrames
 import org.apache.spark.sql.types._
+
+import graft.engine.Recorder
 
 /** Table catalog over the driver-provided Parquet fixtures.
   *
@@ -279,12 +282,16 @@ object Tables {
     withTsTypes(schemas("events"), Map("ts" -> enc))
 
   /** Canonical path + mtime:size version stamp of the parquet data at
-    * `path` — the key of its [[footer]] record, and of the query-side
-    * index caches, so a fixture regeneration invalidates them all the
-    * same way.
+    * `path` — the key of its [[footer]] record, and what the query-side
+    * index artifacts are built from, so a fixture regeneration
+    * invalidates them all the same way. Reported to the thread's
+    * [[Recorder]].
     */
-  private[graft] def fileStamp(spark: SparkSession, path: String): String =
-    locate(spark, path)._1
+  private[graft] def fileStamp(spark: SparkSession, path: String): String = {
+    val stamp = locate(spark, path)._1
+    Recorder.read(Recorder.Stamped(canon(path), stamp))
+    stamp
+  }
 
   /** Normalize the named timestamp columns to plain TimestampType — the
     * single column type every downstream operator sees, regardless of
@@ -381,24 +388,43 @@ object Tables {
     * footer drift surfaces as a targeted error (or sanctioned
     * null-fill), never an opaque scan failure or silent mis-decode.
     *
-    * When the catalog holds THIS dir's table in the footer's column
-    * shape, analyzed from this file version ([[StampProperty]]), the load
-    * is that table: same data, but its rowCount/NDV steer CBO. Any other
-    * table is bypassed for the direct read until registration re-runs:
-    * its frozen ts DDL would decode a ns↔µs regeneration in the wrong
-    * unit, and a relation cached over the old file would miss new rows.
+    * The load is the catalog table when [[source]] finds one, built from
+    * the record in hand, so a Hive metastore answers one call per load;
+    * otherwise it is the direct read. The load reports its [[source]] to
+    * the thread's [[Recorder]].
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val src = source(spark, dir, name)
+    src.footer.drift.foreach(msg => throw new IllegalStateException(msg))
+    Recorder.read(Recorder.Loaded(dir, name, src.stamp, src.catalog))
+    val df = src.table.fold(fixtureRead(spark, src.footer.schema, src.path))(t =>
+      PlanFrames.fromPlan(spark, spark.sessionState.catalog.getRelation(t)))
+    normalizeTs(df, tsColumnsOf(name))
+  }
+
+  /** How [[load]] reads fixture `name` of `dir` at this moment: the file
+    * version's stamp and [[Footer]], and `table`, the catalog record when
+    * the load serves the catalog table. */
+  private[graft] final case class Source(
+      path: String, stamp: String, footer: Footer, table: Option[CatalogTable]) {
+    def catalog: Boolean = table.isDefined
+  }
+
+  /** The one fixture-read decision, taken by [[load]] and by the check
+    * that a prepared plan still reads what it read. When the catalog
+    * holds THIS dir's table in the footer's column shape, analyzed from
+    * this file version ([[StampProperty]]), the load is that table: same
+    * data, but its rowCount/NDV steer CBO. Any other table is bypassed
+    * for the direct read until registration re-runs: its frozen ts DDL
+    * would decode a ns↔µs regeneration in the wrong unit, and a relation
+    * cached over the old file would miss new rows.
+    */
+  private[graft] def source(spark: SparkSession, dir: String, name: String): Source = {
     val path = s"$dir/$name.parquet"
     val (stamp, f) = versioned(spark, path, name)
-    f.drift.foreach(msg => throw new IllegalStateException(msg))
-    val tbl = statsTableName(dir, name)
-    val df =
-      if (catalogRecord(spark, tbl).exists(m =>
-          m.properties.get(StampProperty).contains(stamp) && sameShape(m.schema, f.schema)))
-        spark.table(tbl)
-      else fixtureRead(spark, f.schema, path)
-    normalizeTs(df, tsColumnsOf(name))
+    val table = catalogRecord(spark, statsTableName(dir, name)).filter(m =>
+      m.properties.get(StampProperty).contains(stamp) && sameShape(m.schema, f.schema))
+    Source(path, stamp, f, table)
   }
 
   /** Canonical absolute form of a fixture dir. Registration and lookup
@@ -426,10 +452,12 @@ object Tables {
   private[graft] val StampProperty = "graft.fileStamp"
 
   /** The catalog's record of table `t` in the current database, or None
-    * — one metastore call, with no exception for a missing table. */
+    * — one metastore call, with no exception for a missing table. The
+    * record names its catalog and database, as a relation needs. */
   private def catalogRecord(spark: SparkSession, t: String): Option[CatalogTable] = {
     val catalog = spark.sessionState.catalog
     catalog.externalCatalog.getTablesByName(catalog.getCurrentDatabase, Seq(t)).headOption
+      .map(m => m.copy(identifier = catalog.qualifyIdentifier(m.identifier)))
   }
 
   /** Same column names and types, in order. Nullability and metadata,

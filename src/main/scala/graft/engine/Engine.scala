@@ -1,6 +1,11 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftengine.PlanFrames
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.concurrent.TrieMap
@@ -17,7 +22,9 @@ import scala.util.{Failure, Success, Try}
   * @param maxConcurrentJobs job-concurrency ceiling (the PG pool max=2
   *                       analog, `src/processor.ts:48`) — enforced by a
   *                       fair semaphore that every query holds from
-  *                       dispatch to collect
+  *                       dispatch until its result is built: `query`
+  *                       releases it after collect, `queryEnvelope` after
+  *                       the msgpack encoding and the deflate
   * @param reapIntervalMs period of the background sweep that unpersists
   *                       expired cache entries (the reference reaps idle
   *                       resources on a 30 s timer, `src/processor.ts:49`);
@@ -87,6 +94,10 @@ object RequestCtx {
 
 object Engine {
 
+  /** Most prepared plans one engine keeps (see [[Engine.query]]); the
+    * least recently used goes first. */
+  val PreparedPlans = 128
+
   /** Deployment entry point: a Hive-metastore session
     * ([[graft.SessionTuning.persistent]]) with the fixtures under
     * `dataDir` registered as stats-bearing tables by
@@ -149,9 +160,13 @@ final class Engine(
   def shutdown(): Unit = cache.stopReaper()
 
   /** Register a handler; last registration wins, exactly like the
-    * reference's `Map.set` (`src/processor.ts:58`).
+    * reference's `Map.set` (`src/processor.ts:58`). Drops the plans
+    * prepared from the command's previous handler.
     */
-  def register(cmd: String)(job: Job): Unit = registry.put(cmd, job)
+  def register(cmd: String)(job: Job): Unit = {
+    registry.put(cmd, job)
+    prepared.synchronized(prepared.keySet.removeIf(_._1 == cmd))
+  }
 
   def registered: Set[String] = {
     import scala.jdk.CollectionConverters._
@@ -166,10 +181,74 @@ final class Engine(
     * materialized the result.
     */
   def submit(cmd: String, args: Seq[Any] = Nil): Try[DataFrame] =
-    registry.get(cmd) match {
+    construct(cmd, registry.get(cmd), args)
+
+  private def construct(cmd: String, job: Job, args: Seq[Any]): Try[DataFrame] =
+    job match {
       case null => Failure(new NoSuchElementException(s"unknown command: $cmd"))
       case job => Try(job(spark, cache, args))
     }
+
+  /** A served handler's analyzed plan, with the handler that built it
+    * and the fixture versions it read. */
+  private final class Prepared(val job: Job, val plan: LogicalPlan, val reads: Set[Recorder.Read])
+
+  // one entry per (cmd, args), access-ordered: the eldest is the least
+  // recently used
+  private val prepared =
+    new java.util.LinkedHashMap[(String, Seq[Any]), Prepared](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Seq[Any]), Prepared]): Boolean =
+        size() > Engine.PreparedPlans
+    }
+
+  /** The served path's frame for `cmd(args)`. While every fixture version
+    * the prepared plan read still holds, the frame is built over that
+    * analyzed plan and the handler does not run; a new frame still
+    * optimizes, plans and runs its jobs. Otherwise the handler runs under
+    * a [[Recorder]], and its plan replaces the entry when [[preparable]].
+    */
+  private def served(cmd: String, args: Seq[Any]): Try[DataFrame] = {
+    val key = (cmd, args)
+    val job = registry.get(cmd)
+    prepared.synchronized(Option(prepared.get(key)))
+      .filter(p => (p.job eq job) && Try(p.reads.forall(_.holds(spark))).getOrElse(false)) match {
+      case Some(p) => Try(PlanFrames.fromShared(spark, p.plan))
+      case None =>
+        val (df, log) = Recorder.record(construct(cmd, job, args))
+        val entry = df.toOption.flatMap(preparable(_, log)).map(new Prepared(job, _, log.reads))
+        prepared.synchronized(entry.fold(prepared.remove(key))(prepared.put(key, _)))
+        df
+    }
+  }
+
+  /** The analyzed plan of a served construct, when later requests may
+    * build on it: the construct read at least one fixture and made no
+    * scratch tree or scoped cache entry; the frame is not streaming;
+    * every file-source leaf reads a fixture the construct recorded (a
+    * direct `read` rules the plan out); and no expression is
+    * nondeterministic, since analysis fixes `rand`/`uuid` seeds into the
+    * plan. What construct-time jobs made (checkpoints, collected
+    * literals) is reused with the plan; it derives from the same fixture
+    * versions.
+    */
+  private def preparable(df: DataFrame, log: Recorder.Log): Option[LogicalPlan] =
+    Try {
+      val plan = df.queryExecution.analyzed
+      val paths = log.reads.map(_.path)
+      def recorded(l: LeafNode): Boolean = l match {
+        case r: LogicalRelation => r.relation match {
+          case fs: HadoopFsRelation =>
+            fs.location.rootPaths.forall(p => paths(graft.Tables.canon(p.toUri.getPath)))
+          case _ => false
+        }
+        case _: DataSourceV2Relation | _: HiveTableRelation => false
+        case _ => true
+      }
+      Option.when(log.reads.nonEmpty && log.isRepeatable && !df.isStreaming &&
+        plan.collectWithSubqueries { case l: LeafNode => l }.forall(recorded) &&
+        plan.collectWithSubqueries { case p => p.expressions }.flatten.forall(_.deterministic))(plan)
+    }.toOption.flatten
 
   /** Run `f` inside a fresh cache scope; all cache entries created with
     * `scoped = true` during `f` are unpersisted when it completes (success
@@ -191,7 +270,10 @@ final class Engine(
     * triggers — so executor-side logs, listeners, and the event log can
     * attribute work to the calling tenant. Both are cleared on exit
     * (success or failure) so a pooled driver thread never leaks one
-    * caller's identity into the next call.
+    * caller's identity into the next call. The handler's plan is prepared
+    * for the next request with the same `cmd` and `args` while the
+    * fixture files it read do not change (see [[served]]); [[submit]]
+    * builds a fresh frame every time.
     */
   def query(
       cmd: String,
@@ -201,7 +283,7 @@ final class Engine(
       // (crypto.randomBytes there, `src/processor.ts:108`) — knowing it
       // is what lets the caller cancel (`cancel(sn)`)
       sn: String = java.util.UUID.randomUUID().toString): Try[Array[org.apache.spark.sql.Row]] =
-    withQueryFrame(cmd, ctx, sn)(submit(cmd, args).map(_.collect()))
+    withQueryFrame(cmd, ctx, sn)(served(cmd, args).map(_.collect()))
 
   /** The attribution/cleanup frame shared by every rpc-shaped entry:
     * concurrency permit, job group (cancellable via sn), tenant local
@@ -234,7 +316,7 @@ final class Engine(
       args: Seq[Any] = Nil,
       ctx: RequestCtx = RequestCtx.anonymous,
       sn: String = java.util.UUID.randomUUID().toString): Try[Array[Byte]] =
-    withQueryFrame(cmd, ctx, sn)(submit(cmd, args).map { df =>
+    withQueryFrame(cmd, ctx, sn)(served(cmd, args).map { df =>
       val schema = df.schema
       val payload = MsgPack.encode(df.collect().map(MsgPack.rowToValue(_, schema)).toVector)
       if (payload.length >= config.compressMinBytes) ResultCodec.deflate(payload)
@@ -384,6 +466,9 @@ final class CacheManager(spark: SparkSession) {
     * entries survive scope close — the analog of Redis keys without EXPIRE).
     */
   def getOrPut(key: String, ttlMs: Long = 0L, scoped: Boolean = false)(compute: => DataFrame): DataFrame = {
+    // a scoped entry is unpersisted with its request, so a served
+    // construct that uses one is never prepared for reuse
+    if (scoped) Recorder.unrepeatable()
     val now = System.currentTimeMillis()
     entries.get(key) match {
       case Some(e) if e.expiresAt <= 0 || e.expiresAt > now => e.df

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, regexp_extract}
 import graft.Tables
+import graft.engine.Recorder
 
 /** One declared capability from SURVEY.md §2: a Spark query plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle.
@@ -81,10 +82,14 @@ object Q {
 
   /** A fresh `graft-<prefix>-*` directory under `java.io.tmpdir`. Queries
     * get theirs through [[scratch]], which also deletes it; a caller
-    * outside that lifecycle deletes it with [[scratchDelete]].
+    * outside that lifecycle deletes it with [[scratchDelete]]. A served
+    * construct that makes one is never prepared for reuse
+    * ([[graft.engine.Recorder]]).
     */
-  def scratchDir(prefix: String): String =
+  def scratchDir(prefix: String): String = {
+    Recorder.unrepeatable()
     java.nio.file.Files.createTempDirectory(s"graft-$prefix-").toString
+  }
 
   /** Recursive delete of a [[scratchDir]] tree. Call only after every
     * frame reading the tree is materialized: a lazy plan still reading

@@ -316,8 +316,11 @@ object SourcesQueries {
     (s, dir) => {
       val (keyList, keyAgg) =
         ("spark.sql.sources.useV1SourceList", "spark.sql.parquet.aggregatePushdown")
-      val prevList = s.conf.get(keyList, "")
-      val prevAgg = s.conf.get(keyAgg, "false")
+      // the values in effect, defaults included: an unset useV1SourceList
+      // read as "" would be restored as "" and move every later parquet
+      // read of the session onto the V2 path
+      val prevList = s.conf.get(keyList)
+      val prevAgg = s.conf.get(keyAgg)
       s.conf.set(keyList, "")
       s.conf.set(keyAgg, "true")
       try {

@@ -110,6 +110,23 @@ class PersistentCatalogSpec extends SparkSpec {
     }
   }
 
+  test("a catalog-table load makes one Hive client call") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    registered
+    Tables.load(spark, sfDir, "lineitem").count() // the relation is cached
+    val before = METRIC_HIVE_CLIENT_CALLS.getCount
+    val df = Tables.load(spark, sfDir, "lineitem")
+    assert(METRIC_HIVE_CLIENT_CALLS.getCount - before == 1)
+    // the relation is the catalog table's, as spark.table builds it
+    val leaf = df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }
+    assert(leaf.flatMap(_.catalogTable).map(_.identifier.unquotedString)
+      .contains(s"spark_catalog.default.${table("lineitem")}"))
+    assert(df.queryExecution.analyzed.output.map(_.name) ==
+      spark.table(table("lineitem")).queryExecution.analyzed.output.map(_.name))
+    assert(df.count() == spark.table(table("lineitem")).count())
+  }
+
   test("CBO join reorder: selective dimension pair joins before the fact") {
     registered
     // written worst-first: fact x fact, dims last. With cbo+joinReorder

@@ -515,8 +515,10 @@ class PlanFeaturesSpec extends SparkSpec {
     // The stats-only scan src_agg_pushdown claims: under the DSv2 parquet
     // path the whole aggregate folds into the scan node and the plan
     // carries PushedAggregation — zero data pages decoded at any scale.
-    val prevList = spark.conf.get("spark.sql.sources.useV1SourceList", "")
-    val prevAgg = spark.conf.get("spark.sql.parquet.aggregatePushdown", "false")
+    // the values in effect, defaults included, so the finally restores
+    // the V1 path
+    val prevList = spark.conf.get("spark.sql.sources.useV1SourceList")
+    val prevAgg = spark.conf.get("spark.sql.parquet.aggregatePushdown")
     spark.conf.set("spark.sql.sources.useV1SourceList", "")
     spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     try {
@@ -537,10 +539,14 @@ class PlanFeaturesSpec extends SparkSpec {
       spark.conf.set("spark.sql.sources.useV1SourceList", prevList)
       spark.conf.set("spark.sql.parquet.aggregatePushdown", prevAgg)
     }
-    // the gate query restores the confs — the catalog keeps its V1 path
+    // the gate query restores the confs in effect, an unset one's default
+    // included — the catalog keeps its V1 path
+    spark.conf.unset("spark.sql.sources.useV1SourceList")
     graft.queries.SourcesQueries.all("src_agg_pushdown").fn(spark, sfDir)
-    assert(spark.conf.get("spark.sql.sources.useV1SourceList", "") == prevList,
+    assert(spark.conf.get("spark.sql.sources.useV1SourceList") ==
+      org.apache.spark.sql.internal.SQLConf.USE_V1_SOURCE_LIST.defaultValueString,
       "src_agg_pushdown leaked useV1SourceList")
+    spark.conf.set("spark.sql.sources.useV1SourceList", prevList)
   }
 
   test("line dedup flags by broadcast: corpus text never shuffles for the filter") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import scala.jdk.CollectionConverters._
 
@@ -8,8 +8,6 @@ import org.apache.spark.graftbench.ListenerFlush
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
-
-import graft.queries.Q
 
 /** What [[Tables.registerWithStats]] installs and when it runs a job, on
   * the shared Hive session, which has column histograms on. The
@@ -44,23 +42,6 @@ class RegistrationSpec extends SparkSpec {
     buf.toString("UTF-8")
   }
 
-  /** Runs `body` on a fresh copy of the fixtures of `from`, all but
-    * `except`, so no earlier registration in this JVM covers it. The
-    * tables registered from the copy are dropped with it. */
-  private def withCopy(from: String, except: Set[String] = Set.empty)(body: String => Unit): Unit = {
-    val base = Q.scratchDir("registration")
-    val dir = s"$base/sf"
-    Files.createDirectories(Paths.get(dir))
-    Tables.schemas.keys.filterNot(except).foreach(t =>
-      Files.copy(Paths.get(s"$from/$t.parquet"), Paths.get(s"$dir/$t.parquet")))
-    try body(dir)
-    finally {
-      Tables.schemas.keys.foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS ${Tables.statsTableName(dir, t)}"))
-      Q.scratchDelete(base)
-    }
-  }
-
   private def stats(table: String): CatalogStatistics =
     spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).stats
       .getOrElse(fail(s"$table carries no statistics"))
@@ -86,7 +67,7 @@ class RegistrationSpec extends SparkSpec {
   // sfDir and the next scale factor beside it
   Seq("sf0.001", "sf0.01").foreach { sf =>
     test(s"$sf: the statistics of the two-pass ANALYZE, one job fewer per table") {
-      withCopy(s"${Paths.get(sfDir).getParent}/$sf") { dir =>
+      withFixtureCopy(s"${Paths.get(sfDir).getParent}/$sf") { dir =>
         val jobs = jobsDuring(Tables.registerWithStats(spark, dir))
         val twoPassJobs = Tables.schemas.keys.toSeq.map { name =>
           val t = Tables.statsTableName(dir, name)
@@ -117,7 +98,7 @@ class RegistrationSpec extends SparkSpec {
   }
 
   test("a table analyzed by another process is kept") {
-    withCopy(sfDir) { dir =>
+    withFixtureCopy(sfDir) { dir =>
       // what an earlier process leaves in a persistent metastore: the
       // tables, their column statistics and the analyzed file version
       Tables.schemas.keys.foreach { name =>
@@ -151,25 +132,15 @@ class RegistrationSpec extends SparkSpec {
   }
 
   test("fixtures rewritten with fewer and with more rows are analyzed again") {
-    withCopy(sfDir) { dir =>
+    withFixtureCopy(sfDir) { dir =>
       Tables.registerWithStats(spark, dir)
       val nation = Tables.statsTableName(dir, "nation")
       val region = Tables.statsTableName(dir, "region")
       // reading the tables caches their relations over the old files
       assert(spark.table(nation).count() == 25L && spark.table(region).count() == 5L)
-      /** Replace fixture `name` by the one-file parquet of `rows`. */
-      def rewrite(name: String, rows: org.apache.spark.sql.DataFrame): Unit = {
-        val staging = s"${dir}_$name"
-        rows.coalesce(1).write.parquet(staging)
-        val listing = Files.list(Paths.get(staging))
-        val part =
-          try listing.iterator.asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-          finally listing.close()
-        Files.move(part, Paths.get(s"$dir/$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
-      }
-      rewrite("nation", spark.read.parquet(s"$dir/nation.parquet").where("n_nationkey < 10"))
+      rewriteFixture(dir, "nation", spark.read.parquet(s"$dir/nation.parquet").where("n_nationkey < 10"))
       // distinct names, so the new file is many times the old one's size
-      rewrite("region", spark.range(1000).selectExpr(
+      rewriteFixture(dir, "region", spark.range(1000).selectExpr(
         "cast(id as int) AS r_regionkey", "concat('region-', uuid()) AS r_name"))
       // until registration runs again, load reads the new files directly
       assert(Tables.load(spark, dir, "nation").count() == 10L)
@@ -185,7 +156,7 @@ class RegistrationSpec extends SparkSpec {
   }
 
   test("a dir missing one fixture fails naming it and leaves no registration thread") {
-    withCopy(sfDir, except = Set("part")) { dir =>
+    withFixtureCopy(sfDir, except = Set("part")) { dir =>
       val e = intercept[IllegalStateException](Tables.registerWithStats(spark, dir))
       assert(e.getMessage.contains(s"fixture 'part' from $dir failed"), e.getMessage)
       val live = Thread.getAllStackTraces.keySet.asScala

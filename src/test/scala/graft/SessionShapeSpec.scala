@@ -82,6 +82,22 @@ class SessionShapeSpec extends SparkSpec {
       "Q.sql is the one place a query binds fixture views")
   }
 
+  test("source guard: one fixture-read decision, one prepared-plan table") {
+    // frames over a held plan are built by one accessor
+    assert(mainCount("ofRows(") == 1)
+    assert(SourceText.mainFilesWith("ofRows(") ==
+      Set("org/apache/spark/sql/graftengine/PlanFrames.scala"))
+    // Tables.source decides catalog table or direct read; load and the
+    // prepared-plan check both ask it
+    assert(mainCount("def source(") == 1)
+    assert(SourceText.mainFilesWith("catalogRecord(") == Set("graft/Tables.scala"))
+    assert(mainCount("catalogRecord(spark, statsTableName(") == 1)
+    assert(SourceText.mainFilesWith("Tables.source(") == Set("graft/engine/Recorder.scala"))
+    // the prepared table, its recording and its frames live in Engine
+    Seq("Recorder.record(", "PlanFrames.fromShared(", "class Prepared").foreach(p =>
+      assert(SourceText.mainFilesWith(p) == Set("graft/engine/Engine.scala"), p))
+  }
+
   test("source guard: one engine per session") {
     // SparkEntry.engineFor builds it; Engine.persistent returns it
     assert(SourceText.mainFilesWith("new Engine(") == Set("graft/SparkEntry.scala"))
